@@ -22,14 +22,24 @@ bounded failure blast radius and bounded shuffle state per job, while
 keeping executors saturated. Incremental upsert merges the existing
 serving rows for JUST the touched buckets (read-modify-write per bucket
 dir, never a full-store rewrite).
+
+**One write path.** Materialization and ``push_to_online`` both land rows
+through ``_merge_into_store``. Under the store's commit lock (``FileIO.lock``
+on ``<dest>/metadata``) it lists the touched bucket dirs, merges incoming
+over served rows, stages them in a directory unique to the call, swaps
+each bucket dir in and removes the stage. Writers serialize; a reader
+Spark planned before a swap can still lose its files.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
+import uuid
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -280,57 +290,19 @@ class MaterializeJob:
             order=ts,
             created_col=self.view.created_timestamp_column,
         )
-
-        # upsert: merge with existing serving rows of the touched buckets
-        existing_dirs = [
-            os.path.join(self.dest, layout.DATA_DIR, f"bucket={b}")
-            for b in buckets
-        ]
-        existing_dirs = [d for d in existing_dirs if os.path.isdir(d)]
-        if existing_dirs:
-            old = self.spark.read.parquet(*existing_dirs)
-            old = old.withColumn(ts, F.col(ts).cast("timestamp"))
-            # incoming rows outrank served rows at equal (key, ts,
-            # created): re-materialization is a CORRECTION (late-event
-            # aggregate fixes, transform changes) and must overwrite
-            merged = latest.withColumn("__fresh", F.lit(1)).unionByName(
-                old.withColumn("__fresh", F.lit(0)),
-                allowMissingColumns=False,
-            )
-            latest = latest_per_key(
-                merged, key=keys, order=ts,
-                created_col=self.view.created_timestamp_column,
-                precedence_col="__fresh",
-            ).drop("__fresh")
-        latest = latest.withColumn(
-            "__bucket", layout.bucket_expr(keys, self.n_buckets)
-        )
-
         obs = Observation()
-        latest = latest.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_out"),
-            F.max(F.col(ts)).alias("max_event_ts"),
-        )
-        out_tmp = os.path.join(self.dest, "_staging", f"batch-{buckets[0]}")
-        (
-            latest.repartition("__bucket")
-            .sortWithinPartitions("__bucket", *keys)
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(out_tmp)
+        _merge_into_store(
+            self.spark, self.dest, latest, buckets,
+            key_cols=keys, ts_col=ts,
+            created_col=self.view.created_timestamp_column,
+            n_buckets=self.n_buckets,
+            on_merged=lambda merged: merged.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows_out"),
+                F.max(F.col(ts)).alias("max_event_ts"),
+            ),
         )
         metrics = obs.get
-        # swap each bucket dir into the serving store through the FileIO
-        # seam (object-store impls replace the rename pair with prefix
-        # versioning — fileio.py docstring)
-        io = fileio.get_io()
-        for b in buckets:
-            src_dir = os.path.join(out_tmp, f"__bucket={b}")
-            dst_dir = os.path.join(self.dest, layout.DATA_DIR, f"bucket={b}")
-            os.makedirs(os.path.dirname(dst_dir), exist_ok=True)
-            if os.path.isdir(src_dir):
-                io.swap_dir(src_dir, dst_dir)
         wall_ms = int((time.monotonic() - t0) * 1000)
         max_ts = metrics["max_event_ts"]
         return {
@@ -657,8 +629,8 @@ def push_to_online(
     Scale shape: latest-per-key on the pushed batch (small), then a
     read-modify-write of ONLY the buckets containing pushed keys — the
     touched-bucket set is bounded by the store modulus, and unaffected
-    buckets are never opened. Swaps go through the FileIO seam like
-    every other commit. Returns {rows_pushed, buckets_touched}."""
+    buckets are never opened; the write is ``_merge_into_store``'s.
+    Returns {rows_pushed, buckets_touched}."""
     meta = read_store_meta(dest)
     if meta is None:
         raise FileNotFoundError(f"no serving store at {dest} (store.json)")
@@ -671,61 +643,97 @@ def push_to_online(
     ):
         # entity-less store: inject the constant key like materialize
         df = df.withColumn(MaterializeJob.DUMMY_KEY, F.lit(1))
-    latest = latest_per_key(
-        df, key=key_cols, order=ts_col, created_col=created_col
-    )
-    # observe the deduped PUSHED batch here, before the union with
-    # pre-existing bucket residents — rows_pushed must report the batch
-    # size, not everything rewritten into touched buckets (ADVICE r03).
-    # The observation rides the final write (no extra action).
-    obs = Observation()
-    latest = latest.observe(obs, F.count(F.lit(1)).alias("rows"))
-    touched = sorted(
-        r["b"]
-        for r in df.select(
-            layout.bucket_expr(key_cols, n_buckets).alias("b")
-        ).distinct().collect()
-    )
+    touched = layout.buckets_of_frame(df, key_cols, n_buckets)
     if not touched:  # empty push batch: nothing to merge or swap
         return {"rows_pushed": 0, "buckets_touched": []}
-    existing_dirs = [
-        os.path.join(dest, layout.DATA_DIR, f"bucket={b}") for b in touched
-    ]
-    existing_dirs = [d for d in existing_dirs if os.path.isdir(d)]
-    if existing_dirs:
-        old = spark.read.parquet(*existing_dirs)
-        old = old.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        # pushed rows outrank served rows at equal (key, ts, created) —
-        # same new-wins correction rule as the materialize merge
-        latest = latest_per_key(
-            latest.withColumn("__fresh", F.lit(1)).unionByName(
-                old.withColumn("__fresh", F.lit(0)),
-                allowMissingColumns=False,
-            ),
-            key=key_cols, order=ts_col, created_col=created_col,
-            precedence_col="__fresh",
-        ).drop("__fresh")
-    latest = latest.withColumn(
-        "__bucket", layout.bucket_expr(key_cols, n_buckets)
+    # observe the deduped PUSHED batch, not the merged buckets: rows_pushed
+    # is the batch size (ADVICE r03). It rides the store write.
+    obs = Observation()
+    latest = latest_per_key(
+        df, key=key_cols, order=ts_col, created_col=created_col
+    ).observe(obs, F.count(F.lit(1)).alias("rows"))
+    _merge_into_store(
+        spark, dest, latest, touched,
+        key_cols=key_cols, ts_col=ts_col, created_col=created_col,
+        n_buckets=n_buckets,
     )
-    out_tmp = os.path.join(dest, "_staging", f"push-{touched[0]}")
-    (
-        latest.repartition("__bucket")
-        .sortWithinPartitions("__bucket", *key_cols)
-        .write.partitionBy("__bucket")
-        .mode("overwrite")
-        .parquet(out_tmp)
-    )
-    rows = obs.get["rows"]
+    return {"rows_pushed": obs.get["rows"], "buckets_touched": touched}
+
+
+def _served_columns(data: str, dirs: list[str]) -> set[str] | None:
+    """Served column names from one parquet footer (no Spark job): a
+    touched bucket's, else any bucket's; None for an empty store."""
+    dirs = dirs or glob.glob(os.path.join(data, "bucket=*[0-9]"))
+    files = glob.glob(os.path.join(dirs[0], "*.parquet")) if dirs else []
+    return set(pq.read_schema(files[0]).names) if files else None
+
+
+def _merge_into_store(
+    spark: SparkSession,
+    dest: str,
+    fresh: DataFrame,
+    buckets: list[int],
+    *,
+    key_cols: list[str],
+    ts_col: str,
+    created_col: str | None,
+    n_buckets: int,
+    on_merged: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """The serving store's one write path (module docstring): merge the
+    latest-per-key rows ``fresh`` into ``buckets``, new wins, under the
+    store's commit lock. Not re-entrant: no caller may hold the lock.
+    Rows whose columns differ from the served ones raise ``ValueError``
+    before anything is written. ``on_merged`` wraps the merged rows (a
+    caller's observation rides the write)."""
+    data = os.path.join(dest, layout.DATA_DIR)
     io = fileio.get_io()
-    for b in touched:
-        src_dir = os.path.join(out_tmp, f"__bucket={b}")
-        dst_dir = os.path.join(dest, layout.DATA_DIR, f"bucket={b}")
-        os.makedirs(os.path.dirname(dst_dir), exist_ok=True)
-        if os.path.isdir(src_dir):
-            io.swap_dir(src_dir, dst_dir)
-    io.rmtree(out_tmp)
-    return {"rows_pushed": rows, "buckets_touched": touched}
+    stage = os.path.join(dest, "_staging", f"merge-{uuid.uuid4().hex[:12]}")
+    with io.lock(os.path.join(dest, layout.META_DIR)):
+        existing = [os.path.join(data, f"bucket={b}") for b in buckets]
+        existing = [d for d in existing if os.path.isdir(d)]
+        served, cols = _served_columns(data, existing), set(fresh.columns)
+        if served is not None and served != cols:
+            raise ValueError(
+                f"rows for the serving store at {dest} must carry its "
+                f"columns: missing {sorted(served - cols)}, unknown "
+                f"{sorted(cols - served)}"
+            )
+        merged = fresh
+        if existing:
+            old = spark.read.parquet(*existing)
+            old = old.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+            # incoming rows outrank served rows at equal (key, ts,
+            # created): re-materialization is a CORRECTION (late-event
+            # aggregate fixes, transform changes) and must overwrite
+            merged = latest_per_key(
+                fresh.withColumn("__fresh", F.lit(1)).unionByName(
+                    old.withColumn("__fresh", F.lit(0))
+                ),
+                key=key_cols, order=ts_col, created_col=created_col,
+                precedence_col="__fresh",
+            ).drop("__fresh")
+        merged = merged.withColumn(
+            "__bucket", layout.bucket_expr(key_cols, n_buckets)
+        )
+        if on_merged is not None:
+            merged = on_merged(merged)
+        try:
+            (
+                merged.repartition("__bucket")
+                .sortWithinPartitions("__bucket", *key_cols)
+                .write.partitionBy("__bucket")
+                .parquet(stage)
+            )
+            # one swap per bucket dir through the FileIO seam (object-
+            # store impls replace the rename pair with prefix versioning)
+            io.makedirs(data)
+            for b in buckets:
+                src_dir = os.path.join(stage, f"__bucket={b}")
+                if os.path.isdir(src_dir):
+                    io.swap_dir(src_dir, os.path.join(data, f"bucket={b}"))
+        finally:
+            io.rmtree(stage)
 
 
 def infer_store_ts_col(
@@ -829,22 +837,17 @@ def read_online(
     if not key_types:
         sch = spark.read.parquet(os.path.join(data, dirs[0])).schema
         key_types = [sch[c].dataType.simpleString() for c in key_cols]
-    if len(key_cols) == 1:
-        wanted = layout.buckets_of_keys(
-            spark, keys, n_buckets, key_type=key_types[0]
-        )
-    else:
-        wanted = layout.buckets_of_key_tuples(
-            spark, keys, n_buckets, key_types=key_types
-        )
+    wanted = layout.buckets_of_keys(
+        spark, keys, n_buckets,
+        key_type=key_types[0] if len(key_cols) == 1 else key_types,
+    )
     paths = [
         os.path.join(data, d)
         for d in dirs
         if int(d.split("=")[1]) in wanted
     ]
     if not paths:
-        empty = spark.read.parquet(os.path.join(data, dirs[0])).limit(0)
-        return empty
+        return spark.read.parquet(os.path.join(data, dirs[0])).limit(0)
     out = spark.read.parquet(*paths)
     if len(key_cols) == 1:
         out = out.filter(F.col(key_cols[0]).isin(keys))

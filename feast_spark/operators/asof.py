@@ -44,6 +44,8 @@ from datetime import timedelta
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feast_spark.sources.pages import bucket_expr
+
 _ETS = "__asof_event_ts"
 
 
@@ -398,7 +400,7 @@ def _asof_cogroup(
 ) -> DataFrame:
     """Bucketed cogroup + pandas ``merge_asof`` per bucket — the explicit
     sort-merge path of the north rule. Both sides repartition on
-    ``pmod(xxhash64(by), B)`` (the SAME transform sources.layout writes
+    ``sources.pages.bucket_expr(by, B)`` (the transform the layout writes
     with, so layout-aligned inputs shuffle minimally), then one vectorized
     merge per bucket."""
     import pandas as pd
@@ -407,9 +409,7 @@ def _asof_cogroup(
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
 
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in by]), F.lit(n_buckets)
-    ).alias("__b")
+    bucket = bucket_expr(by, n_buckets)
     pb = probes.withColumn("__b", bucket)
     fsel = [*by, right_on, *feature_cols] + ([created_col] if created_col else [])
     # tiebreak hash computed JVM-side with the SAME xxhash64 as J1/J2 so

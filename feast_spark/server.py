@@ -34,19 +34,27 @@ from __future__ import annotations
 
 import json
 import threading
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta
+from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
+
+from pyspark.sql import Row
 
 __all__ = ["FeatureServer"]
 
 
 def _jsonable(v: Any) -> Any:
-    """JSON-safe scalar: timestamps → ISO strings, numpy → native."""
-    if isinstance(v, datetime):
+    """JSON-safe value: dates and timestamps → ISO strings, decimals →
+    floats, numpy → native, struct rows → objects."""
+    if isinstance(v, date):  # datetime too
         return v.isoformat()
+    if isinstance(v, Decimal):
+        return float(v)
     if hasattr(v, "item"):  # numpy scalar
         return v.item()
+    if isinstance(v, Row):
+        return {k: _jsonable(x) for k, x in v.asDict().items()}
     if isinstance(v, (list, tuple)):
         return [_jsonable(x) for x in v]
     return v
@@ -250,6 +258,8 @@ class FeatureServer:
             for i in range(len(next(iter(df_cols.values()))))
         ]
         ts_col = body.get("ts_col", "warc_ts")
+        if ts_col not in df_cols:
+            raise ValueError(f"df has no event-time column {ts_col!r}")
         sdf = self.store.spark.createDataFrame(pdf_rows)
         from pyspark.sql import functions as F
 

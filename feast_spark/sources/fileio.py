@@ -20,6 +20,8 @@ of mutation primitives below:
   and flip the store manifest) — the local impl documents the invariant
   (readers see old or new, never a mix) rather than the mechanism.
 - ``remove`` / ``rmtree``: garbage collection; idempotent.
+- ``lock``: the per-directory commit lock around ``write_conditional``
+  and the serving store's merge-and-swap (``materialize``).
 
 ``pages``/``materialize`` route every commit-path mutation through the
 module-level ``get_io()`` instance. Tests inject crashing subclasses to
@@ -32,6 +34,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 
 class CommitConflict(RuntimeError):
@@ -70,29 +73,35 @@ class FileIO:
         (``None`` = the path must not exist yet). Returns False on
         mismatch — the multi-writer commit seam.
 
-        Locally: an ``flock`` on ONE per-directory ``_commit.lock``
-        serializes the read-compare-publish critical section (kernel-
-        released on process death, so no stale-lock recovery needed;
-        per-directory = per-table, the serialization a commit wants
-        anyway); the publish itself still goes through ``write_atomic``
-        so crash-injection subclasses intercept it. On S3-class stores
-        this is a conditional PUT (If-Match / If-None-Match) or a
-        catalog CAS (DynamoDB, Nessie, a REST catalog) — exactly
-        Iceberg's commit primitive."""
+        Locally: ``lock`` on the path's directory serializes the
+        read-compare-publish; the publish goes through ``write_atomic`` so
+        crash-injection subclasses intercept it. On S3-class stores this
+        is a conditional PUT (If-Match / If-None-Match) or a catalog CAS
+        (DynamoDB, Nessie, a REST catalog) — Iceberg's commit primitive."""
+        with self.lock(os.path.dirname(path)):
+            if self.read_text(path) != expected:
+                return False
+            self.write_atomic(path, text)
+            return True
+
+    @contextmanager
+    def lock(self, directory: str):
+        """Exclusive ``flock`` on ``directory/_commit.lock`` for the body
+        of the ``with``; the kernel drops it on process death. Each
+        holder opens its own descriptor, so the lock excludes threads as
+        well as processes — and must not be re-entered (the inner
+        ``flock`` would wait on the outer one forever)."""
         import fcntl
 
-        self.makedirs(os.path.dirname(path))
+        self.makedirs(directory)
         fd = os.open(
-            os.path.join(os.path.dirname(path), "_commit.lock"),
+            os.path.join(directory, "_commit.lock"),
             os.O_CREAT | os.O_RDWR,
             0o644,
         )
         try:
             fcntl.flock(fd, fcntl.LOCK_EX)
-            if self.read_text(path) != expected:
-                return False
-            self.write_atomic(path, text)
-            return True
+            yield
         finally:
             os.close(fd)  # releases the flock
 

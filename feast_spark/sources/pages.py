@@ -50,10 +50,11 @@ DEFAULT_BUCKETS = 16
 
 
 def bucket_expr(key_col: str | list[str], n_buckets: int) -> Column:
-    """Iceberg ``bucket(B, key)`` transform — the SAME expression the
-    cogroup PIT strategy repartitions with, so layout-aligned joins
-    shuffle on a precomputed id. A list = composite key, hashed as
-    ``xxhash64(k1, k2, …)`` (same as operators.asof's composite path)."""
+    """Iceberg ``bucket(B, key)`` transform — the one spelling of the
+    bucket hash: the layout, the serving store and the cogroup PIT
+    strategy all call it, so layout-aligned joins shuffle on a
+    precomputed id. A list = composite key, hashed as
+    ``xxhash64(k1, k2, …)``."""
     cols = [key_col] if isinstance(key_col, str) else list(key_col)
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets))
 
@@ -369,6 +370,7 @@ def _file_stats(abs_path: str, rel_path: str, key_col: str, ts_col: str) -> dict
     column-stats manifest) so reads can prune on arbitrary predicates
     (``plan_files(col_ranges=...)``). Binary columns and long strings
     are skipped — they bloat the manifest without pruning value."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(abs_path).metadata
@@ -432,6 +434,13 @@ def _file_stats(abs_path: str, rel_path: str, key_col: str, ts_col: str) -> dict
         lo, hi = _iso(min(mins[name])), _iso(max(maxs[name]))
         if _json_safe(lo) and _json_safe(hi):
             cols[name] = [lo, hi]
+    if ts_col not in cols and ts_col in names:
+        # INT96 timestamps (Spark's default output type) have no footer
+        # min/max: read the column, so pruning works under any session
+        mm = pc.min_max(pq.read_table(abs_path, columns=[ts_col])[ts_col])
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo is not None:
+            cols[ts_col] = [_iso(lo), _iso(hi)]
     return {
         "path": rel_path,
         "dt": dt,
@@ -1279,59 +1288,42 @@ def read_table_incremental(
     return spark.read.schema(schema).parquet(*paths)
 
 
+def buckets_of_frame(df: DataFrame, key_cols: list[str], n_buckets: int) -> list[int]:
+    """Sorted ``bucket_expr`` ids of the rows of ``df`` — the one route
+    from keys to buckets; one Spark job (xxhash64 runs in the JVM)."""
+    rows = df.select(bucket_expr(key_cols, n_buckets).alias("b"))
+    return sorted(r["b"] for r in rows.distinct().collect())
+
+
 def buckets_of_keys(
     spark: SparkSession, keys: list, n_buckets: int,
-    key_type: str | None = None,
+    key_type: str | list[str] | None = None,
 ) -> set[int]:
-    """Compute the layout buckets of a probe key set (for S2 bucket
-    pruning). xxhash64 is a JVM function, so a one-column Spark job is
-    the authoritative way to evaluate it. The key column must carry the
-    TABLE's key dtype (pass ``key_type``, Spark simpleString): xxhash64
-    of an int cast to string (or an int vs a bigint) differs from the
-    hash the writer used, silently missing every row of non-string keys
-    (round-2 review finding). Without ``key_type``, the natural inferred
-    type is used (Python int → bigint, str → string)."""
+    """Layout buckets of a probe key set (S2 bucket pruning). Keys must
+    hash with the TABLE's key dtype (``key_type``, a Spark simpleString;
+    default: inferred, int → bigint): xxhash64 of an int, a bigint and
+    a string differ, silently missing every row (round-2 review).
+    Composite keys: tuples, with ``key_type`` a list of dtypes."""
     if not keys:
         return set()
+    composite = isinstance(key_type, list)
+    rows = [tuple(k) for k in keys] if composite else [(k,) for k in keys]
+    names = [f"k{i}" for i in range(len(rows[0]))]
     if key_type:
         # explicit schema: no inference (all-None key lists would fail
         # type inference — r02 review) and the exact table dtype
-        df = spark.createDataFrame([(k,) for k in keys], f"k {key_type}")
+        types = key_type if composite else [key_type]
+        df = spark.createDataFrame(
+            rows, ", ".join(f"{n} {t}" for n, t in zip(names, types))
+        )
     else:
         try:
-            df = spark.createDataFrame([(k,) for k in keys], ["k"])
+            df = spark.createDataFrame(rows, names)
         except Exception:  # all-None: type-independent (hash of null)
-            df = spark.createDataFrame([(k,) for k in keys], "k string")
-    rows = df.select(
-        F.pmod(F.xxhash64("k"), F.lit(n_buckets)).alias("b")
-    ).distinct().collect()
-    return {r["b"] for r in rows}
-
-
-def buckets_of_key_tuples(
-    spark: SparkSession,
-    keys: list[tuple],
-    n_buckets: int,
-    key_types: list[str] | None = None,
-) -> set[int]:
-    """Composite-key twin of ``buckets_of_keys``: the bucket of a key
-    TUPLE is ``pmod(xxhash64(k1, k2, …), B)`` — the multi-column hash the
-    writer used. ``key_types`` (Spark simpleStrings, one per key column)
-    pins the dtypes for the same hash-stability reason as the scalar
-    path."""
-    if not keys:
-        return set()
-    width = len(keys[0])
-    names = [f"k{i}" for i in range(width)]
-    if key_types:
-        schema = ", ".join(f"{n} {t}" for n, t in zip(names, key_types))
-        df = spark.createDataFrame([tuple(k) for k in keys], schema)
-    else:
-        df = spark.createDataFrame([tuple(k) for k in keys], names)
-    rows = df.select(
-        F.pmod(F.xxhash64(*names), F.lit(n_buckets)).alias("b")
-    ).distinct().collect()
-    return {r["b"] for r in rows}
+            df = spark.createDataFrame(
+                rows, ", ".join(f"{n} string" for n in names)
+            )
+    return set(buckets_of_frame(df, names, n_buckets))
 
 
 # ---------------------------------------------------------------- lineage
@@ -1393,8 +1385,8 @@ def upsert_table(
     (key, ts) pairs in ``updates`` are removed instead.
 
     Scale shape: only the buckets containing updated keys are rewritten
-    — the manifest locates them without scanning (pmod(xxhash64(key), B)
-    of the distinct update keys, collected driver-side, bounded by B);
+    — the manifest locates them without scanning (``buckets_of_frame``
+    of the update keys, collected driver-side, bounded by B);
     unaffected files carry over into the new snapshot untouched. Old
     files stay on disk for time travel until ``expire_snapshots``.
     Single-writer, like every commit here. Returns the new snapshot id.
@@ -1423,12 +1415,7 @@ def upsert_table(
         ]
     )
 
-    affected = {
-        r["b"]
-        for r in updates.select(
-            F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).alias("b")
-        ).distinct().collect()
-    }
+    affected = set(buckets_of_frame(updates, [key_col], n_buckets))
     keep_files = [f for f in snap["files"] if f["bucket"] not in affected]
     touch_files = [f for f in snap["files"] if f["bucket"] in affected]
 

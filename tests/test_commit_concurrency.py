@@ -9,6 +9,7 @@ lands."""
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 import pytest
@@ -72,6 +73,30 @@ class TestWriteConditional:
         assert sum(results) == 1
         winner = results.index(True)
         assert io.read_text(p) == f"w{winner}"
+
+    def test_lock_serializes_read_modify_write(self, tmp_path):
+        """``FileIO.lock`` (the serving store's write lock): 8 threads
+        increment one counter file under it; a lost update would leave
+        the count short."""
+        io = fileio.FileIO()
+        p = str(tmp_path / "n")
+        io.write_atomic(p, "0")
+
+        def worker():
+            for _ in range(50):
+                with io.lock(str(tmp_path)):
+                    io.write_atomic(p, str(int(io.read_text(p)) + 1))
+
+        prev = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            ts = [threading.Thread(target=worker) for _ in range(8)]
+            [t.start() for t in ts]
+            [t.join(timeout=60) for t in ts]
+        finally:
+            sys.setswitchinterval(prev)
+        assert not any(t.is_alive() for t in ts)
+        assert io.read_text(p) == "400"
 
 
 class RaceOnHeadIO(fileio.FileIO):
