@@ -823,6 +823,13 @@ def read_online(
         out = spark.read.parquet(data)
         return expire(out) if expire else out
     dirs = sorted(d for d in os.listdir(data) if d.startswith("bucket="))
+    if not dirs:
+        # materialized over a range with no events: no bucket dir (and
+        # no footer to read), so every key is absent
+        types = (meta or {}).get("key_types") or ["string"] * len(key_cols)
+        return spark.createDataFrame(
+            [], ", ".join(f"`{c}` {t}" for c, t in zip(key_cols, types))
+        )
     if meta is not None:
         n_buckets = meta["n_buckets"]
     else:  # legacy store without metadata: best-effort inference

@@ -26,11 +26,12 @@ PySpark 4.1.2 has no native asOfJoin (verified), so four strategies:
   "sort-merge over url-hash-partitioned partitions" path of the north
   rule — when both sides are already bucket-laid-out (sources.layout),
   the shuffle is a cheap B-way repartition on a precomputed bucket id.
-- ``sliced`` (J1-hot): union+window partitioned by (key, time-slice)
-  with per-slice carry-ins — the segmented-scan parallelization of the
-  forward fill. The ONLY strategy whose per-task state is bounded for a
-  single hot key (buckets and salts can't split one key; its timeline
-  can). The planner routes manifest-detected hot keys here.
+- ``sliced`` (J1-hot): the SAME union+window routine, partitioned by
+  (key, time-slice) with per-slice carry-ins — the segmented-scan
+  parallelization of the forward fill. The ONLY strategy whose per-task
+  state is bounded for a single hot key (buckets and salts can't split
+  one key; its timeline can). The planner routes manifest-detected hot
+  keys here.
 
 All strategies forward-fill/select a STRUCT of the full feature payload,
 not per-column fills — so a legitimately-NULL feature value in the latest
@@ -128,18 +129,20 @@ def asof_join(
         include_event_ts=include_event_ts, event_ts_name=event_ts_name,
     )
     if strategy == "union":
-        return _asof_union_window(probes, features, **kw)
+        return _asof_window(probes, features, slice_s=None, **kw)
     if strategy == "broadcast":
         return _asof_broadcast(probes, features, **kw)
     if strategy == "cogroup":
         return _asof_cogroup(probes, features, n_buckets=n_buckets, **kw)
     if strategy == "sliced":
-        return _asof_union_sliced(probes, features, slice_s=slice_s, **kw)
+        # default slice: one TTL, else 30 days
+        slice_s = slice_s or kw["ttl"] or 30 * 86400.0
+        return _asof_window(probes, features, slice_s=slice_s, **kw)
     raise ValueError(f"unknown asof strategy: {strategy!r}")
 
 
-# ---------------------------------------------------------------- J1 ----
-def _asof_union_window(
+# ------------------------------------------------------ J1 / J1-hot ----
+def _asof_window(
     probes: DataFrame,
     features: DataFrame,
     *,
@@ -151,12 +154,30 @@ def _asof_union_window(
     feature_cols: list[str],
     include_event_ts: bool,
     event_ts_name: str,
+    slice_s: float | None,
 ) -> DataFrame:
     """Union+window: the Feast-0.9 PySpark strategy (upstream
     historical_feature_retrieval_job.py), re-derived. Single shuffle
     (window partitionBy ``by``); probes and events sort together so the
     at-or-before boundary falls out of the sort order (events sort BEFORE
-    probes at equal ts → equality matches; after → leakage impossible)."""
+    probes at equal ts → equality matches; after → leakage impossible).
+
+    With ``slice_s`` (J1-hot) the same fill is the segmented scan that
+    bounds a HOT key (r02 review: no bucket or salt bound helps a single
+    key bigger than one task; only slicing its TIMELINE does):
+
+    1. Partition by (key, slice = floor(ts / slice_s)) instead — per-task
+       state is one slice of one key, however hot the key is.
+    2. Per (key, slice), take the LATEST event payload (map-side
+       combinable max_by); a tiny per-slice table.
+    3. Carry-in for slice w = last payload over slices < w — a window
+       over the per-slice table (O(#slices) rows per key, not O(rows)).
+    4. A probe's match = within-slice fill, else its slice's carry-in.
+       TTL applies afterwards on the payload's true event ts.
+
+    Cost: two extra small shuffles; identical results (both modes are
+    checked against independent oracles in tests/test_asof.py,
+    test_asof_properties.py and test_golden.py)."""
     payload = F.struct(
         F.col(right_on).alias(_ETS),
         *[F.col(c).alias(c) for c in feature_cols],
@@ -177,12 +198,17 @@ def _asof_union_window(
         F.col(left_on).alias("__t"),
         F.lit(1).alias("__is_probe"),
     )
+    part = list(by)
+    if slice_s is not None:
+        w_of = F.floor(F.col("__t").cast("double") / F.lit(float(slice_s)))
+        ev, pr = ev.withColumn("__w", w_of), pr.withColumn("__w", w_of)
+        part.append("__w")
     u = pr.unionByName(ev, allowMissingColumns=True)
 
     # within a url: order by ts; at equal ts events (0) precede probes (1);
     # among equal-ts events ascending (created, hash) so last-wins = max
     w = (
-        Window.partitionBy(*by)
+        Window.partitionBy(*part)
         .orderBy(
             F.col("__t").asc(),
             F.col("__is_probe").asc(),
@@ -193,6 +219,33 @@ def _asof_union_window(
     )
     filled = u.withColumn("__fill", F.last("__payload", ignorenulls=True).over(w))
     out = filled.filter(F.col("__is_probe") == 1)
+
+    if slice_s is not None:
+        # per-(key, slice) latest event payload → carry-in per slice.
+        # max_by's struct ordering (nulls smallest) matches the fill's
+        # asc_nulls_first tie-break, so slice boundaries are seamless. The
+        # slice index spans PROBE slices too — a probe slice with no
+        # events still needs the carry from earlier slices.
+        ev_last = ev.groupBy(*part).agg(
+            F.max_by(
+                F.col("__payload"),
+                F.struct(F.col("__t"), F.col("__created"), F.col("__tb")),
+            ).alias("__last")
+        )
+        over_slices = (
+            Window.partitionBy(*by)
+            .orderBy("__w")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        carry = (
+            u.select(*part).distinct()
+            .join(ev_last, on=part, how="left")
+            .withColumn("__carry", F.last("__last", ignorenulls=True).over(over_slices))
+            .select(*part, "__carry")
+        )
+        out = out.join(carry, on=part, how="left").withColumn(
+            "__fill", F.coalesce(F.col("__fill"), F.col("__carry"))
+        )
 
     valid = F.col("__fill").isNotNull()
     if ttl is not None:
@@ -207,120 +260,6 @@ def _asof_union_window(
         sel.append(F.when(valid, F.col("__fill")[c]).alias(c))
     if include_event_ts:
         sel.append(F.when(valid, F.col("__fill")[_ETS]).alias(event_ts_name))
-    return out.select(*sel)
-
-
-# ------------------------------------------------------------ J1-hot ----
-def _asof_union_sliced(
-    probes: DataFrame,
-    features: DataFrame,
-    *,
-    by: list[str],
-    left_on: str,
-    right_on: str,
-    ttl: float | None,
-    created_col: str | None,
-    feature_cols: list[str],
-    include_event_ts: bool,
-    event_ts_name: str,
-    slice_s: float | None,
-) -> DataFrame:
-    """Time-sliced union+window for HOT keys — the segmented-scan
-    parallelization of the as-of forward fill (r02 review: no bucket or
-    salt bound helps a single key bigger than one task; only slicing its
-    TIMELINE does).
-
-    1. Partition probes+events by (key, slice = floor(ts / W)) and
-       forward-fill within each slice — per-task state is one slice of
-       one key, regardless of how hot the key is.
-    2. Per (key, slice), take the LATEST event payload (map-side
-       combinable max_by); a tiny per-slice table.
-    3. Carry-in for slice w = last payload over slices < w — a window
-       over the per-slice table (O(#slices) rows per key, not O(rows)).
-    4. A probe's match = within-slice fill, else its slice's carry-in.
-       TTL applies afterwards on the payload's true event ts, exactly as
-       in plain union.
-
-    Cost: two extra small shuffles vs plain union; identical results
-    (property-tested against union in tests/test_asof.py)."""
-    if slice_s is None:
-        slice_s = ttl if ttl else 30 * 86400.0
-    payload = F.struct(
-        F.col(right_on).alias(_ETS),
-        *[F.col(c).alias(c) for c in feature_cols],
-    )
-    created = (
-        F.col(created_col) if created_col else F.lit(None).cast("timestamp")
-    )
-    w_of = lambda c: F.floor(F.col(c).cast("double") / F.lit(float(slice_s)))  # noqa: E731
-
-    ev = features.select(
-        *[F.col(c).alias(c) for c in by],
-        F.col(right_on).alias("__t"),
-        F.lit(0).alias("__is_probe"),
-        created.alias("__created"),
-        _tiebreak_hash(features, feature_cols).alias("__tb"),
-        payload.alias("__payload"),
-    ).withColumn("__w", w_of("__t"))
-    pr = probes.select(
-        *[F.col(c) for c in probes.columns],
-        F.col(left_on).alias("__t"),
-        F.lit(1).alias("__is_probe"),
-    ).withColumn("__w", w_of("__t"))
-    u = pr.unionByName(ev, allowMissingColumns=True)
-
-    in_slice = (
-        Window.partitionBy(*by, "__w")
-        .orderBy(
-            F.col("__t").asc(),
-            F.col("__is_probe").asc(),
-            F.col("__created").asc_nulls_first(),
-            F.col("__tb").asc_nulls_first(),
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.withColumn("__fill", F.last("__payload", ignorenulls=True).over(in_slice))
-
-    # per-(key, slice) latest event payload → carry-in per slice.
-    # max_by's struct ordering (nulls smallest) matches the fill's
-    # asc_nulls_first tie-break, so slice boundaries are seamless. The
-    # slice index spans PROBE slices too — a probe slice with no events
-    # still needs the carry from earlier slices.
-    ev_last = ev.groupBy(*by, "__w").agg(
-        F.max_by(
-            F.col("__payload"),
-            F.struct(F.col("__t"), F.col("__created"), F.col("__tb")),
-        ).alias("__last")
-    )
-    slice_last = (
-        u.select(*by, "__w").distinct()
-        .join(ev_last, on=[*by, "__w"], how="left")
-    )
-    over_slices = (
-        Window.partitionBy(*by)
-        .orderBy("__w")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = slice_last.withColumn(
-        "__carry", F.last("__last", ignorenulls=True).over(over_slices)
-    ).select(*by, "__w", "__carry")
-
-    out = (
-        filled.filter(F.col("__is_probe") == 1)
-        .join(carry, on=[*by, "__w"], how="left")
-        .withColumn("__best", F.coalesce(F.col("__fill"), F.col("__carry")))
-    )
-    valid = F.col("__best").isNotNull()
-    if ttl is not None:
-        valid = valid & (
-            F.col("__best")[_ETS].cast("double")
-            >= F.col(left_on).cast("double") - F.lit(ttl)
-        )
-    sel: list[Column] = [F.col(c) for c in probes.columns]
-    for c in feature_cols:
-        sel.append(F.when(valid, F.col("__best")[c]).alias(c))
-    if include_event_ts:
-        sel.append(F.when(valid, F.col("__best")[_ETS]).alias(event_ts_name))
     return out.select(*sel)
 
 

@@ -13,14 +13,29 @@ Strategy policy (``strategy=None`` → auto):
   same bucket count → ``cogroup`` (J3): per-bucket sort-merge, minimal
   shuffle;
 - else ``union`` (J1): one shuffle on the entity key, unbounded probe
-  cardinality.
+  cardinality;
+- a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) overrides any of
+  these with ``sliced`` (J1-hot).
+
+Layout-backed views are pruned from ONE probe summary — a single
+aggregate over the entity dataframe giving the probe time bounds and the
+set of layout buckets the probe keys hash to. Files outside the bounds
+(widened by the view's TTL) are skipped, and when the bucket set is
+smaller than the layout's B only those buckets are scanned.
 """
 
 from __future__ import annotations
 
+import json
+import math
+from datetime import timedelta
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feast_spark.operators.asof import asof_join
+from feast_spark.sources.pages import bucket_expr
 
 # measured knee on the 2.1M-row pages table (local[32], BASELINE.md):
 # broadcast ~3s up to 100k probes but 45s at 600k (the range-join output
@@ -28,12 +43,6 @@ from feast_spark.operators.asof import asof_join
 # dominates); union stays ~3-5s throughout, cogroup 3.6s. Broadcast also
 # costs driver/executor memory proportional to the probe set.
 BROADCAST_PROBE_ROWS = 100_000
-
-# probe sets at/below this size additionally prune layout BUCKETS: the
-# distinct probe keys are collected (bounded) and only their
-# pmod(xxhash64(key), B) buckets are scanned — a point-lookup-shaped
-# retrieval reads ~|buckets|/B of the table instead of all of it
-BUCKET_PRUNE_PROBE_ROWS = 10_000
 
 # cogroup materializes one bucket at a time in a Python worker; when the
 # manifest says the biggest bucket exceeds this many bytes, the planner
@@ -56,7 +65,6 @@ def choose_strategy(
     probe_count_hint: int | None = None,
     *,
     layout_backed: bool = False,
-    allow_count: bool = False,
 ) -> str:
     """DataFrame-level strategy policy (§4.2.1): small probe set →
     broadcast; large probes over a layout-backed view → cogroup (the
@@ -67,20 +75,28 @@ def choose_strategy(
     estimate (parquet footers / Catalyst stats — VERDICT r03 next #5:
     no more implicit ``probes.count()`` job per retrieval). When neither
     yields a number the policy picks the strategy that is safe at
-    unbounded cardinality; pass ``allow_count=True`` to opt back into
-    the counting fallback (fine for interactive use)."""
+    unbounded cardinality."""
     n = probe_count_hint
     if n is None:
         from feast_spark.estimate import estimate_rows
 
         n = estimate_rows(probes)
-    if n is None and allow_count:
-        n = probes.count()
-    if n is None:
-        return "cogroup" if layout_backed else "union"
-    if n <= BROADCAST_PROBE_ROWS:
+    if n is not None and n <= BROADCAST_PROBE_ROWS:
         return "broadcast"
     return "cogroup" if layout_backed else "union"
+
+
+def _prune_spec(fv, snap: dict) -> tuple | None:
+    """(key column, table dtype, B) the view's probe keys hash with to
+    find their layout buckets, or None when the layout buckets on a
+    column that is not among the view's join keys. Keys must hash with
+    the TABLE's dtype: xxhash64 of an int, a bigint and a string differ
+    (round-2 review)."""
+    kcol = snap["key_col"]
+    if kcol not in fv.join_keys:
+        return None
+    schema = T.StructType.fromJson(json.loads(snap["schema"]))
+    return kcol, schema[kcol].dataType.simpleString(), snap["n_buckets"]
 
 
 def plan_retrieval(
@@ -91,15 +107,15 @@ def plan_retrieval(
     full_feature_names: bool = False,
     strategy: str | None = None,
     probe_count_hint: int | None = None,
-    hot_key_min_rows: int = HOT_KEY_MIN_ROWS,
-    cogroup_bucket_bytes: int = COGROUP_BUCKET_BYTES,
     decisions: list | None = None,
 ) -> DataFrame:
     """Build the retrieval DataFrame: entity_df + one PIT join per view.
 
-    ``decisions``, when given, collects one dict per view with the chosen
-    strategy and any manifest-detected hot keys — the skew decision is
-    visible in the job log / tests, not hidden planner magic."""
+    Every ref is checked before any Spark job runs. ``decisions``, when
+    given, collects one dict per view with the chosen strategy, any
+    manifest-detected hot keys and the layout buckets scanned (``None``:
+    all of them) — the planner's choices are visible in the job log /
+    tests, not hidden planner magic."""
     # group refs by view, preserving order
     by_view: dict[str, list[str]] = {}
     for ref in features:
@@ -107,8 +123,20 @@ def plan_retrieval(
         if not feat:
             raise ValueError(f"feature ref must be 'view:feature', got {ref!r}")
         by_view.setdefault(view, []).append(feat)
+    views = {name: store.get_view(name) for name in by_view}
+    for view_name, feats in by_view.items():
+        declared = {s.name for s in views[view_name].features}
+        unknown = [f for f in feats if f not in declared]
+        if unknown:
+            raise ValueError(f"view {view_name!r} has no features {unknown}")
+    # the pinned ref's snapshot when the view carries one — the manifest
+    # used for pruning/skew stats must describe the same files the scan
+    # reads
+    snaps = {
+        name: fv.layout_snapshot() for name, fv in views.items() if fv.layout_root
+    }
+    specs = {name: _prune_spec(views[name], snap) for name, snap in snaps.items()}
 
-    out = entity_df
     probe_n = None
     if strategy is None:
         probe_n = probe_count_hint
@@ -120,20 +148,34 @@ def plan_retrieval(
             from feast_spark.estimate import estimate_rows
 
             probe_n = estimate_rows(entity_df)
-    probe_bounds = None
-    # probe keys are join-key-specific: views may join on different
-    # entity columns, so cache per column name
-    probe_keys_by_col: dict[str, list] = {}
+
+    lo = hi = None
+    bucket_sets: dict = {}
+    if snaps:
+        # the probe summary: ONE aggregate gives the probe time bounds
+        # and, per (key column, dtype, B), the buckets the probe keys hash
+        # to — with the layout's own bucket_expr, so no key leaves Spark.
+        # A NULL key hashes to the seed's bucket and stays in the set.
+        aliases = {
+            spec: f"__b{i}"
+            for i, spec in enumerate(dict.fromkeys(filter(None, specs.values())))
+        }
+        row = entity_df.agg(
+            F.min(F.col("ts").cast("timestamp")).alias("lo"),
+            F.max(F.col("ts").cast("timestamp")).alias("hi"),
+            *[
+                F.collect_set(bucket_expr(F.col(k).cast(t), n)).alias(a)
+                for (k, t, n), a in aliases.items()
+            ],
+        ).first()
+        lo, hi = row["lo"], row["hi"]
+        bucket_sets = {spec: set(row[a]) for spec, a in aliases.items()}
+
+    out = entity_df
     for view_name, feats in by_view.items():
-        fv = store.get_view(view_name)
-        snap = None
-        if fv.layout_root:
-            # the pinned ref's snapshot when the view carries one — the
-            # manifest used for pruning/skew stats must describe the
-            # same files the scan reads
-            snap = fv.layout_snapshot()
+        fv, snap = views[view_name], snaps.get(view_name)
         chosen = strategy or choose_strategy(
-            entity_df, probe_n, layout_backed=fv.layout_root is not None
+            entity_df, probe_n, layout_backed=snap is not None
         )
         hot_keys: list = []
         if strategy is None and snap is not None:
@@ -149,33 +191,20 @@ def plan_retrieval(
             # for every auto-chosen strategy, cogroup included.
             from feast_spark.operators.skew import detect_hot_keys_from_manifest
 
-            hot_keys = detect_hot_keys_from_manifest(
-                snap, min_rows=hot_key_min_rows
-            )
+            hot_keys = detect_hot_keys_from_manifest(snap, min_rows=HOT_KEY_MIN_ROWS)
             if hot_keys:
                 chosen = "sliced"
         src_kw: dict = {}
         n_buckets = None
-        if fv.layout_root:
+        if snap is not None:
             # manifest pruning by probe time range + TTL: files wholly
             # outside [min(ts) - ttl, max(ts)] never reach Spark — the
             # Iceberg-planning analogue for retrieval (SURVEY.md S2)
-            if probe_bounds is None:
-                from pyspark.sql import functions as F
-
-                b = entity_df.agg(
-                    F.min(F.col("ts").cast("timestamp")).alias("lo"),
-                    F.max(F.col("ts").cast("timestamp")).alias("hi"),
-                ).first()
-                probe_bounds = (b["lo"], b["hi"])
-            lo, hi = probe_bounds
             if hi is not None:
-                import datetime as _dt
-
                 # With no TTL the as-of lookback is unbounded: a key whose
                 # latest feature row predates the earliest probe is still a
                 # valid PIT match, so only the upper bound may prune.
-                src_kw = {"end": hi + _dt.timedelta(seconds=1)}
+                src_kw["end"] = hi + timedelta(seconds=1)
                 if lo is not None and fv.ttl is not None:
                     src_kw["start"] = lo - fv.ttl
                     if fv.aggregations:
@@ -188,10 +217,12 @@ def plan_retrieval(
                             del src_kw["start"]
                         else:
                             src_kw["start"] -= w
-            from feast_spark.sources.pages import buckets_of_keys
-
-            layout_buckets = snap["n_buckets"]
-            n_buckets = layout_buckets
+            # bucket pruning: scan only the buckets the probe keys hash to
+            # when they miss any; the manifest always uses the LAYOUT's
+            # modulus, not the (possibly grown) cogroup repartition count
+            wanted = bucket_sets.get(specs[view_name])
+            if wanted is not None and len(wanted) < snap["n_buckets"]:
+                src_kw["buckets"] = wanted
             if chosen == "cogroup":
                 # bucket-size policy (VERDICT r01 plan audit): cogroup
                 # materializes one bucket per Python worker, so B must
@@ -212,55 +243,20 @@ def plan_retrieval(
                         per_bucket.get(fs["bucket"], 0) + fs.get("bytes", 0)
                     )
                 biggest = max(per_bucket.values(), default=0)
-                if biggest > cogroup_bucket_bytes:
-                    import math
-
-                    n_buckets *= math.ceil(biggest / cogroup_bucket_bytes)
+                n_buckets = snap["n_buckets"] * max(
+                    1, math.ceil(biggest / COGROUP_BUCKET_BYTES)
+                )
         if decisions is not None:
             decisions.append(
                 {
                     "view": view_name,
                     "strategy": chosen,
                     "hot_keys": hot_keys,
-                    "n_buckets": n_buckets if chosen == "cogroup" else None,
+                    "n_buckets": n_buckets,
+                    "buckets": src_kw.get("buckets"),
                 }
             )
-        if fv.layout_root:
-            # bucket pruning for small probe sets (point-lookup shape);
-            # the layout buckets on ONE column — prune only when that
-            # column is among the view's join keys (always true for
-            # single-entity views)
-            kcol = snap["key_col"]
-            if kcol in fv.join_keys and kcol not in probe_keys_by_col:
-                sample = (
-                    entity_df.select(kcol).distinct()
-                    .limit(BUCKET_PRUNE_PROBE_ROWS + 1).collect()
-                )
-                probe_keys_by_col[kcol] = (
-                    [r[kcol] for r in sample]
-                    if len(sample) <= BUCKET_PRUNE_PROBE_ROWS
-                    else []  # too many: skip bucket pruning
-                )
-            if probe_keys_by_col.get(kcol):
-                import json as _json
-
-                from pyspark.sql import types as _T
-
-                key_type = None
-                tbl_schema = _T.StructType.fromJson(_json.loads(snap["schema"]))
-                if kcol in tbl_schema.fieldNames():
-                    key_type = tbl_schema[kcol].dataType.simpleString()
-                # manifest pruning always uses the LAYOUT's modulus, not
-                # the (possibly grown) cogroup repartition count
-                src_kw["buckets"] = buckets_of_keys(
-                    store.spark, probe_keys_by_col[kcol], layout_buckets,
-                    key_type=key_type,
-                )
         src = fv.derived_frame(fv.load(store.spark, **src_kw))
-        declared = {s.name for s in fv.features}
-        unknown = [f for f in feats if f not in declared]
-        if unknown:
-            raise ValueError(f"view {view_name!r} has no features {unknown}")
         joined = asof_join(
             out,
             src,
@@ -274,7 +270,7 @@ def plan_retrieval(
             # layout-aligned bucket count: the cogroup strategy then
             # repartitions on the SAME pmod(xxhash64(url), B) the table
             # was written with (SURVEY.md §4.2.3)
-            n_buckets=n_buckets if chosen == "cogroup" else None,
+            n_buckets=n_buckets,
         )
         if full_feature_names:
             joined = joined.withColumnsRenamed(

@@ -49,14 +49,14 @@ LINEAGE_DIR = "lineage"
 DEFAULT_BUCKETS = 16
 
 
-def bucket_expr(key_col: str | list[str], n_buckets: int) -> Column:
+def bucket_expr(key_col: str | Column | list, n_buckets: int) -> Column:
     """Iceberg ``bucket(B, key)`` transform — the one spelling of the
-    bucket hash: the layout, the serving store and the cogroup PIT
-    strategy all call it, so layout-aligned joins shuffle on a
-    precomputed id. A list = composite key, hashed as
-    ``xxhash64(k1, k2, …)``."""
-    cols = [key_col] if isinstance(key_col, str) else list(key_col)
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets))
+    bucket hash: the layout, the serving store, the cogroup PIT strategy
+    and the retrieval planner all call it, so layout-aligned joins
+    shuffle on a precomputed id. A key is a column name or a Column; a
+    list = composite key, hashed as ``xxhash64(k1, k2, …)``."""
+    cols = list(key_col) if isinstance(key_col, (list, tuple)) else [key_col]
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
 
 
 _DT_PATTERNS = {"day": "yyyy-MM-dd", "week": "yyyy-ww", "month": "yyyy-MM"}

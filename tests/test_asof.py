@@ -2,7 +2,7 @@
 
 Oracles: pandas merge_asof AND DuckDB ASOF LEFT JOIN (independent
 implementations). Properties: zero leakage, TTL bound, at-or-before
-equality boundary, strategy equivalence J1=J2=J3, permutation invariance.
+equality boundary, strategy equivalence J1=J2=J3=J1-hot, permutation invariance.
 """
 
 from __future__ import annotations
@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 from feast_spark.operators.asof import asof_join
 
 TTL = timedelta(days=30)
-STRATEGIES = ["union", "broadcast", "cogroup"]
+STRATEGIES = ["union", "broadcast", "cogroup", "sliced"]
+# sliced: one-day slices, far below the TTL, so most matches are carry-ins
+# from an earlier slice (the other strategies ignore slice_s)
+SLICE_S = 86400
 
 
 @pytest.fixture(scope="module")
@@ -39,6 +42,7 @@ def _spark_result(spark, probes_df, feat_df, strategy, ttl=TTL):
         ttl=ttl,
         strategy=strategy,
         include_event_ts=True,
+        slice_s=SLICE_S,
     )
     pdf = out.toPandas()
     return pdf.sort_values(["url", "ts", "n_chars"]).reset_index(drop=True)
@@ -191,7 +195,7 @@ def test_created_ts_tiebreak(spark):
         assert out["v"].tolist() == [2.0], f"strategy {s}"
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_composite_key_asof(spark, strategy):
     """by=[k1, k2]: the tuple is one logical key in every strategy —
     matches never cross (user, type) boundaries and equal the
@@ -217,7 +221,7 @@ def test_composite_key_asof(spark, strategy):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     out = asof_join(
         probes, feats, by=["u", "t"], left_on="ts", right_on="ets",
-        strategy=strategy,
+        strategy=strategy, slice_s=SLICE_S,
     ).toPandas().set_index(["u", "t", "ts"])["v"].to_dict()
     want = {
         ("a", "x", pd.Timestamp("2023-01-05")): 4.0,

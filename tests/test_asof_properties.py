@@ -1,6 +1,7 @@
 """Property-based as-of join tests (SURVEY.md §5.2.2): random probes and
 feature rows — duplicate timestamps, TTL edges, empty groups — checked
-against an independent pandas reference on all three strategies.
+against an independent pandas reference on every strategy (``sliced``
+with 3-hour slices, so matches cross slice boundaries as carry-ins).
 
 Spark jobs are expensive per example, so examples are few but adversarial
 (hypothesis shrinks failures to minimal cases)."""
@@ -49,7 +50,7 @@ def _pandas_reference(probes, events, ttl_s):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
 @settings(
     max_examples=6,
     deadline=None,
@@ -71,7 +72,7 @@ def test_asof_matches_reference(spark, strategy, events, probes, ttl_h):
         edf = spark.createDataFrame([], "url string, warc_ts timestamp, v double")
     got = asof_join(
         pdf, edf, by="url", left_on="ts", right_on="warc_ts",
-        ttl=ttl_s, strategy=strategy, include_event_ts=True,
+        ttl=ttl_s, strategy=strategy, include_event_ts=True, slice_s=3 * 3600,
     ).toPandas()
 
     want = _pandas_reference(probes, events, ttl_s)

@@ -19,15 +19,18 @@ _ACTIONS = [
 
 
 @pytest.fixture()
-def no_actions(monkeypatch):
+def no_actions(spark, monkeypatch):
     """Fail the test if ANY DataFrame action runs inside the block."""
     def boom(name):
         def _fail(self, *a, **kw):
             raise AssertionError(f"plan-time DataFrame.{name}() job")
         return _fail
 
-    for name in _ACTIONS:
-        monkeypatch.setattr(DataFrame, name, boom(name))
+    # the session's concrete DataFrame class (pyspark.sql.classic's in
+    # PySpark 4) overrides the actions of the public base class
+    for cls in {DataFrame, type(spark.range(0))}:
+        for name in _ACTIONS:
+            monkeypatch.setattr(cls, name, boom(name))
     yield
 
 
@@ -114,6 +117,42 @@ def test_retrieval_planning_zero_jobs(spark, data_dir, no_actions):
     dec_est: list = []
     plan_retrieval(store, probes, ["pg:n_chars"], decisions=dec_est)
     assert dec_est[0]["strategy"] == "broadcast"
+
+
+@pytest.fixture(scope="module")
+def layout_store(spark, pages_df, tmp_path_factory):
+    """A layout-backed view: planning it runs the probe-summary job."""
+    from datetime import timedelta
+
+    from feast_spark.registry import (
+        Entity, FeatureSpec, FeatureStore, FeatureView,
+    )
+    from feast_spark.sources import pages as layout
+
+    root = str(tmp_path_factory.mktemp("est_layout") / "t")
+    layout.write_table(
+        pages_df.select("url", "warc_ts", F.length("text").alias("n_chars")),
+        root, n_buckets=4,
+    )
+    store = FeatureStore(spark)
+    store.apply(
+        FeatureView(
+            name="lay", entity=Entity("url", "url"), source=root,
+            features=[FeatureSpec("n_chars", "int")],
+            ttl=timedelta(days=90), timestamp_field="warc_ts",
+        )
+    )
+    return store
+
+
+def test_unknown_feature_raises_before_any_job(
+    spark, probes_df, layout_store, no_actions
+):
+    """Every ref is validated before the planner's first Spark job."""
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    with pytest.raises(ValueError, match="no features"):
+        plan_retrieval(layout_store, probes_df, ["lay:n_chars", "lay:nope"])
 
 
 def test_lsh_topk_auto_mode_zero_jobs(spark, no_actions):

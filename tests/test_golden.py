@@ -49,7 +49,7 @@ def _engine_features(pages_df):
     return sessionize(df, gap_seconds=SEVEN_D)
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
 def test_engine_matches_golden_fixture(spark, pages_df, probes_df, strategy):
     feats = _engine_features(pages_df)
     got = asof_join(
@@ -60,6 +60,7 @@ def test_engine_matches_golden_fixture(spark, pages_df, probes_df, strategy):
         right_on="warc_ts",
         ttl=90 * 86400,
         strategy=strategy,
+        slice_s=7 * 86400,  # sliced: weekly slices, matches carry in
     ).toPandas()
 
     want = pd.read_parquet(GOLDEN)

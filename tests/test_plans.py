@@ -105,7 +105,7 @@ def test_whole_stage_codegen_covers_filters(spark, pages_df):
         ), f"{op} not codegen'd"
 
 
-def test_hot_key_routes_to_sliced(spark, tmp_path_factory):
+def test_hot_key_routes_to_sliced(spark, tmp_path_factory, monkeypatch):
     """VERDICT r01 #6 + r02: a planted ~30%-hot key (detected from
     manifest stats alone) flips the auto-chosen plan to the time-sliced
     strategy; results are identical either way."""
@@ -113,6 +113,7 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory):
 
     from pyspark.sql import Row
 
+    from feast_spark.plans import retrieval
     from feast_spark.plans.retrieval import plan_retrieval
     from feast_spark.registry import Entity, FeatureSpec, FeatureStore, FeatureView
     from feast_spark.sources import pages as layout
@@ -149,9 +150,9 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory):
     # probe_count_hint: probes here are Arrow-local (no plan-derivable
     # cardinality), and the unhinted planner deliberately runs no
     # counting job (VERDICT r03 next #5) — hint like a real caller would
+    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 100)
     got = plan_retrieval(
-        store, probes, ["hotv:n_chars"],
-        hot_key_min_rows=100, probe_count_hint=3,
+        store, probes, ["hotv:n_chars"], probe_count_hint=3,
         decisions=decisions,
     )
     assert decisions[0]["strategy"] == "sliced"
@@ -160,39 +161,39 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
     # without a hot key the same auto plan keeps its probe-count choice
     cold_dec: list = []
+    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 10_000)
     plan_retrieval(
-        store, probes, ["hotv:n_chars"],
-        hot_key_min_rows=10_000, probe_count_hint=3, decisions=cold_dec,
+        store, probes, ["hotv:n_chars"], probe_count_hint=3, decisions=cold_dec,
     )
     assert cold_dec[0]["strategy"] == "broadcast" and not cold_dec[0]["hot_keys"]
     # unhinted + unestimable probes: the planner must still produce the
     # SAME rows via the unbounded-safe strategy, with zero extra jobs
     safe_dec: list = []
-    safe = plan_retrieval(
-        store, probes, ["hotv:n_chars"],
-        hot_key_min_rows=10_000, decisions=safe_dec,
-    )
+    safe = plan_retrieval(store, probes, ["hotv:n_chars"], decisions=safe_dec)
     assert safe_dec[0]["strategy"] in ("cogroup", "union")
     assert safe.exceptAll(want).count() == 0 and want.exceptAll(safe).count() == 0
     # r04 review: the hot-key manifest probe must fire even when the
     # unhinted/unestimable default is cogroup — one hot key hashes into
     # ONE pandas bucket regardless of B, so cogroup is NOT hot-key-safe
     unhinted_hot: list = []
+    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 100)
     got2 = plan_retrieval(
-        store, probes, ["hotv:n_chars"],
-        hot_key_min_rows=100, decisions=unhinted_hot,
+        store, probes, ["hotv:n_chars"], decisions=unhinted_hot,
     )
     assert unhinted_hot[0]["strategy"] == "sliced"
     assert "https://hot.example/" in unhinted_hot[0]["hot_keys"]
     assert got2.exceptAll(want).count() == 0 and want.exceptAll(got2).count() == 0
 
 
-def test_cogroup_bucket_count_grows_with_data(spark, pages_df, tmp_path_factory):
+def test_cogroup_bucket_count_grows_with_data(
+    spark, pages_df, tmp_path_factory, monkeypatch
+):
     """Bucket-size policy: when the manifest says a bucket exceeds the
     per-worker byte budget, the cogroup repartition count multiplies —
     results unchanged, worker-side state bounded."""
     from datetime import timedelta
 
+    from feast_spark.plans import retrieval
     from feast_spark.plans.retrieval import plan_retrieval
     from feast_spark.registry import Entity, FeatureSpec, FeatureStore, FeatureView
     from feast_spark.sources import pages as layout
@@ -214,12 +215,13 @@ def test_cogroup_bucket_count_grows_with_data(spark, pages_df, tmp_path_factory)
         "ts", F.lit("2024-02-01 00:00:00").cast("timestamp")
     )
     dec_small: list = []
+    # absurdly small budget → must grow
+    monkeypatch.setattr(retrieval, "COGROUP_BUCKET_BYTES", 1024)
     got = plan_retrieval(
-        store, probes, ["g:n_chars"], strategy="cogroup",
-        cogroup_bucket_bytes=1024,  # absurdly small budget → must grow
-        decisions=dec_small,
+        store, probes, ["g:n_chars"], strategy="cogroup", decisions=dec_small,
     )
     assert dec_small[0]["n_buckets"] > 2
+    monkeypatch.undo()
     dec_big: list = []
     want = plan_retrieval(
         store, probes, ["g:n_chars"], strategy="cogroup", decisions=dec_big,

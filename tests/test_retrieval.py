@@ -90,6 +90,76 @@ def test_small_probe_set_prunes_buckets(spark, lstore, pages_df):
         assert len(files) < len(all_files)
 
 
+def test_planner_scans_the_probe_keys_buckets(spark, lstore, pages_df):
+    """The planner's decision names the buckets it scans: for 3 urls in a
+    4-bucket layout, exactly the buckets those urls hash to."""
+    from pyspark.sql import Row
+
+    from feast_spark.operators.asof import asof_join
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    store, _root = lstore
+    urls = [r["url"] for r in pages_df.select("url").distinct().limit(3).collect()]
+    probes = spark.createDataFrame(
+        [Row(url=u, ts="2024-02-01 00:00:00") for u in urls]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    decisions: list = []
+    got = plan_retrieval(
+        store, probes, ["pg:n_chars"], strategy="broadcast", decisions=decisions
+    )
+    assert decisions[0]["buckets"] == layout.buckets_of_keys(spark, urls, 4)
+    fv = store.get_view("pg")
+    want = asof_join(
+        probes, fv.load(spark), by="url", right_on="warc_ts", ttl=fv.ttl,
+        feature_cols=["n_chars"],
+    )
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_int_probes_prune_a_bigint_layout(spark, tmp_path_factory):
+    """Probe keys hash with the TABLE's dtype: an ``int`` probe column
+    over a ``bigint``-keyed layout prunes to the bigint key's bucket (an
+    int hashes elsewhere) and still finds the feature rows."""
+    from pyspark.sql import Row
+
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    n_b = 8
+    # a key whose int and bigint hashes land in different buckets, so a
+    # probe hashed with the probe's own dtype would miss its rows
+    key = next(
+        k for k in range(1, 100)
+        if layout.buckets_of_keys(spark, [k], n_b, key_type="int")
+        != layout.buckets_of_keys(spark, [k], n_b, key_type="bigint")
+    )
+    src = spark.createDataFrame(
+        [Row(uid=k, warc_ts="2024-01-01 00:00:00", v=float(k)) for k in range(1, 41)]
+    ).select(
+        F.col("uid").cast("bigint"), F.col("warc_ts").cast("timestamp"), "v"
+    )
+    root = str(tmp_path_factory.mktemp("bigint_layout") / "t")
+    layout.write_table(src, root, key_col="uid", n_buckets=n_b)
+    store = FeatureStore(spark)
+    store.apply(
+        FeatureView(
+            name="bv", entity=Entity("user", "uid"), source=root,
+            features=[FeatureSpec("v", "double")], ttl=None,
+            timestamp_field="warc_ts",
+        )
+    )
+    probes = spark.createDataFrame(
+        [(key, "2024-02-01 00:00:00")], "uid int, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    decisions: list = []
+    out = plan_retrieval(
+        store, probes, ["bv:v"], strategy="broadcast", decisions=decisions
+    ).collect()
+    assert decisions[0]["buckets"] == layout.buckets_of_keys(
+        spark, [key], n_b, key_type="bigint"
+    )
+    assert [r["v"] for r in out] == [float(key)]
+
+
 def test_materialize_incremental_api(spark, lstore, tmp_path_factory):
     from feast_spark.materialize import (
         last_materialized_end,

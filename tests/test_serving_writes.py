@@ -5,7 +5,8 @@ Pins: concurrent pushes into one bucket lose no rows; a push whose rows
 lack a store column is a 400 that leaves the store unchanged; /push
 input errors and non-JSON-native served values never surface as
 failures; the write → materialize → delta chain works under a session
-that writes Spark's default INT96 timestamps.
+that writes Spark's default INT96 timestamps; a store materialized over a
+range with no events serves NOT_FOUND.
 """
 from __future__ import annotations
 
@@ -258,3 +259,27 @@ def test_write_materialize_delta_under_int96_session(spark, tmp_path):
     assert out["caught_up"] is False and out["rows_pushed"] == 2
     got = {r["url"]: r["v"] for r in read_online(s, dest).collect()}
     assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
+
+
+def test_empty_store_read_is_not_found(spark, tmp_path):
+    """A store materialized over a range with no events has no bucket
+    dir; a keyed read of it answers NOT_FOUND, not a 500."""
+    store, _ = _scores_store(spark, tmp_path)
+    dest = str(tmp_path / "empty_store")
+    MaterializeJob(spark, store.get_view("scores"), dest, n_buckets=4).run(
+        "2020-01-01", "2021-01-01"
+    )
+    data = os.path.join(dest, layout.DATA_DIR)
+    assert not [d for d in os.listdir(data) if d.startswith("bucket=")]
+    assert read_online(spark, dest, ["u1"], key_col="user").collect() == []
+    srv = FeatureServer(store, {"scores": dest}).start()
+    try:
+        code, got = _post(
+            srv.port,
+            "/get-online-features",
+            {"features": ["scores:score"], "entities": {"user": ["u1", "u9"]}},
+        )
+    finally:
+        srv.stop()
+    assert code == 200, got
+    assert got["results"][1]["statuses"] == ["NOT_FOUND", "NOT_FOUND"]
