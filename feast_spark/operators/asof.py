@@ -7,8 +7,13 @@ offline_utils.py; local reference is a stub — SURVEY.md §0.1):
 For each probe row ``(by, ts)`` return the feature values of the LATEST
 feature row with ``event_ts <= ts`` (at-or-before; equality matches) and,
 if a TTL is given, ``event_ts >= ts - ttl``. Ties on event_ts break by max
-``created_ts``, then by a deterministic hash (our strengthening — upstream
-leaves sub-created ties unspecified). Left semantics: a probe with no
+``created_ts``, then by a deterministic hash of the requested
+``feature_cols`` (our strengthening — upstream leaves sub-created ties
+unspecified). The retrieval planner joins once per source group and
+requests the union of the group's features, so an exact ``(key,
+event_ts, created_ts)`` tie breaks on the hash of that union and all of
+the group's features come from one row; a single-view retrieval hashes
+its own features. Left semantics: a probe with no
 qualifying feature row keeps NULL features. Zero temporal leakage: no
 value from an event after the probe ts, ever.
 
@@ -56,6 +61,15 @@ def _ttl_seconds(ttl: timedelta | int | float | None) -> float | None:
     if isinstance(ttl, timedelta):
         return ttl.total_seconds()
     return float(ttl)
+
+
+def within_ttl(event_ts: Column, ts: Column, ttl: timedelta | float) -> Column:
+    """The TTL boundary: ``event_ts >= ts - ttl``, as an epoch-double
+    comparison (interval literals don't take float seconds, and
+    TIMESTAMP_NTZ can't cast straight to long — §0.3). The union and
+    broadcast strategies and the retrieval planner's per-view TTL mask
+    all use this one expression, so their boundaries are bit-identical."""
+    return event_ts.cast("double") >= ts.cast("double") - F.lit(_ttl_seconds(ttl))
 
 
 def _tiebreak_hash(features: DataFrame, cols: list[str]) -> Column:
@@ -249,12 +263,7 @@ def _asof_window(
 
     valid = F.col("__fill").isNotNull()
     if ttl is not None:
-        # epoch-double comparison: interval literals don't take float
-        # seconds, and TIMESTAMP_NTZ can't cast straight to long (§0.3)
-        valid = valid & (
-            F.col("__fill")[_ETS].cast("double")
-            >= F.col(left_on).cast("double") - F.lit(ttl)
-        )
+        valid = valid & within_ttl(F.col("__fill")[_ETS], F.col(left_on), ttl)
     sel: list[Column] = [F.col(c) for c in probes.columns]
     for c in feature_cols:
         sel.append(F.when(valid, F.col("__fill")[c]).alias(c))
@@ -287,10 +296,7 @@ def _asof_broadcast(
     for k in by:
         cond = cond & (F.col(f"p.{k}") == F.col(f"f.{k}"))
     if ttl is not None:
-        cond = cond & (
-            F.col(f"f.{right_on}").cast("double")
-            >= F.col(f"p.{left_on}").cast("double") - F.lit(ttl)
-        )
+        cond = cond & within_ttl(F.col(f"f.{right_on}"), F.col(f"p.{left_on}"), ttl)
     j = F.broadcast(p).join(f, cond, "inner")
     created = (
         F.col(f"f.{created_col}") if created_col else F.lit(None).cast("timestamp")

@@ -10,6 +10,7 @@ within matching buckets — the bucket join is the one shuffle.
 from __future__ import annotations
 
 import logging
+import threading
 
 import numpy as np
 import pandas as pd
@@ -486,6 +487,8 @@ def ann_index_topk(
 #: running job recomputes evicted blocks from lineage, never fails.
 _CACHE_RETAIN = 4
 _cache_ring: list = []
+# concurrent server threads append and evict at once (ADVICE r05)
+_cache_lock = threading.Lock()
 
 
 def _broadcast_queries_ok(
@@ -503,9 +506,11 @@ def _broadcast_queries_ok(
 
 
 def _retain_cache(cached: DataFrame) -> None:
-    _cache_ring.append(cached)
-    while len(_cache_ring) > _CACHE_RETAIN:
-        old = _cache_ring.pop(0)
+    with _cache_lock:
+        _cache_ring.append(cached)
+        evicted = _cache_ring[:-_CACHE_RETAIN]
+        del _cache_ring[:-_CACHE_RETAIN]
+    for old in evicted:
         try:
             old.unpersist(blocking=False)
         except Exception:

@@ -1,9 +1,21 @@
 """Historical-retrieval planner (SURVEY.md §3.1, §4.2.1).
 
 Resolves ``"view:feature"`` refs against the registry and chains one
-PIT/as-of join per feature view onto the entity dataframe — the upstream
+PIT/as-of join per SOURCE GROUP onto the entity dataframe — the upstream
 get_historical_features lifecycle (feature_store.py → offline store PIT
 template), re-expressed as DataFrame composition.
+
+Upstream's template joins once per feature view. Here views that read the
+same rows the same way — equal ``source``, ``ref``, ``field_mapping``,
+``join_keys``, ``timestamp_field`` and ``created_timestamp_column``, and no
+``aggregations`` — form one group, and one as-of join serves them all: it
+scans the source once with the group's widest TTL (``None`` if any view
+has none) and requests the union of the group's features. That is exact.
+The latest event at or before a probe is the same row for every view of
+the group; a view's TTL only decides whether that row is young enough. So
+each view with a narrower TTL masks its columns to NULL where the matched
+event time fails its own TTL, with the as-of join's own boundary
+expression (``asof.within_ttl``). A group of one view adds no mask.
 
 Strategy policy (``strategy=None`` → auto):
 
@@ -34,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feast_spark.operators.asof import asof_join
+from feast_spark.operators.asof import asof_join, within_ttl
 from feast_spark.sources.pages import bucket_expr
 
 # measured knee on the 2.1M-row pages table (local[32], BASELINE.md):
@@ -58,6 +70,9 @@ COGROUP_BUCKET_BYTES = 256 << 20
 # only slicing the hot key's TIMELINE bounds the per-task work
 # (SURVEY §4.2.2)
 HOT_KEY_MIN_ROWS = 1_000_000
+
+# the matched event time a source group's join carries for its TTL masks
+_GROUP_ETS = "__group_event_ts"
 
 
 def choose_strategy(
@@ -99,6 +114,18 @@ def _prune_spec(fv, snap: dict) -> tuple | None:
     return kcol, schema[kcol].dataType.simpleString(), snap["n_buckets"]
 
 
+def _source_group(fv):
+    """Views with equal keys read the same rows the same way, so one as-of
+    join serves them all. A view with aggregations derives its own rows
+    and is a group of its own."""
+    if fv.aggregations:
+        return fv.name
+    return (
+        fv.source, fv.ref, tuple(sorted(fv.field_mapping.items())),
+        tuple(fv.join_keys), fv.timestamp_field, fv.created_timestamp_column,
+    )
+
+
 def plan_retrieval(
     store,
     entity_df: DataFrame,
@@ -109,13 +136,15 @@ def plan_retrieval(
     probe_count_hint: int | None = None,
     decisions: list | None = None,
 ) -> DataFrame:
-    """Build the retrieval DataFrame: entity_df + one PIT join per view.
+    """Build the retrieval DataFrame: entity_df + one PIT join per source
+    group.
 
-    Every ref is checked before any Spark job runs. ``decisions``, when
-    given, collects one dict per view with the chosen strategy, any
-    manifest-detected hot keys and the layout buckets scanned (``None``:
-    all of them) — the planner's choices are visible in the job log /
-    tests, not hidden planner magic."""
+    Every ref and every output column name is checked before any Spark
+    job runs. ``decisions``, when given, collects one dict per view with
+    the chosen strategy, any manifest-detected hot keys, the layout
+    buckets scanned (``None``: all of them) and ``group``, the index of
+    the join that served the view — the planner's choices are visible in
+    the job log / tests, not hidden planner magic."""
     # group refs by view, preserving order
     by_view: dict[str, list[str]] = {}
     for ref in features:
@@ -129,13 +158,30 @@ def plan_retrieval(
         unknown = [f for f in feats if f not in declared]
         if unknown:
             raise ValueError(f"view {view_name!r} has no features {unknown}")
+    out_name = {
+        (v, f): f"{v}__{f}" if full_feature_names else f
+        for v, feats in by_view.items()
+        for f in feats
+    }
+    names = list(out_name.values())
+    clash = {n for n in names if names.count(n) > 1} | (
+        set(names) & set(entity_df.columns)
+    )
+    if clash:
+        raise ValueError(f"output column collision: {sorted(clash)}")
+
+    groups: dict = {}
+    for view_name, fv in views.items():
+        groups.setdefault(_source_group(fv), []).append(view_name)
+    groups = list(groups.values())
     # the pinned ref's snapshot when the view carries one — the manifest
     # used for pruning/skew stats must describe the same files the scan
-    # reads
-    snaps = {
-        name: fv.layout_snapshot() for name, fv in views.items() if fv.layout_root
-    }
-    specs = {name: _prune_spec(views[name], snap) for name, snap in snaps.items()}
+    # reads; every view of a group reads the same one
+    snaps = [views[g[0]].layout_snapshot() for g in groups]
+    specs = [
+        _prune_spec(views[g[0]], snap) if snap else None
+        for g, snap in zip(groups, snaps)
+    ]
 
     probe_n = None
     if strategy is None:
@@ -151,14 +197,13 @@ def plan_retrieval(
 
     lo = hi = None
     bucket_sets: dict = {}
-    if snaps:
+    if any(snaps):
         # the probe summary: ONE aggregate gives the probe time bounds
         # and, per (key column, dtype, B), the buckets the probe keys hash
         # to — with the layout's own bucket_expr, so no key leaves Spark.
         # A NULL key hashes to the seed's bucket and stays in the set.
         aliases = {
-            spec: f"__b{i}"
-            for i, spec in enumerate(dict.fromkeys(filter(None, specs.values())))
+            spec: f"__b{i}" for i, spec in enumerate(dict.fromkeys(filter(None, specs)))
         }
         row = entity_df.agg(
             F.min(F.col("ts").cast("timestamp")).alias("lo"),
@@ -172,8 +217,14 @@ def plan_retrieval(
         bucket_sets = {spec: set(row[a]) for spec, a in aliases.items()}
 
     out = entity_df
-    for view_name, feats in by_view.items():
-        fv, snap = views[view_name], snaps.get(view_name)
+    for group_i, (group, snap, spec) in enumerate(zip(groups, snaps, specs)):
+        fv = views[group[0]]
+        # the widest TTL scans and joins for the whole group; a view with
+        # a narrower one is masked below
+        ttls = [views[v].ttl for v in group]
+        ttl = None if None in ttls else max(ttls)
+        masked = [v for v in group if views[v].ttl != ttl]
+        feats = list(dict.fromkeys(f for v in group for f in by_view[v]))
         chosen = strategy or choose_strategy(
             entity_df, probe_n, layout_backed=snap is not None
         )
@@ -205,8 +256,8 @@ def plan_retrieval(
                 # latest feature row predates the earliest probe is still a
                 # valid PIT match, so only the upper bound may prune.
                 src_kw["end"] = hi + timedelta(seconds=1)
-                if lo is not None and fv.ttl is not None:
-                    src_kw["start"] = lo - fv.ttl
+                if lo is not None and ttl is not None:
+                    src_kw["start"] = lo - ttl
                     if fv.aggregations:
                         # trailing window aggregates at the TTL horizon's
                         # first events need their full window of history;
@@ -220,7 +271,7 @@ def plan_retrieval(
             # bucket pruning: scan only the buckets the probe keys hash to
             # when they miss any; the manifest always uses the LAYOUT's
             # modulus, not the (possibly grown) cogroup repartition count
-            wanted = bucket_sets.get(specs[view_name])
+            wanted = bucket_sets.get(spec)
             if wanted is not None and len(wanted) < snap["n_buckets"]:
                 src_kw["buckets"] = wanted
             if chosen == "cogroup":
@@ -247,14 +298,16 @@ def plan_retrieval(
                     1, math.ceil(biggest / COGROUP_BUCKET_BYTES)
                 )
         if decisions is not None:
-            decisions.append(
+            decisions.extend(
                 {
-                    "view": view_name,
+                    "view": v,
                     "strategy": chosen,
                     "hot_keys": hot_keys,
                     "n_buckets": n_buckets,
                     "buckets": src_kw.get("buckets"),
+                    "group": group_i,
                 }
+                for v in group
             )
         src = fv.derived_frame(fv.load(store.spark, **src_kw))
         joined = asof_join(
@@ -263,18 +316,29 @@ def plan_retrieval(
             by=fv.join_keys,
             left_on="ts",
             right_on=fv.timestamp_field,
-            ttl=fv.ttl,
+            ttl=ttl,
             created_col=fv.created_timestamp_column,
             feature_cols=feats,
             strategy=chosen,
+            include_event_ts=bool(masked),
+            event_ts_name=_GROUP_ETS,
             # layout-aligned bucket count: the cogroup strategy then
             # repartitions on the SAME pmod(xxhash64(url), B) the table
             # was written with (SURVEY.md §4.2.3)
             n_buckets=n_buckets,
         )
-        if full_feature_names:
-            joined = joined.withColumnsRenamed(
-                {f: f"{view_name}__{f}" for f in feats}
-            )
-        out = joined
-    return out
+        # a narrower TTL only decides whether the group's match is young
+        # enough for that view (module docstring)
+        cols = [F.col(c) for c in out.columns]
+        for v in group:
+            for f in by_view[v]:
+                c = F.col(f)
+                if v in masked:
+                    c = F.when(
+                        within_ttl(F.col(_GROUP_ETS), F.col("ts"), views[v].ttl), c
+                    )
+                cols.append(c.alias(out_name[v, f]))
+        out = joined.select(*cols)
+    # views of one group come out together; restore the requested order
+    order = [*entity_df.columns, *names]
+    return out if out.columns == order else out.select(*order)

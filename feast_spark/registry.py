@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 from dataclasses import dataclass, field
 from datetime import timedelta
 from typing import Callable
@@ -556,7 +557,16 @@ class FeatureStore:
         for odfv in self._odfvs.values():
             blob = _serialize_transform(odfv.transform)
             if blob is None:
-                continue  # lambda/closure transforms stay in-memory only
+                # lambda/closure/refused transforms stay in-memory only
+                warnings.warn(
+                    f"on-demand view {odfv.name!r}: its transform cannot be "
+                    "saved to the registry (a lambda, a closure, or a "
+                    "reference to a name outside numpy/pandas/builtins); it "
+                    "stays in memory only. Use an importable module-level "
+                    "function to persist it.",
+                    stacklevel=3,
+                )
+                continue
             odfvs.append(
                 {
                     "name": odfv.name,

@@ -80,6 +80,10 @@ class FeatureServer:
     ) -> None:
         self.store = store
         self.stores = dict(stores)
+        # store path → its event-time column, inferred on first use: a
+        # store without a recorded ts_col costs a parquet schema read.
+        # Two racing first reads both infer the same answer, so no lock.
+        self._ts_cols: dict[str, str | None] = {}
         self._httpd = ThreadingHTTPServer(
             (host, port), _make_handler(self)
         )
@@ -171,13 +175,17 @@ class FeatureServer:
             tuple(r[c] for c in key_cols): r.asDict()
             for r in served.collect()
         }
-        from feast_spark.materialize import infer_store_ts_col
-
         # the STORE's own schema decides the event-time column — never
         # the served (post-ODFV) frame, whose derived timestamp columns
         # would change the answer (r05 review batch 2; shared inference
         # with read_online)
-        ts_col = infer_store_ts_col(self.store.spark, store_path)
+        if store_path not in self._ts_cols:
+            from feast_spark.materialize import infer_store_ts_col
+
+            self._ts_cols[store_path] = infer_store_ts_col(
+                self.store.spark, store_path
+            )
+        ts_col = self._ts_cols[store_path]
         cutoff = None
         if ttl is not None:
             if now is None:

@@ -155,6 +155,34 @@ def test_unknown_feature_raises_before_any_job(
         plan_retrieval(layout_store, probes_df, ["lay:n_chars", "lay:nope"])
 
 
+def test_output_name_collision_raises_before_any_job(
+    spark, probes_df, layout_store, no_actions
+):
+    """Two views serving the same bare feature name collide in the
+    output: refused before the planner's first Spark job."""
+    from datetime import timedelta
+
+    from feast_spark.plans.retrieval import plan_retrieval
+    from feast_spark.registry import Entity, FeatureView
+
+    lay = layout_store.get_view("lay")
+    layout_store.apply(
+        FeatureView(
+            name="lay30", entity=Entity("url", "url"), source=lay.source,
+            features=lay.features, ttl=timedelta(days=30),
+            timestamp_field="warc_ts",
+        )
+    )
+    with pytest.raises(ValueError, match="collision.*n_chars"):
+        plan_retrieval(layout_store, probes_df, ["lay:n_chars", "lay30:n_chars"])
+    # and a feature named like a probe column
+    with pytest.raises(ValueError, match="collision.*n_chars"):
+        plan_retrieval(
+            layout_store, probes_df.withColumn("n_chars", F.lit(1)),
+            ["lay:n_chars"],
+        )
+
+
 def test_lsh_topk_auto_mode_zero_jobs(spark, no_actions):
     from feast_spark.operators.similarity import lsh_topk
 

@@ -432,3 +432,27 @@ def test_plan_rejects_unknown_object(spark):
     store = FeatureStore(spark)
     with _pt.raises(TypeError):
         store.plan([42])
+
+
+def test_refused_transform_warns_naming_the_view(spark, tmp_path):
+    """A transform the registry refuses to serialize (here: a default
+    argument naming a non-allowlisted global) stays in memory only, and
+    saying so is a warning that names the view — not a silent downgrade.
+    (An annotation alone is not refused: the registry compiles the source
+    with postponed annotations, so it never loads the name.)"""
+    from pyspark.sql import DataFrame
+
+    def annotated(pdf, frame_type=DataFrame):
+        return pd.DataFrame({"x": pdf["n_chars"]})
+
+    s = FeatureStore(spark, root=str(tmp_path))
+    with pytest.warns(UserWarning, match="'annotated_view'"):
+        s.apply(
+            OnDemandFeatureView(
+                name="annotated_view",
+                sources=["pg:n_chars"],
+                transform=annotated,
+                schema=[("x", "bigint")],
+            )
+        )
+    assert "annotated_view" not in FeatureStore(spark, root=str(tmp_path))._odfvs

@@ -393,3 +393,204 @@ def test_store_materialize_incremental_method(spark, lstore, tmp_path_factory):
         "pg", "2023-12-15", dest, bucket_batch=4, transform=transform,
     )
     assert s2.get("caught_up") is True and s2["rows"] == 0
+
+
+# ---- one as-of join per source group ----------------------------------
+_DAY = 86400
+
+
+@pytest.fixture(scope="module")
+def grouped(spark, tmp_path_factory):
+    """Views over ONE layout with a created-ts column: ``vnone`` / ``v30``
+    / ``v90`` differ only in TTL, so the planner serves them with one
+    join. The layout carries a tag ``rel`` one commit behind HEAD.
+    Events are ≤ 40 days apart per url and the probes span a year, so
+    all three TTLs cut differently. No two rows share (url, event ts,
+    created ts); some created ts and some ``c`` values are NULL."""
+    import random
+    from datetime import datetime
+
+    rng = random.Random(11)
+    t0 = datetime(2023, 1, 1)
+    rows = []
+    for u in range(16):
+        t = rng.randrange(0, 20 * _DAY)
+        for i in range(10):
+            created = None if rng.random() < 0.15 else t + rng.randrange(1, 3600)
+            rows.append((f"u{u}", t, created, rng.random(), rng.randrange(10**6),
+                         None if rng.random() < 0.2 else f"s{u}.{i}"))
+            if rng.random() < 0.3:  # same event ts, later created ts
+                rows.append((f"u{u}", t, (created or t) + 7, rng.random(),
+                             rng.randrange(10**6), f"r{u}.{i}"))
+            t += rng.randrange(1, 40 * _DAY)
+    schema = ("url string, warc_ts timestamp, created timestamp, a double, "
+              "b bigint, c string")
+    as_rows = [
+        (u, t0 + timedelta(seconds=t),
+         None if c is None else t0 + timedelta(seconds=c), a, b, s)
+        for u, t, c, a, b, s in rows
+    ]
+    root = str(tmp_path_factory.mktemp("grouped") / "t")
+    head, tail = as_rows[:-20], as_rows[-20:]
+    layout.write_table(spark.createDataFrame(head, schema), root, n_buckets=4)
+    layout.create_tag(root, "rel")
+    layout.write_table(
+        spark.createDataFrame(tail, schema), root, n_buckets=4, mode="append"
+    )
+    store = FeatureStore(spark)
+    feats = [FeatureSpec("a", "double"), FeatureSpec("b", "bigint"),
+             FeatureSpec("c", "string")]
+    for name, ttl in (("vnone", None), ("v30", 30), ("v90", 90)):
+        store.apply(FeatureView(
+            name=name, entity=Entity("url", "url"), source=root,
+            features=feats, ttl=ttl and timedelta(days=ttl),
+            timestamp_field="warc_ts", created_timestamp_column="created",
+        ))
+    probes = [
+        (i, f"u{rng.randrange(16)}" if i % 9 else f"unseen{i}",
+         t0 + timedelta(seconds=rng.randrange(0, 400 * _DAY)))
+        for i in range(160)
+    ]
+    probes.append((160, "u3", None))  # NULL probe ts
+    probes_df = spark.createDataFrame(probes, "pid int, url string, ts timestamp")
+    return store, root, probes_df
+
+
+def _by_pid(df) -> dict:
+    return {r["pid"]: r.asDict() for r in df.collect()}
+
+
+def _single_view_rows(store, probes, refs, strategy) -> dict:
+    """Each view retrieved alone, joined on probe id, named as a
+    full-feature-names call names them."""
+    by_view: dict = {}
+    for ref in refs:
+        view, _, feat = ref.partition(":")
+        by_view.setdefault(view, []).append(feat)
+    rows: dict = {}
+    for view, feats in by_view.items():
+        out = store.get_historical_features(
+            probes, [f"{view}:{f}" for f in feats],
+            full_feature_names=True, strategy=strategy,
+        )
+        for pid, r in _by_pid(out).items():
+            rows.setdefault(pid, {"pid": pid, "url": r["url"], "ts": r["ts"]})
+            rows[pid].update({f"{view}__{f}": r[f"{view}__{f}"] for f in feats})
+    return rows
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+def test_views_sharing_a_source_equal_single_view_calls(spark, grouped, strategy):
+    """One fused join per source group returns, cell for cell, what one
+    call per view returns: the group joins at the widest TTL (none) and
+    masks v30/v90 by their own TTLs."""
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    store, _root, probes = grouped
+    refs = ["vnone:a", "v30:a", "v30:b", "v90:a", "v90:c", "vnone:c"]
+    want = _single_view_rows(store, probes, refs, strategy)
+    decisions: list = []
+    fused = plan_retrieval(
+        store, probes, refs, full_feature_names=True, strategy=strategy,
+        decisions=decisions,
+    )
+    assert [d["group"] for d in decisions] == [0, 0, 0]
+    # columns come out per view, in first-request order
+    assert fused.columns == ["pid", "url", "ts", "vnone__a", "vnone__c",
+                             "v30__a", "v30__b", "v90__a", "v90__c"]
+    got = _by_pid(fused)
+    assert got == want
+    # the TTLs really cut: some probes hit at 90 d but not 30 d, some
+    # with no TTL but not at 90 d
+    assert any(r["v90__a"] is not None and r["v30__a"] is None for r in got.values())
+    assert any(r["vnone__a"] is not None and r["v90__a"] is None for r in got.values())
+
+    # bare names: one feature per view
+    bare = _by_pid(store.get_historical_features(
+        probes, ["vnone:a", "v30:b", "v90:c"], strategy=strategy
+    ))
+    assert bare == {
+        pid: {"pid": pid, "url": r["url"], "ts": r["ts"], "a": r["vnone__a"],
+              "b": r["v30__b"], "c": r["v90__c"]}
+        for pid, r in want.items()
+    }
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+def test_group_tie_takes_all_features_from_one_row(spark, tmp_path_factory, strategy):
+    """Rows sharing (key, event ts, created ts) exactly: a group's join
+    breaks the tie on the hash of the union of the group's requested
+    features (in request order), so every feature of the group comes
+    from the one row with the largest xxhash64(a, b)."""
+    root = str(tmp_path_factory.mktemp(f"tie_{strategy}") / "t")
+    layout.write_table(
+        spark.createDataFrame(
+            [("k", "2024-01-01 00:00:00", float(i), 10 * i) for i in range(1, 6)],
+            "url string, warc_ts string, a double, b bigint",
+        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp")),
+        root, n_buckets=2,
+    )
+    store = FeatureStore(spark)
+    feats = [FeatureSpec("a", "double"), FeatureSpec("b", "bigint")]
+    for name, ttl in (("ta", None), ("tb", timedelta(days=30))):
+        store.apply(FeatureView(
+            name=name, entity=Entity("url", "url"), source=root,
+            features=feats, ttl=ttl, timestamp_field="warc_ts",
+        ))
+    best = (
+        layout.read_table(spark, root)
+        .orderBy(F.xxhash64("a", "b").desc()).select("a", "b").first()
+    )
+    probes = spark.createDataFrame(
+        [("k", "2024-01-05 00:00:00")], "url string, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = store.get_historical_features(
+        probes, ["ta:a", "tb:b"], strategy=strategy
+    ).first()
+    assert (got["a"], got["b"]) == (best["a"], best["b"])
+
+
+@pytest.mark.parametrize(
+    "differs", ["ref", "field_mapping", "created_timestamp_column", "aggregations"]
+)
+def test_views_that_read_differently_get_separate_joins(spark, grouped, differs):
+    """Two views over one root that differ in how they read it are NOT
+    fused: each gets its own join (two ``group`` values) and the rows
+    equal the single-view calls. A third view joins the first's group,
+    and the columns still come out in request order."""
+    from feast_spark.plans.retrieval import plan_retrieval
+    from feast_spark.registry import Aggregation
+
+    store, root, probes = grouped
+    kw = dict(
+        entity=Entity("url", "url"), source=root, ttl=timedelta(days=90),
+        timestamp_field="warc_ts", created_timestamp_column="created",
+        features=[FeatureSpec("b", "bigint")],
+    )
+    if differs == "ref":
+        kw["ref"] = "rel"
+    elif differs == "field_mapping":
+        kw["field_mapping"] = {"b": "b2"}
+        kw["features"] = [FeatureSpec("b2", "bigint")]
+    elif differs == "created_timestamp_column":
+        kw["created_timestamp_column"] = None
+    else:
+        kw["aggregations"] = [Aggregation("a", "sum", timedelta(days=7))]
+        kw["features"] = [FeatureSpec("sum_a_604800s", "double")]
+    other = f"other_{differs}"
+    store.apply(FeatureView(name=other, **kw))
+    other_col = kw["features"][0].name
+    refs = ["v90:a", f"{other}:{other_col}", "v30:c"]
+    want = _single_view_rows(store, probes, refs, "union")
+    decisions: list = []
+    out = plan_retrieval(
+        store, probes, refs, full_feature_names=True, strategy="union",
+        decisions=decisions,
+    )
+    assert {d["view"]: d["group"] for d in decisions} == {
+        "v90": 0, "v30": 0, other: 1
+    }
+    assert out.columns == [
+        "pid", "url", "ts", "v90__a", f"{other}__{other_col}", "v30__c"
+    ]
+    assert _by_pid(out) == want

@@ -158,3 +158,67 @@ def test_ivf_train_raises_on_tiny_corpus(spark):
     )
     with pytest.raises(ValueError, match="nlist"):
         train_ivf_centroids(corpus, dim=2, nlist=8, iters=1)
+
+
+def test_cache_retention_under_concurrent_calls(monkeypatch):
+    """Server threads retain query caches at once (ADVICE r05): the ring
+    never holds more than ``_CACHE_RETAIN`` entries, every evicted frame
+    is unpersisted exactly once, none is lost, and no call raises."""
+    import sys
+    import threading
+
+    from feast_spark.operators import similarity
+
+    class Frame:
+        def __init__(self):
+            self.unpersists = 0
+
+        def unpersist(self, blocking=False):
+            self.unpersists += 1
+
+    monkeypatch.setattr(similarity, "_cache_ring", [])
+    n_threads, per_thread = 8, 300
+    frames = [Frame() for _ in range(n_threads * per_thread)]
+    errors: list = []
+    over: list = []
+    done = threading.Event()
+
+    def work(chunk):
+        try:
+            for f in chunk:
+                similarity._retain_cache(f)
+        except Exception as e:  # noqa: BLE001 — recorded, asserted below
+            errors.append(e)
+
+    def watch():
+        # a reader holding the lock never sees an over-full ring
+        try:
+            while not done.is_set():
+                with similarity._cache_lock:
+                    if len(similarity._cache_ring) > similarity._CACHE_RETAIN:
+                        over.append(len(similarity._cache_ring))
+        except Exception as e:  # noqa: BLE001 — recorded, asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(frames[i::n_threads],))
+            for i in range(n_threads)
+        ]
+        watcher = threading.Thread(target=watch)
+        watcher.start()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        done.set()
+        watcher.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not watcher.is_alive()
+    assert errors == [] and over == []
+    ring = similarity._cache_ring
+    assert len(ring) == similarity._CACHE_RETAIN
+    assert all(f.unpersists == (0 if f in ring else 1) for f in frames)
