@@ -7,11 +7,30 @@ For a time range ``[start, end)``: scan the feature source, compute the
 DESC, deterministic hash), and upsert it into a url-hash-bucketed serving
 store — one row per key per bucket directory.
 
+**The transform contract.** A job's ``transform`` is a per-row feature
+derivation: it returns one row per input row and keeps the view's key,
+event-ts and created-ts columns. It runs on each key's latest source
+rows only (upstream's order: ``pull_latest_from_table_or_query`` picks
+the latest rows, then features are derived from them), i.e. on the rows
+tied with their key's maximum (event_ts, created_ts) —
+``windows.latest_candidates``, exact ties included — and the hash
+tie-break of ``latest_per_key`` then picks among the transformed rows,
+so the served rows equal those of transforming every scanned row. A
+transform that drops rows breaks the contract: a key whose latest rows
+it drops is not served (no older row stands in), and the job warns.
+
 **Checkpoint grain = bucket** (the url-hash partition of the north
 rule): each bucket batch is one Spark action whose completion commits a
-per-partition lineage manifest ``{partition_id, input_snapshot,
-start, end, rows_in, rows_out, max_event_ts, wall_ms}`` via atomic
-rename. A re-run skips buckets whose lineage already matches the same
+per-partition lineage manifest ``{input_snapshot, start, end, buckets,
+rows_in, rows_out, max_event_ts, wall_ms}`` via atomic rename —
+``rows_in`` counts the scanned rows in range, and with a transform
+``transform_rows_in`` / ``transform_rows_out`` count the rows it was
+given and returned; every count rides the write, no extra Spark job.
+A batch with no rows in range records 0s. Only a transform Spark proves
+empty before running (``limit(0)``, a false filter) removes the counts
+from the plan: ``rows_in`` and ``transform_rows_in`` are then None,
+``transform_rows_out`` is 0 and the job warns.
+A re-run skips buckets whose lineage already matches the same
 (input snapshot, range) — kill the job after k buckets and the next run
 resumes at bucket k+1 with byte-identical output (tests/test_materialize).
 
@@ -37,18 +56,30 @@ import glob
 import os
 import time
 import uuid
+import warnings
 from typing import Callable
 
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from feast_spark.operators.windows import latest_per_key
+from feast_spark.operators.windows import latest_candidates, latest_per_key
 from feast_spark.sources import fileio
 from feast_spark.sources import pages as layout
 
 
 class MaterializeJob:
+    """Materialize ``view`` over a time range into the serving store at
+    ``dest``, one bucket batch per Spark write (module docstring).
+
+    ``transform`` is a per-row feature derivation that keeps the view's
+    key, event-ts and created-ts columns. It is applied to each key's
+    latest source rows — the ones tied with the key's maximum (event_ts,
+    created_ts) — not to every scanned row, so it must return one row per
+    input row: a key whose latest rows it drops is not served, and the
+    job warns naming the view."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -277,24 +308,28 @@ class MaterializeJob:
     def _run_batch(self, start, end, buckets: list[int], snap_id) -> dict:
         ts = self.view.timestamp_field
         keys = self._key_cols()
+        created = self.view.created_timestamp_column
+        dummy = keys == [self.DUMMY_KEY]
         t0 = time.monotonic()
 
-        df = self._scan(start, end, buckets)
+        # every count rides the store write below: no extra Spark job
+        scanned, given, returned, obs = (Observation() for _ in range(4))
+        df = self._scan(start, end, buckets).observe(scanned, _n_rows())
         if self.transform is not None:
-            df = self.transform(df)
-        if keys == [self.DUMMY_KEY]:
+            # the transform sees only each key's latest candidates, in the
+            # source schema; latest_per_key's hash tie-break below picks
+            # among them. An entity-less view ranks all rows as one key.
+            df = latest_candidates(
+                df, key=[] if dummy else keys, order=ts, created_col=created
+            )
+            df = self.transform(df.observe(given, _n_rows()))
+            df = df.observe(returned, _n_rows())
+        if dummy:
             df = df.withColumn(self.DUMMY_KEY, F.lit(1))
-        latest = latest_per_key(
-            df,
-            key=keys,
-            order=ts,
-            created_col=self.view.created_timestamp_column,
-        )
-        obs = Observation()
+        latest = latest_per_key(df, key=keys, order=ts, created_col=created)
         _merge_into_store(
             self.spark, self.dest, latest, buckets,
-            key_cols=keys, ts_col=ts,
-            created_col=self.view.created_timestamp_column,
+            key_cols=keys, ts_col=ts, created_col=created,
             n_buckets=self.n_buckets,
             on_merged=lambda merged: merged.observe(
                 obs,
@@ -305,15 +340,36 @@ class MaterializeJob:
         metrics = obs.get
         wall_ms = int((time.monotonic() - t0) * 1000)
         max_ts = metrics["max_event_ts"]
-        return {
+        record = {
             "input_snapshot": snap_id,
             "start": str(start),
             "end": str(end),
             "buckets": buckets,
+            "rows_in": _observed_rows(scanned),
             "rows_out": metrics["rows_out"],
             "max_event_ts": max_ts.isoformat() if max_ts else None,
             "wall_ms": wall_ms,
         }
+        if self.transform is not None:
+            n_in, n_out = _observed_rows(given), _observed_rows(returned)
+            if n_out is None:
+                # Spark proved the transform's output empty before running
+                # it (``limit(0)``, a false filter) and removed the counts
+                # from the plan: it returns nothing, whatever it is given
+                n_out = 0
+            record["transform_rows_in"] = n_in
+            record["transform_rows_out"] = n_out
+            if n_in != n_out:
+                warnings.warn(
+                    f"the materialization transform of view "
+                    f"{self.view.name!r} returned {n_out} rows for "
+                    f"{'its input' if n_in is None else n_in} "
+                    f"(buckets {buckets[0]}-{buckets[-1]}): a transform "
+                    "must derive one row per input row; a key whose "
+                    "latest rows it drops is not served",
+                    stacklevel=3,
+                )
+        return record
 
     # -- driver loop -----------------------------------------------------
     def run(self, start, end) -> dict:
@@ -386,6 +442,21 @@ class MaterializeJob:
             "rows_per_sec": round(total_rows / max(wall_s, 1e-9), 1),
             "input_snapshot": snap_id,
         }
+
+
+def _n_rows():
+    return F.count(F.lit(1)).alias("rows")
+
+
+def _observed_rows(obs: Observation) -> int | None:
+    """The ``_n_rows`` count ``obs`` took, or None when the optimizer
+    pruned the observed node from the plan it ran: a transform Spark
+    proves empty before running (``limit(0)``, a false filter) takes the
+    batch's counts with it. An empty batch is counted, as 0."""
+    try:
+        return obs.get["rows"]
+    except Py4JJavaError:
+        return None
 
 
 def _store_meta_path(dest: str) -> str:
@@ -715,13 +786,15 @@ def _merge_into_store(
             ).drop("__fresh")
         merged = merged.withColumn(
             "__bucket", layout.bucket_expr(key_cols, n_buckets)
-        )
+        ).repartition("__bucket")
         if on_merged is not None:
+            # right above the shuffle: when the merged rows are empty,
+            # AQE prunes the empty stage below a Sort and would drop the
+            # observations inside it; below an observation it keeps them
             merged = on_merged(merged)
         try:
             (
-                merged.repartition("__bucket")
-                .sortWithinPartitions("__bucket", *key_cols)
+                merged.sortWithinPartitions("__bucket", *key_cols)
                 .write.partitionBy("__bucket")
                 .parquet(stage)
             )

@@ -126,6 +126,38 @@ def session_stats(
     )
 
 
+def latest_order(order: str, created_col: str | None = None) -> list[Column]:
+    """A1's recency order: event time DESC, then created time DESC with
+    NULLs last (upstream ``pull_latest_from_table_or_query``). The one
+    definition ``latest_per_key`` and ``latest_candidates`` share."""
+    cols = [F.col(order).desc()]
+    if created_col:
+        cols.append(F.col(created_col).desc_nulls_last())
+    return cols
+
+
+def latest_candidates(
+    df: DataFrame,
+    *,
+    key: str | list[str] = "url",
+    order: str = "warc_ts",
+    created_col: str | None = None,
+) -> DataFrame:
+    """Every row tied with its key's latest under ``latest_order``
+    (``rank() == 1``, no hash tie-break): exact ties all survive. It is
+    the set ``latest_per_key`` picks its row from, so a per-row derivation
+    that keeps the key and time columns gives the same answer applied
+    before ``latest_per_key`` to these rows as to all rows. Materialization
+    runs its transform on them only."""
+    keys = [key] if isinstance(key, str) else list(key)
+    w = Window.partitionBy(*keys).orderBy(*latest_order(order, created_col))
+    return (
+        df.withColumn("__rk", F.rank().over(w))
+        .filter(F.col("__rk") == 1)
+        .drop("__rk")
+    )
+
+
 def latest_per_key(
     df: DataFrame,
     *,
@@ -134,10 +166,10 @@ def latest_per_key(
     created_col: str | None = None,
     precedence_col: str | None = None,
 ) -> DataFrame:
-    """A1: one row per key — max event_ts, tie-break max created_ts, then
-    a deterministic xxhash64 of all columns (total order ⇒ permutation-
-    invariant output; SURVEY.md §4.2.6). This is the materialization core
-    (upstream pull_latest_from_table_or_query).
+    """A1: one row per key — max event_ts, tie-break max created_ts
+    (``latest_order``), then a deterministic xxhash64 of all columns
+    (total order ⇒ permutation-invariant output; SURVEY.md §4.2.6). This
+    is the materialization core (upstream pull_latest_from_table_or_query).
 
     ``precedence_col``: optional extra tiebreak BETWEEN created_ts and
     the content hash (higher wins). The store-merge paths tag incoming
@@ -146,9 +178,7 @@ def latest_per_key(
     aggregate corrected by a late event, a transform change — reliably
     overwrites instead of losing a coin-flip on the content hash."""
     keys = [key] if isinstance(key, str) else list(key)
-    order_cols = [F.col(order).desc()]
-    if created_col:
-        order_cols.append(F.col(created_col).desc_nulls_last())
+    order_cols = latest_order(order, created_col)
     if precedence_col:
         order_cols.append(F.col(precedence_col).desc())
     hash_cols = [c for c in df.columns if c != precedence_col]

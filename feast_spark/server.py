@@ -18,7 +18,11 @@ point-lookup result itself, never a corpus scan; the store read
 underneath prunes to the probed keys' bucket directories
 (``read_online``). Concurrency rides ``ThreadingHTTPServer`` — Spark
 job submission is thread-safe, and independent point lookups schedule
-independently.
+independently. Each connection gets a thread, so at most
+``MAX_CONCURRENT_REQUESTS`` POST requests run at once; one over the
+bound waits up to ``SLOT_WAIT_S`` for a slot, and is then answered 503
+with ``Retry-After`` before it starts any Spark job. ``/health`` is not
+bounded.
 
 Response protocol (upstream feature-server JSON): ``results`` is a
 COLUMNAR list paired 1:1 with ``metadata.feature_names``; each entry
@@ -42,6 +46,15 @@ from typing import Any
 from pyspark.sql import Row
 
 __all__ = ["FeatureServer"]
+
+#: POST requests one server handles at once; each can start Spark jobs.
+#: Lookup throughput stops growing at 3-4 requests in flight, on
+#: local[2] and local[4] alike (job scheduling in this process, not the
+#: core count, is the limit); more in flight only adds latency. 8 is
+#: twice that.
+MAX_CONCURRENT_REQUESTS = 8
+#: seconds a request over the bound waits for a slot before its 503
+SLOT_WAIT_S = 30
 
 
 def _jsonable(v: Any) -> Any:
@@ -84,6 +97,7 @@ class FeatureServer:
         # store without a recorded ts_col costs a parquet schema read.
         # Two racing first reads both infer the same answer, so no lock.
         self._ts_cols: dict[str, str | None] = {}
+        self._slots = threading.BoundedSemaphore(MAX_CONCURRENT_REQUESTS)
         self._httpd = ThreadingHTTPServer(
             (host, port), _make_handler(self)
         )
@@ -311,9 +325,13 @@ def _make_handler(server: FeatureServer):
         def log_message(self, *a):  # quiet: tests assert on responses
             pass
 
-        def _reply(self, code: int, payload: dict) -> None:
+        def _reply(
+            self, code: int, payload: dict, headers: dict | None = None
+        ) -> None:
             data = json.dumps(payload).encode()
             self.send_response(code)
+            for k, v in (headers or {}).items():
+                self.send_header(k, v)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
             self.end_headers()
@@ -332,11 +350,25 @@ def _make_handler(server: FeatureServer):
                 return
             try:
                 n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n) or b"{}")
-                self._reply(200, fn(body))
+                raw = self.rfile.read(n)
+            except ValueError as e:
+                self._reply(400, {"error": str(e)})
+                return
+            if not server._slots.acquire(timeout=SLOT_WAIT_S):
+                self._reply(
+                    503,
+                    {"error": f"over {MAX_CONCURRENT_REQUESTS} concurrent "
+                              f"requests for {SLOT_WAIT_S} s; retry later"},
+                    {"Retry-After": "1"},  # seconds
+                )
+                return
+            try:
+                self._reply(200, fn(json.loads(raw or b"{}")))
             except (KeyError, ValueError, TypeError) as e:
                 self._reply(400, {"error": str(e)})
             except Exception as e:  # surface, don't kill the thread
                 self._reply(500, {"error": f"{type(e).__name__}: {e}"})
+            finally:
+                server._slots.release()
 
     return Handler

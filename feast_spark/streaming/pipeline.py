@@ -123,7 +123,9 @@ def stream_latest_to_online(
     """T4: stateful latest-per-key → online-store upsert via
     ``foreachBatch`` — each micro-batch runs the SAME bucketed upsert as
     batch materialization, so streaming and batch serving stores are
-    byte-compatible. Returns the started StreamingQuery (caller awaits)."""
+    byte-compatible. ``transform`` keeps ``MaterializeJob``'s contract:
+    it sees each key's latest rows of the micro-batch. Returns the
+    started StreamingQuery (caller awaits)."""
     from feast_spark.materialize import MaterializeJob
     from feast_spark.registry import Entity, FeatureSpec, FeatureView
 
@@ -304,6 +306,21 @@ def stream_agg_to_online(
     return writer.trigger(availableNow=True).start()
 
 
+def _root_parquet(spark, path: str) -> list[str]:
+    """Names of the parquet files directly under ``path``, listed through
+    Hadoop's ``FileSystem`` so a URI (``file://``, ``s3a://``, …) is
+    probed like a local path; [] when ``path`` does not exist."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return []
+    return [
+        n for n in (st.getPath().getName() for st in fs.listStatus(p))
+        if n.endswith(".parquet")
+    ]
+
+
 def stream_enrich_pit(
     probe_stream: DataFrame,
     store,
@@ -348,28 +365,23 @@ def stream_enrich_pit(
     estimator decide (an in-memory micro-batch is unestimable, so auto
     routes to the unbounded-safe strategy). Returns the started
     StreamingQuery (caller awaits)."""
-    import os
-
     from feast_spark.plans.retrieval import plan_retrieval
 
     # refuse a legacy unpartitioned dest before starting the stream
     # (ADVICE r04): mixing flat root files with __batch= partition dirs
-    # breaks partition discovery for every downstream reader.
-    if os.path.isdir(dest):
-        entries = os.listdir(dest)
-        flat = [e for e in entries if e.endswith(".parquet")]
-        # ANY flat root parquet is disqualifying — including a dest that
-        # already mixes flat files with __batch= dirs (resumed once by
-        # pre-guard code): appending more partitions doesn't unbreak
-        # partition discovery for downstream readers (r05 review)
-        if flat:
-            raise ValueError(
-                f"dest {dest!r} holds unpartitioned parquet at its root "
-                "(written by a pre-__batch version of stream_enrich_pit); "
-                "mixing flat files with __batch= partition directories "
-                "breaks partition discovery — use a fresh dest (the "
-                "reset-checkpoint contract)"
-            )
+    # breaks partition discovery for every downstream reader. ANY flat
+    # root parquet is disqualifying — including a dest that already
+    # mixes flat files with __batch= dirs (resumed once by pre-guard
+    # code): appending more partitions doesn't unbreak partition
+    # discovery for downstream readers (r05 review)
+    if _root_parquet(probe_stream.sparkSession, dest):
+        raise ValueError(
+            f"dest {dest!r} holds unpartitioned parquet at its root "
+            "(written by a pre-__batch version of stream_enrich_pit); "
+            "mixing flat files with __batch= partition directories "
+            "breaks partition discovery — use a fresh dest (the "
+            "reset-checkpoint contract)"
+        )
 
     s = with_watermark(probe_stream, ts_col, watermark)
     if dedupe_keys:

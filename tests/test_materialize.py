@@ -4,6 +4,7 @@ manifests."""
 
 from __future__ import annotations
 
+import warnings
 from datetime import timedelta
 
 import pytest
@@ -455,3 +456,280 @@ def test_read_online_ttl_on_legacy_store_infers_ts_col(
         ).collect()
     }
     assert got == {"new"}
+
+
+# -- the transform runs on each key's latest candidates ----------------
+#
+# MaterializeJob applies its transform to the rows tied with their key's
+# latest (event ts, created ts) only. For a per-row transform that keeps
+# the key and time columns, the served rows must equal today's order —
+# latest_per_key over the transform of every scanned row — cell for cell,
+# exact ties included.
+
+TIE_START, TIE_END = "2024-01-01", "2024-03-01"
+
+
+@pytest.fixture(scope="module")
+def tie_src(spark, tmp_path_factory):
+    """Several rows per (user, region); at each key's latest event time:
+    exact ties with different payloads, created-ts ties, NULL created-ts
+    beside a set one, and both NULL. Rows past TIE_END are out of range;
+    the global latest event time is itself an exact tie."""
+    from datetime import datetime
+
+    def day(d, h=0):
+        return datetime(2024, 1, 1) + timedelta(days=d, hours=h)
+
+    rows = []
+    for u in range(30):
+        user = f"u{u:02d}"
+        for i in range(2 + u % 4):  # older revisions, both regions
+            rows.append((user, ("eu", "us")[i % 2], day(i), day(i, 1),
+                         float(u * 100 + i), f"old-{u}-{i}"))
+        last, case = day(10 + u % 7), u % 6
+        created = {
+            0: [day(20)],  # a unique latest row
+            1: [day(20), day(20)],  # exact tie, payloads differ
+            2: [day(20), day(21)],  # created decides
+            3: [None, day(20)],  # a set created beats NULL
+            4: [None, None],  # both NULL: the hash decides
+            5: [day(20), day(20), day(20)],
+        }[case]
+        for j, c in enumerate(created):
+            rows.append((user, "eu", last, c, float(u * 100 + 50 + j),
+                         f"latest-{u}-{j}"))
+        if u % 5 == 0:  # out of range
+            rows.append((user, "eu", day(70), day(70), -1.0, "future"))
+    for j in range(2):  # the global latest: an exact tie
+        rows.append(("u00", "us", day(40), day(40), 900.0 + j, f"global-{j}"))
+    path = str(tmp_path_factory.mktemp("ties") / "src.parquet")
+    spark.createDataFrame(
+        rows,
+        "user string, region string, ts timestamp, created timestamp, "
+        "v double, payload string",
+    ).write.parquet(path)
+    return path
+
+
+def _derive(df):
+    """A per-row feature derivation that keeps every source column."""
+    return df.select(
+        "*",
+        (F.col("v") * 2).alias("v2"),
+        F.upper("payload").alias("p"),
+    )
+
+
+def _tie_view(path, entity, aggregations=()) -> FeatureView:
+    return FeatureView(
+        name="ties",
+        entity=entity,
+        source=path,
+        features=[FeatureSpec("v2", "double"), FeatureSpec("p", "string")],
+        timestamp_field="ts",
+        created_timestamp_column="created",
+        aggregations=list(aggregations),
+    )
+
+
+def _transform_all_rows(job: MaterializeJob, transform, start, end):
+    """Today's order: latest_per_key over the transform of every scanned
+    row of every bucket."""
+    from feast_spark.operators.windows import latest_per_key
+
+    keys = job._key_cols()
+    df = transform(job._scan(start, end, list(range(job.n_buckets))))
+    if keys == [MaterializeJob.DUMMY_KEY]:
+        df = df.withColumn(MaterializeJob.DUMMY_KEY, F.lit(1))
+    return latest_per_key(
+        df, key=keys, order=job.view.timestamp_field,
+        created_col=job.view.created_timestamp_column,
+    )
+
+
+def _assert_served_equal(spark, dest, want, keys):
+    import pandas as pd
+
+    got = read_online(spark, dest).select(*want.columns)
+    a = got.toPandas().sort_values(keys).reset_index(drop=True)
+    b = want.toPandas().sort_values(keys).reset_index(drop=True)
+    assert len(a) == len(b) > 0
+    pd.testing.assert_frame_equal(a, b)
+
+
+@pytest.mark.parametrize(
+    "shape", ["key", "composite", "entityless", "aggregations"]
+)
+def test_transform_on_latest_candidates_serves_todays_rows(
+    spark, tie_src, tmp_path_factory, shape
+):
+    from feast_spark.registry import Aggregation
+
+    entity = {
+        "key": Entity("user", "user"),
+        "composite": [Entity("user", "user"), Entity("region", "region")],
+        "entityless": [],
+        "aggregations": Entity("user", "user"),
+    }[shape]
+    aggs = (
+        [Aggregation("v", "sum", timedelta(days=3)), Aggregation("v", "count")]
+        if shape == "aggregations" else []
+    )
+    dest = str(tmp_path_factory.mktemp(f"ties_{shape}") / "store")
+    job = MaterializeJob(
+        spark, _tie_view(tie_src, entity, aggs), dest,
+        n_buckets=4, bucket_batch=2, transform=_derive,
+    )
+    job.run(TIE_START, TIE_END)
+    want = _transform_all_rows(job, _derive, TIE_START, TIE_END)
+    if shape == "entityless":
+        want = want.drop(MaterializeJob.DUMMY_KEY)
+        assert want.count() == 1
+    keys = [k for k in job._key_cols() if k != MaterializeJob.DUMMY_KEY]
+    _assert_served_equal(spark, dest, want, keys or ["ts"])
+
+
+def test_text_kernel_on_latest_candidates_serves_todays_rows(
+    spark, tmp_path_factory
+):
+    """The fused text kernel over generated pages, as the ingest benchmark
+    runs it: the served rows equal today's, cell for cell."""
+    from feast_spark import datagen
+    from feast_spark.operators import text
+
+    base = tmp_path_factory.mktemp("mat_text")
+    root = str(base / "pages")
+    layout.write_table(
+        datagen.generate_pages_distributed(spark, 150, seed=5, n_partitions=2),
+        root, n_buckets=B,
+    )
+    names = ["q_n_chars", "q_n_tokens", "q_punct_ratio", "q_stopword_ratio"]
+    view = FeatureView(
+        "pages", Entity("url", "url"), root,
+        [FeatureSpec(n, "double") for n in names], ttl=timedelta(days=90),
+    )
+
+    def kernel(df):
+        return text.extract_features_col(
+            df.select("url", "warc_ts", "html")
+        ).select("url", "warc_ts", *names)
+
+    dest = str(base / "store")
+    job = MaterializeJob(spark, view, dest, bucket_batch=2, transform=kernel)
+    assert job.run(START, END)["rows"] == 150
+    want = _transform_all_rows(job, kernel, START, END)
+    _assert_served_equal(spark, dest, want, ["url"])
+
+
+def _latest_candidate_count(spark, path) -> int:
+    """Rows in range at their key's max event ts and, among those, its max
+    created ts (a set one beats NULL)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user")
+    df = spark.read.parquet(path).filter(
+        (F.col("ts") >= TIE_START) & (F.col("ts") < TIE_END)
+    )
+    df = df.withColumn("mts", F.max("ts").over(w)).filter("ts = mts")
+    df = df.withColumn("mc", F.max("created").over(w))
+    return df.filter(F.col("created").eqNullSafe(F.col("mc"))).count()
+
+
+def test_transform_sees_only_latest_candidates_and_lineage_counts_them(
+    spark, tie_src, tmp_path_factory
+):
+    """The transform is handed each key's latest candidates, not every
+    scanned row; each batch lineage record counts the scanned rows in
+    range (rows_in) and the transform's rows in and out."""
+    from pyspark.sql import Observation
+
+    seen: list[Observation] = []
+
+    def counting(df):
+        seen.append(Observation())
+        return _derive(df.observe(seen[-1], F.count(F.lit(1)).alias("n")))
+
+    dest = str(tmp_path_factory.mktemp("ties_count") / "store")
+    MaterializeJob(
+        spark, _tie_view(tie_src, Entity("user", "user")), dest,
+        n_buckets=4, bucket_batch=2, transform=counting,
+    ).run(TIE_START, TIE_END)
+    in_range = spark.read.parquet(tie_src).filter(
+        (F.col("ts") >= TIE_START) & (F.col("ts") < TIE_END)
+    ).count()
+    candidates = _latest_candidate_count(spark, tie_src)
+    assert len(seen) == 2  # one call per bucket batch
+    assert sum(o.get["n"] for o in seen) == candidates < in_range
+
+    batches = [r for r in layout.list_lineage(dest) if "buckets" in r]
+    assert sum(r["rows_in"] for r in batches) == in_range
+    assert sum(r["transform_rows_in"] for r in batches) == candidates
+    assert all(
+        r["transform_rows_out"] == r["transform_rows_in"] for r in batches
+    )
+    assert sum(r["rows_out"] for r in batches) == 30
+
+
+def test_row_dropping_transform_warns_and_its_keys_are_not_served(
+    spark, tie_src, tmp_path_factory
+):
+    """A transform must derive one row per input row. One that drops rows
+    breaks that contract: the job warns, naming the view, and a key whose
+    latest rows it dropped is not served (no older row stands in)."""
+    dest = str(tmp_path_factory.mktemp("ties_drop") / "store")
+    job = MaterializeJob(
+        spark, _tie_view(tie_src, Entity("user", "user")), dest,
+        n_buckets=4, bucket_batch=4,
+        transform=lambda df: _derive(df).filter(F.col("user") != "u01"),
+    )
+    with pytest.warns(UserWarning, match="view 'ties'.*one row per input row"):
+        summary = job.run(TIE_START, TIE_END)
+    assert summary["rows"] == 29
+    (record,) = [r for r in layout.list_lineage(dest) if "buckets" in r]
+    assert record["transform_rows_in"] - record["transform_rows_out"] == 2
+    served = {r["user"] for r in read_online(spark, dest).collect()}
+    assert "u01" not in served and len(served) == 29
+
+    # a transform that drops every row still finishes, serves nothing and
+    # warns for each batch: one found empty while running keeps its
+    # counts; one Spark proves empty before running removes them from the
+    # plan (rows_in and transform_rows_in unknown, nothing returned)
+    for drop_all, counted in (
+        (lambda df: df.filter("v < 0"), True),
+        (lambda df: df.limit(0), False),
+    ):
+        dest = str(tmp_path_factory.mktemp("ties_none") / "store")
+        with pytest.warns(UserWarning, match="view 'ties' returned 0 rows"):
+            summary = MaterializeJob(
+                spark, _tie_view(tie_src, Entity("user", "user")), dest,
+                n_buckets=4, bucket_batch=2, transform=drop_all,
+            ).run(TIE_START, TIE_END)
+        assert summary["rows"] == 0
+        batches = [r for r in layout.list_lineage(dest) if "buckets" in r]
+        assert len(batches) == 2
+        for r in batches:
+            assert r["transform_rows_out"] == r["rows_out"] == 0
+            if counted:
+                assert r["rows_in"] > r["transform_rows_in"] > 0
+            else:
+                assert r["rows_in"] is r["transform_rows_in"] is None
+
+
+def test_batch_with_no_rows_in_range_counts_zero(
+    spark, tie_src, tmp_path_factory
+):
+    """A batch whose range holds no rows records 0s, not unknown counts,
+    and gives no warning."""
+    dest = str(tmp_path_factory.mktemp("ties_empty") / "store")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        summary = MaterializeJob(
+            spark, _tie_view(tie_src, Entity("user", "user")), dest,
+            n_buckets=4, bucket_batch=2, transform=_derive,
+        ).run("2025-01-01", "2025-02-01")
+    assert summary["rows"] == 0
+    batches = [r for r in layout.list_lineage(dest) if "buckets" in r]
+    assert len(batches) == 2
+    for r in batches:
+        assert r["rows_in"] == r["transform_rows_in"] == 0
+        assert r["transform_rows_out"] == r["rows_out"] == 0

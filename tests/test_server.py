@@ -318,3 +318,66 @@ def test_error_paths_keep_server_alive(served):
     # still serving afterwards
     code, _ = _call(srv.port, "/health")
     assert code == 200
+
+
+def test_requests_over_the_bound_wait_then_get_503(monkeypatch):
+    """The server runs at most MAX_CONCURRENT_REQUESTS POST requests at
+    once. With that many slow requests in flight, one more waits for a
+    slot: it is served once a slot frees within SLOT_WAIT_S, and refused
+    with 503 and Retry-After (never a 500) when none does."""
+    import threading
+    import time
+
+    from feast_spark import server as server_mod
+
+    bound = server_mod.MAX_CONCURRENT_REQUESTS
+    entered, release = threading.Semaphore(0), threading.Event()
+
+    class SlowStore:  # answers /retrieve-online-documents after `release`
+        def retrieve_online_documents(self, view, query, **kw):
+            entered.release()
+            release.wait(60)
+            return type("Res", (), {"collect": lambda self: []})()
+
+    srv = FeatureServer(SlowStore(), {}).start()
+    body = {"view": "v", "query": [1.0]}
+    codes: list[int] = []
+
+    def post():
+        codes.append(_call(srv.port, "/retrieve-online-documents", body)[0])
+
+    try:
+        slow = [threading.Thread(target=post) for _ in range(bound)]
+        for t in slow:
+            t.start()
+        for _ in range(bound):  # every slow request holds a slot
+            assert entered.acquire(timeout=60)
+
+        monkeypatch.setattr(server_mod, "SLOT_WAIT_S", 0.5)
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/retrieve-online-documents",
+            data=json.dumps(body).encode(),
+        )
+        with pytest.raises(urllib.error.HTTPError) as refused:
+            urllib.request.urlopen(req, timeout=60)
+        assert refused.value.code == 503
+        assert int(refused.value.headers["Retry-After"]) > 0
+        assert "concurrent" in json.loads(refused.value.read())["error"]
+        assert _call(srv.port, "/health")[0] == 200  # not bounded
+
+        monkeypatch.setattr(server_mod, "SLOT_WAIT_S", 60)
+        waiting = threading.Thread(target=post)
+        waiting.start()
+        time.sleep(0.5)  # it queues behind the slow requests
+        assert len(codes) == 0
+        release.set()
+        for t in [*slow, waiting]:
+            t.join(60)
+        # the slots are free again
+        assert _call(srv.port, "/retrieve-online-documents", body) == (
+            200, {"results": []}
+        )
+    finally:
+        release.set()
+        srv.stop()
+    assert codes == [200] * (bound + 1)

@@ -419,7 +419,9 @@ def test_stream_enrich_pit_refuses_legacy_flat_dest(
     pre-__batch code) must be refused up front — resuming onto it would
     mix flat files with __batch= partition dirs and break partition
     discovery. A dest that already carries __batch= dirs resumes fine
-    (covered by the replay-idempotence test)."""
+    (covered by the replay-idempotence test). ADVICE r05: a URI dest is
+    probed through Hadoop's FileSystem, so ``file://`` is refused too (a
+    local-path probe saw it as absent and let the stream start)."""
     from feast_spark.registry import Entity, FeatureSpec, FeatureStore, FeatureView
 
     base = tmp_path_factory.mktemp("stream_pit_legacy")
@@ -441,15 +443,15 @@ def test_stream_enrich_pit_refuses_legacy_flat_dest(
     pages_df.select(
         "url", F.col("warc_ts").cast("timestamp").alias("ts")
     ).limit(5).write.parquet(src)
-    # the legacy shape: flat parquet at the dest root, no partition dirs
-    dest = str(base / "out")
-    spark.range(3).write.parquet(dest)
     stream = spark.readStream.schema("url string, ts timestamp").parquet(src)
-    with pytest.raises(ValueError, match="fresh dest"):
-        sp.stream_enrich_pit(
-            stream, store, ["pg:n_chars"], dest,
-            checkpoint=str(base / "ckpt"),
-        )
+    for dest in (str(base / "out"), (base / "out_uri").as_uri()):
+        # the legacy shape: flat parquet at the dest root, no partition dirs
+        spark.range(3).write.parquet(dest)
+        with pytest.raises(ValueError, match="fresh dest"):
+            sp.stream_enrich_pit(
+                stream, store, ["pg:n_chars"], dest,
+                checkpoint=str(base / "ckpt"),
+            )
 
 
 def test_stream_agg_to_online_matches_batch_with_late_rows(
