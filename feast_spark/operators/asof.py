@@ -21,7 +21,8 @@ PySpark 4.1.2 has no native asOfJoin (verified), so four strategies:
 
 - ``union``  (J1): union probes+events, one window per url, forward-fill a
   payload struct. One shuffle on ``by``; scales to any probe cardinality;
-  the default.
+  the default, and the retrieval planner's choice for every probe set
+  above its broadcast bound, layout-backed or not.
 - ``broadcast`` (J2): broadcast the (distinct) probe set, equi-join on
   ``by`` with the TTL range as join condition, keep row_number()==1 per
   probe. Best when probes are small; zero shuffle of the big side beyond
@@ -31,6 +32,9 @@ PySpark 4.1.2 has no native asOfJoin (verified), so four strategies:
   "sort-merge over url-hash-partitioned partitions" path of the north
   rule — when both sides are already bucket-laid-out (sources.layout),
   the shuffle is a cheap B-way repartition on a precomputed bucket id.
+  An explicit strategy only: the planner never picks it, because with
+  its per-bucket Python-worker cost it used more CPU than ``union`` up
+  to 300k probes and tied at 1M (ROADMAP item 4).
 - ``sliced`` (J1-hot): the SAME union+window routine, partitioned by
   (key, time-slice) with per-slice carry-ins — the segmented-scan
   parallelization of the forward fill. The ONLY strategy whose per-task

@@ -15,9 +15,10 @@ is explicit:
    aggregates: partial agg on (key, salt) → final agg on key. Bounded
    partition size regardless of skew; exact same results.
 3. For order-dependent windows over hot keys, use
-   ``windows.salted_rolling_count`` (two-phase over time buckets) or
-   route the hot keys through the cogroup/merge path off the critical
-   path (operators.asof).
+   ``windows.salted_rolling_count`` (two-phase over time buckets). The
+   retrieval planner routes manifest-detected hot keys to the as-of
+   join's time-sliced ``sliced`` strategy (operators.asof): buckets and
+   salts cannot split one key, its timeline can.
 """
 
 from __future__ import annotations

@@ -21,13 +21,14 @@ Strategy policy (``strategy=None`` → auto):
 
 - probes estimated ≤ BROADCAST_PROBE_ROWS → ``broadcast`` (J2): the big
   feature table is scanned once and never re-shuffled;
-- both sides carry our layout's bucket metadata (sources.layout) with the
-  same bucket count → ``cogroup`` (J3): per-bucket sort-merge, minimal
-  shuffle;
 - else ``union`` (J1): one shuffle on the entity key, unbounded probe
-  cardinality;
-- a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) overrides any of
-  these with ``sliced`` (J1-hot).
+  cardinality, all in the JVM — layout-backed or not (it used less CPU
+  than ``cogroup`` up to 300k probes and tied at 1M, ROADMAP item 4);
+- a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) overrides either
+  with ``sliced`` (J1-hot).
+
+The choice is made once per retrieval. ``cogroup`` (J3, per-bucket pandas
+merge on the layout's bucket id) runs only when asked for.
 
 Layout-backed views are pruned from ONE probe summary — a single
 aggregate over the entity dataframe giving the probe time bounds and the
@@ -56,18 +57,18 @@ from feast_spark.sources.pages import bucket_expr
 # costs driver/executor memory proportional to the probe set.
 BROADCAST_PROBE_ROWS = 100_000
 
-# cogroup materializes one bucket at a time in a Python worker; when the
-# manifest says the biggest bucket exceeds this many bytes, the planner
-# multiplies the repartition count so every pandas merge stays bounded
+# an explicit cogroup materializes one bucket at a time in a Python
+# worker; when the manifest says the biggest bucket exceeds this many
+# bytes, the planner multiplies the repartition count so every pandas
+# merge stays bounded
 # (trades the layout-aligned cheap shuffle for worker-memory safety)
 COGROUP_BUCKET_BYTES = 256 << 20
 
 # a single entity key with ≥ this many feature rows (manifest lower
 # bound) flips ANY auto-chosen plan to the time-sliced strategy: union's
 # partitionBy(key) window makes the hot key one giant JVM sort task,
-# broadcast fans out hot_rows × probes-of-that-key, and cogroup hashes
-# the whole key into ONE pandas bucket no matter how large B grows —
-# only slicing the hot key's TIMELINE bounds the per-task work
+# and broadcast fans out hot_rows × probes-of-that-key — only slicing
+# the hot key's TIMELINE bounds the per-task work
 # (SURVEY §4.2.2)
 HOT_KEY_MIN_ROWS = 1_000_000
 
@@ -75,16 +76,9 @@ HOT_KEY_MIN_ROWS = 1_000_000
 _GROUP_ETS = "__group_event_ts"
 
 
-def choose_strategy(
-    probes: DataFrame,
-    probe_count_hint: int | None = None,
-    *,
-    layout_backed: bool = False,
-) -> str:
+def choose_strategy(probes: DataFrame, probe_count_hint: int | None = None) -> str:
     """DataFrame-level strategy policy (§4.2.1): small probe set →
-    broadcast; large probes over a layout-backed view → cogroup (the
-    bucket-aligned sort-merge — repartitions on the SAME xxhash64 bucket
-    transform the table was written with); else union+window.
+    broadcast, else union+window.
 
     Probe cardinality comes from the hint, else a zero-job plan-time
     estimate (parquet footers / Catalyst stats — VERDICT r03 next #5:
@@ -98,7 +92,7 @@ def choose_strategy(
         n = estimate_rows(probes)
     if n is not None and n <= BROADCAST_PROBE_ROWS:
         return "broadcast"
-    return "cogroup" if layout_backed else "union"
+    return "union"
 
 
 def _prune_spec(fv, snap: dict) -> tuple | None:
@@ -183,17 +177,8 @@ def plan_retrieval(
         for g, snap in zip(groups, snaps)
     ]
 
-    probe_n = None
-    if strategy is None:
-        probe_n = probe_count_hint
-        if probe_n is None:
-            # zero-job estimate computed ONCE and shared across views
-            # (VERDICT r03 next #5: the old fallback was an
-            # entity_df.count() job per unhinted retrieval). None simply
-            # flows to choose_strategy's unbounded-safe default.
-            from feast_spark.estimate import estimate_rows
-
-            probe_n = estimate_rows(entity_df)
+    # one choice for every group: it depends on the probes alone
+    picked = strategy or choose_strategy(entity_df, probe_count_hint)
 
     lo = hi = None
     bucket_sets: dict = {}
@@ -225,9 +210,7 @@ def plan_retrieval(
         ttl = None if None in ttls else max(ttls)
         masked = [v for v in group if views[v].ttl != ttl]
         feats = list(dict.fromkeys(f for v in group for f in by_view[v]))
-        chosen = strategy or choose_strategy(
-            entity_df, probe_n, layout_backed=snap is not None
-        )
+        chosen = picked
         hot_keys: list = []
         if strategy is None and snap is not None:
             # skew probe (SURVEY §4.2.2): manifest stats are already on
@@ -239,7 +222,7 @@ def plan_retrieval(
             # strategy partitions the hot key's TIMELINE, the only bound
             # that holds when one key exceeds a task (r02 review;
             # cogroup/salting only bound aggregates) — so the probe runs
-            # for every auto-chosen strategy, cogroup included.
+            # for every auto-chosen strategy.
             from feast_spark.operators.skew import detect_hot_keys_from_manifest
 
             hot_keys = detect_hot_keys_from_manifest(snap, min_rows=HOT_KEY_MIN_ROWS)
@@ -287,7 +270,7 @@ def plan_retrieval(
                 # worker memory needs time-sliced handling regardless of
                 # B — which is why AUTO-detected hot keys route to the
                 # sliced strategy, not here; this path serves explicit
-                # strategy="cogroup" and large-probe layout retrievals.
+                # strategy="cogroup" only.
                 per_bucket: dict = {}
                 for fs in snap["files"]:
                     per_bucket[fs["bucket"]] = (

@@ -79,7 +79,7 @@ def test_choose_strategy_zero_jobs(spark, probes_df, no_actions):
     assert choose_strategy(spark.range(10**9)) == "union"
     # unestimable probes: unbounded-safe strategy, no counting job
     local = spark.createDataFrame([Row(url="u", ts="2024-01-01")])
-    assert choose_strategy(local.distinct(), layout_backed=True) == "cogroup"
+    assert choose_strategy(local.distinct()) == "union"
 
 
 def test_retrieval_planning_zero_jobs(spark, data_dir, no_actions):
@@ -117,6 +117,54 @@ def test_retrieval_planning_zero_jobs(spark, data_dir, no_actions):
     dec_est: list = []
     plan_retrieval(store, probes, ["pg:n_chars"], decisions=dec_est)
     assert dec_est[0]["strategy"] == "broadcast"
+
+
+def test_unestimable_probes_are_estimated_once(
+    spark, data_dir, monkeypatch, no_actions
+):
+    """The strategy is chosen once per retrieval: an entity_df from a
+    list of Rows (RDD-backed, so no plan-time estimate bounds it) over
+    two source groups costs one ``estimate_rows`` call, not one more per
+    group — and no job."""
+    import os
+    from datetime import timedelta
+
+    from feast_spark import estimate
+    from feast_spark.plans.retrieval import plan_retrieval
+    from feast_spark.registry import (
+        Entity, FeatureSpec, FeatureStore, FeatureView,
+    )
+
+    path = os.path.join(data_dir, "pages.parquet")
+    store = FeatureStore(spark)
+    for name, expr in (("chars", F.length("text")), ("words", F.size(F.split("text", " ")))):
+        store.apply(
+            FeatureView(
+                name=name,
+                entity=Entity("url", "url"),
+                source=lambda sp, expr=expr, name=name: sp.read.parquet(path).select(
+                    "url", "warc_ts", expr.alias(name)
+                ),
+                features=[FeatureSpec(name, "int")],
+                ttl=timedelta(days=90),
+                timestamp_field="warc_ts",
+            )
+        )
+    entity_df = spark.createDataFrame(
+        [Row(url="u0", ts="2024-01-01"), Row(url="u1", ts="2024-02-01")]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    calls: list = []
+    real = estimate.estimate_rows
+
+    def counted(df):
+        calls.append(real(df))
+        return calls[-1]
+
+    monkeypatch.setattr(estimate, "estimate_rows", counted)
+    decisions: list = []
+    plan_retrieval(store, entity_df, ["chars:chars", "words:words"], decisions=decisions)
+    assert calls == [None]
+    assert [(d["group"], d["strategy"]) for d in decisions] == [(0, "union"), (1, "union")]
 
 
 @pytest.fixture(scope="module")

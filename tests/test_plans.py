@@ -170,11 +170,11 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory, monkeypatch):
     # SAME rows via the unbounded-safe strategy, with zero extra jobs
     safe_dec: list = []
     safe = plan_retrieval(store, probes, ["hotv:n_chars"], decisions=safe_dec)
-    assert safe_dec[0]["strategy"] in ("cogroup", "union")
+    assert safe_dec[0]["strategy"] == "union"
     assert safe.exceptAll(want).count() == 0 and want.exceptAll(safe).count() == 0
-    # r04 review: the hot-key manifest probe must fire even when the
-    # unhinted/unestimable default is cogroup — one hot key hashes into
-    # ONE pandas bucket regardless of B, so cogroup is NOT hot-key-safe
+    # r04 review: the hot-key manifest probe must fire for the
+    # unhinted/unestimable default too — union's partitionBy(key) window
+    # makes one hot key one task, so union is NOT hot-key-safe
     unhinted_hot: list = []
     monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 100)
     got2 = plan_retrieval(

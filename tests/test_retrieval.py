@@ -42,6 +42,27 @@ def test_layout_retrieval_all_strategies(spark, lstore, probes_df, strategy):
     assert out.filter(F.col("n_chars").isNotNull()).count() > 0
 
 
+def test_large_auto_plan_over_a_layout_is_union(spark, lstore, probes_df):
+    """Above the broadcast bound the auto plan over a layout-backed view
+    is union with no cogroup bucket count, and its rows equal the
+    explicit cogroup and broadcast plans', cell for cell."""
+    from feast_spark.plans.retrieval import BROADCAST_PROBE_ROWS, plan_retrieval
+
+    store, _root = lstore
+    refs = ["pg:n_chars", "pg:lang"]
+    decisions: list = []
+    got = plan_retrieval(
+        store, probes_df, refs, probe_count_hint=BROADCAST_PROBE_ROWS + 1,
+        decisions=decisions,
+    )
+    assert [(d["strategy"], d["n_buckets"]) for d in decisions] == [("union", None)]
+    assert got.filter(F.col("n_chars").isNotNull()).count() > 0
+    for strategy in ("cogroup", "broadcast"):
+        want = plan_retrieval(store, probes_df, refs, strategy=strategy)
+        assert want.columns == got.columns
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_probe_bounds_prune_the_scan(spark, lstore, probes_df):
     """Narrow probe window ⇒ the manifest prunes most files: results
     must still match the unpruned plan for those probes."""

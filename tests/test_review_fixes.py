@@ -59,17 +59,12 @@ def test_salted_join_rejects_outer(spark):
         salted_join(df, df, on="k", how="full")
 
 
-def test_choose_strategy_cogroup_tier(spark, probes_df):
+def test_choose_strategy_large_probes_take_union(spark, probes_df):
+    """Above the broadcast bound every auto plan is union, layout-backed
+    or not: the pandas cogroup merge runs only when asked for."""
     from feast_spark.plans.retrieval import choose_strategy
 
-    assert (
-        choose_strategy(probes_df, probe_count_hint=10**9, layout_backed=True)
-        == "cogroup"
-    )
-    assert (
-        choose_strategy(probes_df, probe_count_hint=10**9, layout_backed=False)
-        == "union"
-    )
+    assert choose_strategy(probes_df, probe_count_hint=10**9) == "union"
 
 
 def test_odfv_with_full_feature_names(spark, data_dir, probes_df):
