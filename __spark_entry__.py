@@ -104,14 +104,10 @@ def q_pit_asof_broadcast(spark, sf_dir):
     return _pit(spark, sf_dir, "broadcast")
 
 
-def q_pit_asof_cogroup(spark, sf_dir):
-    return _pit(spark, sf_dir, "cogroup")
-
-
 def q_pit_asof_sliced(spark, sf_dir):
     """Time-sliced hot-key PIT strategy (operators/asof.py
-    _asof_union_sliced): must be result-identical to every other
-    strategy against the shared ASOF oracle."""
+    ``_asof_window(..., slice_s)``): must be result-identical to every
+    other strategy against the shared ASOF oracle."""
     from feast_spark.operators.asof import asof_join
 
     probes, feats = _events_pit_inputs(spark, sf_dir)
@@ -562,10 +558,6 @@ def q_pit_created_tiebreak(spark, sf_dir):
 
 def q_pit_created_tiebreak_broadcast(spark, sf_dir):
     return _pit_created_tiebreak(spark, sf_dir, "broadcast")
-
-
-def q_pit_created_tiebreak_cogroup(spark, sf_dir):
-    return _pit_created_tiebreak(spark, sf_dir, "cogroup")
 
 
 def q_order_ship_priority(spark, sf_dir):
@@ -3099,7 +3091,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # PIT family (north rule core)
         "pit_asof_union": q_pit_asof_union,
         "pit_asof_broadcast": q_pit_asof_broadcast,
-        "pit_asof_cogroup": q_pit_asof_cogroup,
         "pit_no_ttl": q_pit_no_ttl,
         "pit_asof_sliced": q_pit_asof_sliced,
         "pit_two_views_prefixed": q_pit_two_views_prefixed,
@@ -3156,7 +3147,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "array_ops": q_array_ops,
         "supplier_part_volume": q_supplier_part_volume,
         "pit_created_tiebreak_broadcast": q_pit_created_tiebreak_broadcast,
-        "pit_created_tiebreak_cogroup": q_pit_created_tiebreak_cogroup,
     }
 
 
@@ -3165,7 +3155,6 @@ def oracle_sql() -> dict[str, str]:
     out = _oracles()
     # strategy variants share one oracle (semantics must be identical)
     out["pit_created_tiebreak_broadcast"] = out["pit_created_tiebreak"]
-    out["pit_created_tiebreak_cogroup"] = out["pit_created_tiebreak"]
     # exhaustive-probe persisted-index serving == brute-force top-k
     # (VERDICT r04 next #2: the ivf_topk identity construction applied
     # to the persisted LSH and IVF serving paths)
@@ -3271,7 +3260,6 @@ def _oracles() -> dict[str, str]:
     return {
         "pit_asof_union": pit,
         "pit_asof_broadcast": pit,
-        "pit_asof_cogroup": pit,
         "pit_asof_sliced": pit,
         "pit_no_ttl": """
             WITH probes AS (

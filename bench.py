@@ -56,7 +56,6 @@ def _median(xs: list[float]) -> float:
 HEADLINE = [
     "pit_asof_union",
     "pit_asof_broadcast",
-    "pit_asof_cogroup",
     "lag_lead",
     "rolling_7d",
     "sessionize",

@@ -17,28 +17,24 @@ its own features. Left semantics: a probe with no
 qualifying feature row keeps NULL features. Zero temporal leakage: no
 value from an event after the probe ts, ever.
 
-PySpark 4.1.2 has no native asOfJoin (verified), so four strategies:
+PySpark 4.1.2 has no native asOfJoin (verified), so three strategies:
 
-- ``union``  (J1): union probes+events, one window per url, forward-fill a
-  payload struct. One shuffle on ``by``; scales to any probe cardinality;
-  the default, and the retrieval planner's choice for every probe set
-  above its broadcast bound, layout-backed or not.
+- ``union``  (J1): union probes+events, one window per key, forward-fill a
+  payload struct. This IS the north rule's "sort-merge over
+  warc_ts-sorted, url-hash-partitioned partitions", run inside the JVM:
+  one hash exchange on ``by``, then an in-partition sort on (key, ts)
+  that merges probes with events, so the at-or-before boundary falls out
+  of the sort order. Scales to any probe cardinality; the default, and
+  the retrieval planner's choice for every probe set above its broadcast
+  bound, layout-backed or not.
 - ``broadcast`` (J2): broadcast the (distinct) probe set, equi-join on
   ``by`` with the TTL range as join condition, keep row_number()==1 per
   probe. Best when probes are small; zero shuffle of the big side beyond
   the scan.
-- ``cogroup`` (J3): hash-bucket both sides on ``by``, per-bucket pandas
-  ``merge_asof`` (vectorized, no per-row Python). This is the
-  "sort-merge over url-hash-partitioned partitions" path of the north
-  rule — when both sides are already bucket-laid-out (sources.layout),
-  the shuffle is a cheap B-way repartition on a precomputed bucket id.
-  An explicit strategy only: the planner never picks it, because with
-  its per-bucket Python-worker cost it used more CPU than ``union`` up
-  to 300k probes and tied at 1M (ROADMAP item 4).
 - ``sliced`` (J1-hot): the SAME union+window routine, partitioned by
   (key, time-slice) with per-slice carry-ins — the segmented-scan
   parallelization of the forward fill. The ONLY strategy whose per-task
-  state is bounded for a single hot key (buckets and salts can't split
+  state is bounded for a single hot key (a hash partitioning can't split
   one key; its timeline can). The planner routes manifest-detected hot
   keys here.
 
@@ -54,9 +50,19 @@ from datetime import timedelta
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feast_spark.sources.pages import bucket_expr
-
 _ETS = "__asof_event_ts"
+
+# the strategy names ``asof_join`` dispatches on (module docstring)
+STRATEGIES = ("union", "broadcast", "sliced")
+
+
+def check_strategy(strategy: str) -> None:
+    """Refuse a strategy name ``asof_join`` cannot dispatch — callers
+    check before they run any Spark job."""
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown asof strategy {strategy!r}; valid: {', '.join(STRATEGIES)}"
+        )
 
 
 def _ttl_seconds(ttl: timedelta | int | float | None) -> float | None:
@@ -78,7 +84,7 @@ def within_ttl(event_ts: Column, ts: Column, ttl: timedelta | float) -> Column:
 
 def _tiebreak_hash(features: DataFrame, cols: list[str]) -> Column:
     """Deterministic total-order tiebreak for rows sharing (by, event_ts,
-    created_ts) — required so window/merge results are permutation-
+    created_ts) — required so window/join results are permutation-
     invariant (SURVEY.md §7.3.2)."""
     return F.xxhash64(*[F.col(c) for c in cols])
 
@@ -96,7 +102,6 @@ def asof_join(
     strategy: str = "union",
     include_event_ts: bool = False,
     event_ts_name: str = "event_ts",
-    n_buckets: int | None = None,
     slice_s: float | None = None,
 ) -> DataFrame:
     """Dispatch to a PIT-join strategy. Output = all probe columns +
@@ -110,6 +115,7 @@ def asof_join(
     constant key on both sides, so the whole timeline lands in one
     window partition (global tables are small by construction; a large
     one should be given a real entity)."""
+    check_strategy(strategy)
     by = [by] if isinstance(by, str) else list(by)
     if not by:
         dummy = "__feast_dummy_entity__"
@@ -119,8 +125,7 @@ def asof_join(
             by=dummy, left_on=left_on, right_on=right_on, ttl=ttl,
             created_col=created_col, feature_cols=feature_cols,
             strategy=strategy, include_event_ts=include_event_ts,
-            event_ts_name=event_ts_name, n_buckets=n_buckets,
-            slice_s=slice_s,
+            event_ts_name=event_ts_name, slice_s=slice_s,
         )
         return out.drop(dummy)
     if feature_cols is None:
@@ -150,13 +155,9 @@ def asof_join(
         return _asof_window(probes, features, slice_s=None, **kw)
     if strategy == "broadcast":
         return _asof_broadcast(probes, features, **kw)
-    if strategy == "cogroup":
-        return _asof_cogroup(probes, features, n_buckets=n_buckets, **kw)
-    if strategy == "sliced":
-        # default slice: one TTL, else 30 days
-        slice_s = slice_s or kw["ttl"] or 30 * 86400.0
-        return _asof_window(probes, features, slice_s=slice_s, **kw)
-    raise ValueError(f"unknown asof strategy: {strategy!r}")
+    # sliced; default slice: one TTL, else 30 days
+    slice_s = slice_s or kw["ttl"] or 30 * 86400.0
+    return _asof_window(probes, features, slice_s=slice_s, **kw)
 
 
 # ------------------------------------------------------ J1 / J1-hot ----
@@ -330,121 +331,6 @@ def _asof_broadcast(
     if not include_event_ts:
         out = out.drop("__asof_ets_tmp")
     return out
-
-
-# ---------------------------------------------------------------- J3 ----
-def _asof_cogroup(
-    probes: DataFrame,
-    features: DataFrame,
-    *,
-    by: list[str],
-    left_on: str,
-    right_on: str,
-    ttl: float | None,
-    created_col: str | None,
-    feature_cols: list[str],
-    include_event_ts: bool,
-    event_ts_name: str,
-    n_buckets: int | None,
-) -> DataFrame:
-    """Bucketed cogroup + pandas ``merge_asof`` per bucket — the explicit
-    sort-merge path of the north rule. Both sides repartition on
-    ``sources.pages.bucket_expr(by, B)`` (the transform the layout writes
-    with, so layout-aligned inputs shuffle minimally), then one vectorized
-    merge per bucket."""
-    import pandas as pd
-
-    spark = probes.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
-
-    bucket = bucket_expr(by, n_buckets)
-    pb = probes.withColumn("__b", bucket)
-    fsel = [*by, right_on, *feature_cols] + ([created_col] if created_col else [])
-    # tiebreak hash computed JVM-side with the SAME xxhash64 as J1/J2 so
-    # all three strategies are bit-identical on (ts, created) ties.
-    # Columns are re-aliased: when probes and features share lineage,
-    # cogroup silently DROPS right-side columns whose attribute exprId
-    # also appears on the left (observed on Spark 4.1.2) — a fresh Alias
-    # per column breaks the shared ids.
-    fb = (
-        features.select(*[F.col(c).alias(c) for c in fsel])
-        .withColumn("__tb", _tiebreak_hash(features, feature_cols))
-        .withColumn("__b", bucket)
-    )
-
-    probe_fields = [f for f in probes.schema.fields]
-    feat_fields = [features.schema[c] for c in feature_cols]
-    out_schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in probe_fields]
-    out_schema_parts += [f"`{f.name}` {f.dataType.simpleString()}" for f in feat_fields]
-    if include_event_ts:
-        out_schema_parts.append(f"`{event_ts_name}` timestamp")
-    out_schema = ", ".join(out_schema_parts)
-
-    probe_cols = [f.name for f in probe_fields]
-    int_like = {
-        f.name
-        for f in feat_fields
-        if f.dataType.simpleString() in ("bigint", "int", "smallint", "tinyint")
-    }
-    tol = pd.Timedelta(seconds=ttl) if ttl is not None else None
-    ets_out = event_ts_name if include_event_ts else None
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.drop(columns="__b")
-        right = right.drop(columns="__b")
-        out_cols = probe_cols + feature_cols + ([ets_out] if ets_out else [])
-
-        def _nullfeat(rows: pd.DataFrame) -> pd.DataFrame:
-            res = rows.copy()
-            for c in feature_cols:
-                res[c] = None
-            if ets_out:
-                res[ets_out] = pd.NaT
-            return res[out_cols]
-
-        if len(left) == 0:
-            return pd.DataFrame({c: pd.Series(dtype="object") for c in out_cols})
-        # NULL probe ts rows: merge_asof rejects unsorted NaT keys; J1/J2
-        # give them NULL features — match that (strategy equivalence)
-        null_ts = left[left[left_on].isna()]
-        left = left[left[left_on].notna()]
-        if len(right) == 0 or len(left) == 0:
-            return pd.concat(
-                [_nullfeat(left), _nullfeat(null_ts)], ignore_index=True
-            )
-        sort_rhs = [right_on] + ([created_col] if created_col else [])
-        # na_position="first" matches J1's asc_nulls_first: a NULL
-        # created_ts loses ties against any non-NULL one
-        right = right.sort_values(
-            sort_rhs + ["__tb"], kind="mergesort", na_position="first"
-        ).reset_index(drop=True)
-        right = right.rename(columns={right_on: "__rts"})
-        left = left.sort_values(left_on, kind="mergesort").reset_index(drop=True)
-        merged = pd.merge_asof(
-            left,
-            right.drop(columns=["__tb"] + ([created_col] if created_col else [])),
-            left_on=left_on,
-            right_on="__rts",
-            by=by,
-            direction="backward",
-            allow_exact_matches=True,
-            tolerance=tol,
-        )
-        for c in int_like:
-            merged[c] = merged[c].astype("Int64")
-        if ets_out:
-            merged[ets_out] = merged["__rts"]
-        merged = merged[out_cols]
-        if len(null_ts):
-            merged = pd.concat([merged, _nullfeat(null_ts)], ignore_index=True)
-        return merged
-
-    return (
-        pb.groupBy("__b")
-        .cogroup(fb.groupBy("__b"))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 # ---------------------------------------------------------------- J4 ----

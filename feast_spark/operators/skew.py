@@ -17,8 +17,9 @@ is explicit:
 3. For order-dependent windows over hot keys, use
    ``windows.salted_rolling_count`` (two-phase over time buckets). The
    retrieval planner routes manifest-detected hot keys to the as-of
-   join's time-sliced ``sliced`` strategy (operators.asof): buckets and
-   salts cannot split one key, its timeline can.
+   join's time-sliced ``sliced`` strategy (operators.asof): a hash
+   partitioning or a salt cannot split one key's as-of timeline, time
+   slices can.
 """
 
 from __future__ import annotations

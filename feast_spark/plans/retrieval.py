@@ -21,14 +21,14 @@ Strategy policy (``strategy=None`` → auto):
 
 - probes estimated ≤ BROADCAST_PROBE_ROWS → ``broadcast`` (J2): the big
   feature table is scanned once and never re-shuffled;
-- else ``union`` (J1): one shuffle on the entity key, unbounded probe
-  cardinality, all in the JVM — layout-backed or not (it used less CPU
-  than ``cogroup`` up to 300k probes and tied at 1M, ROADMAP item 4);
+- else ``union`` (J1): one hash exchange on the entity key and an
+  in-partition sort-merge of probes with events, unbounded probe
+  cardinality, all in the JVM — layout-backed or not;
 - a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) overrides either
   with ``sliced`` (J1-hot).
 
-The choice is made once per retrieval. ``cogroup`` (J3, per-bucket pandas
-merge on the layout's bucket id) runs only when asked for.
+The choice is made once per retrieval. An explicit ``strategy`` must be
+one of ``asof.STRATEGIES``; it is checked before any Spark job.
 
 Layout-backed views are pruned from ONE probe summary — a single
 aggregate over the entity dataframe giving the probe time bounds and the
@@ -40,29 +40,21 @@ smaller than the layout's B only those buckets are scanned.
 from __future__ import annotations
 
 import json
-import math
 from datetime import timedelta
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feast_spark.operators.asof import asof_join, within_ttl
+from feast_spark.operators.asof import asof_join, check_strategy, within_ttl
 from feast_spark.sources.pages import bucket_expr
 
 # measured knee on the 2.1M-row pages table (local[32], BASELINE.md):
 # broadcast ~3s up to 100k probes but 45s at 600k (the range-join output
 # approaches the full feature table and the per-probe row_number window
-# dominates); union stays ~3-5s throughout, cogroup 3.6s. Broadcast also
-# costs driver/executor memory proportional to the probe set.
+# dominates); union stays ~3-5s throughout. Broadcast also costs
+# driver/executor memory proportional to the probe set.
 BROADCAST_PROBE_ROWS = 100_000
-
-# an explicit cogroup materializes one bucket at a time in a Python
-# worker; when the manifest says the biggest bucket exceeds this many
-# bytes, the planner multiplies the repartition count so every pandas
-# merge stays bounded
-# (trades the layout-aligned cheap shuffle for worker-memory safety)
-COGROUP_BUCKET_BYTES = 256 << 20
 
 # a single entity key with ≥ this many feature rows (manifest lower
 # bound) flips ANY auto-chosen plan to the time-sliced strategy: union's
@@ -133,12 +125,13 @@ def plan_retrieval(
     """Build the retrieval DataFrame: entity_df + one PIT join per source
     group.
 
-    Every ref and every output column name is checked before any Spark
-    job runs. ``decisions``, when given, collects one dict per view with
-    the chosen strategy, any manifest-detected hot keys, the layout
-    buckets scanned (``None``: all of them) and ``group``, the index of
-    the join that served the view — the planner's choices are visible in
-    the job log / tests, not hidden planner magic."""
+    Every ref, every output column name and an explicit ``strategy`` are
+    checked before any Spark job runs. ``decisions``, when given,
+    collects one dict per view with the chosen strategy, any
+    manifest-detected hot keys, the layout buckets scanned (``None``: all
+    of them) and ``group``, the index of the join that served the view —
+    the planner's choices are visible in the job log / tests, not hidden
+    planner magic."""
     # group refs by view, preserving order
     by_view: dict[str, list[str]] = {}
     for ref in features:
@@ -152,6 +145,8 @@ def plan_retrieval(
         unknown = [f for f in feats if f not in declared]
         if unknown:
             raise ValueError(f"view {view_name!r} has no features {unknown}")
+    if strategy is not None:
+        check_strategy(strategy)
     out_name = {
         (v, f): f"{v}__{f}" if full_feature_names else f
         for v, feats in by_view.items()
@@ -215,21 +210,19 @@ def plan_retrieval(
         if strategy is None and snap is not None:
             # skew probe (SURVEY §4.2.2): manifest stats are already on
             # the driver — zero extra scans. A hot entity key makes the
-            # union window's partitionBy(key) one giant sort task, blows
-            # up broadcast's range-join fanout (hot_rows × probes of
-            # that key), and lands in ONE cogroup pandas bucket however
-            # large B grows (same hash → same bucket). The sliced
-            # strategy partitions the hot key's TIMELINE, the only bound
-            # that holds when one key exceeds a task (r02 review;
-            # cogroup/salting only bound aggregates) — so the probe runs
-            # for every auto-chosen strategy.
+            # union window's partitionBy(key) one giant sort task however
+            # many partitions there are (same hash → same partition), and
+            # blows up broadcast's range-join fanout (hot_rows × probes
+            # of that key). The sliced strategy partitions the hot key's
+            # TIMELINE, the only bound that holds when one key exceeds a
+            # task (r02 review; salting only bounds aggregates) — so the
+            # probe runs for every auto-chosen strategy.
             from feast_spark.operators.skew import detect_hot_keys_from_manifest
 
             hot_keys = detect_hot_keys_from_manifest(snap, min_rows=HOT_KEY_MIN_ROWS)
             if hot_keys:
                 chosen = "sliced"
         src_kw: dict = {}
-        n_buckets = None
         if snap is not None:
             # manifest pruning by probe time range + TTL: files wholly
             # outside [min(ts) - ttl, max(ts)] never reach Spark — the
@@ -252,41 +245,16 @@ def plan_retrieval(
                         else:
                             src_kw["start"] -= w
             # bucket pruning: scan only the buckets the probe keys hash to
-            # when they miss any; the manifest always uses the LAYOUT's
-            # modulus, not the (possibly grown) cogroup repartition count
+            # when they miss any, by the layout's own modulus
             wanted = bucket_sets.get(spec)
             if wanted is not None and len(wanted) < snap["n_buckets"]:
                 src_kw["buckets"] = wanted
-            if chosen == "cogroup":
-                # bucket-size policy (VERDICT r01 plan audit): cogroup
-                # materializes one bucket per Python worker, so B must
-                # grow with data volume or a bucket overflows worker
-                # memory. Manifest byte stats give max bucket size for
-                # free; splitting costs layout alignment (a real shuffle
-                # instead of a B-way repartition on the precomputed id) —
-                # the right trade once a bucket won't fit. NOTE the bound
-                # holds for aggregate volume, not a single hot key: one
-                # key always hashes to one bucket, so a key larger than
-                # worker memory needs time-sliced handling regardless of
-                # B — which is why AUTO-detected hot keys route to the
-                # sliced strategy, not here; this path serves explicit
-                # strategy="cogroup" only.
-                per_bucket: dict = {}
-                for fs in snap["files"]:
-                    per_bucket[fs["bucket"]] = (
-                        per_bucket.get(fs["bucket"], 0) + fs.get("bytes", 0)
-                    )
-                biggest = max(per_bucket.values(), default=0)
-                n_buckets = snap["n_buckets"] * max(
-                    1, math.ceil(biggest / COGROUP_BUCKET_BYTES)
-                )
         if decisions is not None:
             decisions.extend(
                 {
                     "view": v,
                     "strategy": chosen,
                     "hot_keys": hot_keys,
-                    "n_buckets": n_buckets,
                     "buckets": src_kw.get("buckets"),
                     "group": group_i,
                 }
@@ -305,10 +273,6 @@ def plan_retrieval(
             strategy=chosen,
             include_event_ts=bool(masked),
             event_ts_name=_GROUP_ETS,
-            # layout-aligned bucket count: the cogroup strategy then
-            # repartitions on the SAME pmod(xxhash64(url), B) the table
-            # was written with (SURVEY.md §4.2.3)
-            n_buckets=n_buckets,
         )
         # a narrower TTL only decides whether the group's match is young
         # enough for that view (module docstring)

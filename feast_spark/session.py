@@ -19,6 +19,15 @@ DEFAULT_SHUFFLE_PARTITIONS_PER_CORE = 4
 ARROW_MAX_RECORDS_PER_BATCH = 2048
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``FEAST_SPARK_DRIVER_MEM`` is unset:
+    half of physical RAM, at most 32g. In local mode the driver JVM is
+    the whole cluster, and a heap sized past the host's memory lets it
+    grow until the kernel OOM-kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "feast_spark",
     cores: int | None = None,
@@ -60,7 +69,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),
         )
-        .config("spark.driver.memory", os.environ.get("FEAST_SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("FEAST_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # INT64 micros, not legacy INT96: the Iceberg parquet spec forbids

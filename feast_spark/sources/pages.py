@@ -10,9 +10,8 @@ scratch:
   xxhash64(key), B)>/part-*.parquet``; writers compute both transforms
   (Iceberg's ``days()`` + ``bucket()``), readers get file lists and never
   see partition columns.
-- **Sorted files** — every file is (key, ts)-sorted: enables the
-  sort-merge PIT strategy (operators.asof cogroup, when asked for) and
-  tight Parquet min/max zone maps.
+- **Sorted files** — every file is (key, ts)-sorted, which keeps its
+  Parquet min/max zone maps on key and ts tight.
 - **Snapshots & manifests** — ``metadata/snap-<n>.json`` lists files with
   per-file stats ``{path, dt, bucket, rows, min/max ts, min/max key}``;
   ``metadata/HEAD`` is the last-committed pointer (tmp+rename = Iceberg's
@@ -51,10 +50,9 @@ DEFAULT_BUCKETS = 16
 
 def bucket_expr(key_col: str | Column | list, n_buckets: int) -> Column:
     """Iceberg ``bucket(B, key)`` transform — the one spelling of the
-    bucket hash: the layout, the serving store, the cogroup PIT strategy
-    and the retrieval planner's bucket pruning all call it, so an
-    explicit cogroup shuffles on a precomputed id and the planner's
-    probe buckets match the files'. A key is a column name or a Column; a
+    bucket hash: the layout, the serving store and the retrieval
+    planner's bucket pruning all call it, so the planner's probe buckets
+    match the files'. A key is a column name or a Column; a
     list = composite key, hashed as ``xxhash64(k1, k2, …)``."""
     cols = list(key_col) if isinstance(key_col, (list, tuple)) else [key_col]
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from feast_spark.operators.asof import asof_join
 
 TTL = timedelta(days=30)
-STRATEGIES = ["union", "broadcast", "cogroup", "sliced"]
+STRATEGIES = ["union", "broadcast", "sliced"]
 # sliced: one-day slices, far below the TTL, so most matches are carry-ins
 # from an earlier slice (the other strategies ignore slice_s)
 SLICE_S = 86400

@@ -50,7 +50,7 @@ def _pandas_reference(probes, events, ttl_s):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 @settings(
     max_examples=6,
     deadline=None,

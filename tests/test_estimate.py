@@ -203,6 +203,19 @@ def test_unknown_feature_raises_before_any_job(
         plan_retrieval(layout_store, probes_df, ["lay:n_chars", "lay:nope"])
 
 
+@pytest.mark.parametrize("strategy", ["cogroup", "unoin"])
+def test_unknown_strategy_raises_before_any_job(
+    spark, probes_df, layout_store, no_actions, strategy
+):
+    """An explicit strategy the as-of join cannot dispatch (a removed one
+    or a typo) is refused before the probe-summary job, naming the valid
+    ones."""
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    with pytest.raises(ValueError, match="union, broadcast, sliced"):
+        plan_retrieval(layout_store, probes_df, ["lay:n_chars"], strategy=strategy)
+
+
 def test_output_name_collision_raises_before_any_job(
     spark, probes_df, layout_store, no_actions
 ):

@@ -49,7 +49,7 @@ def _engine_features(pages_df):
     return sessionize(df, gap_seconds=SEVEN_D)
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 def test_engine_matches_golden_fixture(spark, pages_df, probes_df, strategy):
     feats = _engine_features(pages_df)
     got = asof_join(

@@ -185,51 +185,6 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory, monkeypatch):
     assert got2.exceptAll(want).count() == 0 and want.exceptAll(got2).count() == 0
 
 
-def test_cogroup_bucket_count_grows_with_data(
-    spark, pages_df, tmp_path_factory, monkeypatch
-):
-    """Bucket-size policy: when the manifest says a bucket exceeds the
-    per-worker byte budget, the cogroup repartition count multiplies —
-    results unchanged, worker-side state bounded."""
-    from datetime import timedelta
-
-    from feast_spark.plans import retrieval
-    from feast_spark.plans.retrieval import plan_retrieval
-    from feast_spark.registry import Entity, FeatureSpec, FeatureStore, FeatureView
-    from feast_spark.sources import pages as layout
-
-    root = str(tmp_path_factory.mktemp("grow") / "t")
-    src = pages_df.select(
-        "url", "warc_ts", F.length("text").cast("long").alias("n_chars")
-    )
-    layout.write_table(src, root, n_buckets=2, dt_granularity="month")
-    store = FeatureStore(spark)
-    store.apply(
-        FeatureView(
-            name="g", entity=Entity("url", "url"), source=root,
-            features=[FeatureSpec("n_chars", "bigint")],
-            ttl=timedelta(days=365), timestamp_field="warc_ts",
-        )
-    )
-    probes = src.select("url").distinct().withColumn(
-        "ts", F.lit("2024-02-01 00:00:00").cast("timestamp")
-    )
-    dec_small: list = []
-    # absurdly small budget → must grow
-    monkeypatch.setattr(retrieval, "COGROUP_BUCKET_BYTES", 1024)
-    got = plan_retrieval(
-        store, probes, ["g:n_chars"], strategy="cogroup", decisions=dec_small,
-    )
-    assert dec_small[0]["n_buckets"] > 2
-    monkeypatch.undo()
-    dec_big: list = []
-    want = plan_retrieval(
-        store, probes, ["g:n_chars"], strategy="cogroup", decisions=dec_big,
-    )
-    assert dec_big[0]["n_buckets"] == 2  # within budget: layout-aligned
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
 def test_aggregated_view_shares_one_window_and_two_exchanges(spark):
     """Derived Aggregation plan shape: aggs sharing a time_window
     collapse into ONE Window node (one shuffle+sort on the entity key),

@@ -32,7 +32,7 @@ def lstore(spark, pages_df, tmp_path_factory):
     return s, root
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 def test_layout_retrieval_all_strategies(spark, lstore, probes_df, strategy):
     store, _root = lstore
     out = store.get_historical_features(
@@ -44,8 +44,8 @@ def test_layout_retrieval_all_strategies(spark, lstore, probes_df, strategy):
 
 def test_large_auto_plan_over_a_layout_is_union(spark, lstore, probes_df):
     """Above the broadcast bound the auto plan over a layout-backed view
-    is union with no cogroup bucket count, and its rows equal the
-    explicit cogroup and broadcast plans', cell for cell."""
+    is union, and its rows equal the explicit broadcast and sliced
+    plans', cell for cell."""
     from feast_spark.plans.retrieval import BROADCAST_PROBE_ROWS, plan_retrieval
 
     store, _root = lstore
@@ -55,9 +55,9 @@ def test_large_auto_plan_over_a_layout_is_union(spark, lstore, probes_df):
         store, probes_df, refs, probe_count_hint=BROADCAST_PROBE_ROWS + 1,
         decisions=decisions,
     )
-    assert [(d["strategy"], d["n_buckets"]) for d in decisions] == [("union", None)]
+    assert [d["strategy"] for d in decisions] == ["union"]
     assert got.filter(F.col("n_chars").isNotNull()).count() > 0
-    for strategy in ("cogroup", "broadcast"):
+    for strategy in ("broadcast", "sliced"):
         want = plan_retrieval(store, probes_df, refs, strategy=strategy)
         assert want.columns == got.columns
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
@@ -500,7 +500,7 @@ def _single_view_rows(store, probes, refs, strategy) -> dict:
     return rows
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 def test_views_sharing_a_source_equal_single_view_calls(spark, grouped, strategy):
     """One fused join per source group returns, cell for cell, what one
     call per view returns: the group joins at the widest TTL (none) and
@@ -537,7 +537,7 @@ def test_views_sharing_a_source_equal_single_view_calls(spark, grouped, strategy
     }
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "sliced"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 def test_group_tie_takes_all_features_from_one_row(spark, tmp_path_factory, strategy):
     """Rows sharing (key, event ts, created ts) exactly: a group's join
     breaks the tie on the hash of the union of the group's requested

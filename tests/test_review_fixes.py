@@ -31,10 +31,10 @@ def test_broadcast_preserves_probe_event_ts_column(spark):
     assert row["v"] == 1.0
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
 def test_null_probe_ts_yields_null_features(spark, strategy):
     """NULL probe ts: every strategy returns the row with NULL features
-    (review finding: cogroup crashed in merge_asof)."""
+    (sliced puts it in a NULL time slice, which must carry nothing in)."""
     probes = spark.createDataFrame(
         [("a", "2024-01-02 00:00:00"), ("a", None), ("zz", None)],
         "url string, ts string",
@@ -61,7 +61,7 @@ def test_salted_join_rejects_outer(spark):
 
 def test_choose_strategy_large_probes_take_union(spark, probes_df):
     """Above the broadcast bound every auto plan is union, layout-backed
-    or not: the pandas cogroup merge runs only when asked for."""
+    or not."""
     from feast_spark.plans.retrieval import choose_strategy
 
     assert choose_strategy(probes_df, probe_count_hint=10**9) == "union"
