@@ -15,7 +15,8 @@ event_ts, created_ts)`` tie breaks on the hash of that union and all of
 the group's features come from one row; a single-view retrieval hashes
 its own features. Left semantics: a probe with no
 qualifying feature row keeps NULL features. Zero temporal leakage: no
-value from an event after the probe ts, ever.
+value from an event after the probe ts, ever. A NULL in any ``by`` column
+matches nothing (upstream joins with SQL ``=``), under every strategy.
 
 PySpark 4.1.2 has no native asOfJoin (verified), so three strategies:
 
@@ -204,7 +205,9 @@ def _asof_window(
     created = (
         F.col(created_col) if created_col else F.lit(None).cast("timestamp")
     )
-    ev = features.select(
+    # a NULL key matches nothing, as the broadcast equi-join: without this
+    # filter a NULL-key probe would share the NULL-key events' window
+    ev = features.dropna(subset=by).select(
         *[F.col(c).alias(c) for c in by],
         F.col(right_on).alias("__t"),
         F.lit(0).alias("__is_probe"),

@@ -4,6 +4,17 @@ Local-mode testing, cluster-shaped configuration: every knob here is one we
 would also set on a 1000-executor cluster (AQE, skew-join handling, Arrow
 batch sizing for MB-scale ``html`` rows), plus local-only conveniences
 (driver memory, UI off).
+
+Python workers fork from the ``feast_spark.pydaemon`` daemon
+(``spark.python.daemon.module``). It keeps PySpark's per-task
+``importlib.invalidate_caches()`` from re-reading unchanged zip archives
+such as ``pyspark.zip``, a fixed cost of 0.1-0.3 CPU-s on every Python
+task (text kernel, dedupe, similarity, ODFVs). It is a local-mode
+setting: ``get_spark`` always builds a ``local[...]`` master and puts the
+package root on the workers' ``PYTHONPATH`` before the JVM starts.
+``BENCH/run.sh`` does not set it: there the engine ships with
+``--py-files``, a zip that joins the executors' ``sys.path`` only per task,
+so ``python -m feast_spark.pydaemon`` would fail when the daemon starts.
 """
 
 from __future__ import annotations
@@ -88,6 +99,12 @@ def get_spark(
         # CPU-s at 4 MiB pages. Large partitions at 100 TB amortize page
         # count, so 4 MiB stays safe cluster-side too.
         .config("spark.buffer.pageSize", "4m")
+        .config("spark.python.daemon.module", "feast_spark.pydaemon")
+        # off: each Column/functions call would fetch the session, a conf
+        # and a JVM class and set PySparkCurrentOrigin, 4-6 py4j calls
+        # that record a feast_spark frame, not the user's. PySpark errors
+        # then lose their DataFrame query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -278,3 +278,36 @@ def test_sliced_created_tiebreak(spark):
         probes, feats, strategy="sliced", slice_s=3600, **kw
     ).first()["v"]
     assert a == b == 2.0  # max created wins; null created loses
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+@pytest.mark.parametrize("by", [["u"], ["u", "t"]], ids=["scalar", "composite"])
+def test_null_key_matches_nothing(spark, strategy, by):
+    """A NULL in any key column matches no event, as upstream's SQL ``=``
+    join: the answer must not depend on which strategy the probe count
+    picks. A probe with the same non-NULL key still matches. Probes sit
+    in their event's one-day slice, so sliced's in-slice fill is tested."""
+    feats = spark.createDataFrame(
+        [(None, "x", "2023-01-01 00:00:00", 1.0),
+         ("a", None, "2023-01-01 00:00:00", 2.0),
+         ("a", "x", "2023-01-01 00:00:00", 3.0)],
+        "u string, t string, ets string, v double",
+    ).withColumn("ets", F.col("ets").cast("timestamp"))
+    probes = spark.createDataFrame(
+        [(None, "x", "2023-01-01 12:00:00"),
+         ("a", None, "2023-01-01 12:00:00"),
+         ("a", "x", "2023-01-01 12:00:00")],
+        "u string, t string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    if by == ["u"]:  # scalar key u: drop the row whose t is NULL
+        feats = feats.filter(F.col("t") == "x")
+        probes = probes.filter(F.col("t") == "x")
+    feats = feats.select(*by, "ets", "v")
+    out = asof_join(
+        probes.select(*by, "ts"), feats, by=by, left_on="ts", right_on="ets",
+        strategy=strategy, slice_s=SLICE_S,
+    ).collect()
+    got = {tuple(r[k] for k in by): r["v"] for r in out}
+    want = {(None,): None, ("a",): 3.0} if by == ["u"] else {
+        (None, "x"): None, ("a", None): None, ("a", "x"): 3.0}
+    assert got == want, strategy
