@@ -104,23 +104,6 @@ def q_pit_asof_broadcast(spark, sf_dir):
     return _pit(spark, sf_dir, "broadcast")
 
 
-def q_pit_asof_sliced(spark, sf_dir):
-    """Time-sliced hot-key PIT strategy (operators/asof.py
-    ``_asof_window(..., slice_s)``): must be result-identical to every
-    other strategy against the shared ASOF oracle."""
-    from feast_spark.operators.asof import asof_join
-
-    probes, feats = _events_pit_inputs(spark, sf_dir)
-    out = asof_join(
-        probes, feats, by="user_id", left_on="ts", right_on="ets",
-        ttl=timedelta(seconds=PIT_TTL_S), strategy="sliced",
-        slice_s=86400.0, include_event_ts=True, event_ts_name="event_ts",
-    )
-    return out.select(
-        "user_id", "ts", F.round("value", 6).alias("value"), "event_ts"
-    )
-
-
 def q_pit_no_ttl(spark, sf_dir):
     from feast_spark.operators.asof import asof_join
 
@@ -3092,7 +3075,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pit_asof_union": q_pit_asof_union,
         "pit_asof_broadcast": q_pit_asof_broadcast,
         "pit_no_ttl": q_pit_no_ttl,
-        "pit_asof_sliced": q_pit_asof_sliced,
         "pit_two_views_prefixed": q_pit_two_views_prefixed,
         "pit_composite_key": q_pit_composite_key,
         "pit_global_view": q_pit_global_view,
@@ -3260,7 +3242,6 @@ def _oracles() -> dict[str, str]:
     return {
         "pit_asof_union": pit,
         "pit_asof_broadcast": pit,
-        "pit_asof_sliced": pit,
         "pit_no_ttl": """
             WITH probes AS (
               SELECT user_id, ts + INTERVAL 30 MINUTES AS ts

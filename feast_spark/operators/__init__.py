@@ -1,6 +1,6 @@
 """DataFrame-level operators (SURVEY.md §2). Each module maps one family:
 
-- ``asof``: J1-J4 point-in-time / as-of join strategies + salting
+- ``asof``: J1/J2 point-in-time / as-of join strategies + J4 salting
 - ``windows``: W1-W6 lag/lead, rolling aggregates, backfill fill, sessionize
 - ``dedupe``: P6/A1 exact dedupe + MinHash-LSH / SimHash near-dup +
   connected components (min-label and large/small-star)

@@ -18,7 +18,7 @@ qualifying feature row keeps NULL features. Zero temporal leakage: no
 value from an event after the probe ts, ever. A NULL in any ``by`` column
 matches nothing (upstream joins with SQL ``=``), under every strategy.
 
-PySpark 4.1.2 has no native asOfJoin (verified), so three strategies:
+PySpark 4.1.2 has no native asOfJoin (verified), so two strategies:
 
 - ``union``  (J1): union probes+events, one window per key, forward-fill a
   payload struct. This IS the north rule's "sort-merge over
@@ -27,17 +27,16 @@ PySpark 4.1.2 has no native asOfJoin (verified), so three strategies:
   that merges probes with events, so the at-or-before boundary falls out
   of the sort order. Scales to any probe cardinality; the default, and
   the retrieval planner's choice for every probe set above its broadcast
-  bound, layout-backed or not.
+  bound, layout-backed or not, and for any hot key.
 - ``broadcast`` (J2): broadcast the (distinct) probe set, equi-join on
   ``by`` with the TTL range as join condition, keep row_number()==1 per
   probe. Best when probes are small; zero shuffle of the big side beyond
-  the scan.
-- ``sliced`` (J1-hot): the SAME union+window routine, partitioned by
-  (key, time-slice) with per-slice carry-ins — the segmented-scan
-  parallelization of the forward fill. The ONLY strategy whose per-task
-  state is bounded for a single hot key (a hash partitioning can't split
-  one key; its timeline can). The planner routes manifest-detected hot
-  keys here.
+  the scan. Its join emits every event of a probe's key inside the TTL,
+  so a hot key's probes fan out to hot rows × probes.
+
+A hot key is one long ``union`` task, never an out-of-memory one: the
+sort and the window buffer spill to disk (tests/test_asof.py runs a hot
+key under tiny spill thresholds).
 
 All strategies forward-fill/select a STRUCT of the full feature payload,
 not per-column fills — so a legitimately-NULL feature value in the latest
@@ -51,10 +50,12 @@ from datetime import timedelta
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feast_spark.operators.skew import content_salt
+
 _ETS = "__asof_event_ts"
 
 # the strategy names ``asof_join`` dispatches on (module docstring)
-STRATEGIES = ("union", "broadcast", "sliced")
+STRATEGIES = ("union", "broadcast")
 
 
 def check_strategy(strategy: str) -> None:
@@ -103,7 +104,6 @@ def asof_join(
     strategy: str = "union",
     include_event_ts: bool = False,
     event_ts_name: str = "event_ts",
-    slice_s: float | None = None,
 ) -> DataFrame:
     """Dispatch to a PIT-join strategy. Output = all probe columns +
     ``feature_cols`` (+ the matched event ts if ``include_event_ts``).
@@ -126,7 +126,7 @@ def asof_join(
             by=dummy, left_on=left_on, right_on=right_on, ttl=ttl,
             created_col=created_col, feature_cols=feature_cols,
             strategy=strategy, include_event_ts=include_event_ts,
-            event_ts_name=event_ts_name, slice_s=slice_s,
+            event_ts_name=event_ts_name,
         )
         return out.drop(dummy)
     if feature_cols is None:
@@ -153,15 +153,11 @@ def asof_join(
         include_event_ts=include_event_ts, event_ts_name=event_ts_name,
     )
     if strategy == "union":
-        return _asof_window(probes, features, slice_s=None, **kw)
-    if strategy == "broadcast":
-        return _asof_broadcast(probes, features, **kw)
-    # sliced; default slice: one TTL, else 30 days
-    slice_s = slice_s or kw["ttl"] or 30 * 86400.0
-    return _asof_window(probes, features, slice_s=slice_s, **kw)
+        return _asof_window(probes, features, **kw)
+    return _asof_broadcast(probes, features, **kw)
 
 
-# ------------------------------------------------------ J1 / J1-hot ----
+# ---------------------------------------------------------------- J1 ----
 def _asof_window(
     probes: DataFrame,
     features: DataFrame,
@@ -174,30 +170,12 @@ def _asof_window(
     feature_cols: list[str],
     include_event_ts: bool,
     event_ts_name: str,
-    slice_s: float | None,
 ) -> DataFrame:
     """Union+window: the Feast-0.9 PySpark strategy (upstream
     historical_feature_retrieval_job.py), re-derived. Single shuffle
     (window partitionBy ``by``); probes and events sort together so the
     at-or-before boundary falls out of the sort order (events sort BEFORE
-    probes at equal ts → equality matches; after → leakage impossible).
-
-    With ``slice_s`` (J1-hot) the same fill is the segmented scan that
-    bounds a HOT key (r02 review: no bucket or salt bound helps a single
-    key bigger than one task; only slicing its TIMELINE does):
-
-    1. Partition by (key, slice = floor(ts / slice_s)) instead — per-task
-       state is one slice of one key, however hot the key is.
-    2. Per (key, slice), take the LATEST event payload (map-side
-       combinable max_by); a tiny per-slice table.
-    3. Carry-in for slice w = last payload over slices < w — a window
-       over the per-slice table (O(#slices) rows per key, not O(rows)).
-    4. A probe's match = within-slice fill, else its slice's carry-in.
-       TTL applies afterwards on the payload's true event ts.
-
-    Cost: two extra small shuffles; identical results (both modes are
-    checked against independent oracles in tests/test_asof.py,
-    test_asof_properties.py and test_golden.py)."""
+    probes at equal ts → equality matches; after → leakage impossible)."""
     payload = F.struct(
         F.col(right_on).alias(_ETS),
         *[F.col(c).alias(c) for c in feature_cols],
@@ -220,17 +198,12 @@ def _asof_window(
         F.col(left_on).alias("__t"),
         F.lit(1).alias("__is_probe"),
     )
-    part = list(by)
-    if slice_s is not None:
-        w_of = F.floor(F.col("__t").cast("double") / F.lit(float(slice_s)))
-        ev, pr = ev.withColumn("__w", w_of), pr.withColumn("__w", w_of)
-        part.append("__w")
     u = pr.unionByName(ev, allowMissingColumns=True)
 
     # within a url: order by ts; at equal ts events (0) precede probes (1);
     # among equal-ts events ascending (created, hash) so last-wins = max
     w = (
-        Window.partitionBy(*part)
+        Window.partitionBy(*by)
         .orderBy(
             F.col("__t").asc(),
             F.col("__is_probe").asc(),
@@ -241,33 +214,6 @@ def _asof_window(
     )
     filled = u.withColumn("__fill", F.last("__payload", ignorenulls=True).over(w))
     out = filled.filter(F.col("__is_probe") == 1)
-
-    if slice_s is not None:
-        # per-(key, slice) latest event payload → carry-in per slice.
-        # max_by's struct ordering (nulls smallest) matches the fill's
-        # asc_nulls_first tie-break, so slice boundaries are seamless. The
-        # slice index spans PROBE slices too — a probe slice with no
-        # events still needs the carry from earlier slices.
-        ev_last = ev.groupBy(*part).agg(
-            F.max_by(
-                F.col("__payload"),
-                F.struct(F.col("__t"), F.col("__created"), F.col("__tb")),
-            ).alias("__last")
-        )
-        over_slices = (
-            Window.partitionBy(*by)
-            .orderBy("__w")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = (
-            u.select(*part).distinct()
-            .join(ev_last, on=part, how="left")
-            .withColumn("__carry", F.last("__last", ignorenulls=True).over(over_slices))
-            .select(*part, "__carry")
-        )
-        out = out.join(carry, on=part, how="left").withColumn(
-            "__fill", F.coalesce(F.col("__fill"), F.col("__carry"))
-        )
 
     valid = F.col("__fill").isNotNull()
     if ttl is not None:
@@ -347,10 +293,10 @@ def salted_join(
 ) -> DataFrame:
     """Key-salted equi-join for hot keys (north rule: "key-salting for hot
     domains"). The big side gets a random-ish-but-deterministic salt from
-    xxhash64 of its other columns; the small side is exploded ``salt``
-    ways so every (key, salt) pair finds its match. AQE skew-join is the
-    runtime backstop; this is the explicit control for when stats are
-    known up front.
+    xxhash64 of its hashable columns; the small side is exploded
+    ``salt`` ways so every (key, salt) pair finds its match. AQE skew-join
+    is the runtime backstop; this is the explicit control for when stats
+    are known up front.
 
     Only inner/left (big-side-preserving) joins: outer semantics on the
     exploded small side would emit ``salt`` null-padded copies of every
@@ -359,10 +305,7 @@ def salted_join(
         raise ValueError(
             f"salted_join supports how='inner'|'left', got {how!r}"
         )
-    other = [c for c in big.columns if c != on] or [on]
-    bigs = big.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in other]), F.lit(salt))
-    )
+    bigs = big.withColumn("__salt", content_salt(big, on, salt))
     smalls = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )

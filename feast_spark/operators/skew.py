@@ -8,18 +8,19 @@ is explicit:
 
 1. ``detect_hot_keys`` — one cheap pre-pass aggregation (map-side
    combinable count, optionally on a sample) returning keys whose row
-   count exceeds a threshold. At 100 TB this runs on the manifest's
-   per-file stats first (bucket row counts bound the answer) and only
-   scans when a bucket is suspicious.
+   count exceeds a threshold. ``detect_hot_keys_from_manifest`` reads a
+   lower bound of the same answer from a layout's per-file stats, with
+   no scan.
 2. ``salted_group_agg`` — two-phase aggregation for DECOMPOSABLE
    aggregates: partial agg on (key, salt) → final agg on key. Bounded
    partition size regardless of skew; exact same results.
 3. For order-dependent windows over hot keys, use
    ``windows.salted_rolling_count`` (two-phase over time buckets). The
-   retrieval planner routes manifest-detected hot keys to the as-of
-   join's time-sliced ``sliced`` strategy (operators.asof): a hash
-   partitioning or a salt cannot split one key's as-of timeline, time
-   slices can.
+   retrieval planner sends a manifest-detected hot key to the as-of
+   join's ``union`` strategy, never to ``broadcast``, whose range join
+   fans out hot rows × that key's probes. Union makes the hot key one
+   long task whose sort and window buffer spill to disk
+   (operators.asof).
 """
 
 from __future__ import annotations
@@ -79,6 +80,18 @@ def detect_hot_keys_from_manifest(
             per_key[f["min_key"]] = per_key.get(f["min_key"], 0) + f["rows"]
     cut = max(float(min_rows), frac * total)
     return sorted(k for k, n in per_key.items() if n >= cut)
+
+
+def content_salt(df: DataFrame, key: str, salt: int) -> Column:
+    """``pmod(xxhash64(row content), salt)``, deterministic per row so a
+    retried task salts the same. xxhash64 rejects map-typed inputs, so
+    the hash covers the hashable columns only; with none, the key."""
+    cols = [
+        f.name
+        for f in df.schema.fields
+        if "map<" not in f.dataType.simpleString()
+    ] or [key]
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(salt))
 
 
 def domain_of(url_col: str | Column = "url") -> Column:
@@ -157,17 +170,7 @@ def salted_group_agg(
             src = F.col(col)
         phase1.append(getattr(F, fn)(src).alias(p))
         phase2.append(getattr(F, merge_fn[fn])(p).alias(out))
-    # xxhash64 rejects map-typed inputs; salt from the hashable columns
-    # only (still deterministic per row content for retry safety)
-    hashable = [
-        f.name
-        for f in df.schema.fields
-        if "map<" not in f.dataType.simpleString()
-    ] or [key]
-    salted = df.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in hashable]), F.lit(salt)),
-    )
+    salted = df.withColumn("__salt", content_salt(df, key, salt))
     partial = salted.groupBy(key, "__salt").agg(*phase1)
     return partial.groupBy(key).agg(*phase2)
 

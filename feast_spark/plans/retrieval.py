@@ -24,11 +24,13 @@ Strategy policy (``strategy=None`` → auto):
 - else ``union`` (J1): one hash exchange on the entity key and an
   in-partition sort-merge of probes with events, unbounded probe
   cardinality, all in the JVM — layout-backed or not;
-- a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) overrides either
-  with ``sliced`` (J1-hot).
+- a manifest-detected hot key (≥ HOT_KEY_MIN_ROWS rows) turns broadcast
+  into ``union``: broadcast's range join emits hot rows × that key's
+  probes before it keeps one row per probe.
 
-The choice is made once per retrieval. An explicit ``strategy`` must be
-one of ``asof.STRATEGIES``; it is checked before any Spark job.
+The probe-count choice is made once per retrieval. An explicit
+``strategy`` must be one of ``asof.STRATEGIES``; it is checked before
+any Spark job.
 
 Layout-backed views are pruned from ONE probe summary — a single
 aggregate over the entity dataframe giving the probe time bounds and the
@@ -47,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feast_spark.operators.asof import asof_join, check_strategy, within_ttl
+from feast_spark.operators.skew import detect_hot_keys_from_manifest
 from feast_spark.sources.pages import bucket_expr
 
 # measured knee on the 2.1M-row pages table (local[32], BASELINE.md):
@@ -57,11 +60,11 @@ from feast_spark.sources.pages import bucket_expr
 BROADCAST_PROBE_ROWS = 100_000
 
 # a single entity key with ≥ this many feature rows (manifest lower
-# bound) flips ANY auto-chosen plan to the time-sliced strategy: union's
-# partitionBy(key) window makes the hot key one giant JVM sort task,
-# and broadcast fans out hot_rows × probes-of-that-key — only slicing
-# the hot key's TIMELINE bounds the per-task work
-# (SURVEY §4.2.2)
+# bound) sends an auto-planned group to union. Measured on one url with
+# 1.2M events, TTL 90 d, local[2] (ROADMAP item 4): 1k probes, 100 of
+# them on that url, make broadcast join 25.6M rows, 134-145 CPU-s per
+# call against union's 8.2-9.6. Union makes the key one long task whose
+# sort and window buffer spill to disk.
 HOT_KEY_MIN_ROWS = 1_000_000
 
 # the matched event time a source group's join carries for its TTL masks
@@ -209,19 +212,10 @@ def plan_retrieval(
         hot_keys: list = []
         if strategy is None and snap is not None:
             # skew probe (SURVEY §4.2.2): manifest stats are already on
-            # the driver — zero extra scans. A hot entity key makes the
-            # union window's partitionBy(key) one giant sort task however
-            # many partitions there are (same hash → same partition), and
-            # blows up broadcast's range-join fanout (hot_rows × probes
-            # of that key). The sliced strategy partitions the hot key's
-            # TIMELINE, the only bound that holds when one key exceeds a
-            # task (r02 review; salting only bounds aggregates) — so the
-            # probe runs for every auto-chosen strategy.
-            from feast_spark.operators.skew import detect_hot_keys_from_manifest
-
+            # the driver — zero extra scans
             hot_keys = detect_hot_keys_from_manifest(snap, min_rows=HOT_KEY_MIN_ROWS)
             if hot_keys:
-                chosen = "sliced"
+                chosen = "union"
         src_kw: dict = {}
         if snap is not None:
             # manifest pruning by probe time range + TTL: files wholly

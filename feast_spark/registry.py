@@ -111,6 +111,12 @@ class FeatureView:
     #: table's HEAD advances — reproducible training sets by construction
     ref: str | None = None
 
+    def __post_init__(self) -> None:
+        # upstream Feast reads a zero TTL as "no TTL"; normalizing it here
+        # gives retrieval and the saved registry that one meaning
+        if not self.ttl:
+            self.ttl = None
+
     @property
     def entities(self) -> "list[Entity]":
         return self.entity if isinstance(self.entity, list) else [self.entity]

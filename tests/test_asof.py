@@ -2,7 +2,7 @@
 
 Oracles: pandas merge_asof AND DuckDB ASOF LEFT JOIN (independent
 implementations). Properties: zero leakage, TTL bound, at-or-before
-equality boundary, strategy equivalence J1=J2=J3=J1-hot, permutation invariance.
+equality boundary, strategy equivalence J1=J2, permutation invariance.
 """
 
 from __future__ import annotations
@@ -15,13 +15,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from feast_spark.operators.asof import asof_join
+from feast_spark.operators.asof import STRATEGIES, asof_join
 
 TTL = timedelta(days=30)
-STRATEGIES = ["union", "broadcast", "sliced"]
-# sliced: one-day slices, far below the TTL, so most matches are carry-ins
-# from an earlier slice (the other strategies ignore slice_s)
-SLICE_S = 86400
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +38,6 @@ def _spark_result(spark, probes_df, feat_df, strategy, ttl=TTL):
         ttl=ttl,
         strategy=strategy,
         include_event_ts=True,
-        slice_s=SLICE_S,
     )
     pdf = out.toPandas()
     return pdf.sort_values(["url", "ts", "n_chars"]).reset_index(drop=True)
@@ -221,7 +216,7 @@ def test_composite_key_asof(spark, strategy):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     out = asof_join(
         probes, feats, by=["u", "t"], left_on="ts", right_on="ets",
-        strategy=strategy, slice_s=SLICE_S,
+        strategy=strategy,
     ).toPandas().set_index(["u", "t", "ts"])["v"].to_dict()
     want = {
         ("a", "x", pd.Timestamp("2023-01-05")): 4.0,
@@ -235,58 +230,12 @@ def test_composite_key_asof(spark, strategy):
     assert missing is None or pd.isna(missing)
 
 
-@pytest.mark.parametrize("slice_s", [3600, 86400, 7 * 86400])
-@pytest.mark.parametrize("ttl", [None, 7 * 86400])
-def test_sliced_equals_union(spark, probes_df, feat_df, ttl, slice_s):
-    """The time-sliced hot-key strategy is result-identical to plain
-    union across slice widths and TTL regimes (per-task state is one
-    slice of one key — the only bound that holds for a single hot key)."""
-    kw = dict(
-        by="url", left_on="ts", right_on="warc_ts", ttl=ttl,
-        include_event_ts=True,
-    )
-    want = asof_join(probes_df, feat_df, strategy="union", **kw)
-    got = asof_join(
-        probes_df, feat_df, strategy="sliced", slice_s=slice_s, **kw
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_sliced_created_tiebreak(spark):
-    """Equal-ts events across a slice boundary: created/hash tie-break
-    must match union exactly (max_by struct ordering = asc_nulls_first)."""
-    from pyspark.sql import Row
-
-    feats = spark.createDataFrame(
-        [
-            Row(url="u", warc_ts="2023-01-01 00:00:00",
-                created="2023-01-01 01:00:00", v=1.0),
-            Row(url="u", warc_ts="2023-01-01 00:00:00",
-                created="2023-01-02 01:00:00", v=2.0),
-            Row(url="u", warc_ts="2023-01-01 00:00:00", created=None, v=3.0),
-        ]
-    ).withColumns({"warc_ts": F.col("warc_ts").cast("timestamp"),
-                   "created": F.col("created").cast("timestamp")})
-    probes = spark.createDataFrame(
-        [Row(url="u", ts="2023-03-01 00:00:00")]
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    kw = dict(by="url", left_on="ts", right_on="warc_ts",
-              created_col="created", ttl=None)
-    a = asof_join(probes, feats, strategy="union", **kw).first()["v"]
-    b = asof_join(
-        probes, feats, strategy="sliced", slice_s=3600, **kw
-    ).first()["v"]
-    assert a == b == 2.0  # max created wins; null created loses
-
-
 @pytest.mark.parametrize("strategy", STRATEGIES)
 @pytest.mark.parametrize("by", [["u"], ["u", "t"]], ids=["scalar", "composite"])
 def test_null_key_matches_nothing(spark, strategy, by):
     """A NULL in any key column matches no event, as upstream's SQL ``=``
     join: the answer must not depend on which strategy the probe count
-    picks. A probe with the same non-NULL key still matches. Probes sit
-    in their event's one-day slice, so sliced's in-slice fill is tested."""
+    picks. A probe with the same non-NULL key still matches."""
     feats = spark.createDataFrame(
         [(None, "x", "2023-01-01 00:00:00", 1.0),
          ("a", None, "2023-01-01 00:00:00", 2.0),
@@ -305,9 +254,46 @@ def test_null_key_matches_nothing(spark, strategy, by):
     feats = feats.select(*by, "ets", "v")
     out = asof_join(
         probes.select(*by, "ts"), feats, by=by, left_on="ts", right_on="ets",
-        strategy=strategy, slice_s=SLICE_S,
+        strategy=strategy,
     ).collect()
     got = {tuple(r[k] for k in by): r["v"] for r in out}
     want = {(None,): None, ("a",): 3.0} if by == ["u"] else {
         (None, "x"): None, ("a", None): None, ("a", "x"): 3.0}
     assert got == want, strategy
+
+
+def test_union_hot_key_under_window_spill(spark):
+    """One key holding every event is one window partition: union must
+    answer it right when that partition spills. Tiny window-buffer
+    thresholds make the hot key's ~22k rows spill many times; the rows
+    must still equal the pandas oracle (at-or-before, TTL, NULL before
+    the first event)."""
+    t0 = int(pd.Timestamp("2023-01-01").timestamp())
+    hot = F.lit("https://hot.example/").alias("url")
+    feat = spark.range(20_000).select(
+        hot,
+        (F.lit(t0) + F.col("id") * 600).cast("timestamp").alias("warc_ts"),
+        (F.col("id") * 1.5).alias("n_chars"),
+    )
+    # 6007 s apart, starting 5 probes before the first event: 4 probes
+    # land exactly on an event's ts
+    probes = spark.range(2_000).select(
+        hot, (F.lit(t0) + (F.col("id") - 5) * 6007).cast("timestamp").alias("ts"),
+    )
+    confs = {
+        "spark.sql.windowExec.buffer.in.memory.threshold": "16",
+        "spark.sql.windowExec.buffer.spill.threshold": "128",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        got = _spark_result(spark, probes, feat, "union")
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    exp = _pandas_oracle(probes.toPandas(), feat.toPandas())
+    _assert_frames_close(got, exp)

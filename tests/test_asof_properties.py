@@ -1,7 +1,6 @@
 """Property-based as-of join tests (SURVEY.md §5.2.2): random probes and
 feature rows — duplicate timestamps, TTL edges, empty groups — checked
-against an independent pandas reference on every strategy (``sliced``
-with 3-hour slices, so matches cross slice boundaries as carry-ins).
+against an independent pandas reference on every strategy.
 
 Spark jobs are expensive per example, so examples are few but adversarial
 (hypothesis shrinks failures to minimal cases)."""
@@ -14,7 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from feast_spark.operators.asof import asof_join
+from feast_spark.operators.asof import STRATEGIES, asof_join
 
 KEYS = ["a", "b", "c"]
 T0 = pd.Timestamp("2024-01-01")
@@ -50,7 +49,7 @@ def _pandas_reference(probes, events, ttl_s):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 @settings(
     max_examples=6,
     deadline=None,
@@ -72,7 +71,7 @@ def test_asof_matches_reference(spark, strategy, events, probes, ttl_h):
         edf = spark.createDataFrame([], "url string, warc_ts timestamp, v double")
     got = asof_join(
         pdf, edf, by="url", left_on="ts", right_on="warc_ts",
-        ttl=ttl_s, strategy=strategy, include_event_ts=True, slice_s=3 * 3600,
+        ttl=ttl_s, strategy=strategy, include_event_ts=True,
     ).toPandas()
 
     want = _pandas_reference(probes, events, ttl_s)

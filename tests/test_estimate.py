@@ -203,7 +203,7 @@ def test_unknown_feature_raises_before_any_job(
         plan_retrieval(layout_store, probes_df, ["lay:n_chars", "lay:nope"])
 
 
-@pytest.mark.parametrize("strategy", ["cogroup", "unoin"])
+@pytest.mark.parametrize("strategy", ["cogroup", "sliced", "unoin"])
 def test_unknown_strategy_raises_before_any_job(
     spark, probes_df, layout_store, no_actions, strategy
 ):
@@ -212,7 +212,7 @@ def test_unknown_strategy_raises_before_any_job(
     ones."""
     from feast_spark.plans.retrieval import plan_retrieval
 
-    with pytest.raises(ValueError, match="union, broadcast, sliced"):
+    with pytest.raises(ValueError, match="union, broadcast"):
         plan_retrieval(layout_store, probes_df, ["lay:n_chars"], strategy=strategy)
 
 

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from feast_spark.operators.asof import asof_join
+from feast_spark.operators.asof import STRATEGIES, asof_join
 from feast_spark.operators.windows import sessionize
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "feature_vectors.parquet")
@@ -49,7 +49,7 @@ def _engine_features(pages_df):
     return sessionize(df, gap_seconds=SEVEN_D)
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_engine_matches_golden_fixture(spark, pages_df, probes_df, strategy):
     feats = _engine_features(pages_df)
     got = asof_join(
@@ -60,7 +60,6 @@ def test_engine_matches_golden_fixture(spark, pages_df, probes_df, strategy):
         right_on="warc_ts",
         ttl=90 * 86400,
         strategy=strategy,
-        slice_s=7 * 86400,  # sliced: weekly slices, matches carry in
     ).toPandas()
 
     want = pd.read_parquet(GOLDEN)

@@ -105,10 +105,12 @@ def test_whole_stage_codegen_covers_filters(spark, pages_df):
         ), f"{op} not codegen'd"
 
 
-def test_hot_key_routes_to_sliced(spark, tmp_path_factory, monkeypatch):
-    """VERDICT r01 #6 + r02: a planted ~30%-hot key (detected from
-    manifest stats alone) flips the auto-chosen plan to the time-sliced
-    strategy; results are identical either way."""
+def test_hot_key_routes_to_union(spark, tmp_path_factory, monkeypatch):
+    """A planted ~30%-hot key (detected from manifest stats alone) sends
+    the auto plan to union even when the probe count says broadcast,
+    whose range join fans out hot rows × that key's probes; without a
+    hot key the probe-count plan stands. Rows equal the explicit union
+    rows either way."""
     from datetime import timedelta
 
     from pyspark.sql import Row
@@ -146,43 +148,27 @@ def test_hot_key_routes_to_sliced(spark, tmp_path_factory, monkeypatch):
     probes = src.select("url").distinct().withColumn(
         "ts", F.lit("2024-01-15 00:00:00").cast("timestamp")
     )
-    decisions: list = []
+    want = plan_retrieval(store, probes, ["hotv:n_chars"], strategy="union")
     # probe_count_hint: probes here are Arrow-local (no plan-derivable
     # cardinality), and the unhinted planner deliberately runs no
     # counting job (VERDICT r03 next #5) — hint like a real caller would
-    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 100)
-    got = plan_retrieval(
-        store, probes, ["hotv:n_chars"], probe_count_hint=3,
-        decisions=decisions,
+    cases = (
+        (100, 3, "union"),
+        (100, None, "union"),
+        (10_000, 3, "broadcast"),
+        (10_000, None, "union"),
     )
-    assert decisions[0]["strategy"] == "sliced"
-    assert "https://hot.example/" in decisions[0]["hot_keys"]
-    want = plan_retrieval(store, probes, ["hotv:n_chars"], strategy="union")
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    # without a hot key the same auto plan keeps its probe-count choice
-    cold_dec: list = []
-    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 10_000)
-    plan_retrieval(
-        store, probes, ["hotv:n_chars"], probe_count_hint=3, decisions=cold_dec,
-    )
-    assert cold_dec[0]["strategy"] == "broadcast" and not cold_dec[0]["hot_keys"]
-    # unhinted + unestimable probes: the planner must still produce the
-    # SAME rows via the unbounded-safe strategy, with zero extra jobs
-    safe_dec: list = []
-    safe = plan_retrieval(store, probes, ["hotv:n_chars"], decisions=safe_dec)
-    assert safe_dec[0]["strategy"] == "union"
-    assert safe.exceptAll(want).count() == 0 and want.exceptAll(safe).count() == 0
-    # r04 review: the hot-key manifest probe must fire for the
-    # unhinted/unestimable default too — union's partitionBy(key) window
-    # makes one hot key one task, so union is NOT hot-key-safe
-    unhinted_hot: list = []
-    monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", 100)
-    got2 = plan_retrieval(
-        store, probes, ["hotv:n_chars"], decisions=unhinted_hot,
-    )
-    assert unhinted_hot[0]["strategy"] == "sliced"
-    assert "https://hot.example/" in unhinted_hot[0]["hot_keys"]
-    assert got2.exceptAll(want).count() == 0 and want.exceptAll(got2).count() == 0
+    for min_rows, hint, plan in cases:
+        monkeypatch.setattr(retrieval, "HOT_KEY_MIN_ROWS", min_rows)
+        decisions: list = []
+        got = plan_retrieval(
+            store, probes, ["hotv:n_chars"], probe_count_hint=hint,
+            decisions=decisions,
+        )
+        assert [d["strategy"] for d in decisions] == [plan]
+        hot = ["https://hot.example/"] if min_rows == 100 else []
+        assert decisions[0]["hot_keys"] == hot
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_aggregated_view_shares_one_window_and_two_exchanges(spark):

@@ -456,3 +456,28 @@ def test_refused_transform_warns_naming_the_view(spark, tmp_path):
             )
         )
     assert "annotated_view" not in FeatureStore(spark, root=str(tmp_path))._odfvs
+
+
+def test_zero_ttl_means_no_ttl(spark, data_dir, probes_df, tmp_path):
+    """Upstream Feast reads ``ttl=0`` as "no TTL": a zero-TTL view answers
+    as a TTL-less one, as applied and after a registry reload."""
+    import os
+
+    root = str(tmp_path / "store")
+    s1 = FeatureStore(spark, root=root)
+    for name, ttl in (("zero", timedelta(0)), ("none", None)):
+        s1.apply(
+            FeatureView(
+                name=name, entity=Entity("url", "url"),
+                source=os.path.join(data_dir, "pages.parquet"),
+                features=[FeatureSpec("lang", "string")], ttl=ttl,
+                timestamp_field="warc_ts",
+            )
+        )
+    s2 = FeatureStore(spark, root=root)  # fresh load from disk
+    want = s1.get_historical_features(probes_df, ["none:lang"])
+    assert want.filter(F.col("lang").isNotNull()).count() > 0
+    for s in (s1, s2):
+        got = s.get_historical_features(probes_df, ["zero:lang"])
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+        assert s.get_view("zero").ttl is None

@@ -9,6 +9,7 @@ from datetime import timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from feast_spark.operators.asof import STRATEGIES
 from feast_spark.registry import Entity, FeatureSpec, FeatureStore, FeatureView
 from feast_spark.sources import pages as layout
 
@@ -32,7 +33,7 @@ def lstore(spark, pages_df, tmp_path_factory):
     return s, root
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_layout_retrieval_all_strategies(spark, lstore, probes_df, strategy):
     store, _root = lstore
     out = store.get_historical_features(
@@ -44,8 +45,8 @@ def test_layout_retrieval_all_strategies(spark, lstore, probes_df, strategy):
 
 def test_large_auto_plan_over_a_layout_is_union(spark, lstore, probes_df):
     """Above the broadcast bound the auto plan over a layout-backed view
-    is union, and its rows equal the explicit broadcast and sliced
-    plans', cell for cell."""
+    is union, and its rows equal every other explicit plan's, cell for
+    cell."""
     from feast_spark.plans.retrieval import BROADCAST_PROBE_ROWS, plan_retrieval
 
     store, _root = lstore
@@ -57,7 +58,7 @@ def test_large_auto_plan_over_a_layout_is_union(spark, lstore, probes_df):
     )
     assert [d["strategy"] for d in decisions] == ["union"]
     assert got.filter(F.col("n_chars").isNotNull()).count() > 0
-    for strategy in ("broadcast", "sliced"):
+    for strategy in (s for s in STRATEGIES if s != "union"):
         want = plan_retrieval(store, probes_df, refs, strategy=strategy)
         assert want.columns == got.columns
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
@@ -500,7 +501,7 @@ def _single_view_rows(store, probes, refs, strategy) -> dict:
     return rows
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_views_sharing_a_source_equal_single_view_calls(spark, grouped, strategy):
     """One fused join per source group returns, cell for cell, what one
     call per view returns: the group joins at the widest TTL (none) and
@@ -537,7 +538,7 @@ def test_views_sharing_a_source_equal_single_view_calls(spark, grouped, strategy
     }
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_group_tie_takes_all_features_from_one_row(spark, tmp_path_factory, strategy):
     """Rows sharing (key, event ts, created ts) exactly: a group's join
     breaks the tie on the hash of the union of the group's requested

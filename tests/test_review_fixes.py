@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import Row, functions as F
 
-from feast_spark.operators.asof import asof_join, salted_join
+from feast_spark.operators.asof import STRATEGIES, asof_join, salted_join
 from feast_spark.sources import pages as layout
 
 
@@ -31,10 +31,9 @@ def test_broadcast_preserves_probe_event_ts_column(spark):
     assert row["v"] == 1.0
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "sliced"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_null_probe_ts_yields_null_features(spark, strategy):
-    """NULL probe ts: every strategy returns the row with NULL features
-    (sliced puts it in a NULL time slice, which must carry nothing in)."""
+    """NULL probe ts: every strategy returns the row with NULL features."""
     probes = spark.createDataFrame(
         [("a", "2024-01-02 00:00:00"), ("a", None), ("zz", None)],
         "url string, ts string",
@@ -57,6 +56,23 @@ def test_salted_join_rejects_outer(spark):
     df = spark.range(5).withColumnRenamed("id", "k")
     with pytest.raises(ValueError, match="inner.*left"):
         salted_join(df, df, on="k", how="full")
+
+
+def test_salted_join_with_a_map_column_equals_plain_join(spark):
+    """A map column on the big side is left out of the salt hash
+    (xxhash64 rejects maps), not fed to it: the rows equal a plain join."""
+    big = spark.range(10).select(
+        (F.col("id") % 3).alias("k"), F.col("id").alias("v"),
+        F.create_map(F.lit("a"), F.col("id")).alias("m"),
+    )
+    small = spark.createDataFrame([(0, "x"), (1, "y")], "k bigint, s string")
+
+    def rows(df):
+        return sorted((r["k"], r["v"], sorted(r["m"].items()), r["s"]) for r in df.collect())
+
+    want = rows(big.join(small, "k"))
+    assert len(want) == 7
+    assert rows(salted_join(big, small, on="k", salt=4)) == want
 
 
 def test_choose_strategy_large_probes_take_union(spark, probes_df):
