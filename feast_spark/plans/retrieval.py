@@ -37,6 +37,18 @@ aggregate over the entity dataframe giving the probe time bounds and the
 set of layout buckets the probe keys hash to. Files outside the bounds
 (widened by the view's TTL) are skipped, and when the bucket set is
 smaller than the layout's B only those buckets are scanned.
+
+The summary is a Spark job that reads every probe, so it runs only when
+it can skip more than it reads: when some layout-backed group's snapshot
+holds more rows (manifest ``rows``, already on the driver) than the
+probe count — the same count that picks the strategy — or when that
+count is unknown. Spark's dynamic partition pruning applies the same
+test (``PartitionPruning.pruningHasBenefit``). A probe set at least as
+large as every layout tends to hit every bucket and every month, where
+the summary would prune nothing; without it each group scans its whole
+snapshot. Either way the scan reads the snapshot the planner read its
+manifest from (``FeatureView.layout_snapshot``), even if HEAD has moved
+since.
 """
 
 from __future__ import annotations
@@ -71,17 +83,20 @@ HOT_KEY_MIN_ROWS = 1_000_000
 _GROUP_ETS = "__group_event_ts"
 
 
-def choose_strategy(probes: DataFrame, probe_count_hint: int | None = None) -> str:
+def choose_strategy(
+    probes: DataFrame | None, probe_count_hint: int | None = None
+) -> str:
     """DataFrame-level strategy policy (§4.2.1): small probe set →
     broadcast, else union+window.
 
     Probe cardinality comes from the hint, else a zero-job plan-time
     estimate (parquet footers / Catalyst stats — VERDICT r03 next #5:
-    no more implicit ``probes.count()`` job per retrieval). When neither
-    yields a number the policy picks the strategy that is safe at
-    unbounded cardinality."""
+    no more implicit ``probes.count()`` job per retrieval). ``probes``
+    is None when the caller has estimated already: the hint is then
+    taken as it is, None included. When neither yields a number the
+    policy picks the strategy that is safe at unbounded cardinality."""
     n = probe_count_hint
-    if n is None:
+    if n is None and probes is not None:
         from feast_spark.estimate import estimate_rows
 
         n = estimate_rows(probes)
@@ -132,9 +147,10 @@ def plan_retrieval(
     checked before any Spark job runs. ``decisions``, when given,
     collects one dict per view with the chosen strategy, any
     manifest-detected hot keys, the layout buckets scanned (``None``: all
-    of them) and ``group``, the index of the join that served the view —
-    the planner's choices are visible in the job log / tests, not hidden
-    planner magic."""
+    of them), ``probe_rows``, the probe count the planner used (the hint
+    or the estimate; ``None``: unknown), and ``group``, the index of the
+    join that served the view — the planner's choices are visible in the
+    job log / tests, not hidden planner magic."""
     # group refs by view, preserving order
     by_view: dict[str, list[str]] = {}
     for ref in features:
@@ -175,12 +191,25 @@ def plan_retrieval(
         for g, snap in zip(groups, snaps)
     ]
 
-    # one choice for every group: it depends on the probes alone
-    picked = strategy or choose_strategy(entity_df, probe_count_hint)
+    # ONE probe count for the whole retrieval: the caller's hint, else a
+    # zero-job estimate (None when the plan bounds nothing). It picks the
+    # strategy — one choice for every group, as it depends on the probes
+    # alone — and decides whether the probe summary runs.
+    n = probe_count_hint
+    if n is None:
+        from feast_spark.estimate import estimate_rows
+
+        n = estimate_rows(entity_df)
+    picked = strategy or choose_strategy(None, n)
 
     lo = hi = None
     bucket_sets: dict = {}
-    if any(snaps):
+    # the summary's job must be able to skip more layout rows than the
+    # probe rows it reads (module docstring)
+    if any(
+        n is None or sum(f["rows"] for f in snap["files"]) > n
+        for snap in snaps if snap
+    ):
         # the probe summary: ONE aggregate gives the probe time bounds
         # and, per (key column, dtype, B), the buckets the probe keys hash
         # to — with the layout's own bucket_expr, so no key leaves Spark.
@@ -243,6 +272,8 @@ def plan_retrieval(
             wanted = bucket_sets.get(spec)
             if wanted is not None and len(wanted) < snap["n_buckets"]:
                 src_kw["buckets"] = wanted
+            # scan the snapshot this plan read, not a HEAD that moved since
+            src_kw["snapshot"] = snap["snapshot_id"]
         if decisions is not None:
             decisions.extend(
                 {
@@ -250,6 +281,7 @@ def plan_retrieval(
                     "strategy": chosen,
                     "hot_keys": hot_keys,
                     "buckets": src_kw.get("buckets"),
+                    "probe_rows": n,
                     "group": group_i,
                 }
                 for v in group

@@ -155,13 +155,16 @@ class FeatureView:
         return None
 
     def load(
-        self, spark: SparkSession, *, start=None, end=None, buckets=None
+        self, spark: SparkSession, *, start=None, end=None, buckets=None,
+        snapshot: int | None = None,
     ) -> DataFrame:
         """Resolve the source to a DataFrame, apply field mapping, and
         normalize the event-time column to TIMESTAMP (Spark 4 loads
         parquet timestamp[us] as TIMESTAMP_NTZ — SURVEY.md §0.3).
         ``start``/``end`` prune layout-backed sources via the manifest
-        (files outside the range never reach Spark)."""
+        (files outside the range never reach Spark). ``snapshot`` scans
+        that snapshot id of the layout — the one a planner read with
+        ``layout_snapshot`` — instead of resolving the ref or HEAD again."""
         from pyspark.sql import functions as F
 
         if callable(self.source):
@@ -169,12 +172,11 @@ class FeatureView:
         elif self.layout_root:
             from feast_spark.sources.pages import read_table, resolve_tag
 
-            kw = {}
-            if self.ref:
-                kw["snapshot"] = resolve_tag(self.layout_root, self.ref)
+            if snapshot is None and self.ref:
+                snapshot = resolve_tag(self.layout_root, self.ref)
             df = read_table(
-                spark, self.layout_root, start=start, end=end,
-                buckets=buckets, **kw,
+                spark, self.layout_root, snapshot=snapshot, start=start,
+                end=end, buckets=buckets,
             )
         else:
             df = spark.read.parquet(str(self.source))

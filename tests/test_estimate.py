@@ -122,10 +122,11 @@ def test_retrieval_planning_zero_jobs(spark, data_dir, no_actions):
 def test_unestimable_probes_are_estimated_once(
     spark, data_dir, monkeypatch, no_actions
 ):
-    """The strategy is chosen once per retrieval: an entity_df from a
+    """The probes are estimated once per retrieval: an entity_df from a
     list of Rows (RDD-backed, so no plan-time estimate bounds it) over
     two source groups costs one ``estimate_rows`` call, not one more per
-    group — and no job."""
+    group — and no job. An explicit strategy makes the same one call,
+    and the decisions log its result."""
     import os
     from datetime import timedelta
 
@@ -165,6 +166,14 @@ def test_unestimable_probes_are_estimated_once(
     plan_retrieval(store, entity_df, ["chars:chars", "words:words"], decisions=decisions)
     assert calls == [None]
     assert [(d["group"], d["strategy"]) for d in decisions] == [(0, "union"), (1, "union")]
+    calls.clear()
+    decisions.clear()
+    plan_retrieval(
+        store, entity_df, ["chars:chars", "words:words"], strategy="union",
+        decisions=decisions,
+    )
+    assert calls == [None]
+    assert [d["probe_rows"] for d in decisions] == [None, None]
 
 
 @pytest.fixture(scope="module")
@@ -191,6 +200,63 @@ def layout_store(spark, pages_df, tmp_path_factory):
         )
     )
     return store
+
+
+def _layout_probes(spark, store):
+    """The layout's row count, and probes on three of its urls (taken
+    from the manifest's key bounds, so no job) — at most three of its
+    four buckets."""
+    snap = store.get_view("lay").layout_snapshot()
+    urls = sorted({f["min_key"] for f in snap["files"]})[:3]
+    probes = spark.createDataFrame(
+        [Row(url=u, ts="2024-02-01 00:00:00") for u in urls]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    return sum(f["rows"] for f in snap["files"]), urls, probes
+
+
+def test_probes_as_many_as_layout_rows_skip_the_summary(
+    spark, layout_store, request, monkeypatch
+):
+    """A probe count of at least the layout's rows plans without a
+    DataFrame action: the probe summary could skip no more rows than it
+    reads, so the group scans its whole snapshot. The answer equals, cell
+    for cell, that of the bucket-pruned plan one probe fewer gets."""
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    rows, _urls, probes = _layout_probes(spark, layout_store)
+    request.getfixturevalue("no_actions")
+    decisions: list = []
+    got = plan_retrieval(
+        layout_store, probes, ["lay:n_chars"], probe_count_hint=rows,
+        decisions=decisions,
+    )
+    monkeypatch.undo()  # actions are allowed again for the comparison
+    assert [(d["probe_rows"], d["buckets"]) for d in decisions] == [(rows, None)]
+    pruned: list = []
+    want = plan_retrieval(
+        layout_store, probes, ["lay:n_chars"], probe_count_hint=rows - 1,
+        decisions=pruned,
+    )
+    assert pruned[0]["buckets"] is not None
+    assert got.filter(F.col("n_chars").isNotNull()).count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_probes_one_fewer_than_layout_rows_run_the_summary(spark, layout_store):
+    """One probe fewer than the layout's rows: the summary runs, and the
+    decision names the buckets the probe keys hash to and the count."""
+    from feast_spark.plans.retrieval import plan_retrieval
+    from feast_spark.sources import pages as layout
+
+    rows, urls, probes = _layout_probes(spark, layout_store)
+    decisions: list = []
+    plan_retrieval(
+        layout_store, probes, ["lay:n_chars"], probe_count_hint=rows - 1,
+        decisions=decisions,
+    )
+    assert [(d["probe_rows"], d["buckets"]) for d in decisions] == [
+        (rows - 1, layout.buckets_of_keys(spark, urls, 4))
+    ]
 
 
 def test_unknown_feature_raises_before_any_job(

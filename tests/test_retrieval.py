@@ -182,6 +182,52 @@ def test_int_probes_prune_a_bigint_layout(spark, tmp_path_factory):
     assert [r["v"] for r in out] == [float(key)]
 
 
+def test_retrieval_scans_the_snapshot_it_planned(spark, tmp_path_factory, monkeypatch):
+    """An append committed after the planner read the layout's manifest
+    does not reach the scan: the retrieval answers from the snapshot the
+    plan was made from."""
+    from pyspark.sql import Row
+
+    from feast_spark.plans.retrieval import plan_retrieval
+
+    def rows(*events):
+        return spark.createDataFrame(
+            [Row(url=u, warc_ts=ts, v=v) for u, ts, v in events]
+        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+
+    root = str(tmp_path_factory.mktemp("planned_snap") / "t")
+    layout.write_table(
+        rows(("a", "2024-01-01 00:00:00", 1.0), ("b", "2024-01-01 00:00:00", 5.0)),
+        root, n_buckets=4,
+    )
+    store = FeatureStore(spark)
+    store.apply(
+        FeatureView(
+            name="sv", entity=Entity("url", "url"), source=root,
+            features=[FeatureSpec("v", "double")], ttl=timedelta(days=90),
+            timestamp_field="warc_ts",
+        )
+    )
+    real = FeatureView.layout_snapshot
+
+    def then_append(self):
+        snap = real(self)
+        layout.write_table(
+            rows(("a", "2024-01-20 00:00:00", 2.0)), root, n_buckets=4,
+            mode="append",
+        )
+        return snap
+
+    monkeypatch.setattr(FeatureView, "layout_snapshot", then_append)
+    probes = spark.createDataFrame(
+        [Row(url="a", ts="2024-02-01 00:00:00")]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    out = plan_retrieval(store, probes, ["sv:v"]).collect()
+    assert [r["v"] for r in out] == [1.0]
+    monkeypatch.undo()  # a plan made now reads the appended HEAD
+    assert [r["v"] for r in plan_retrieval(store, probes, ["sv:v"]).collect()] == [2.0]
+
+
 def test_materialize_incremental_api(spark, lstore, tmp_path_factory):
     from feast_spark.materialize import (
         last_materialized_end,
