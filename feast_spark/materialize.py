@@ -5,7 +5,7 @@ online_write_batch``, re-expressed Spark-first).
 For a time range ``[start, end)``: scan the feature source, compute the
 **latest feature row per entity key** (A1: event_ts DESC, created_ts
 DESC, deterministic hash), and upsert it into a url-hash-bucketed serving
-store — one row per key per bucket directory.
+store — one row per key, in the key's bucket.
 
 **The transform contract.** A job's ``transform`` is a per-row feature
 derivation: it returns one row per input row and keeps the view's key,
@@ -39,30 +39,37 @@ jobs, each fully parallel across that batch's files/partitions. At 100 TB
 with B=1024, bucket_batch=64 gives 16 jobs of ~6 % of the data each —
 bounded failure blast radius and bounded shuffle state per job, while
 keeping executors saturated. Incremental upsert merges the existing
-serving rows for JUST the touched buckets (read-modify-write per bucket
-dir, never a full-store rewrite).
+serving rows for JUST the touched buckets (read-modify-write per bucket,
+never a full-store rewrite).
 
-**One write path.** Materialization and ``push_to_online`` both land rows
-through ``_merge_into_store``. Under the store's commit lock (``FileIO.lock``
-on ``<dest>/metadata``) it lists the touched bucket dirs, merges incoming
-over served rows, stages them in a directory unique to the call, swaps
-each bucket dir in and removes the stage. Writers serialize; a reader
-Spark planned before a swap can still lose its files.
+**One write path.** The serving store is a ``sources/pages.py`` snapshot
+table without the ``dt=`` level: ``data/bucket=<b>/*.parquet`` files
+listed by ``metadata/snap-*.json`` snapshots, which also record the
+store's ``n_buckets``, key columns, ``ts_col`` and schema.
+Materialization and ``push_to_online`` both land rows through
+``_merge_into_store``. Under the store's writer lock (``FileIO.lock`` on
+``<dest>``) it reads the touched buckets' files of the HEAD snapshot,
+merges incoming over served rows, writes the merged buckets as new
+uniquely named files and commits one snapshot: the parent's files, minus
+the touched buckets', plus the new ones. Writers serialize; superseded
+files stay on disk until ``pages.expire_snapshots``, so a reader that
+planned an older snapshot still finds every file it planned.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import time
 import uuid
 import warnings
 from typing import Callable
 
-import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feast_spark.operators.windows import latest_candidates, latest_per_key
 from feast_spark.sources import fileio
@@ -144,31 +151,6 @@ class MaterializeJob:
         if keys is not None and len(keys) == 0:
             return [self.DUMMY_KEY]
         return list(keys) if keys else [self.view.entity.join_key]
-
-    def _key_types(self) -> list[str] | None:
-        """Spark simpleStrings of the key columns' source dtypes, recorded
-        in store.json so ``read_online`` hashes probe keys with the
-        writer's dtypes without a parquet-footer read on the serving hot
-        path (ADVICE r02). Layout-backed sources resolve them from the
-        snapshot schema (no Spark job); others from the lazy view schema."""
-        keys = self._key_cols()
-        try:
-            if self._layout_root:
-                import json
-
-                from pyspark.sql import types as T
-
-                snap = self._layout_snap()
-                schema = T.StructType.fromJson(json.loads(snap["schema"]))
-            else:
-                schema = self.view.load(self.spark).schema
-            have = {f.name: f.dataType.simpleString() for f in schema.fields}
-            have[self.DUMMY_KEY] = "int"  # injected constant
-            if all(k in have for k in keys):
-                return [have[k] for k in keys]
-        except Exception:
-            return None
-        return None
 
     # -- source ----------------------------------------------------------
     def _input_snapshot(self) -> int | None:
@@ -377,12 +359,9 @@ class MaterializeJob:
         bucket batches with matching lineage are skipped."""
         snap_id = self._input_snapshot()
         complete = self._coverage_complete(snap_id, start, end)
-        write_store_meta(
-            self.dest,
-            n_buckets=self.n_buckets,
-            key_cols=self._key_cols(),
-            key_types=self._key_types(),
-            ts_col=self.view.timestamp_field,
+        _check_store(
+            self.dest, layout.current_snapshot(self.dest), self.n_buckets,
+            self._key_cols(),
         )
         batches = [
             list(range(b, min(b + self.bucket_batch, self.n_buckets)))
@@ -459,86 +438,24 @@ def _observed_rows(obs: Observation) -> int | None:
         return None
 
 
-def _store_meta_path(dest: str) -> str:
-    return os.path.join(dest, layout.META_DIR, "store.json")
-
-
-def write_store_meta(
-    dest: str,
-    *,
-    n_buckets: int,
-    key_col: str | None = None,
-    key_type: str | None = None,
-    key_cols: list[str] | None = None,
-    key_types: list[str] | None = None,
-    ts_col: str | None = None,
+def _check_store(
+    dest: str, head: dict | None, n_buckets: int, key_cols: list[str]
 ) -> None:
-    """Persist the store's bucket modulus (ADVICE r01: inferring it from
-    ``1+max(bucket dirs)`` is wrong when the top bucket was never written —
-    point lookups then hash keys with a different modulus than the writer
-    used and silently miss). Atomic tmp+rename; refuses to change the
-    modulus of an existing store.
-
-    ``key_cols``/``key_types`` (lists) are the canonical form; the scalar
-    ``key_col``/``key_type`` params and json fields are kept for
-    single-key stores written before composite support."""
-    import json
-
-    if key_cols is None:
-        key_cols = [key_col] if key_col else []
-    if key_types is None and key_type:
-        key_types = [key_type]
-
-    path = _store_meta_path(dest)
-    prior = read_store_meta(dest)
-    if prior is not None:
-        if prior["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"store {dest} was written with n_buckets="
-                f"{prior['n_buckets']}, cannot re-materialize with "
-                f"{n_buckets}"
-            )
-        prior_cols = prior.get("key_cols") or (
-            [prior["key_col"]] if prior.get("key_col") else None
-        )
-        if prior_cols and key_cols and prior_cols != key_cols:
-            raise ValueError(
-                f"store {dest} is keyed on {prior_cols}, cannot "
-                f"re-materialize keyed on {key_cols}"
-            )
-        changed = False
-        if key_types and not prior.get("key_types") and not prior.get("key_type"):
-            # backfill dtypes for older stores
-            prior["key_types"] = key_types
-            if len(key_types) == 1:
-                prior["key_type"] = key_types[0]
-            changed = True
-        if ts_col and not prior.get("ts_col"):
-            prior["ts_col"] = ts_col  # backfill for pre-TTL stores
-            changed = True
-        if changed:
-            fileio.get_io().write_atomic(path, json.dumps(prior))
+    """Refuse to write into the store at ``dest`` (``head``: its current
+    snapshot, None for a new store) with another bucket modulus or other
+    key columns: probe keys would hash to buckets that do not hold them."""
+    if head is None:
         return
-    meta = {
-        "n_buckets": n_buckets,
-        "key_cols": key_cols,
-        "key_types": key_types,
-        "ts_col": ts_col,
-    }
-    if len(key_cols) == 1:  # scalar aliases for pre-composite readers
-        meta["key_col"] = key_cols[0]
-        meta["key_type"] = key_types[0] if key_types else None
-    fileio.get_io().write_atomic(path, json.dumps(meta))
-
-
-def read_store_meta(dest: str) -> dict | None:
-    import json
-
-    path = _store_meta_path(dest)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    if head["n_buckets"] != n_buckets:
+        raise ValueError(
+            f"store {dest} was written with n_buckets={head['n_buckets']}, "
+            f"cannot re-materialize with {n_buckets}"
+        )
+    if head["key_col"] != key_cols:
+        raise ValueError(
+            f"store {dest} is keyed on {head['key_col']}, cannot "
+            f"re-materialize keyed on {key_cols}"
+        )
 
 
 def last_materialized_end(dest: str) -> str | None:
@@ -702,11 +619,10 @@ def push_to_online(
     touched-bucket set is bounded by the store modulus, and unaffected
     buckets are never opened; the write is ``_merge_into_store``'s.
     Returns {rows_pushed, buckets_touched}."""
-    meta = read_store_meta(dest)
-    if meta is None:
-        raise FileNotFoundError(f"no serving store at {dest} (store.json)")
-    key_cols = meta.get("key_cols") or [meta["key_col"]]
-    n_buckets = meta["n_buckets"]
+    head = layout.current_snapshot(dest)
+    if head is None:
+        raise FileNotFoundError(f"no serving store at {dest}")
+    key_cols, n_buckets = head["key_col"], head["n_buckets"]
 
     df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if key_cols == [MaterializeJob.DUMMY_KEY] and (
@@ -715,7 +631,7 @@ def push_to_online(
         # entity-less store: inject the constant key like materialize
         df = df.withColumn(MaterializeJob.DUMMY_KEY, F.lit(1))
     touched = layout.buckets_of_frame(df, key_cols, n_buckets)
-    if not touched:  # empty push batch: nothing to merge or swap
+    if not touched:  # empty push batch: nothing to merge or commit
         return {"rows_pushed": 0, "buckets_touched": []}
     # observe the deduped PUSHED batch, not the merged buckets: rows_pushed
     # is the batch size (ADVICE r03). It rides the store write.
@@ -731,14 +647,6 @@ def push_to_online(
     return {"rows_pushed": obs.get["rows"], "buckets_touched": touched}
 
 
-def _served_columns(data: str, dirs: list[str]) -> set[str] | None:
-    """Served column names from one parquet footer (no Spark job): a
-    touched bucket's, else any bucket's; None for an empty store."""
-    dirs = dirs or glob.glob(os.path.join(data, "bucket=*[0-9]"))
-    files = glob.glob(os.path.join(dirs[0], "*.parquet")) if dirs else []
-    return set(pq.read_schema(files[0]).names) if files else None
-
-
 def _merge_into_store(
     spark: SparkSession,
     dest: str,
@@ -752,38 +660,47 @@ def _merge_into_store(
     on_merged: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
     """The serving store's one write path (module docstring): merge the
-    latest-per-key rows ``fresh`` into ``buckets``, new wins, under the
-    store's commit lock. Not re-entrant: no caller may hold the lock.
+    latest-per-key rows ``fresh`` into ``buckets``, new wins, and commit
+    the merged buckets' new files as one snapshot. The writer lock is on
+    ``dest``, not on ``metadata/``, whose lock the snapshot commit takes
+    itself (``FileIO.lock`` is not re-entrant): no caller may hold it.
     Rows whose columns differ from the served ones raise ``ValueError``
     before anything is written. ``on_merged`` wraps the merged rows (a
     caller's observation rides the write)."""
-    data = os.path.join(dest, layout.DATA_DIR)
     io = fileio.get_io()
-    stage = os.path.join(dest, "_staging", f"merge-{uuid.uuid4().hex[:12]}")
-    with io.lock(os.path.join(dest, layout.META_DIR)):
-        existing = [os.path.join(data, f"bucket={b}") for b in buckets]
-        existing = [d for d in existing if os.path.isdir(d)]
-        served, cols = _served_columns(data, existing), set(fresh.columns)
-        if served is not None and served != cols:
-            raise ValueError(
-                f"rows for the serving store at {dest} must carry its "
-                f"columns: missing {sorted(served - cols)}, unknown "
-                f"{sorted(cols - served)}"
-            )
+    token = uuid.uuid4().hex[:12]
+    stage = os.path.join(dest, "_staging", f"merge-{token}")
+    with io.lock(dest):
+        parent = layout.current_snapshot(dest)
+        _check_store(dest, parent, n_buckets, key_cols)
         merged = fresh
-        if existing:
-            old = spark.read.parquet(*existing)
-            old = old.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-            # incoming rows outrank served rows at equal (key, ts,
-            # created): re-materialization is a CORRECTION (late-event
-            # aggregate fixes, transform changes) and must overwrite
-            merged = latest_per_key(
-                fresh.withColumn("__fresh", F.lit(1)).unionByName(
-                    old.withColumn("__fresh", F.lit(0))
-                ),
-                key=key_cols, order=ts_col, created_col=created_col,
-                precedence_col="__fresh",
-            ).drop("__fresh")
+        if parent is not None:
+            served = set(
+                T.StructType.fromJson(json.loads(parent["schema"])).names
+            )
+            cols = set(fresh.columns)
+            if served != cols:
+                raise ValueError(
+                    f"rows for the serving store at {dest} must carry its "
+                    f"columns: missing {sorted(served - cols)}, unknown "
+                    f"{sorted(cols - served)}"
+                )
+            if any(f["bucket"] in buckets for f in parent["files"]):
+                old = layout.read_table(
+                    spark, dest, snapshot=parent["snapshot_id"],
+                    buckets=set(buckets),
+                ).withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+                # incoming rows outrank served rows at equal (key, ts,
+                # created): re-materialization is a CORRECTION (late-event
+                # aggregate fixes, transform changes) and must overwrite
+                merged = latest_per_key(
+                    fresh.withColumn("__fresh", F.lit(1)).unionByName(
+                        old.withColumn("__fresh", F.lit(0))
+                    ),
+                    key=key_cols, order=ts_col, created_col=created_col,
+                    precedence_col="__fresh",
+                ).drop("__fresh")
+        schema = merged.schema.json()
         merged = merged.withColumn(
             "__bucket", layout.bucket_expr(key_cols, n_buckets)
         ).repartition("__bucket")
@@ -792,53 +709,52 @@ def _merge_into_store(
             # AQE prunes the empty stage below a Sort and would drop the
             # observations inside it; below an observation it keeps them
             merged = on_merged(merged)
+        new: list[str] = []
         try:
             (
                 merged.sortWithinPartitions("__bucket", *key_cols)
                 .write.partitionBy("__bucket")
                 .parquet(stage)
             )
-            # one swap per bucket dir through the FileIO seam (object-
-            # store impls replace the rename pair with prefix versioning)
-            io.makedirs(data)
+            # unique names: the parent snapshot's files stay in place for
+            # readers that planned it
             for b in buckets:
-                src_dir = os.path.join(stage, f"__bucket={b}")
-                if os.path.isdir(src_dir):
-                    io.swap_dir(src_dir, os.path.join(data, f"bucket={b}"))
+                staged = os.path.join(stage, f"__bucket={b}", "*.parquet")
+                for i, path in enumerate(sorted(glob.glob(staged))):
+                    rel = os.path.join(
+                        layout.DATA_DIR, f"bucket={b}",
+                        f"merge-{token}-{i:04d}.parquet",
+                    )
+                    io.move(path, os.path.join(dest, rel))
+                    new.append(rel)
         finally:
             io.rmtree(stage)
+        kept = [
+            f for f in (parent["files"] if parent else [])
+            if f["bucket"] not in buckets
+        ]
+        stats = layout._collect_stats_local(dest, new, key_cols[0], ts_col)
+        layout._commit_snapshot(dest, {
+            "snapshot_id": layout.next_snapshot_id(dest, parent),
+            "parent": parent["snapshot_id"] if parent else None,
+            "committed_at": time.time(),
+            "operation": "merge",
+            "key_col": key_cols,
+            "ts_col": ts_col,
+            "n_buckets": n_buckets,
+            "schema": schema,
+            "files": sorted(kept + stats, key=lambda f: f["path"]),
+        })
 
 
-def infer_store_ts_col(
-    spark: SparkSession, dest: str, *, meta: dict | None = None
-) -> str | None:
-    """Event-time column of a serving store: ``store.json``'s recorded
-    ``ts_col``; for stores materialized before it was recorded (r04
-    review), resolve from the STORE's own parquet schema — ``warc_ts``
-    if present, else the single timestamp-typed column. ``None`` when
-    absent or ambiguous (callers that NEED it, like ttl expiry, must
-    refuse rather than guess). One shared inference for the Python API
-    and the HTTP server (r05 review batch 2 — the server's copy ran
-    over the post-ODFV schema, so derived timestamp columns changed
-    the answer)."""
-    if meta is None:
-        meta = read_store_meta(dest)
-    ts_col = (meta or {}).get("ts_col")
-    if ts_col:
-        return ts_col
-    from pyspark.sql import types as T
-
-    data = os.path.join(dest, layout.DATA_DIR)
-    fields = spark.read.parquet(data).schema.fields
-    ts_like = [
-        f.name for f in fields
-        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-    ]
-    if "warc_ts" in ts_like:
-        return "warc_ts"
-    if len(ts_like) == 1:
-        return ts_like[0]
-    return None
+def infer_store_ts_col(dest: str) -> str | None:
+    """Event-time column of the serving store at ``dest``, as its current
+    snapshot records it; None when ``dest`` holds no store. One shared
+    reader for the Python API and the HTTP server (r05 review batch 2 —
+    the server's copy ran over the post-ODFV schema, so derived timestamp
+    columns changed the answer)."""
+    head = layout.current_snapshot(dest)
+    return head["ts_col"] if head else None
 
 
 def read_online(
@@ -851,9 +767,10 @@ def read_online(
     ttl=None,
     now=None,
 ):
-    """Read the serving store (one row per entity key). With ``keys``,
-    prunes to just those keys' bucket directories before scanning — a KV
-    point-lookup's batch equivalent.
+    """Read the serving store (one row per entity key) at its current
+    snapshot. With ``keys``, prunes to just those keys' buckets before
+    scanning — a KV point-lookup's batch equivalent. The store's recorded
+    key columns decide; ``key_col`` only names the key for callers.
 
     Composite-key stores: pass ``key_cols=[k1, k2, …]`` and ``keys`` as a
     list of tuples; pruning hashes the tuples with the writer's
@@ -864,77 +781,47 @@ def read_online(
     online stores evict rows older than the view's ttl) — rows whose
     event time predates ``now - ttl`` are filtered out, the read-side
     equivalent of eviction. ``now`` is EXPLICIT (no wall-clock read
-    here) so lookups are reproducible; the event-time column comes from
-    store.json (recorded at materialization)."""
+    here) so lookups are reproducible; the event-time column is the one
+    the store's snapshot records."""
     import datetime as _dt
 
-    data = os.path.join(dest, layout.DATA_DIR)
-    meta = read_store_meta(dest)
-    if key_cols is None:
-        key_cols = (meta or {}).get("key_cols") or [key_col]
-    expire = None
+    head = layout.current_snapshot(dest)
+    if head is None:
+        raise FileNotFoundError(f"no serving store at {dest}")
+    key_cols = key_cols or head["key_col"]
+    ts_col = head["ts_col"]
     if ttl is not None:
         if now is None:
             raise ValueError("ttl expiry needs an explicit `now`")
-        ts_col = infer_store_ts_col(spark, dest, meta=meta)
         if ts_col is None:
             raise ValueError(
-                f"cannot infer the event-time column of {dest} for "
-                "ttl expiry; re-materialize to record ts_col in "
-                "store.json"
+                f"the serving store at {dest} records no event-time "
+                "column, so ttl expiry cannot apply"
             )
         if isinstance(now, str):
             now = _dt.datetime.fromisoformat(now)
-        cutoff = now - ttl
 
-        def expire(df):  # noqa: E731 — applied to every return path
-            return df.filter(
-                F.col(ts_col).cast("timestamp") > F.lit(cutoff)
-            )
-
+    snap = head["snapshot_id"]
     if keys is None:
-        out = spark.read.parquet(data)
-        return expire(out) if expire else out
-    dirs = sorted(d for d in os.listdir(data) if d.startswith("bucket="))
-    if not dirs:
-        # materialized over a range with no events: no bucket dir (and
-        # no footer to read), so every key is absent
-        types = (meta or {}).get("key_types") or ["string"] * len(key_cols)
-        return spark.createDataFrame(
-            [], ", ".join(f"`{c}` {t}" for c, t in zip(key_cols, types))
-        )
-    if meta is not None:
-        n_buckets = meta["n_buckets"]
-    else:  # legacy store without metadata: best-effort inference
-        n_buckets = 1 + max(int(d.split("=")[1]) for d in dirs)
-    # hash probe keys with the STORE's key dtypes (int vs bigint vs string
-    # all hash differently under xxhash64 — r02 review). Persisted in
-    # store.json; fall back to ONE bucket dir's footer, never a
-    # full-store listing (hot serving path).
-    key_types = (meta or {}).get("key_types")
-    if not key_types and (meta or {}).get("key_type"):
-        key_types = [meta["key_type"]]
-    if not key_types:
-        sch = spark.read.parquet(os.path.join(data, dirs[0])).schema
-        key_types = [sch[c].dataType.simpleString() for c in key_cols]
-    wanted = layout.buckets_of_keys(
-        spark, keys, n_buckets,
-        key_type=key_types[0] if len(key_cols) == 1 else key_types,
-    )
-    paths = [
-        os.path.join(data, d)
-        for d in dirs
-        if int(d.split("=")[1]) in wanted
-    ]
-    if not paths:
-        return spark.read.parquet(os.path.join(data, dirs[0])).limit(0)
-    out = spark.read.parquet(*paths)
-    if len(key_cols) == 1:
-        out = out.filter(F.col(key_cols[0]).isin(keys))
+        out = layout.read_table(spark, dest, snapshot=snap)
     else:
-        schema = ", ".join(f"{c} {t}" for c, t in zip(key_cols, key_types))
-        probe = spark.createDataFrame(
-            [tuple(k) for k in keys], schema
-        ).distinct()
-        out = out.join(F.broadcast(probe), on=key_cols, how="left_semi")
-    return expire(out) if expire else out
+        # hash probe keys with the STORE's key dtypes (int vs bigint vs
+        # string all hash differently under xxhash64 — r02 review)
+        schema = T.StructType.fromJson(json.loads(head["schema"]))
+        key_types = [schema[c].dataType.simpleString() for c in key_cols]
+        wanted = layout.buckets_of_keys(
+            spark, keys, head["n_buckets"],
+            key_type=key_types[0] if len(key_cols) == 1 else key_types,
+        )
+        out = layout.read_table(spark, dest, snapshot=snap, buckets=wanted)
+        if len(key_cols) == 1:
+            out = out.filter(F.col(key_cols[0]).isin(keys))
+        else:
+            probe = spark.createDataFrame(
+                [tuple(k) for k in keys],
+                ", ".join(f"{c} {t}" for c, t in zip(key_cols, key_types)),
+            ).distinct()
+            out = out.join(F.broadcast(probe), on=key_cols, how="left_semi")
+    if ttl is not None:
+        out = out.filter(F.col(ts_col).cast("timestamp") > F.lit(now - ttl))
+    return out

@@ -15,8 +15,9 @@ Scale shape: the driver IS the server (upstream runs the same way — a
 Python process holding the store handle). Every request is bounded by
 its own entity list / top_k, so the per-request ``collect()`` is the
 point-lookup result itself, never a corpus scan; the store read
-underneath prunes to the probed keys' bucket directories
-(``read_online``). Concurrency rides ``ThreadingHTTPServer`` — Spark
+underneath prunes to the probed keys' bucket files of one store
+snapshot (``read_online``), so a concurrent push never removes a file
+a read has planned. Concurrency rides ``ThreadingHTTPServer`` — Spark
 job submission is thread-safe, and independent point lookups schedule
 independently. Each connection gets a thread, so at most
 ``MAX_CONCURRENT_REQUESTS`` POST requests run at once; one over the
@@ -93,10 +94,6 @@ class FeatureServer:
     ) -> None:
         self.store = store
         self.stores = dict(stores)
-        # store path → its event-time column, inferred on first use: a
-        # store without a recorded ts_col costs a parquet schema read.
-        # Two racing first reads both infer the same answer, so no lock.
-        self._ts_cols: dict[str, str | None] = {}
         self._slots = threading.BoundedSemaphore(MAX_CONCURRENT_REQUESTS)
         self._httpd = ThreadingHTTPServer(
             (host, port), _make_handler(self)
@@ -189,17 +186,13 @@ class FeatureServer:
             tuple(r[c] for c in key_cols): r.asDict()
             for r in served.collect()
         }
-        # the STORE's own schema decides the event-time column — never
+        # the STORE's snapshot decides the event-time column — never
         # the served (post-ODFV) frame, whose derived timestamp columns
-        # would change the answer (r05 review batch 2; shared inference
-        # with read_online)
-        if store_path not in self._ts_cols:
-            from feast_spark.materialize import infer_store_ts_col
+        # would change the answer (r05 review batch 2; the column
+        # read_online expires on)
+        from feast_spark.materialize import infer_store_ts_col
 
-            self._ts_cols[store_path] = infer_store_ts_col(
-                self.store.spark, store_path
-            )
-        ts_col = self._ts_cols[store_path]
+        ts_col = infer_store_ts_col(store_path)
         cutoff = None
         if ttl is not None:
             if now is None:
@@ -208,9 +201,8 @@ class FeatureServer:
                 # never silently serve stale rows as PRESENT (r05
                 # review) — same refusal read_online makes
                 raise ValueError(
-                    f"cannot infer the event-time column of {store_path} "
-                    "for ttl expiry; re-materialize to record ts_col in "
-                    "store.json"
+                    f"the serving store at {store_path} records no "
+                    "event-time column, so ttl expiry cannot apply"
                 )
             cutoff = datetime.fromisoformat(now) - ttl
 

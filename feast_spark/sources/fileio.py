@@ -15,13 +15,14 @@ of mutation primitives below:
 - ``move`` (staged data file → final unique name): locally ``os.replace``;
   on object stores a copy+delete, which is safe precisely BECAUSE the
   destination name is unique and unreferenced until commit.
-- ``swap_dir`` (serving-store bucket replace): locally two renames; on
-  object stores replaced by prefix-versioning (write ``bucket=3/v=<n>/``
-  and flip the store manifest) — the local impl documents the invariant
-  (readers see old or new, never a mix) rather than the mechanism.
+- ``swap_dir`` (``write_table``'s overwrite of an existing table):
+  locally two renames; on object stores replaced by prefix-versioning —
+  the local impl documents the invariant (readers see old or new, never
+  a mix) rather than the mechanism.
 - ``remove`` / ``rmtree``: garbage collection; idempotent.
-- ``lock``: the per-directory commit lock around ``write_conditional``
-  and the serving store's merge-and-swap (``materialize``).
+- ``lock``: the per-directory commit lock around ``write_conditional``,
+  and the serving store's writer lock on its root around each
+  read-merge-commit (``materialize``).
 
 ``pages``/``materialize`` route every commit-path mutation through the
 module-level ``get_io()`` instance. Tests inject crashing subclasses to

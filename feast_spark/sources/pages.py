@@ -22,6 +22,11 @@ scratch:
   to ``spark.read.parquet(*files)``; Catalyst then adds row-group
   skipping on top.
 
+A serving store (``materialize``) is a table of this layout without the
+``dt=`` level: ``data/bucket=<b>/`` files, one row per key, committed by
+``_commit_snapshot`` and retired by ``expire_snapshots`` like any other.
+Its snapshots record the key columns as a list in ``key_col``.
+
 Scale note: file stats are read from Parquet *footers only* (metadata
 pages, ~KB per file). The collection loop runs on the driver here
 (local FS); at 100 TB / 10^5+ files the same loop runs as a
@@ -776,8 +781,8 @@ def remove_orphan_files(
                 f["path"] for f in load_snapshot(root, name)["files"]
             )
     if n_snaps == 0:
-        # a serving store (or corrupted table) has data but no snapshot
-        # manifests — "everything is an orphan" would mass-delete it
+        # data without any snapshot manifest (a corrupted table, or no
+        # table) — "everything is an orphan" would mass-delete it
         raise RuntimeError(
             f"{root} has no snapshot manifests; refusing to sweep "
             "(orphan removal only applies to snapshot tables)"

@@ -5,8 +5,9 @@
 2. pages.write_table overwrite: HEAD is dropped before the data-dir swap
    so a crash leaves the table loudly uninitialized, and append on a
    data-without-HEAD root raises instead of silently re-registering.
-3. MaterializeJob.run records the key dtype in store.json (read_online
-   then never reads a parquet footer on the serving hot path).
+3. MaterializeJob.run records the key columns and their dtype in the
+   store's snapshot (read_online then never reads a parquet footer on
+   the serving hot path).
 4. registry._deserialize_transform validates the src BEFORE exec: write
    access to registry.json is not arbitrary code execution.
 """
@@ -111,7 +112,7 @@ def test_overwrite_drops_head_before_swap(spark, tmp_path, monkeypatch):
 def test_store_meta_records_key_type(spark, tmp_path):
     from datetime import timedelta
 
-    from feast_spark.materialize import MaterializeJob, read_store_meta
+    from feast_spark.materialize import MaterializeJob
     from feast_spark.registry import Entity, FeatureSpec, FeatureView
 
     src = str(tmp_path / "src.parquet")
@@ -130,8 +131,12 @@ def test_store_meta_records_key_type(spark, tmp_path):
     MaterializeJob(spark, view, dest, n_buckets=4, bucket_batch=4).run(
         "2023-01-01", "2024-01-01"
     )
-    meta = read_store_meta(dest)
-    assert meta["key_type"] == "bigint"
+    head = layout.current_snapshot(dest)
+    assert head["key_col"] == ["user_id"]
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromJson(json.loads(head["schema"]))
+    assert schema["user_id"].dataType.simpleString() == "bigint"
 
 
 def test_registry_load_rejects_tampered_src():

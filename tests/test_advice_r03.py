@@ -229,18 +229,25 @@ class TestStratifiedSampleGuarantee:
 
 class TestPushedRowCount:
     def test_rows_pushed_excludes_preexisting(self, spark, tmp_path):
-        import os
+        from datetime import datetime
 
         from feast_spark.materialize import (
+            MaterializeJob,
             push_to_online,
             read_online,
-            write_store_meta,
         )
+        from feast_spark.registry import Entity, FeatureSpec, FeatureView
 
+        # an empty store keyed on url over 4 buckets: a run over no rows
+        empty = spark.createDataFrame([], "url string, warc_ts timestamp, v bigint")
+        view = FeatureView(
+            name="p", entity=Entity("url", "url"), source=lambda s: empty,
+            features=[FeatureSpec("v", "bigint")], timestamp_field="warc_ts",
+        )
         store = str(tmp_path / "store")
-        os.makedirs(store)
-        write_store_meta(store, n_buckets=4, key_col="url",
-                         key_type="string")
+        MaterializeJob(spark, view, store, n_buckets=4).run(
+            datetime(2023, 1, 1), datetime(2024, 1, 1)
+        )
         first = spark.createDataFrame(
             [Row(url=f"u{n}", warc_ts="2023-06-01 00:00:00", v=1)
              for n in range(20)]

@@ -33,9 +33,9 @@ class CrashingIO(fileio.FileIO):
         self._maybe_crash("move")
         super().move(src, dst)
 
-    def swap_dir(self, new_dir, dst_dir):
-        self._maybe_crash("swap_dir")
-        super().swap_dir(new_dir, dst_dir)
+    def write_conditional(self, path, text, expected):
+        self._maybe_crash("write_conditional")
+        return super().write_conditional(path, text, expected)
 
 
 @pytest.fixture()
@@ -112,8 +112,10 @@ def test_upsert_crash_at_snapshot_commit(spark, tmp_path, io_guard):
 
 
 def test_materialize_crash_mid_swap_resumes(spark, tmp_path, io_guard):
-    """Crash during a serving-store bucket swap: the batch's lineage was
-    never written, so the resumed run rewrites that batch; the final
+    """Crash inside the serving store's compare-and-swap commit of the
+    second bucket batch — after its first file moved into data/, and
+    between claiming its snapshot and flipping HEAD: that batch's
+    lineage was never written, so the resumed run rewrites it; the final
     store equals an uninterrupted one."""
     from feast_spark.materialize import MaterializeJob, read_online
     from feast_spark.registry import Entity, FeatureSpec, FeatureView
@@ -129,23 +131,28 @@ def test_materialize_crash_mid_swap_resumes(spark, tmp_path, io_guard):
         features=[FeatureSpec("v", "double")],
         timestamp_field="ts",
     )
-    d_full, d_part = str(tmp_path / "full"), str(tmp_path / "part")
+    d_full = str(tmp_path / "full")
     MaterializeJob(spark, view, d_full, n_buckets=4, bucket_batch=2).run(
         "2023-01-01", "2024-01-01"
     )
+    full = read_online(spark, d_full)
 
-    fileio.set_io(CrashingIO("swap_dir", at_call=3))
-    with pytest.raises(RuntimeError, match="injected crash at swap_dir"):
-        MaterializeJob(spark, view, d_part, n_buckets=4, bucket_batch=2).run(
-            "2023-01-01", "2024-01-01"
-        )
-    fileio.set_io(fileio.FileIO())
-    summary = MaterializeJob(
-        spark, view, d_part, n_buckets=4, bucket_batch=2
-    ).run("2023-01-01", "2024-01-01")
-    assert summary["batches_skipped"] >= 1  # the batch that finished
-    a, b = read_online(spark, d_full), read_online(spark, d_part)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # batch 1 moves 2 files and makes 2 CAS writes (snapshot, HEAD)
+    for op, at_call in (("move", 3), ("write_conditional", 4)):
+        d_part = str(tmp_path / f"part-{op}")
+        fileio.set_io(CrashingIO(op, at_call=at_call))
+        with pytest.raises(RuntimeError, match=f"injected crash at {op}"):
+            MaterializeJob(spark, view, d_part, n_buckets=4, bucket_batch=2).run(
+                "2023-01-01", "2024-01-01"
+            )
+        fileio.set_io(fileio.FileIO())
+        summary = MaterializeJob(
+            spark, view, d_part, n_buckets=4, bucket_batch=2
+        ).run("2023-01-01", "2024-01-01")
+        assert summary["batches_skipped"] == 1  # the batch that finished
+        part = read_online(spark, d_part)
+        assert full.exceptAll(part).count() == 0
+        assert part.exceptAll(full).count() == 0
 
 
 def test_default_io_roundtrip(tmp_path):

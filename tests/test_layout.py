@@ -700,12 +700,15 @@ def test_append_after_rollback_gets_unique_snapshot_id(spark, tmp_path_factory):
     assert got == {"a", "b", "d"}  # the branch from s1
 
 
-def test_remove_orphans_refuses_serving_store(spark, tmp_path_factory):
-    """r03 self-review: a serving store has data but no snapshot
-    manifests — sweeping it would delete everything; must refuse."""
+def test_remove_orphans_keeps_serving_store_files(spark, tmp_path_factory):
+    """A serving store is a snapshot table: the sweep removes only a file
+    no snapshot lists (a crashed merge's leftover), never a served or
+    superseded one. Data whose manifests are gone is refused (r03
+    self-review: "everything is an orphan" would delete it all)."""
+    import shutil
     from datetime import timedelta
 
-    from feast_spark.materialize import MaterializeJob
+    from feast_spark.materialize import MaterializeJob, push_to_online, read_online
     from feast_spark.registry import Entity, FeatureSpec, FeatureView
     from pyspark.sql import Row
 
@@ -723,9 +726,24 @@ def test_remove_orphans_refuses_serving_store(spark, tmp_path_factory):
     MaterializeJob(spark, view, dest, n_buckets=2, bucket_batch=2).run(
         "2023-01-01", "2024-01-01"
     )
+    push_to_online(
+        spark, dest,
+        spark.createDataFrame([Row(url="u", warc_ts="2023-07-01 00:00:00", v=2)]),
+        ts_col="warc_ts",
+    )
+    served = layout.current_snapshot(dest)["files"][0]["path"]
+    leftover = os.path.join(os.path.dirname(served), "merge-crashed-0000.parquet")
+    shutil.copy(os.path.join(dest, served), os.path.join(dest, leftover))
+    out = layout.remove_orphan_files(dest, min_age_s=0)
+    assert out["paths"] == [leftover]
+    assert [r["v"] for r in read_online(spark, dest).collect()] == [2]
+    assert [r["v"] for r in read_online(spark, dest, ["u"]).collect()] == [2]
+
+    for name in os.listdir(os.path.join(dest, layout.META_DIR)):
+        if name.startswith("snap-"):
+            os.remove(os.path.join(dest, layout.META_DIR, name))
     with pytest.raises(RuntimeError, match="no snapshot manifests"):
         layout.remove_orphan_files(dest)
-    assert layout.read_table.__name__  # module sanity
 
 
 # ---------------------------------------------------------- named refs -----

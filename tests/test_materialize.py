@@ -269,12 +269,17 @@ def test_materialize_composite_latest(spark, composite_src, tmp_path_factory):
     got = read_online(spark, dest).toPandas()
     assert len(got) == 40 * 3  # one row per tuple, not per user
     assert (got["score"] % 10 == 2).all()  # rev 2 = latest everywhere
-    # store meta records the composite key + dtypes
-    from feast_spark.materialize import read_store_meta
+    # the store's snapshot records the composite key + dtypes
+    import json
 
-    meta = read_store_meta(dest)
-    assert meta["key_cols"] == ["user", "device"]
-    assert meta["key_types"] == ["string", "string"]
+    from pyspark.sql import types as T
+
+    head = layout.current_snapshot(dest)
+    assert head["key_col"] == ["user", "device"]
+    schema = T.StructType.fromJson(json.loads(head["schema"]))
+    assert [schema[c].dataType.simpleString() for c in head["key_col"]] == [
+        "string", "string"
+    ]
 
 
 def test_materialize_composite_resume(spark, composite_src, tmp_path_factory):
@@ -413,49 +418,6 @@ def test_get_online_features_logging_and_sql_entity_df(
     )
     assert out.count() == 2
     assert {r["value"] for r in out.collect()} == {1.0, 2.0}
-
-
-def test_read_online_ttl_on_legacy_store_infers_ts_col(
-    spark, tmp_path_factory
-):
-    """r04 review: stores materialized before ts_col landed in
-    store.json made TTL reads assume warc_ts — an UNRESOLVED_COLUMN
-    failure on stores keyed on any other event-time field. The reader
-    must resolve the column from the store's own schema instead."""
-    import json
-    import os
-    from datetime import datetime, timedelta
-
-    from feast_spark.materialize import MaterializeJob, read_online
-    from feast_spark.registry import Entity, FeatureSpec, FeatureView
-
-    df = spark.createDataFrame(
-        [(datetime(2024, 1, 1), "old", 1.0), (datetime(2024, 1, 10), "new", 2.0)],
-        "event_ts timestamp, url string, value double",
-    )
-    view = FeatureView(
-        name="legacy", entity=Entity("url", "url"),
-        source=lambda s, d=df: d,
-        features=[FeatureSpec("value", "double")],
-        timestamp_field="event_ts",
-    )
-    dest = str(tmp_path_factory.mktemp("ttl_legacy") / "store")
-    MaterializeJob(spark, view, dest, n_buckets=2).run(
-        datetime(2023, 12, 1), datetime(2024, 2, 1)
-    )
-    # simulate a pre-r04 store: strip ts_col from the persisted meta
-    meta_path = os.path.join(dest, "metadata", "store.json")
-    meta = json.load(open(meta_path))
-    del meta["ts_col"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    got = {
-        r["url"]
-        for r in read_online(
-            spark, dest, ttl=timedelta(days=7), now=datetime(2024, 1, 12)
-        ).collect()
-    }
-    assert got == {"new"}
 
 
 # -- the transform runs on each key's latest candidates ----------------

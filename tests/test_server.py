@@ -234,44 +234,6 @@ def test_null_event_time_under_ttl_never_serves(served, spark, monkeypatch):
     assert body["results"][1]["statuses"] == ["PRESENT"]
 
 
-def test_ts_col_inferred_once_per_store(served, tmp_path, monkeypatch):
-    """ADVICE r05: a store whose store.json lacks ``ts_col`` costs a
-    parquet schema read to infer it — once per server, not per request."""
-    import shutil
-
-    from feast_spark import materialize
-
-    _, store, dest = served
-    copy = str(tmp_path / "store")
-    shutil.copytree(dest, copy)
-    meta_path = materialize._store_meta_path(copy)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["ts_col"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    calls: list = []
-    infer = materialize.infer_store_ts_col
-
-    def counted(*a, **kw):
-        calls.append(a)
-        return infer(*a, **kw)
-
-    monkeypatch.setattr(materialize, "infer_store_ts_col", counted)
-    srv = FeatureServer(store, {"scores": copy})
-    for _ in range(3):
-        body = srv.get_online_features(
-            {
-                "features": ["scores:score"],
-                "entities": {"user": ["u1", "u3"]},
-                "ttl_seconds": 30 * 86400,
-                "now": "2024-02-01T00:00:00",
-            }
-        )
-        assert body["results"][1]["statuses"] == ["PRESENT", "OUTSIDE_MAX_AGE"]
-    assert len(calls) == 1
-
-
 def test_retrieve_online_documents(served):
     srv, _, _ = served
     code, body = _call(

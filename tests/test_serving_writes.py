@@ -1,12 +1,15 @@
 """Serving-store write path: materialization and push share one locked
-merge-and-swap (``materialize._merge_into_store``).
+merge-and-commit (``materialize._merge_into_store``) onto a snapshot
+table.
 
-Pins: concurrent pushes into one bucket lose no rows; a push whose rows
+Pins: concurrent pushes into one bucket lose no rows; reads that run
+while pushes commit see one whole snapshot and never fail; retention
+removes superseded files without changing any answer; a push whose rows
 lack a store column is a 400 that leaves the store unchanged; /push
 input errors and non-JSON-native served values never surface as
-failures; the write → materialize → delta chain works under a session
-that writes Spark's default INT96 timestamps; a store materialized over a
-range with no events serves NOT_FOUND.
+failures; the write → materialize → delta → push chain works under a
+session that writes Spark's default INT96 timestamps; a store
+materialized over a range with no events serves NOT_FOUND.
 """
 from __future__ import annotations
 
@@ -85,6 +88,7 @@ def _served(spark, dest) -> dict:
 def test_push_missing_store_column_is_400_and_store_unchanged(spark, scores_server):
     srv, dest = scores_server
     before = _served(spark, dest)
+    head = layout.current_snapshot(dest)
     code, body = _post(
         srv.port,
         "/push",
@@ -97,9 +101,8 @@ def test_push_missing_store_column_is_400_and_store_unchanged(spark, scores_serv
     )
     assert code == 400 and "note" in body["error"]
     # same for a key whose bucket holds no rows yet: the check reads the
-    # served columns from another bucket, and no bucket dir appears
-    data = os.path.join(dest, "data")
-    absent = min(set(range(4)) - {int(d.split("=")[1]) for d in os.listdir(data)})
+    # served columns from the snapshot schema, and no snapshot is committed
+    absent = min(set(range(4)) - {f["bucket"] for f in head["files"]})
     cands = spark.createDataFrame([(f"n{i}",) for i in range(64)], "user string")
     new_key = cands.filter(layout.bucket_expr(["user"], 4) == absent).first()["user"]
     code, body = _post(
@@ -112,7 +115,7 @@ def test_push_missing_store_column_is_400_and_store_unchanged(spark, scores_serv
         },
     )
     assert code == 400 and "note" in body["error"]
-    assert not os.path.exists(os.path.join(data, f"bucket={absent}"))
+    assert layout.current_snapshot(dest) == head
     assert _served(spark, dest) == before
     code, got = _post(
         srv.port,
@@ -175,6 +178,129 @@ def test_concurrent_pushes_lose_no_rows(spark, tmp_path):
     got = _served(spark, dest)
     assert set(keys[0] + keys[1]) | {"u1", "u2"} == set(got)
     assert all(got[k]["note"] == k for k in keys[0] + keys[1])
+
+
+def _keys_in_every_bucket(spark, n_buckets: int, per_bucket: int) -> list[str]:
+    cands = spark.createDataFrame([(f"r{i}",) for i in range(256)], "user string")
+    rows = cands.select(
+        "user", layout.bucket_expr(["user"], n_buckets).alias("b")
+    ).collect()
+    return [
+        r["user"]
+        for b in range(n_buckets)
+        for r in [r for r in rows if r["b"] == b][:per_bucket]
+    ]
+
+
+def _push_round(spark, dest, keys: list[str], r: int) -> dict:
+    """Every key of round ``r`` carries the value ``r``."""
+    df = spark.createDataFrame(
+        [(k, datetime(2024, 2, 1, r), float(r), str(r)) for k in keys],
+        "user string, ts timestamp, score double, note string",
+    )
+    return push_to_online(spark, dest, df, ts_col="ts")
+
+
+def test_reads_during_pushes_see_one_whole_snapshot(spark, tmp_path):
+    """A keyed read and an HTTP read loop while another thread pushes
+    round after round into the same buckets. No read fails (a read
+    planned before a push must still find its files), and each read
+    answers one round's value for all of its keys."""
+    store, dest = _scores_store(spark, tmp_path)
+    keys = _keys_in_every_bucket(spark, 4, 3)
+    _push_round(spark, dest, keys, 0)
+    srv = FeatureServer(store, {"scores": dest}).start()
+    done = threading.Event()
+    errors: list[BaseException] = []
+    seen: list[set] = []
+
+    def direct() -> None:
+        while not done.is_set():
+            rows = read_online(spark, dest, keys, key_col="user").collect()
+            assert sorted(r["user"] for r in rows) == sorted(keys), rows
+            seen.append({r["score"] for r in rows})
+
+    def http() -> None:
+        while not done.is_set():
+            code, got = _post(
+                srv.port, "/get-online-features",
+                {"features": ["scores:score"], "entities": {"user": keys}},
+            )
+            assert code == 200, got
+            assert set(got["results"][1]["statuses"]) == {"PRESENT"}, got
+            seen.append(set(got["results"][1]["values"]))
+
+    def guarded(fn):
+        def run() -> None:
+            try:
+                fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors.append(e)
+                done.set()
+        return run
+
+    readers = [threading.Thread(target=guarded(f)) for f in (direct, http)]
+    for t in readers:
+        t.start()
+    try:
+        for r in range(1, 7):
+            if done.is_set():
+                break
+            assert _push_round(spark, dest, keys, r)["buckets_touched"] == [0, 1, 2, 3]
+    finally:
+        done.set()
+        for t in readers:
+            t.join(timeout=300)
+        srv.stop()
+    assert not any(t.is_alive() for t in readers)
+    assert not errors, errors
+    assert len(seen) >= 2
+    assert all(len(v) == 1 for v in seen), [v for v in seen if len(v) != 1]
+    assert {r["score"] for r in read_online(spark, dest, keys).collect()} == {6.0}
+
+
+def _data_files(dest: str) -> set[str]:
+    data = os.path.join(dest, layout.DATA_DIR)
+    return {
+        os.path.relpath(os.path.join(d, f), dest)
+        for d, _, files in os.walk(data)
+        for f in files
+    }
+
+
+def test_expire_snapshots_retires_superseded_store_files(spark, tmp_path):
+    """The store is a layout table: after one run its data/ holds
+    exactly the snapshot's files; pushes leave superseded files for
+    older snapshots, which ``expire_snapshots`` removes without changing
+    any answer."""
+    _, dest = _scores_store(spark, tmp_path)
+    files = {f["path"] for f in layout.current_snapshot(dest)["files"]}
+    assert files and _data_files(dest) == files
+    assert not any(
+        os.path.basename(p).startswith(("_", ".")) for p in files
+    )
+    keys = _keys_in_every_bucket(spark, 4, 2)
+    for r in range(3):
+        _push_round(spark, dest, keys + ["u1"], r)
+    probe = keys + ["u1", "u2", "absent"]
+
+    def answers() -> tuple[list, list]:
+        cols = ("user", "ts", "score", "note")
+        keyed = read_online(spark, dest, probe, key_col="user").select(*cols)
+        bulk = read_online(spark, dest).select(*cols)
+        return sorted(map(tuple, keyed.collect())), sorted(map(tuple, bulk.collect()))
+
+    before = answers()
+    assert len(_data_files(dest)) > len(layout.current_snapshot(dest)["files"])
+    out = layout.expire_snapshots(dest, keep_last=1)
+    assert out["files_removed"] > 0
+    head = {f["path"] for f in layout.current_snapshot(dest)["files"]}
+    assert _data_files(dest) == head
+    assert answers() == before
+    keyed, bulk = before
+    assert len(bulk) == len({r[0] for r in bulk}) == len(keys) + 2
+    assert keyed == [r for r in bulk if r[0] in probe]
+    assert {r[0]: r[2] for r in bulk}["u1"] == 2.0
 
 
 @pytest.fixture(scope="module")
@@ -259,18 +385,24 @@ def test_write_materialize_delta_under_int96_session(spark, tmp_path):
     assert out["caught_up"] is False and out["rows_pushed"] == 2
     got = {r["url"]: r["v"] for r in read_online(s, dest).collect()}
     assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
+    # a push and a keyed read: the store's own commits record event times
+    # from INT96 files too
+    push_to_online(s, dest, rows([("b", "2024-02-01 00:00:00", 5.0)]), ts_col="ts")
+    got = {r["url"]: r["v"] for r in read_online(s, dest, ["b", "c"]).collect()}
+    assert got == {"b": 5.0, "c": 3.0}
+    files = layout.current_snapshot(dest)["files"]
+    assert files and all(f["min_ts"] and f["max_ts"] for f in files)
 
 
 def test_empty_store_read_is_not_found(spark, tmp_path):
-    """A store materialized over a range with no events has no bucket
-    dir; a keyed read of it answers NOT_FOUND, not a 500."""
+    """A store materialized over a range with no events is a snapshot
+    with no files; a keyed read of it answers NOT_FOUND, not a 500."""
     store, _ = _scores_store(spark, tmp_path)
     dest = str(tmp_path / "empty_store")
     MaterializeJob(spark, store.get_view("scores"), dest, n_buckets=4).run(
         "2020-01-01", "2021-01-01"
     )
-    data = os.path.join(dest, layout.DATA_DIR)
-    assert not [d for d in os.listdir(data) if d.startswith("bucket=")]
+    assert layout.current_snapshot(dest)["files"] == []
     assert read_online(spark, dest, ["u1"], key_col="user").collect() == []
     srv = FeatureServer(store, {"scores": dest}).start()
     try:
