@@ -58,11 +58,8 @@ planned an older snapshot still finds every file it planned.
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import time
-import uuid
 import warnings
 from typing import Callable
 
@@ -667,10 +664,7 @@ def _merge_into_store(
     Rows whose columns differ from the served ones raise ``ValueError``
     before anything is written. ``on_merged`` wraps the merged rows (a
     caller's observation rides the write)."""
-    io = fileio.get_io()
-    token = uuid.uuid4().hex[:12]
-    stage = os.path.join(dest, "_staging", f"merge-{token}")
-    with io.lock(dest):
+    with fileio.get_io().lock(dest):
         parent = layout.current_snapshot(dest)
         _check_store(dest, parent, n_buckets, key_cols)
         merged = fresh
@@ -701,6 +695,7 @@ def _merge_into_store(
                     precedence_col="__fresh",
                 ).drop("__fresh")
         schema = merged.schema.json()
+        # staged as ``__bucket`` so a feature named ``bucket`` survives
         merged = merged.withColumn(
             "__bucket", layout.bucket_expr(key_cols, n_buckets)
         ).repartition("__bucket")
@@ -709,31 +704,16 @@ def _merge_into_store(
             # AQE prunes the empty stage below a Sort and would drop the
             # observations inside it; below an observation it keeps them
             merged = on_merged(merged)
-        new: list[str] = []
-        try:
-            (
-                merged.sortWithinPartitions("__bucket", *key_cols)
-                .write.partitionBy("__bucket")
-                .parquet(stage)
-            )
-            # unique names: the parent snapshot's files stay in place for
-            # readers that planned it
-            for b in buckets:
-                staged = os.path.join(stage, f"__bucket={b}", "*.parquet")
-                for i, path in enumerate(sorted(glob.glob(staged))):
-                    rel = os.path.join(
-                        layout.DATA_DIR, f"bucket={b}",
-                        f"merge-{token}-{i:04d}.parquet",
-                    )
-                    io.move(path, os.path.join(dest, rel))
-                    new.append(rel)
-        finally:
-            io.rmtree(stage)
+        # new unique names: the parent snapshot's files stay in place for
+        # readers that planned it
+        stats = layout._collect_stats_local(dest, layout._stage_and_publish(
+            merged.sortWithinPartitions("__bucket", *key_cols), dest,
+            "merge", ["__bucket"],
+        ), key_cols[0], ts_col)
         kept = [
             f for f in (parent["files"] if parent else [])
             if f["bucket"] not in buckets
         ]
-        stats = layout._collect_stats_local(dest, new, key_cols[0], ts_col)
         layout._commit_snapshot(dest, {
             "snapshot_id": layout.next_snapshot_id(dest, parent),
             "parent": parent["snapshot_id"] if parent else None,

@@ -200,13 +200,16 @@ def build_minhash_index(
     signature table) and pay the extra join instead — documented trade.
     Config is persisted beside the table and reused verbatim by
     ``append_minhash_index``/``minhash_incremental_pairs``, so index
-    and query hashes can never drift. Returns the committed snapshot.
+    and query hashes can never drift. A rebuild on the same root
+    replaces that config, so it also expires the earlier builds'
+    snapshots and deletes their files (``expire_snapshots``). Returns
+    the committed snapshot.
     """
     import json as _json
     import os as _os
 
     from feast_spark.sources.fileio import get_io
-    from feast_spark.sources.pages import write_table
+    from feast_spark.sources.pages import expire_snapshots, write_table
 
     if num_hashes % bands:
         raise ValueError("num_hashes must divide into bands evenly")
@@ -228,6 +231,7 @@ def build_minhash_index(
     get_io().write_atomic(
         _os.path.join(root, "_minhash.json"), _json.dumps(cfg)
     )
+    expire_snapshots(root, keep_last=1)
     return snap
 
 

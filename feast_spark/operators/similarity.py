@@ -315,18 +315,20 @@ def build_ann_index(
     a query's ≤``n_tables`` keys hash to (manifest pruning), so a point
     lookup touches ~``n_tables/n_buckets`` of the index instead of
     scanning the corpus; index writes inherit the layout's snapshot /
-    commit machinery (time travel, CAS commits, compaction).
+    commit machinery (CAS commits, compaction).
 
     ``corpus_count`` (a manifest stat — never counted here) sizes
     (n_bits, n_tables) via ``choose_lsh_params``. The hyperplane config
     is persisted beside the table; ``ann_index_topk`` reuses it, so
     served results are IDENTICAL to on-the-fly ``lsh_topk`` with the
-    same parameters. Returns the committed snapshot id."""
+    same parameters. A rebuild on the same root replaces that config, so
+    it also expires the earlier builds' snapshots and deletes their
+    files (``expire_snapshots``). Returns the committed snapshot id."""
     import json
     import os
 
     from feast_spark.sources.fileio import get_io
-    from feast_spark.sources.pages import write_table
+    from feast_spark.sources.pages import expire_snapshots, write_table
 
     if corpus_count is not None:
         auto_bits, auto_tables = choose_lsh_params(
@@ -364,6 +366,7 @@ def build_ann_index(
             }
         ),
     )
+    expire_snapshots(root, keep_last=1)
     return snap
 
 
@@ -751,12 +754,15 @@ def build_ivf_index(
     replication, unlike the ×n_tables LSH index), centroid matrix in
     ``_ivf.json`` beside it. Serving reads only the buckets the probed
     cells hash to (manifest pruning); writes inherit snapshots / CAS
-    commits / compaction. Returns the committed snapshot id."""
+    commits / compaction. A rebuild on the same root replaces the
+    centroids, so it also expires the earlier builds' snapshots and
+    deletes their files (``expire_snapshots``). Returns the committed
+    snapshot id."""
     import json
     import os
 
     from feast_spark.sources.fileio import get_io
-    from feast_spark.sources.pages import write_table
+    from feast_spark.sources.pages import expire_snapshots, write_table
 
     cent = centroids if centroids is not None else train_ivf_centroids(
         corpus, dim=dim, nlist=nlist, id_col=id_col, vec_col=vec_col,
@@ -783,6 +789,7 @@ def build_ivf_index(
             }
         ),
     )
+    expire_snapshots(root, keep_last=1)
     return snap
 
 

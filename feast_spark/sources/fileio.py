@@ -1,11 +1,11 @@
 """FileIO seam for table commits (VERDICT r02 next #2 / "what's wrong" #1).
 
 The layout's commit protocol is: write data files under UNIQUE names
-(``part-*/compact-<snap>-*/upsert-<snap>-*``), then publish them by
-committing a manifest, then flipping the single ``HEAD`` pointer. Data
-files never need atomic semantics — they are invisible until a manifest
-references them — so the whole object-store story reduces to the handful
-of mutation primitives below:
+(``<op>-<token>-NNNN`` from Spark writes, ``compact-<snap>-NNNN`` from
+compactions), then publish them by committing a manifest, then flipping
+the single ``HEAD`` pointer. Data files never need atomic semantics —
+they are invisible until a manifest references them — so the whole
+object-store story reduces to the handful of mutation primitives below:
 
 - ``write_atomic`` (manifest / HEAD / lineage): locally tmp+``os.replace``;
   on S3-class stores a plain PUT (objects appear atomically), with the
@@ -15,10 +15,6 @@ of mutation primitives below:
 - ``move`` (staged data file → final unique name): locally ``os.replace``;
   on object stores a copy+delete, which is safe precisely BECAUSE the
   destination name is unique and unreferenced until commit.
-- ``swap_dir`` (``write_table``'s overwrite of an existing table):
-  locally two renames; on object stores replaced by prefix-versioning —
-  the local impl documents the invariant (readers see old or new, never
-  a mix) rather than the mechanism.
 - ``remove`` / ``rmtree``: garbage collection; idempotent.
 - ``lock``: the per-directory commit lock around ``write_conditional``,
   and the serving store's writer lock on its root around each
@@ -40,9 +36,9 @@ from contextlib import contextmanager
 
 class CommitConflict(RuntimeError):
     """Another writer committed between this writer's snapshot read and
-    its HEAD flip (optimistic-concurrency loss). Append paths retry with
-    revalidation; rewrite paths (compact/upsert/zorder) surface it — the
-    caller re-runs against the new table state."""
+    its HEAD flip (optimistic-concurrency loss). ``write_table`` retries
+    with revalidation; rewrite paths (compact/upsert/zorder) surface it —
+    the caller re-runs against the new table state."""
 
 
 class FileIO:
@@ -113,18 +109,6 @@ class FileIO:
         a manifest commits."""
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.replace(src, dst)
-
-    def swap_dir(self, new_dir: str, dst_dir: str) -> None:
-        """Replace directory ``dst_dir`` with ``new_dir``. Invariant:
-        a reader concurrent with the swap sees the old tree or the new
-        tree, never a mix; a crash mid-swap leaves a recoverable state
-        (the ``.old`` backup) plus idempotent retry."""
-        bak = dst_dir + ".old"
-        shutil.rmtree(bak, ignore_errors=True)  # stale crash leftovers
-        if os.path.isdir(dst_dir):
-            os.replace(dst_dir, bak)
-        os.replace(new_dir, dst_dir)
-        shutil.rmtree(bak, ignore_errors=True)
 
     # -- garbage collection ------------------------------------------
     def remove(self, path: str) -> None:

@@ -7,16 +7,17 @@ module implements the needed subset of the public Iceberg table spec from
 scratch:
 
 - **Hidden partitioning** — layout ``data/dt=<days(ts)>/bucket=<pmod(
-  xxhash64(key), B)>/part-*.parquet``; writers compute both transforms
-  (Iceberg's ``days()`` + ``bucket()``), readers get file lists and never
-  see partition columns.
+  xxhash64(key), B)>/<op>-<token>-NNNN.parquet``; writers compute both
+  transforms (Iceberg's ``days()`` + ``bucket()``), readers get file
+  lists and never see partition columns.
 - **Sorted files** — every file is (key, ts)-sorted, which keeps its
   Parquet min/max zone maps on key and ts tight.
 - **Snapshots & manifests** — ``metadata/snap-<n>.json`` lists files with
   per-file stats ``{path, dt, bucket, rows, min/max ts, min/max key}``;
-  ``metadata/HEAD`` is the last-committed pointer (tmp+rename = Iceberg's
-  optimistic snapshot commit reduced to single-writer). Append snapshots
-  chain via ``parent``.
+  ``metadata/HEAD`` is the last-committed pointer, flipped by
+  compare-and-swap so concurrent writers commit one at a time (Iceberg's
+  optimistic snapshot commit). Append snapshots chain via ``parent``; an
+  overwrite is a snapshot without one, and no write deletes a file.
 - **Pruned reads** — the reader intersects query predicates (time range,
   bucket set) against the manifest before handing an explicit file list
   to ``spark.read.parquet(*files)``; Catalyst then adds row-group
@@ -28,10 +29,9 @@ A serving store (``materialize``) is a table of this layout without the
 Its snapshots record the key columns as a list in ``key_col``.
 
 Scale note: file stats are read from Parquet *footers only* (metadata
-pages, ~KB per file). The collection loop runs on the driver here
-(local FS); at 100 TB / 10^5+ files the same loop runs as a
-``mapInPandas`` over the file list — ``collect_stats_distributed`` below
-is that path and is what ``write_table(distributed_stats=True)`` uses.
+pages, ~KB per file), in a driver loop. ``upsert_table`` runs the same
+loop as a ``mapInPandas`` over the file list
+(``collect_stats_distributed``) above 32 new files.
 """
 
 from __future__ import annotations
@@ -89,7 +89,6 @@ def write_table(
     mode: str = "overwrite",
     dt_granularity: str = "day",
     allow_spec_evolution: bool = False,
-    distributed_stats: bool = False,
     branch: str | None = None,
     properties: dict | None = None,
 ) -> int:
@@ -103,11 +102,15 @@ def write_table(
     side-channel ledger write cannot lose the exactly-once evidence
     (``snapshot_with_summary`` finds it on replay).
 
-    ``mode="overwrite"`` replaces the table; ``"append"`` adds files and
-    chains a new snapshot onto the current one. The physical plan is one
-    shuffle (repartition on the partition transforms) + an in-task sort,
-    yielding exactly one (key, ts)-sorted file per (dt, bucket) slice of
-    the incoming data.
+    ``mode="append"`` adds files and chains a new snapshot onto the
+    current one. ``"overwrite"`` commits a snapshot with no parent that
+    lists only ``df``'s files, as Iceberg does: the files it replaces
+    stay on disk until ``expire_snapshots``, so ``read_table(snapshot=)``
+    still reads any earlier snapshot and a read planned before the
+    overwrite still finds its files. Snapshot ids keep rising across it.
+    The physical plan is one shuffle (repartition on the partition
+    transforms) + an in-task sort, yielding exactly one (key, ts)-sorted
+    file per (dt, bucket) slice of the incoming data.
 
     ``branch`` (append-only): commit onto a named BRANCH instead of
     HEAD — Iceberg's write-audit-publish staging. A new branch forks
@@ -122,104 +125,28 @@ def write_table(
         if mode != "append":
             raise ValueError("branch writes are append-only (WAP staging)")
         _check_ref_name(branch)
-        prev = branch_head(root, branch) or current_snapshot(root)
-    else:
-        prev = current_snapshot(root) if mode == "append" else None
-    if mode == "append" and prev is None and os.path.isdir(
-        os.path.join(root, DATA_DIR)
-    ):
-        # data without a committed HEAD = a crashed overwrite (ADVICE
-        # r02): appending would silently sweep the orphaned files into a
-        # fresh snapshot. Fail loudly; re-running the overwrite heals.
-        raise RuntimeError(
-            f"table at {root} has data but no committed HEAD "
-            "(interrupted overwrite?); re-run the overwrite to heal"
-        )
+
+    def read_ref() -> tuple[dict | None, dict | None]:
+        """(the ref's current snapshot, the snapshot this write chains onto)"""
+        if branch is not None:
+            bh = branch_head(root, branch)
+            return bh, bh or current_snapshot(root)
+        head = current_snapshot(root)
+        return head, head if mode == "append" else None
+
+    head, prev = read_ref()
     _validate_against_parent(prev, n_buckets, dt_granularity, allow_spec_evolution)
-    data_path = os.path.join(root, DATA_DIR)
-    staged = (
-        df.withColumn("dt", dt_expr(ts_col, dt_granularity))
-        .withColumn("bucket", bucket_expr(key_col, n_buckets))
-        .repartition("dt", "bucket")
-        # partition cols lead the sort so each task emits one run per dir
-        .sortWithinPartitions("dt", "bucket", key_col, ts_col)
-    )
-    if mode == "overwrite" and os.path.isdir(data_path):
-        # Crash-safe overwrite of an EXISTING table (r02 review): write
-        # the replacement beside the table, then swap directories. A
-        # failure anywhere during the Spark job (analysis OR execution)
-        # leaves the old data + metadata untouched; the crash window
-        # shrinks to the two renames, after which data.old still holds
-        # every byte.
-        io = get_io()
-        stage = os.path.join(root, "_staging", "overwrite")
-        io.rmtree(stage)
-        staged.write.partitionBy("dt", "bucket").mode("overwrite").parquet(stage)
-        # drop HEAD FIRST (ADVICE r02): a crash mid-swap then leaves the
-        # table loudly uninitialized (reads/appends raise) instead of a
-        # HEAD silently pointing at files that moved to data.old
-        meta = os.path.join(root, META_DIR)
-        io.remove(os.path.join(meta, "HEAD"))
-        io.swap_dir(stage, data_path)
-        if os.path.isdir(meta):
-            for name in os.listdir(meta):
-                if name.startswith("snap-") and name.endswith(".json"):
-                    io.remove(os.path.join(meta, name))
-            io.rmtree(os.path.join(meta, LINEAGE_DIR))
-    elif mode == "overwrite":
-        staged.write.partitionBy("dt", "bucket").mode("overwrite").parquet(
-            data_path
-        )
-    else:
-        # Append is multi-writer safe (VERDICT r03 next #3): each writer
-        # stages under a unique token and MOVES its files to unique
-        # ``append-<token>-*`` names, so it registers exactly the files
-        # it wrote — never a directory-listing diff, which would sweep a
-        # concurrent writer's in-flight files into this snapshot. The
-        # names are skipped by ``_list_data_files`` (like compact-*/
-        # upsert-*): a crash between move and commit leaves inert
-        # orphans for remove_orphan_files.
-        import uuid
-
-        io = get_io()
-        token = uuid.uuid4().hex[:12]
-        stage = os.path.join(root, "_staging", f"append-{token}")
-        io.rmtree(stage)
-        staged.write.partitionBy("dt", "bucket").mode("overwrite").parquet(
-            stage
-        )
-        new_files = []
-        seq = 0
-        for dirpath, dirs, files in os.walk(stage):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for f in sorted(files):
-                if not f.endswith(".parquet") or f.startswith((".", "_")):
-                    continue
-                rel_dir = os.path.relpath(dirpath, stage)
-                dst_rel = os.path.join(
-                    DATA_DIR, rel_dir, f"append-{token}-{seq:04d}.parquet"
-                )
-                io.move(os.path.join(dirpath, f), os.path.join(root, dst_rel))
-                new_files.append(dst_rel)
-                seq += 1
-        io.rmtree(stage)
-
-    if mode == "overwrite":
-        new_files = _list_data_files(root)
-    if distributed_stats:
-        # the 100 TB path: footer reads fan out across executors
-        stats = collect_stats_distributed(
-            df.sparkSession, root, new_files, key_col, ts_col
-        )
-    else:
-        stats = _collect_stats_local(root, new_files, key_col, ts_col)
+    stats = _collect_stats_local(root, _stage_and_publish(
+        _partitioned(df, key_col, ts_col, n_buckets, dt_granularity),
+        root, mode, ["dt", "bucket"],
+    ), key_col, ts_col)
 
     # Optimistic-concurrency commit loop: build parent-dependent
-    # metadata, CAS-commit, and on conflict re-read the new HEAD,
-    # re-validate, and retry. This writer's data files and their stats
-    # are conflict-free by construction (unique names, own stats); only
-    # the metadata merge re-runs.
-    for attempt in range(5):
+    # metadata, CAS the ref from the snapshot it was read at, and on
+    # conflict re-read the ref, re-validate, and retry. This writer's
+    # data files and their stats are conflict-free by construction
+    # (unique names, own stats); only the metadata merge re-runs.
+    for _ in range(5):
         spec_history = list(prev.get("spec_history", [])) if prev else []
         if prev and prev.get("dt_granularity", "day") != dt_granularity:
             spec_history.append(prev.get("dt_granularity", "day"))
@@ -261,49 +188,35 @@ def write_table(
             "files": (prev["files"] if prev else []) + stats,
         }
         try:
-            if branch is not None:
-                bh = branch_head(root, branch)
-                _commit_snapshot(
-                    root, snapshot,
-                    ref_name=_branch_ref(branch),
-                    ref_expected=(
-                        f"snap-{bh['snapshot_id']:06d}.json" if bh else None
-                    ),
-                )
-            else:
-                _commit_snapshot(root, snapshot)
+            _commit_snapshot(
+                root, snapshot,
+                ref_name="HEAD" if branch is None else _branch_ref(branch),
+                ref_expected=(
+                    f"snap-{head['snapshot_id']:06d}.json" if head else None
+                ),
+            )
             return snap_id
         except CommitConflict:
-            if mode == "overwrite":
-                # an overwrite raced another writer across the dir swap —
-                # not retryable (the tree was replaced); surface it
-                raise
-            prev = (
-                branch_head(root, branch) or current_snapshot(root)
-                if branch is not None
-                else current_snapshot(root)
-            )
-            if prev is None:
-                raise  # concurrent overwrite dropped HEAD mid-append
-            # a COMPLETED overwrite swept data/ (including this append's
-            # moved files) before we could commit — retrying would commit
-            # a snapshot referencing deleted files (r04 review batch 2).
-            # Cheap driver-side existence probe on our own files only.
-            missing = [
-                f["path"] for f in stats
-                if not os.path.exists(os.path.join(root, f["path"]))
-            ]
-            if missing:
-                raise CommitConflict(
-                    f"append to {root} lost its data files to a concurrent "
-                    f"overwrite (e.g. {missing[0]}); re-run the append "
-                    "against the new table"
-                )
+            head, prev = read_ref()
             _validate_against_parent(
                 prev, n_buckets, dt_granularity, allow_spec_evolution
             )
     raise CommitConflict(
-        f"append to {root} lost {5} consecutive commit races; giving up"
+        f"{mode} to {root} lost 5 consecutive commit races; giving up"
+    )
+
+
+def _partitioned(
+    df: DataFrame, key_col: str, ts_col: str, n_buckets: int, dt_granularity: str
+) -> DataFrame:
+    """``df`` with the hidden ``dt``/``bucket`` columns, shuffled on them
+    and sorted within tasks: one (key, ts)-sorted file per (dt, bucket)."""
+    return (
+        df.withColumn("dt", dt_expr(ts_col, dt_granularity))
+        .withColumn("bucket", bucket_expr(key_col, n_buckets))
+        .repartition("dt", "bucket")
+        # partition cols lead the sort so each task emits one run per dir
+        .sortWithinPartitions("dt", "bucket", key_col, ts_col)
     )
 
 
@@ -332,26 +245,6 @@ def _validate_against_parent(
                 f"{dt_granularity!r}); pass allow_spec_evolution=True "
                 "for Iceberg-style partition-spec evolution"
             )
-
-
-def _list_data_files(root: str) -> list[str]:
-    """Relative paths of all parquet data files under root/data.
-    Skips hidden/temporary entries (Spark ``_temporary``, ``.crc``) and
-    ``compact-*`` / ``upsert-*`` / ``append-*`` files — those outputs
-    are only ever referenced via the snapshot that committed them, so a
-    crash between their write and commit leaves orphans that must NOT be
-    swept into a later overwrite's snapshot (they would duplicate rows)."""
-    data_path = os.path.join(root, DATA_DIR)
-    out = []
-    for dirpath, dirs, files in os.walk(data_path):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if (
-                f.endswith(".parquet")
-                and not f.startswith((".", "_", "compact-", "upsert-", "append-"))
-            ):
-                out.append(os.path.relpath(os.path.join(dirpath, f), root))
-    return sorted(out)
 
 
 def _partition_of(rel_path: str) -> tuple[str, int]:
@@ -496,6 +389,51 @@ def collect_stats_distributed(
     return sorted(stats, key=lambda s: s["path"])
 
 
+# above this many new files, ``upsert_table`` reads footer stats on
+# executors (``collect_stats_distributed``) instead of in a driver loop
+_LOCAL_STATS_MAX_FILES = 32
+
+
+def _stage_and_publish(
+    df: DataFrame,
+    root: str,
+    op: str,
+    partition_cols: list[str],
+) -> list[str]:
+    """The data-file half of every Spark-written commit: write ``df``
+    partitioned by ``partition_cols`` under ``_staging/``, move each file
+    to a unique ``data/<partition dirs>/<op>-<token>-NNNN.parquet`` name
+    (a ``__bucket=`` staging level lands as ``bucket=``), remove the
+    stage, and return the new files' paths relative to ``root``; the
+    caller reads their footer stats. The files are inert
+    until the caller commits a snapshot listing them: a crash before
+    that leaves orphans for ``remove_orphan_files``, never rows."""
+    import uuid
+
+    io = get_io()
+    token = uuid.uuid4().hex[:12]
+    stage = os.path.join(root, "_staging", f"{op}-{token}")
+    rel_paths: list[str] = []
+    try:
+        df.write.partitionBy(*partition_cols).parquet(stage)
+        for dirpath, dirs, files in os.walk(stage):
+            dirs[:] = sorted(d for d in dirs if "=" in d)  # partition levels
+            rel_dir = os.path.relpath(dirpath, stage).replace(
+                "__bucket=", "bucket="
+            )
+            for f in sorted(files):
+                if not f.endswith(".parquet") or f.startswith((".", "_")):
+                    continue
+                rel = os.path.normpath(os.path.join(
+                    DATA_DIR, rel_dir, f"{op}-{token}-{len(rel_paths):04d}.parquet"
+                ))
+                io.move(os.path.join(dirpath, f), os.path.join(root, rel))
+                rel_paths.append(rel)
+    finally:
+        io.rmtree(stage)
+    return rel_paths
+
+
 def next_snapshot_id(root: str, prev: dict | None) -> int:
     """1 + the highest snapshot id ON DISK (not ``prev + 1``): after a
     ``rollback`` HEAD points at an older snapshot, and a prev+1 commit
@@ -529,18 +467,19 @@ def _commit_snapshot(
        loses here — before anything is visible — instead of silently
        overwriting the winner's manifest.
     2. FLIP HEAD conditionally: expected content is the PARENT's snap
-       name (None for a fresh/overwritten table — overwrite removes HEAD
-       first). A mismatch means someone committed since this writer read
-       its parent; the claimed snap file is removed (it was never
-       referenced) and CommitConflict tells the caller to revalidate.
+       name (None for a new table). A mismatch means someone committed
+       since this writer read its parent; the claimed snap file is
+       removed (it was never referenced) and CommitConflict tells the
+       caller to revalidate.
 
-    Both failure modes raise CommitConflict; append retries with
-    revalidation inside write_table, rewrite ops (compact/upsert/zorder)
-    surface it to the caller for a re-run against the new state.
+    Both failure modes raise CommitConflict; write_table retries with
+    revalidation, rewrite ops (compact/upsert/zorder) surface it to the
+    caller for a re-run against the new state.
 
-    ``ref_name``/``ref_expected``: commit onto a named branch ref file
-    instead of HEAD (write-audit-publish staging). ``ref_expected`` is
-    the branch's prior content (None = creating the branch); the default
+    ``ref_name``/``ref_expected``: the ref file to flip and its expected
+    prior content (None = the ref must not exist yet). write_table passes
+    both: a branch ref for write-audit-publish staging, and for an
+    overwrite, which has no parent, the HEAD it read. The default
     sentinel keeps HEAD's parent-derived expectation."""
     io = get_io()
     meta = os.path.join(root, META_DIR)
@@ -756,11 +695,11 @@ def remove_orphan_files(
     root: str, *, dry_run: bool = False, min_age_s: float = 3 * 86400
 ) -> dict:
     """Iceberg ``remove_orphan_files``: delete data files no snapshot
-    references — crash leftovers from interrupted upserts/compactions
-    (their unique ``upsert-*/compact-*`` names keep them inert but they
-    still occupy storage). Driver-side listing here; at 100 TB the walk
-    fans out like ``collect_stats_distributed`` (same file-list
-    mapInPandas shape). Never touches ``_staging`` mid-write dirs.
+    references — crash leftovers from interrupted writes (their unique
+    names keep them inert but they still occupy storage). Driver-side
+    listing here; at 100 TB the walk fans out like
+    ``collect_stats_distributed`` (same file-list mapInPandas shape).
+    Never touches ``_staging`` mid-write dirs.
 
     ``min_age_s`` (Iceberg's ``older_than``, default 3 days): appends
     are MULTI-writer, so an unreferenced file may belong to a concurrent
@@ -793,11 +732,19 @@ def remove_orphan_files(
         try:
             return os.path.getmtime(os.path.join(root, rel)) <= cutoff
         except OSError:
-            return False  # vanished since listing (concurrent overwrite
-            # dir-swap / expire / parallel sweep) — nothing to remove
+            return False  # vanished since listing (concurrent expire /
+            # parallel sweep) — nothing to remove
 
+    data_files = []
+    for dirpath, dirs, files in os.walk(os.path.join(root, DATA_DIR)):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        data_files += [
+            os.path.relpath(os.path.join(dirpath, f), root)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
     orphans = [
-        p for p in _list_all_data_files(root)
+        p for p in sorted(data_files)
         if p not in referenced and _old_enough(p)
     ]
     freed = 0
@@ -813,19 +760,6 @@ def remove_orphan_files(
         "bytes_freed": 0 if dry_run else freed,
         "paths": sorted(orphans),
     }
-
-
-def _list_all_data_files(root: str) -> list[str]:
-    """Like ``_list_data_files`` but INCLUDING upsert-*/compact-* names —
-    the orphan sweeper must see what appends deliberately ignore."""
-    data_path = os.path.join(root, DATA_DIR)
-    out = []
-    for dirpath, dirs, files in os.walk(data_path):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                out.append(os.path.relpath(os.path.join(dirpath, f), root))
-    return sorted(out)
 
 
 def _refs_path(root: str) -> str:
@@ -1100,10 +1034,19 @@ def plan_files(
     )
     if snap is None:
         raise FileNotFoundError(f"no table at {root}")
+    return snap, _prune(snap["files"], start, end, buckets, col_ranges)
+
+
+def _prune(
+    files: list[dict], start, end, buckets: set[int] | None,
+    col_ranges: dict | None = None,
+) -> list[dict]:
+    """The file stats of ``files`` that may hold rows in ``[start, end)``,
+    in ``buckets`` and inside ``col_ranges`` — every reader's pruning."""
     start_s = _ts_str(start)
     end_s = _ts_str(end)
     keep = []
-    for fstat in snap["files"]:
+    for fstat in files:
         if buckets is not None and fstat["bucket"] not in buckets:
             continue
         if start_s and fstat["max_ts"] and fstat["max_ts"] < start_s:
@@ -1113,7 +1056,7 @@ def plan_files(
         if col_ranges and not _col_ranges_overlap(fstat, col_ranges):
             continue
         keep.append(fstat)
-    return snap, keep
+    return keep
 
 
 def _col_ranges_overlap(fstat: dict, col_ranges: dict) -> bool:
@@ -1177,6 +1120,14 @@ def read_table(
         root, snapshot=snapshot, start=start, end=end, buckets=buckets,
         col_ranges=col_ranges,
     )
+    return _scan(spark, root, snap, files)
+
+
+def _scan(
+    spark: SparkSession, root: str, snap: dict, files: list[dict]
+) -> DataFrame:
+    """A DataFrame over ``files`` of ``root`` with ``snap``'s schema —
+    every reader's one step from manifest entries to Spark."""
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     if not files:
         return spark.createDataFrame([], schema)
@@ -1274,22 +1225,7 @@ def read_table_incremental(
     ``read_table``; append-only ranges are enforced (see
     ``added_files``)."""
     snap, files = added_files(root, from_snapshot, to_snapshot)
-    start_s = _ts_str(start)
-    end_s = _ts_str(end)
-    keep = []
-    for fstat in files:
-        if buckets is not None and fstat["bucket"] not in buckets:
-            continue
-        if start_s and fstat["max_ts"] and fstat["max_ts"] < start_s:
-            continue
-        if end_s and fstat["min_ts"] and fstat["min_ts"] >= end_s:
-            continue
-        keep.append(fstat)
-    schema = T.StructType.fromJson(json.loads(snap["schema"]))
-    if not keep:
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(root, f["path"]) for f in keep]
-    return spark.read.schema(schema).parquet(*paths)
+    return _scan(spark, root, snap, _prune(files, start, end, buckets))
 
 
 def buckets_of_frame(df: DataFrame, key_cols: list[str], n_buckets: int) -> list[int]:
@@ -1370,18 +1306,12 @@ def list_lineage(root: str) -> list[dict]:
 # ------------------------------------------------------------- upsert ------
 
 
-# above this many rewritten files, upsert fans footer reads out across
-# executors instead of a driver-sequential loop (VERDICT r02 next #5)
-UPSERT_DIST_STATS_THRESHOLD = 32
-
-
 def upsert_table(
     spark: SparkSession,
     root: str,
     updates: DataFrame,
     *,
     delete: bool = False,
-    dist_stats_threshold: int = UPSERT_DIST_STATS_THRESHOLD,
 ) -> int:
     """Copy-on-write row-level MERGE (Iceberg's copy-on-write write mode,
     re-derived): rows in ``updates`` REPLACE existing rows sharing the
@@ -1392,8 +1322,10 @@ def upsert_table(
     — the manifest locates them without scanning (``buckets_of_frame``
     of the update keys, collected driver-side, bounded by B);
     unaffected files carry over into the new snapshot untouched. Old
-    files stay on disk for time travel until ``expire_snapshots``.
-    Single-writer, like every commit here. Returns the new snapshot id.
+    files stay on disk for time travel until ``expire_snapshots``. A
+    commit that lands between this call's HEAD read and its own makes it
+    raise ``CommitConflict``; re-run it against the new table. Returns
+    the new snapshot id.
     """
     snap = current_snapshot(root)
     if snap is None:
@@ -1423,14 +1355,9 @@ def upsert_table(
     keep_files = [f for f in snap["files"] if f["bucket"] not in affected]
     touch_files = [f for f in snap["files"] if f["bucket"] in affected]
 
-    existing = (
-        spark.read.schema(schema).parquet(
-            *[os.path.join(root, f["path"]) for f in touch_files]
-        )
-        if touch_files
-        else spark.createDataFrame([], schema)
+    existing = _scan(spark, root, snap, touch_files).withColumn(
+        ts_col, F.col(ts_col).cast("timestamp")
     )
-    existing = existing.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
 
     if delete:
         merged = existing.join(
@@ -1469,45 +1396,17 @@ def upsert_table(
         cols = [f.name for f in schema.fields]
         merged = replaced.select(*cols).unionByName(appended.select(*cols))
 
-    # stage the rewrite OUTSIDE data/, then move files in under
-    # ``upsert-<snap>-*`` names (which _list_data_files ignores) — a
-    # crash before commit leaves inert orphans, never files a later
-    # append could mistake for its own and double-register
-    new_snap_id = next_snapshot_id(root, snap)
-    stage = os.path.join(root, "_staging", f"upsert-{new_snap_id:06d}")
-    staged = (
-        merged.withColumn("dt", dt_expr(ts_col, gran))
-        .withColumn("bucket", bucket_expr(key_col, n_buckets))
-        .repartition("dt", "bucket")
-        .sortWithinPartitions("dt", "bucket", key_col, ts_col)
+    new_paths = _stage_and_publish(
+        _partitioned(merged, key_col, ts_col, n_buckets, gran),
+        root, "upsert", ["dt", "bucket"],
     )
-    staged.write.partitionBy("dt", "bucket").mode("overwrite").parquet(stage)
-
-    io = get_io()
-    new_paths: list[str] = []
-    seq = 0
-    for dirpath, dirs, files in os.walk(stage):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for fname in sorted(files):
-            if not fname.endswith(".parquet") or fname.startswith((".", "_")):
-                continue
-            rel_dir = os.path.relpath(dirpath, stage)  # dt=.../bucket=...
-            rel = os.path.join(
-                DATA_DIR, rel_dir, f"upsert-{new_snap_id:06d}-{seq:04d}.parquet"
-            )
-            io.move(os.path.join(dirpath, fname), os.path.join(root, rel))
-            new_paths.append(rel)
-            seq += 1
-    io.rmtree(stage)
-    # a wide upsert touching many buckets must not serialize footer reads
-    # on the driver: route through the executor fan-out above the
-    # threshold (same path write_table(distributed_stats=True) uses)
-    if len(new_paths) > dist_stats_threshold:
+    if len(new_paths) > _LOCAL_STATS_MAX_FILES:
         new_stats = collect_stats_distributed(
             spark, root, new_paths, key_col, ts_col
         )
     else:
         new_stats = _collect_stats_local(root, new_paths, key_col, ts_col)
+    new_snap_id = next_snapshot_id(root, snap)
     new_snap = {
         **snap,
         "snapshot_id": new_snap_id,

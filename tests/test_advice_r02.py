@@ -2,9 +2,9 @@
 
 1. pages._file_stats: decimal/bytes parquet stats must not reach the
    json.dump'd snapshot (commit crash for tables with such columns).
-2. pages.write_table overwrite: HEAD is dropped before the data-dir swap
-   so a crash leaves the table loudly uninitialized, and append on a
-   data-without-HEAD root raises instead of silently re-registering.
+2. pages.write_table overwrite: a crash before the commit leaves the
+   old HEAD serving the old rows, and a later append registers only its
+   own files, never a crashed write's.
 3. MaterializeJob.run records the key columns and their dtype in the
    store's snapshot (read_online then never reads a parquet footer on
    the serving hot path).
@@ -71,42 +71,47 @@ def _mk_table(spark, root, n=6):
     layout.write_table(df, root, n_buckets=2)
 
 
-def test_append_on_headless_data_raises(spark, tmp_path):
-    """Data dir present but no committed HEAD = interrupted overwrite;
-    append must fail loudly, and a fresh overwrite heals the table."""
+def _crash_at_commit(monkeypatch):
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before commit")
+
+    monkeypatch.setattr(layout, "_commit_snapshot", crash)
+
+
+def test_append_after_crashed_overwrite_commits_own_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A first overwrite that crashes before its commit leaves data
+    files and no HEAD; an append then registers exactly the files it
+    wrote, never the crashed write's."""
+    root = str(tmp_path / "tbl")
+    _crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _mk_table(spark, root)
+    monkeypatch.undo()
+    assert layout.current_snapshot(root) is None
+    assert os.listdir(os.path.join(root, layout.DATA_DIR))  # orphans
+    df = spark.createDataFrame([Row(url="x", warc_ts="2023-06-02 00:00:00", v=9)])
+    layout.write_table(df, root, n_buckets=2, mode="append")
+    assert [r["url"] for r in layout.read_table(spark, root).collect()] == ["x"]
+
+
+def test_overwrite_crash_before_commit_keeps_old_head(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the overwrite moved its files but before its commit
+    leaves the old HEAD serving the old rows; a re-run heals."""
     root = str(tmp_path / "tbl")
     _mk_table(spark, root)
-    os.remove(os.path.join(root, layout.META_DIR, "HEAD"))
     df = spark.createDataFrame([Row(url="x", warc_ts="2023-06-02 00:00:00", v=9)])
-    with pytest.raises(RuntimeError, match="no committed HEAD"):
-        layout.write_table(df, root, n_buckets=2, mode="append")
-    # overwrite heals
-    layout.write_table(df, root, n_buckets=2, mode="overwrite")
-    assert layout.read_table(spark, root).count() == 1
-
-
-def test_overwrite_drops_head_before_swap(spark, tmp_path, monkeypatch):
-    """Crash injected at the first data-dir rename: HEAD must already be
-    gone (loudly uninitialized) rather than pointing at moved files."""
-    root = str(tmp_path / "tbl")
-    _mk_table(spark, root)
-    df = spark.createDataFrame([Row(url="x", warc_ts="2023-06-02 00:00:00", v=9)])
-
-    real_replace = os.replace
-    data_path = os.path.join(root, layout.DATA_DIR)
-
-    def crashing_replace(src, dst):
-        if src == data_path:  # the data -> data.old swap
-            raise RuntimeError("injected crash mid-overwrite")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", crashing_replace)
+    _crash_at_commit(monkeypatch)
     with pytest.raises(RuntimeError, match="injected crash"):
         layout.write_table(df, root, n_buckets=2, mode="overwrite")
     monkeypatch.undo()
-    assert layout.current_snapshot(root) is None  # loud, not stale
-    with pytest.raises(RuntimeError, match="no committed HEAD"):
-        layout.write_table(df, root, n_buckets=2, mode="append")
+    assert layout.current_snapshot(root)["snapshot_id"] == 1
+    assert layout.read_table(spark, root).count() == 6
+    assert layout.write_table(df, root, n_buckets=2, mode="overwrite") == 2
+    assert [r["url"] for r in layout.read_table(spark, root).collect()] == ["x"]
 
 
 def test_store_meta_records_key_type(spark, tmp_path):

@@ -212,8 +212,8 @@ class TestConcurrentAppend:
 class TestCrashedAppendOrphans:
     def test_crashed_append_files_stay_inert(self, spark, tmp_path, io_guard):
         """A crash between the staged-file moves and the commit leaves
-        append-* orphans that a later overwrite discovery must ignore
-        and remove_orphan_files can sweep."""
+        append-* orphans that no snapshot lists and remove_orphan_files
+        can sweep."""
 
         class CrashBeforeCommit(fileio.FileIO):
             def write_conditional(self, path, text, expected):
@@ -252,11 +252,11 @@ class TestCrashedAppendOrphans:
         assert layout.read_table(spark, root).count() == 8
 
 
-def test_append_racing_completed_overwrite_refuses(spark, tmp_path, monkeypatch):
-    """r04 review batch 2: an append that loses its commit race to a
-    COMPLETED overwrite must refuse, not retry — the overwrite's dir
-    swap already moved the append's data files aside, so a retried
-    commit would reference files that no longer exist."""
+def test_append_racing_completed_overwrite_retries(spark, tmp_path, monkeypatch):
+    """An append that loses its commit race to a COMPLETED overwrite
+    retries on top of it: the overwrite deleted no file, so the retried
+    snapshot holds the overwrite's rows plus the append's, and every
+    file it lists exists."""
     root = str(tmp_path / "t")
     df = lambda tag, n: spark.createDataFrame(  # noqa: E731
         _rows(tag, n, 1), "url string, warc_ts string, v string"
@@ -276,9 +276,15 @@ def test_append_racing_completed_overwrite_refuses(spark, tmp_path, monkeypatch)
         return real_commit(root_, snapshot, **kw)
 
     monkeypatch.setattr(layout, "_commit_snapshot", racing_commit)
-    with pytest.raises(layout.CommitConflict, match="lost its data files"):
-        layout.write_table(df("app", 2), root, n_buckets=2, mode="append")
-    # the table is exactly the overwrite's content — the refused append
-    # neither committed nor corrupted anything
-    got = {r["url"] for r in layout.read_table(spark, root).collect()}
-    assert got == {f"https://x.test/over{i}" for i in range(2)}
+    layout.write_table(df("app", 2), root, n_buckets=2, mode="append")
+    head = layout.current_snapshot(root)
+    assert head["operation"] == "append"
+    assert layout.load_snapshot(root, head["parent"])["operation"] == "overwrite"
+    got = sorted(r["url"] for r in layout.read_table(spark, root).collect())
+    assert got == sorted(
+        [f"https://x.test/over{i}" for i in range(2)]
+        + [f"https://x.test/app{i}" for i in range(2)]
+    )
+    assert all(
+        os.path.exists(os.path.join(root, f["path"])) for f in head["files"]
+    )

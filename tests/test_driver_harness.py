@@ -1,8 +1,9 @@
 """Replica of the driver's correctness gate: run every ``queries()`` entry
 at sf0.01 and compare row-count + order-insensitive values against
 ``oracle_sql()`` in DuckDB (SURVEY.md §5.2.6). The queries that write
-and read the serving store also run under a new session that writes
-Spark's default INT96 parquet timestamps instead of the engine's."""
+and read the serving store or a layout table also run under a new
+session that writes Spark's default INT96 parquet timestamps instead of
+the engine's."""
 
 from __future__ import annotations
 
@@ -79,6 +80,26 @@ def test_serving_query_under_int96_session(spark, duck, name, monkeypatch):
     s.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     # a fresh composite store, written by this session
     monkeypatch.setattr(entrymod, "_COMPOSITE_STORES", {})
+    _check_against_oracle(s, duck, name)
+
+
+#: one driver query per layout write family: append and time travel,
+#: incremental read, branch publish, upsert, compaction, spec evolution
+#: and the snapshots metadata table
+LAYOUT_SLICE = [
+    "layout_time_travel", "layout_incremental", "layout_wap_publish",
+    "layout_upsert", "layout_compact_roundtrip", "layout_spec_evolution",
+    "table_history",
+]
+
+
+@pytest.mark.parametrize("name", LAYOUT_SLICE)
+def test_layout_query_under_int96_session(spark, duck, name):
+    """The layout's writes read footer stats too, and compaction
+    rewrites INT96 files with pyarrow: the same answers under a session
+    without the engine's timestamp output type."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     _check_against_oracle(s, duck, name)
 
 

@@ -269,38 +269,6 @@ def test_compaction_after_schema_evolution(spark, pages_df, tmp_path_factory):
     assert all(len(v) == 1 for v in cells.values())
 
 
-def test_overwrite_resets_stale_snapshots(spark, pages_df, tmp_path_factory):
-    """ADVICE r01: overwriting a multi-snapshot table must not leave
-    snap-000002+.json pointing at deleted data — time travel to them and
-    expire_snapshots both have to behave."""
-    import os
-
-    root = str(tmp_path_factory.mktemp("ovw") / "t")
-    half1 = pages_df.filter(F.col("lang") != "zz")
-    half2 = pages_df.filter(F.col("lang") == "zz")
-    layout.write_table(half1, root, n_buckets=B, dt_granularity="month")
-    layout.write_table(half2, root, n_buckets=B, mode="append", dt_granularity="month")
-    layout.write_table(half2, root, n_buckets=B, mode="append", dt_granularity="month")
-
-    n_new = half1.limit(30).count()
-    layout.write_table(
-        half1.limit(30), root, n_buckets=B, dt_granularity="month"
-    )  # mode=overwrite default
-    snaps = sorted(
-        f for f in os.listdir(os.path.join(root, "metadata"))
-        if f.startswith("snap-")
-    )
-    assert snaps == ["snap-000001.json"], snaps
-    assert layout.read_table(spark, root).count() == n_new
-    # expire on the fresh table is a no-op, not a crash
-    res = layout.expire_snapshots(root, keep_last=1)
-    assert res["snapshots_removed"] == 0
-    # and appending continues normally from snapshot 1
-    layout.write_table(half2.limit(5), root, n_buckets=B, mode="append",
-                       dt_granularity="month")
-    assert layout.current_snapshot(root)["snapshot_id"] == 2
-
-
 def test_column_stats_pruning(spark, pages_df, tmp_path_factory):
     """Per-column manifest stats (Iceberg column stats): a range filter
     on a NON-key column prunes files, and pruned-scan + residual filter
@@ -490,21 +458,22 @@ def test_zorder_compaction_improves_two_dim_skipping(spark, tmp_path_factory):
 
 
 def test_write_table_distributed_stats(spark, pages_df, tmp_path_factory):
-    """distributed_stats=True produces the identical manifest via the
-    executor-side footer fan-out."""
-    base = tmp_path_factory.mktemp("dstats")
-    a, b = str(base / "local"), str(base / "dist")
-    layout.write_table(pages_df.limit(150), a, n_buckets=B,
+    """The executor-side footer fan-out reproduces the manifest that
+    ``write_table``'s driver loop committed."""
+    root = str(tmp_path_factory.mktemp("dstats") / "t")
+    layout.write_table(pages_df.limit(150), root, n_buckets=B,
                        dt_granularity="month")
-    layout.write_table(pages_df.limit(150), b, n_buckets=B,
-                       dt_granularity="month", distributed_stats=True)
+    files = layout.current_snapshot(root)["files"]
+    dist = layout.collect_stats_distributed(
+        spark, root, [f["path"] for f in files], "url", "warc_ts"
+    )
     fa = [
         (f["dt"], f["bucket"], f["rows"], f["min_ts"], f["max_ts"])
-        for f in layout.current_snapshot(a)["files"]
+        for f in files
     ]
     fb = [
         (f["dt"], f["bucket"], f["rows"], f["min_ts"], f["max_ts"])
-        for f in layout.current_snapshot(b)["files"]
+        for f in dist
     ]
     assert sorted(fa) == sorted(fb) and fa
 
@@ -588,7 +557,8 @@ def test_upsert_wide_uses_distributed_stats(spark, tmp_path_factory, monkeypatch
         [Row(url=f"u{i}", warc_ts="2023-06-01 00:00:00", v=i + 1000)
          for i in range(64)]
     )
-    layout.upsert_table(spark, root, updates, dist_stats_threshold=2)
+    monkeypatch.setattr(layout, "_LOCAL_STATS_MAX_FILES", 2)
+    layout.upsert_table(spark, root, updates)
     assert calls["dist"] == 1 and calls["local"] == 0
     got = layout.read_table(spark, root).toPandas().sort_values("url")
     assert (got["v"] >= 1000).all() and len(got) == 64
