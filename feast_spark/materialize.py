@@ -48,12 +48,15 @@ listed by ``metadata/snap-*.json`` snapshots, which also record the
 store's ``n_buckets``, key columns, ``ts_col`` and schema.
 Materialization and ``push_to_online`` both land rows through
 ``_merge_into_store``. Under the store's writer lock (``FileIO.lock`` on
-``<dest>``) it reads the touched buckets' files of the HEAD snapshot,
-merges incoming over served rows, writes the merged buckets as new
-uniquely named files and commits one snapshot: the parent's files, minus
-the touched buckets', plus the new ones. Writers serialize; superseded
-files stay on disk until ``pages.expire_snapshots``, so a reader that
-planned an older snapshot still finds every file it planned.
+``<dest>``) it hands its merge rule — latest row per key, incoming over
+served — to ``pages._rewrite_buckets``, the copy-on-write step that
+``pages.upsert_table`` shares: the incoming keys take the store's key
+dtypes, the touched buckets' files of the HEAD snapshot are read and
+merged, the merged buckets are written as new uniquely named files, and
+one snapshot commits the parent's files, minus the touched buckets',
+plus the new ones. Writers serialize; superseded files stay on disk
+until ``pages.expire_snapshots``, so a reader that planned an older
+snapshot still finds every file it planned.
 """
 
 from __future__ import annotations
@@ -296,8 +299,9 @@ class MaterializeJob:
         df = self._scan(start, end, buckets).observe(scanned, _n_rows())
         if self.transform is not None:
             # the transform sees only each key's latest candidates, in the
-            # source schema; latest_per_key's hash tie-break below picks
-            # among them. An entity-less view ranks all rows as one key.
+            # source schema; the store merge's latest_per_key hash
+            # tie-break picks among them. An entity-less view ranks all
+            # rows as one key.
             df = latest_candidates(
                 df, key=[] if dummy else keys, order=ts, created_col=created
             )
@@ -305,9 +309,8 @@ class MaterializeJob:
             df = df.observe(returned, _n_rows())
         if dummy:
             df = df.withColumn(self.DUMMY_KEY, F.lit(1))
-        latest = latest_per_key(df, key=keys, order=ts, created_col=created)
         _merge_into_store(
-            self.spark, self.dest, latest, buckets,
+            self.spark, self.dest, df, buckets,
             key_cols=keys, ts_col=ts, created_col=created,
             n_buckets=self.n_buckets,
             on_merged=lambda merged: merged.observe(
@@ -615,11 +618,12 @@ def push_to_online(
     read-modify-write of ONLY the buckets containing pushed keys — the
     touched-bucket set is bounded by the store modulus, and unaffected
     buckets are never opened; the write is ``_merge_into_store``'s.
-    Returns {rows_pushed, buckets_touched}."""
+    Keys are hashed with the store's key dtypes, whatever the pushed
+    frame's. Returns {rows_pushed, buckets_touched}."""
     head = layout.current_snapshot(dest)
     if head is None:
         raise FileNotFoundError(f"no serving store at {dest}")
-    key_cols, n_buckets = head["key_col"], head["n_buckets"]
+    key_cols = head["key_col"]
 
     df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if key_cols == [MaterializeJob.DUMMY_KEY] and (
@@ -627,20 +631,19 @@ def push_to_online(
     ):
         # entity-less store: inject the constant key like materialize
         df = df.withColumn(MaterializeJob.DUMMY_KEY, F.lit(1))
-    touched = layout.buckets_of_frame(df, key_cols, n_buckets)
-    if not touched:  # empty push batch: nothing to merge or commit
-        return {"rows_pushed": 0, "buckets_touched": []}
     # observe the deduped PUSHED batch, not the merged buckets: rows_pushed
     # is the batch size (ADVICE r03). It rides the store write.
     obs = Observation()
-    latest = latest_per_key(
-        df, key=key_cols, order=ts_col, created_col=created_col
-    ).observe(obs, F.count(F.lit(1)).alias("rows"))
-    _merge_into_store(
-        spark, dest, latest, touched,
+    touched = _merge_into_store(
+        spark, dest, df, None,
         key_cols=key_cols, ts_col=ts_col, created_col=created_col,
-        n_buckets=n_buckets,
+        n_buckets=head["n_buckets"],
+        on_latest=lambda latest: latest.observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        ),
     )
+    if not touched:  # empty push batch: nothing merged or committed
+        return {"rows_pushed": 0, "buckets_touched": []}
     return {"rows_pushed": obs.get["rows"], "buckets_touched": touched}
 
 
@@ -648,26 +651,48 @@ def _merge_into_store(
     spark: SparkSession,
     dest: str,
     fresh: DataFrame,
-    buckets: list[int],
+    buckets: list[int] | None,
     *,
     key_cols: list[str],
     ts_col: str,
     created_col: str | None,
     n_buckets: int,
+    on_latest: Callable[[DataFrame], DataFrame] | None = None,
     on_merged: Callable[[DataFrame], DataFrame] | None = None,
-) -> None:
+) -> list[int]:
     """The serving store's one write path (module docstring): merge the
-    latest-per-key rows ``fresh`` into ``buckets``, new wins, and commit
-    the merged buckets' new files as one snapshot. The writer lock is on
-    ``dest``, not on ``metadata/``, whose lock the snapshot commit takes
-    itself (``FileIO.lock`` is not re-entrant): no caller may hold it.
-    Rows whose columns differ from the served ones raise ``ValueError``
-    before anything is written. ``on_merged`` wraps the merged rows (a
-    caller's observation rides the write)."""
+    latest row per key of ``fresh`` into ``buckets`` (None: the buckets
+    of ``fresh``'s keys), new wins, through ``layout._rewrite_buckets``;
+    returns the touched buckets. The writer lock is on ``dest``, not on
+    ``metadata/``, whose lock the snapshot commit takes itself
+    (``FileIO.lock`` is not re-entrant): no caller may hold it. Rows
+    whose columns differ from the served ones raise ``ValueError``
+    before anything is written. ``on_latest`` wraps ``fresh``'s latest
+    rows and ``on_merged`` the merged ones (a caller's observation rides
+    the write)."""
+
+    def new_wins(fresh: DataFrame, served: DataFrame | None) -> DataFrame:
+        latest = latest_per_key(
+            fresh, key=key_cols, order=ts_col, created_col=created_col
+        )
+        if on_latest is not None:
+            latest = on_latest(latest)
+        if served is None:
+            return latest
+        # incoming rows outrank served rows at equal (key, ts, created):
+        # re-materialization is a CORRECTION (late-event aggregate fixes,
+        # transform changes) and must overwrite
+        return latest_per_key(
+            latest.withColumn("__fresh", F.lit(1)).unionByName(
+                served.withColumn("__fresh", F.lit(0))
+            ),
+            key=key_cols, order=ts_col, created_col=created_col,
+            precedence_col="__fresh",
+        ).drop("__fresh")
+
     with fileio.get_io().lock(dest):
         parent = layout.current_snapshot(dest)
         _check_store(dest, parent, n_buckets, key_cols)
-        merged = fresh
         if parent is not None:
             served = set(
                 T.StructType.fromJson(json.loads(parent["schema"])).names
@@ -679,52 +704,15 @@ def _merge_into_store(
                     f"columns: missing {sorted(served - cols)}, unknown "
                     f"{sorted(cols - served)}"
                 )
-            if any(f["bucket"] in buckets for f in parent["files"]):
-                old = layout.read_table(
-                    spark, dest, snapshot=parent["snapshot_id"],
-                    buckets=set(buckets),
-                ).withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-                # incoming rows outrank served rows at equal (key, ts,
-                # created): re-materialization is a CORRECTION (late-event
-                # aggregate fixes, transform changes) and must overwrite
-                merged = latest_per_key(
-                    fresh.withColumn("__fresh", F.lit(1)).unionByName(
-                        old.withColumn("__fresh", F.lit(0))
-                    ),
-                    key=key_cols, order=ts_col, created_col=created_col,
-                    precedence_col="__fresh",
-                ).drop("__fresh")
-        schema = merged.schema.json()
-        # staged as ``__bucket`` so a feature named ``bucket`` survives
-        merged = merged.withColumn(
-            "__bucket", layout.bucket_expr(key_cols, n_buckets)
-        ).repartition("__bucket")
-        if on_merged is not None:
-            # right above the shuffle: when the merged rows are empty,
-            # AQE prunes the empty stage below a Sort and would drop the
-            # observations inside it; below an observation it keeps them
-            merged = on_merged(merged)
-        # new unique names: the parent snapshot's files stay in place for
-        # readers that planned it
-        stats = layout._collect_stats_local(dest, layout._stage_and_publish(
-            merged.sortWithinPartitions("__bucket", *key_cols), dest,
-            "merge", ["__bucket"],
-        ), key_cols[0], ts_col)
-        kept = [
-            f for f in (parent["files"] if parent else [])
-            if f["bucket"] not in buckets
-        ]
-        layout._commit_snapshot(dest, {
-            "snapshot_id": layout.next_snapshot_id(dest, parent),
-            "parent": parent["snapshot_id"] if parent else None,
-            "committed_at": time.time(),
-            "operation": "merge",
-            "key_col": key_cols,
-            "ts_col": ts_col,
-            "n_buckets": n_buckets,
-            "schema": schema,
-            "files": sorted(kept + stats, key=lambda f: f["path"]),
-        })
+        # when the merged rows are empty, AQE prunes the empty stage below
+        # the in-task sort and would drop observations inside it; one
+        # between the shuffle and the sort keeps them
+        return layout._rewrite_buckets(
+            spark, dest, parent, fresh, new_wins,
+            {"operation": "merge", "key_col": key_cols, "ts_col": ts_col,
+             "n_buckets": n_buckets},
+            buckets=buckets, on_shuffled=on_merged,
+        )[1]
 
 
 def infer_store_ts_col(dest: str) -> str | None:

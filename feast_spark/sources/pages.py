@@ -8,8 +8,10 @@ scratch:
 
 - **Hidden partitioning** — layout ``data/dt=<days(ts)>/bucket=<pmod(
   xxhash64(key), B)>/<op>-<token>-NNNN.parquet``; writers compute both
-  transforms (Iceberg's ``days()`` + ``bucket()``), readers get file
-  lists and never see partition columns.
+  transforms (Iceberg's ``days()`` + ``bucket()``) as staging columns
+  ``__dt``/``__bucket``, so user columns named ``dt`` or ``bucket`` are
+  data like any other; readers get file lists and never see partition
+  columns.
 - **Sorted files** — every file is (key, ts)-sorted, which keeps its
   Parquet min/max zone maps on key and ts tight.
 - **Snapshots & manifests** — ``metadata/snap-<n>.json`` lists files with
@@ -26,12 +28,12 @@ scratch:
 A serving store (``materialize``) is a table of this layout without the
 ``dt=`` level: ``data/bucket=<b>/`` files, one row per key, committed by
 ``_commit_snapshot`` and retired by ``expire_snapshots`` like any other.
-Its snapshots record the key columns as a list in ``key_col``.
+Its snapshots record the key columns as a list in ``key_col``. A
+row-level change of either kind of table (``upsert_table``, the store's
+merge) is one copy-on-write step, ``_rewrite_buckets``.
 
 Scale note: file stats are read from Parquet *footers only* (metadata
-pages, ~KB per file), in a driver loop. ``upsert_table`` runs the same
-loop as a ``mapInPandas`` over the file list
-(``collect_stats_distributed``) above 32 new files.
+pages, ~KB per file), in a driver loop.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -137,8 +140,8 @@ def write_table(
     head, prev = read_ref()
     _validate_against_parent(prev, n_buckets, dt_granularity, allow_spec_evolution)
     stats = _collect_stats_local(root, _stage_and_publish(
-        _partitioned(df, key_col, ts_col, n_buckets, dt_granularity),
-        root, mode, ["dt", "bucket"],
+        *_partitioned(df, key_col, ts_col, n_buckets, dt_granularity),
+        root, mode,
     ), key_col, ts_col)
 
     # Optimistic-concurrency commit loop: build parent-dependent
@@ -207,17 +210,23 @@ def write_table(
 
 
 def _partitioned(
-    df: DataFrame, key_col: str, ts_col: str, n_buckets: int, dt_granularity: str
-) -> DataFrame:
-    """``df`` with the hidden ``dt``/``bucket`` columns, shuffled on them
-    and sorted within tasks: one (key, ts)-sorted file per (dt, bucket)."""
-    return (
-        df.withColumn("dt", dt_expr(ts_col, dt_granularity))
-        .withColumn("bucket", bucket_expr(key_col, n_buckets))
-        .repartition("dt", "bucket")
-        # partition cols lead the sort so each task emits one run per dir
-        .sortWithinPartitions("dt", "bucket", key_col, ts_col)
-    )
+    df: DataFrame, key_col: str | list[str], ts_col: str, n_buckets: int,
+    dt_granularity: str | None, on_shuffled: Callable | None = None,
+) -> tuple[DataFrame, list[str]]:
+    """``df`` with the hidden staging columns ``__dt`` (none without
+    ``dt_granularity``: a serving store) and ``__bucket``, shuffled on
+    them, wrapped by ``on_shuffled`` and sorted within tasks: one
+    (key, ts)-sorted file per (dt, bucket). Returns it and its levels."""
+    keys = key_col if isinstance(key_col, list) else [key_col]
+    levels = ["__dt", "__bucket"] if dt_granularity else ["__bucket"]
+    if dt_granularity:
+        df = df.withColumn("__dt", dt_expr(ts_col, dt_granularity))
+    df = df.withColumn("__bucket", bucket_expr(keys, n_buckets))
+    df = df.repartition(*levels)
+    if on_shuffled is not None:
+        df = on_shuffled(df)
+    # partition cols lead the sort so each task emits one run per dir
+    return df.sortWithinPartitions(*levels, *keys, ts_col), levels
 
 
 def _validate_against_parent(
@@ -361,49 +370,14 @@ def _collect_stats_local(
     ]
 
 
-def collect_stats_distributed(
-    spark: SparkSession, root: str, rel_paths: list[str], key_col: str, ts_col: str
-) -> list[dict]:
-    """The 100 TB path: footer reads fan out across executors (shared FS
-    assumed, as on any real cluster); only the ~100-byte stat dicts come
-    back to the driver."""
-    import pandas as pd
-
-    if not rel_paths:
-        return []
-
-    def read_footers(it):
-        for pdf in it:
-            rows = [
-                json.dumps(
-                    _file_stats(os.path.join(root, p), p, key_col, ts_col)
-                )
-                for p in pdf["path"]
-            ]
-            yield pd.DataFrame({"stat": rows})
-
-    pdf = spark.createDataFrame([(p,) for p in rel_paths], "path string")
-    n = max(1, min(len(rel_paths), spark.sparkContext.defaultParallelism))
-    out = pdf.repartition(n).mapInPandas(read_footers, "stat string").collect()
-    stats = [json.loads(r["stat"]) for r in out]
-    return sorted(stats, key=lambda s: s["path"])
-
-
-# above this many new files, ``upsert_table`` reads footer stats on
-# executors (``collect_stats_distributed``) instead of in a driver loop
-_LOCAL_STATS_MAX_FILES = 32
-
-
 def _stage_and_publish(
-    df: DataFrame,
-    root: str,
-    op: str,
-    partition_cols: list[str],
+    df: DataFrame, partition_cols: list[str], root: str, op: str
 ) -> list[str]:
     """The data-file half of every Spark-written commit: write ``df``
-    partitioned by ``partition_cols`` under ``_staging/``, move each file
-    to a unique ``data/<partition dirs>/<op>-<token>-NNNN.parquet`` name
-    (a ``__bucket=`` staging level lands as ``bucket=``), remove the
+    partitioned by ``partition_cols`` (``_partitioned``'s levels) under
+    ``_staging/``, move each file to a unique
+    ``data/<partition dirs>/<op>-<token>-NNNN.parquet`` name (each
+    ``__<level>=`` staging directory lands as ``<level>=``), remove the
     stage, and return the new files' paths relative to ``root``; the
     caller reads their footer stats. The files are inert
     until the caller commits a snapshot listing them: a crash before
@@ -418,9 +392,10 @@ def _stage_and_publish(
         df.write.partitionBy(*partition_cols).parquet(stage)
         for dirpath, dirs, files in os.walk(stage):
             dirs[:] = sorted(d for d in dirs if "=" in d)  # partition levels
-            rel_dir = os.path.relpath(dirpath, stage).replace(
-                "__bucket=", "bucket="
-            )
+            rel_dir = os.path.join(*(
+                p[2:] if p.startswith("__") else p
+                for p in os.path.relpath(dirpath, stage).split(os.sep)
+            ))
             for f in sorted(files):
                 if not f.endswith(".parquet") or f.startswith((".", "_")):
                     continue
@@ -603,11 +578,10 @@ def compact_table(
     reading them; only the new snapshot sees the compacted layout.
 
     The per-cell concat/sort/rewrite fans out across executors via
-    ``mapInPandas`` over the cell list (one task per cell, same shape as
-    ``collect_stats_distributed``); only ~100-byte stat dicts return to
-    the driver, which then commits the snapshot. At 100 TB this is
-    O(cells/parallelism) wall-clock instead of a driver-sequential loop.
-    Returns the new snapshot id."""
+    ``mapInPandas`` over the cell list (one task per cell); only
+    ~100-byte stat dicts return to the driver, which then commits the
+    snapshot. At 100 TB this is O(cells/parallelism) wall-clock instead
+    of a driver-sequential loop. Returns the new snapshot id."""
     import pandas as pd
 
     snap = current_snapshot(root)
@@ -697,9 +671,7 @@ def remove_orphan_files(
     """Iceberg ``remove_orphan_files``: delete data files no snapshot
     references — crash leftovers from interrupted writes (their unique
     names keep them inert but they still occupy storage). Driver-side
-    listing here; at 100 TB the walk fans out like
-    ``collect_stats_distributed`` (same file-list mapInPandas shape).
-    Never touches ``_staging`` mid-write dirs.
+    listing. Never touches ``_staging`` mid-write dirs.
 
     ``min_age_s`` (Iceberg's ``older_than``, default 3 days): appends
     are MULTI-writer, so an unreferenced file may belong to a concurrent
@@ -1303,7 +1275,64 @@ def list_lineage(root: str) -> list[dict]:
     return out
 
 
-# ------------------------------------------------------------- upsert ------
+# ------------------------------------------------ copy-on-write ------
+
+
+def _rewrite_buckets(
+    spark: SparkSession, root: str, parent: dict | None, incoming: DataFrame,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame], snapshot: dict,
+    *, buckets: list[int] | None = None, on_shuffled: Callable | None = None,
+) -> tuple[int | None, list[int]]:
+    """Iceberg's copy-on-write row-level change, the one step behind
+    ``upsert_table`` and the serving store's merge; each passes only its
+    ``merge(incoming, served)``, which returns the touched buckets' new
+    rows (``served``: their rows at ``parent``, None when no file holds
+    any). ``incoming``'s keys take ``parent``'s key dtypes first (int and
+    bigint hash apart); the touched buckets are ``buckets``, else the
+    incoming keys' (one Spark job; none → no commit). One snapshot then
+    commits the parent's files minus the touched buckets' plus the new
+    ones. ``snapshot`` holds its table fields (``key_col``, ``ts_col``,
+    ``n_buckets``, ``operation``, ``dt_granularity`` for a ``dt=`` level;
+    ``schema`` defaults to the merged rows'). ``on_shuffled``: see
+    ``_partitioned``. Returns (snapshot id, touched buckets)."""
+    key_col, ts_col = snapshot["key_col"], snapshot["ts_col"]
+    keys = key_col if isinstance(key_col, list) else [key_col]
+    n_buckets = snapshot["n_buckets"]
+    parent_files = parent["files"] if parent else []
+    if parent is not None:
+        types = T.StructType.fromJson(json.loads(parent["schema"]))
+        incoming = incoming.withColumns(
+            {k: F.col(k).cast(types[k].dataType) for k in keys}
+        )
+    if buckets is None:
+        buckets = buckets_of_frame(incoming, keys, n_buckets)
+        if not buckets:
+            return (parent["snapshot_id"] if parent else None), []
+    touched = set(buckets)
+    touch_files = [f for f in parent_files if f["bucket"] in touched]
+    served = None
+    if touch_files:
+        served = _scan(spark, root, parent, touch_files).withColumn(
+            ts_col, F.col(ts_col).cast("timestamp")
+        )
+    merged = merge(incoming, served)
+    # new unique names: the parent's files stay in place for readers
+    # that planned it
+    stats = _collect_stats_local(root, _stage_and_publish(*_partitioned(
+        merged, keys, ts_col, n_buckets, snapshot.get("dt_granularity"),
+        on_shuffled,
+    ), root, snapshot["operation"]), keys[0], ts_col)
+    kept = [f for f in parent_files if f["bucket"] not in touched]
+    new_snap = {
+        "schema": merged.schema.json(),
+        **snapshot,
+        "snapshot_id": next_snapshot_id(root, parent),
+        "parent": parent["snapshot_id"] if parent else None,
+        "committed_at": time.time(),
+        "files": sorted(kept + stats, key=lambda f: f["path"]),
+    }
+    _commit_snapshot(root, new_snap)
+    return new_snap["snapshot_id"], sorted(touched)
 
 
 def upsert_table(
@@ -1318,64 +1347,54 @@ def upsert_table(
     same (key, ts) and append otherwise; with ``delete=True`` the
     (key, ts) pairs in ``updates`` are removed instead.
 
-    Scale shape: only the buckets containing updated keys are rewritten
-    — the manifest locates them without scanning (``buckets_of_frame``
-    of the update keys, collected driver-side, bounded by B);
-    unaffected files carry over into the new snapshot untouched. Old
-    files stay on disk for time travel until ``expire_snapshots``. A
-    commit that lands between this call's HEAD read and its own makes it
-    raise ``CommitConflict``; re-run it against the new table. Returns
-    the new snapshot id.
+    Scale shape: only the buckets holding updated keys are rewritten
+    (``_rewrite_buckets``); unaffected files carry over into the new
+    snapshot untouched. Old files stay on disk for time travel until
+    ``expire_snapshots``. Updates with no rows commit nothing. A commit
+    that lands between this call's HEAD read and its own makes it raise
+    ``CommitConflict``; re-run it against the new table. Returns the new
+    snapshot id (HEAD's when nothing is committed).
     """
     snap = current_snapshot(root)
     if snap is None:
         raise FileNotFoundError(f"no table at {root}")
     key_col, ts_col = snap["key_col"], snap["ts_col"]
-    n_buckets = snap["n_buckets"]
-    gran = snap.get("dt_granularity", "day")
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
+    cols = schema.names
 
     updates = updates.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if not delete:
-        missing = [f.name for f in schema.fields if f.name not in updates.columns]
+        missing = [c for c in cols if c not in updates.columns]
         if missing:
             raise ValueError(f"updates missing table columns: {missing}")
-    # normalize update columns to the TABLE's types before hashing: an
-    # int literal key hashes differently from the table's bigint under
-    # xxhash64, which would silently rewrite the wrong bucket
-    types = {f.name: f.dataType for f in schema.fields}
+    # update rows are written beside table rows: give them the TABLE's
+    # types
     updates = updates.select(
         *[
-            F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
+            F.col(c).cast(schema[c].dataType).alias(c) if c in cols else F.col(c)
             for c in updates.columns
         ]
     )
+    # SQL MERGE semantics: every matched target row takes the update
+    # payload (duplicate (key, ts) target rows keep their multiplicity,
+    # all updated); unmatched updates append. Multiple SOURCE rows per
+    # (key, ts) are rejected, as MERGE does.
+    if not delete and (
+        updates.groupBy(key_col, ts_col).count()
+        .filter(F.col("count") > 1).limit(1).count()
+    ):
+        raise ValueError("updates contain duplicate (key, ts) rows")
 
-    affected = set(buckets_of_frame(updates, [key_col], n_buckets))
-    keep_files = [f for f in snap["files"] if f["bucket"] not in affected]
-    touch_files = [f for f in snap["files"] if f["bucket"] in affected]
-
-    existing = _scan(spark, root, snap, touch_files).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
-    )
-
-    if delete:
-        merged = existing.join(
-            updates.select(key_col, ts_col).distinct(),
-            on=[key_col, ts_col],
-            how="left_anti",
-        )
-    else:
-        # SQL MERGE semantics: every matched target row takes the update
-        # payload (duplicate (key, ts) target rows keep their
-        # multiplicity, all updated); unmatched updates append. Multiple
-        # SOURCE rows per (key, ts) are rejected, as MERGE does.
-        if (
-            updates.groupBy(key_col, ts_col).count()
-            .filter(F.col("count") > 1).limit(1).count()
-        ):
-            raise ValueError("updates contain duplicate (key, ts) rows")
-        payload = [f.name for f in schema.fields if f.name not in (key_col, ts_col)]
+    def merge(updates: DataFrame, existing: DataFrame | None) -> DataFrame:
+        if existing is None:  # the touched buckets hold no rows
+            return updates.limit(0) if delete else updates.select(*cols)
+        if delete:
+            return existing.join(
+                updates.select(key_col, ts_col).distinct(),
+                on=[key_col, ts_col],
+                how="left_anti",
+            )
+        payload = [c for c in cols if c not in (key_col, ts_col)]
         u = updates.select(
             key_col, ts_col,
             F.lit(True).alias("__m"),
@@ -1393,30 +1412,13 @@ def upsert_table(
             existing.select(key_col, ts_col).distinct(),
             on=[key_col, ts_col], how="left_anti",
         ).select(key_col, ts_col, *payload)
-        cols = [f.name for f in schema.fields]
-        merged = replaced.select(*cols).unionByName(appended.select(*cols))
+        return replaced.select(*cols).unionByName(appended.select(*cols))
 
-    new_paths = _stage_and_publish(
-        _partitioned(merged, key_col, ts_col, n_buckets, gran),
-        root, "upsert", ["dt", "bucket"],
-    )
-    if len(new_paths) > _LOCAL_STATS_MAX_FILES:
-        new_stats = collect_stats_distributed(
-            spark, root, new_paths, key_col, ts_col
-        )
-    else:
-        new_stats = _collect_stats_local(root, new_paths, key_col, ts_col)
-    new_snap_id = next_snapshot_id(root, snap)
-    new_snap = {
+    return _rewrite_buckets(spark, root, snap, updates, merge, {
         **snap,
-        "snapshot_id": new_snap_id,
-        "parent": snap["snapshot_id"],
-        "committed_at": time.time(),
+        "dt_granularity": snap.get("dt_granularity", "day"),
         "operation": "delete" if delete else "upsert",
-        "files": sorted(keep_files + new_stats, key=lambda s: s["path"]),
-    }
-    _commit_snapshot(root, new_snap)
-    return new_snap["snapshot_id"]
+    })[0]
 
 
 # --------------------------------------------------- metadata tables ------

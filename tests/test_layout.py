@@ -109,18 +109,6 @@ def test_append_snapshot_and_time_travel(spark, pages_df, tmp_path_factory):
     assert snap["parent"] == 1
 
 
-def test_distributed_stats_match_local(spark, table_root):
-    snap = layout.current_snapshot(table_root)
-    rels = [f["path"] for f in snap["files"]]
-    dist = layout.collect_stats_distributed(
-        spark, table_root, rels, "url", "warc_ts"
-    )
-    local = sorted(snap["files"], key=lambda s: s["path"])
-    assert [
-        (d["path"], d["rows"], d["min_ts"], d["max_ts"]) for d in dist
-    ] == [(l["path"], l["rows"], l["min_ts"], l["max_ts"]) for l in local]
-
-
 def test_month_granularity_fewer_files(spark, pages_df, tmp_path_factory):
     """Coarser dt transform bounds file count on sparse tables; pruning
     still works because it reads per-file ts stats, not dir names."""
@@ -457,27 +445,6 @@ def test_zorder_compaction_improves_two_dim_skipping(spark, tmp_path_factory):
     assert got == want
 
 
-def test_write_table_distributed_stats(spark, pages_df, tmp_path_factory):
-    """The executor-side footer fan-out reproduces the manifest that
-    ``write_table``'s driver loop committed."""
-    root = str(tmp_path_factory.mktemp("dstats") / "t")
-    layout.write_table(pages_df.limit(150), root, n_buckets=B,
-                       dt_granularity="month")
-    files = layout.current_snapshot(root)["files"]
-    dist = layout.collect_stats_distributed(
-        spark, root, [f["path"] for f in files], "url", "warc_ts"
-    )
-    fa = [
-        (f["dt"], f["bucket"], f["rows"], f["min_ts"], f["max_ts"])
-        for f in files
-    ]
-    fb = [
-        (f["dt"], f["bucket"], f["rows"], f["min_ts"], f["max_ts"])
-        for f in dist
-    ]
-    assert sorted(fa) == sorted(fb) and fa
-
-
 def test_upsert_randomized_vs_pandas_reference(spark, tmp_path_factory):
     """Randomized MERGE sequences (updates, inserts, deletes over random
     key subsets) must equal a pandas dict reference after every step."""
@@ -526,45 +493,58 @@ def test_upsert_randomized_vs_pandas_reference(spark, tmp_path_factory):
         assert got == ref, f"divergence at step {step}"
 
 
-def test_upsert_wide_uses_distributed_stats(spark, tmp_path_factory, monkeypatch):
-    """VERDICT r02 next #5: a many-bucket upsert must collect file stats
-    via the executor fan-out, not a driver-sequential footer loop — and
-    the committed snapshot must be identical in content either way."""
+def test_upsert_wide_rewrites_every_bucket(spark, tmp_path_factory):
+    """An upsert touching every bucket rewrites them all in one
+    snapshot; every value updates, no row is lost, and every committed
+    file carries its footer stats."""
     from pyspark.sql import Row
 
-    root = str(tmp_path_factory.mktemp("ups_dist") / "tbl")
+    root = str(tmp_path_factory.mktemp("ups_wide") / "tbl")
     src = spark.createDataFrame(
         [Row(url=f"u{i}", warc_ts="2023-06-01 00:00:00", v=i) for i in range(64)]
     ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
     layout.write_table(src, root, n_buckets=8)
 
-    calls = {"dist": 0, "local": 0}
-    orig_dist = layout.collect_stats_distributed
-    orig_local = layout._collect_stats_local
-
-    def spy_dist(*a, **kw):
-        calls["dist"] += 1
-        return orig_dist(*a, **kw)
-
-    def spy_local(*a, **kw):
-        calls["local"] += 1
-        return orig_local(*a, **kw)
-
-    monkeypatch.setattr(layout, "collect_stats_distributed", spy_dist)
-    monkeypatch.setattr(layout, "_collect_stats_local", spy_local)
-
     updates = spark.createDataFrame(
         [Row(url=f"u{i}", warc_ts="2023-06-01 00:00:00", v=i + 1000)
          for i in range(64)]
     )
-    monkeypatch.setattr(layout, "_LOCAL_STATS_MAX_FILES", 2)
     layout.upsert_table(spark, root, updates)
-    assert calls["dist"] == 1 and calls["local"] == 0
     got = layout.read_table(spark, root).toPandas().sort_values("url")
     assert (got["v"] >= 1000).all() and len(got) == 64
-    # stats present and usable for pruning regardless of collection path
+    # stats present and usable for pruning
     snap = layout.current_snapshot(root)
     assert all(f["min_key"] is not None for f in snap["files"])
+
+
+def test_user_columns_named_dt_and_bucket_are_data(spark, tmp_path):
+    """The writers stage the partition levels as ``__dt``/``__bucket``,
+    so user columns named ``dt`` and ``bucket`` read back unchanged
+    after an overwrite, an append, an upsert and a compaction, while
+    the directories still carry the manifest's partition values."""
+    root = str(tmp_path / "t")
+
+    def rows(urls, v):
+        return spark.createDataFrame(
+            [(u, "2023-06-01 00:00:00", 7, "x", v) for u in urls],
+            "url string, warc_ts string, bucket int, dt string, v double",
+        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+
+    def served():
+        df = layout.read_table(spark, root).select("url", "bucket", "dt", "v")
+        return sorted(tuple(r) for r in df.collect())
+
+    layout.write_table(rows(["a", "b"], 1.0), root, n_buckets=4)
+    layout.write_table(rows(["c"], 1.0), root, n_buckets=4, mode="append")
+    layout.upsert_table(spark, root, rows(["a", "d"], 2.0))
+    want = [("a", 7, "x", 2.0), ("b", 7, "x", 1.0), ("c", 7, "x", 1.0),
+            ("d", 7, "x", 2.0)]
+    assert served() == want
+    layout.compact_table(spark, root, min_files=1)
+    assert served() == want
+    for f in layout.current_snapshot(root)["files"]:
+        parts = f["path"].split(os.sep)
+        assert f"dt={f['dt']}" in parts and f"bucket={f['bucket']}" in parts
 
 
 def test_rollback_to_snapshot(spark, tmp_path_factory):

@@ -1,13 +1,14 @@
 """Serving-store write path: materialization and push share one locked
-merge-and-commit (``materialize._merge_into_store``) onto a snapshot
-table.
+merge-and-commit (``materialize._merge_into_store`` through
+``pages._rewrite_buckets``) onto a snapshot table.
 
 Pins: concurrent pushes into one bucket lose no rows; reads that run
 while pushes commit see one whole snapshot and never fail; retention
 removes superseded files without changing any answer; a push whose rows
 lack a store column is a 400 that leaves the store unchanged; /push
 input errors and non-JSON-native served values never surface as
-failures; the write → materialize → delta → push chain works under a
+failures; a push of bigint keys into an int-keyed store keeps one int
+row per key; the write → materialize → delta → push chain works under a
 session that writes Spark's default INT96 timestamps; a store
 materialized over a range with no events serves NOT_FOUND.
 """
@@ -301,6 +302,64 @@ def test_expire_snapshots_retires_superseded_store_files(spark, tmp_path):
     assert len(bulk) == len({r[0] for r in bulk}) == len(keys) + 2
     assert keyed == [r for r in bulk if r[0] in probe]
     assert {r[0]: r[2] for r in bulk}["u1"] == 2.0
+
+
+def test_push_of_bigint_keys_into_int_store(spark, tmp_path):
+    """Pushed keys that Spark infers as bigint (Python ints, as the HTTP
+    server builds its frame) into an int-keyed store are hashed and
+    written as the store's int: each key keeps one row, the snapshot
+    keeps its int key type, and a keyed read of an unpushed key whose
+    int and bigint buckets differ still finds it."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, datetime(2024, 1, 1), float(i)) for i in range(40)],
+        "uid int, ts timestamp, v double",
+    ).write.parquet(src)
+    store = FeatureStore(spark, root=str(tmp_path / "reg"))
+    store.apply(
+        FeatureView(
+            name="ints", entity=Entity("uid", "uid"), source=src,
+            features=[FeatureSpec("v", "double")], timestamp_field="ts",
+        )
+    )
+    dest = str(tmp_path / "store")
+    MaterializeJob(spark, store.get_view("ints"), dest, n_buckets=8).run(
+        "2023-01-01", "2025-01-01"
+    )
+    hashed = spark.createDataFrame([(i,) for i in range(40)], "k int").select(
+        "k",
+        layout.bucket_expr(["k"], 8).alias("as_int"),
+        layout.bucket_expr([F.col("k").cast("bigint")], 8).alias("as_bigint"),
+    )
+    apart = [r["k"] for r in hashed.collect() if r["as_int"] != r["as_bigint"]]
+    pushed, over_http, unpushed = apart[:2], apart[2], apart[3]
+
+    df = spark.createDataFrame(
+        [(k, datetime(2024, 2, 1), 100.0 + k) for k in pushed], ["uid", "ts", "v"]
+    )
+    assert dict(df.dtypes)["uid"] == "bigint"
+    push_to_online(spark, dest, df, ts_col="ts")
+    srv = FeatureServer(store, {"ints": dest}).start()
+    try:
+        code, body = _post(srv.port, "/push", {
+            "push_source_name": "ints", "ts_col": "ts",
+            "df": {"uid": [over_http], "ts": ["2024-02-01T00:00:00"],
+                   "v": [100.0 + over_http]},
+        })
+    finally:
+        srv.stop()
+    assert code == 200, body
+
+    rows = read_online(spark, dest).collect()
+    assert sorted(r["uid"] for r in rows) == list(range(40))
+    new = pushed + [over_http]
+    assert {r["uid"]: r["v"] for r in rows if r["uid"] in new} == {
+        k: 100.0 + k for k in new
+    }
+    fields = json.loads(layout.current_snapshot(dest)["schema"])["fields"]
+    assert {f["name"]: f["type"] for f in fields}["uid"] == "integer"
+    got = read_online(spark, dest, [unpushed], key_col="uid").collect()
+    assert [(r["uid"], r["v"]) for r in got] == [(unpushed, float(unpushed))]
 
 
 @pytest.fixture(scope="module")
