@@ -7,6 +7,16 @@ For a time range ``[start, end)``: scan the feature source, compute the
 DESC, deterministic hash), and upsert it into a url-hash-bucketed serving
 store — one row per key, in the key's bucket.
 
+**One source read.** A job reads the view's rows as retrieval does,
+through ``FeatureView.load``: field mapping, timestamp casts, derived
+aggregates and the history their windows need below ``start``. A run
+reads ONE layout snapshot — the one ``FeatureView.layout_snapshot``
+names when it starts — in every batch, however HEAD moves meanwhile;
+lineage records that snapshot. Layout files are pruned by time, and by
+bucket only when the store buckets as the layout does (one key column,
+the layout's under its mapped name, and the same ``n_buckets``);
+otherwise each batch keeps its store buckets' rows with a filter.
+
 **The transform contract.** A job's ``transform`` is a per-row feature
 derivation: it returns one row per input row and keeps the view's key,
 event-ts and created-ts columns. It runs on each key's latest source
@@ -78,7 +88,10 @@ from feast_spark.sources import pages as layout
 
 class MaterializeJob:
     """Materialize ``view`` over a time range into the serving store at
-    ``dest``, one bucket batch per Spark write (module docstring).
+    ``dest``, one bucket batch per Spark write (module docstring). A run
+    reads one layout snapshot in every batch, through ``FeatureView.load``;
+    layout files are bucket-pruned only when ``n_buckets`` and the key
+    column are the layout's.
 
     ``transform`` is a per-row feature derivation that keeps the view's
     key, event-ts and created-ts columns. It is applied to each key's
@@ -110,32 +123,10 @@ class MaterializeJob:
         # micro-batches whose event-time bounds collide
         self.lineage_tag = lineage_tag
 
-        src = view.source
-        self._layout_root = (
-            str(src)
-            if isinstance(src, str) and layout.is_table(str(src))
-            else None
-        )
-        self._layout_key: str | None = None
         if n_buckets is None:
-            if self._layout_root:
-                n_buckets = self._layout_snap()["n_buckets"]
-            else:
-                n_buckets = layout.DEFAULT_BUCKETS
+            snap = view.layout_snapshot()
+            n_buckets = snap["n_buckets"] if snap else layout.DEFAULT_BUCKETS
         self.n_buckets = n_buckets
-        if self._layout_root:
-            self._layout_key = self._layout_snap()["key_col"]
-
-    def _layout_snap(self) -> dict:
-        """The layout snapshot this job reads: the view's pinned ref when
-        set (reproducible re-materialization of a corpus release), else
-        the current HEAD."""
-        ref = getattr(self.view, "ref", None)
-        if ref:
-            return layout.load_snapshot(
-                self._layout_root, layout.resolve_tag(self._layout_root, ref)
-            )
-        return layout.current_snapshot(self._layout_root)
 
     #: constant key column injected for entity-less (global) views —
     #: upstream's DUMMY_ENTITY; the whole view serves one latest row
@@ -153,44 +144,31 @@ class MaterializeJob:
         return list(keys) if keys else [self.view.entity.join_key]
 
     # -- source ----------------------------------------------------------
-    def _input_snapshot(self) -> int | None:
-        if self._layout_root:
-            return self._layout_snap()["snapshot_id"]
-        return None
-
-    def _coverage_complete(self, snap_id, start, end) -> bool | None:
-        """Is the store latest-per-key COMPLETE as of ``snap_id`` after a
-        run over [start, end)? True when the range covers the snapshot's
-        whole event-time span (footer stats, no Spark job), or — the
-        incremental induction — when a prior lineage record is complete
-        at an ancestor snapshot and this range covers every file APPENDED
-        since it. Recorded in lineage; ``materialize_delta`` refuses a
-        baseline without a complete record, because a time-bounded run
-        records input_snapshot=HEAD while leaving out-of-range rows
-        unmaterialized (r04 review: those rows were silently unservable
-        forever). None = non-layout source (coverage unknowable)."""
-        import datetime as _dt
-
-        if snap_id is None:
+    def _coverage_complete(self, snap: dict | None, start, end) -> bool | None:
+        """Is the store latest-per-key COMPLETE as of the layout snapshot
+        ``snap`` after a run over [start, end)? True when the range covers
+        the snapshot's whole event-time span (footer stats, no Spark job),
+        or — the incremental induction — when a prior lineage record is
+        complete at an ancestor snapshot and this range covers every file
+        APPENDED since it. Recorded in lineage; ``materialize_delta``
+        refuses a baseline without a complete record, because a
+        time-bounded run records input_snapshot=HEAD while leaving
+        out-of-range rows unmaterialized (r04 review: those rows were
+        silently unservable forever). None = non-layout source (coverage
+        unknowable)."""
+        if snap is None:
             return None
-
-        def _as_dt(v):
-            d = _dt.datetime.fromisoformat(v) if isinstance(v, str) else v
-            if d.tzinfo is not None:
-                # footer stats of UTC-flagged parquet timestamps parse
-                # tz-aware; the engine's timeline is naive-UTC throughout
-                d = d.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return d
+        snap_id = snap["snapshot_id"]
 
         def _span(files) -> tuple | None:
             mins = [f.get("min_ts") for f in files]
             maxs = [f.get("max_ts") for f in files]
             if any(m is None for m in mins) or any(m is None for m in maxs):
                 return None  # footer ts stats missing: unverifiable
-            return (_as_dt(min(mins)), _as_dt(max(maxs)))
+            return (layout.naive_utc(min(mins)), layout.naive_utc(max(maxs)))
 
-        s, e = _as_dt(start), _as_dt(end)
-        files = layout.load_snapshot(self._layout_root, snap_id)["files"]
+        s, e = layout.naive_utc(start), layout.naive_utc(end)
+        files = snap["files"]
         if not files:
             return True
         span = _span(files)
@@ -212,7 +190,7 @@ class MaterializeJob:
         for r in priors:
             try:
                 _, added = layout.added_files(
-                    self._layout_root, r["input_snapshot"], snap_id
+                    self.view.layout_root, r["input_snapshot"], snap_id
                 )
             except Exception:
                 continue  # not an ancestor (rollback/branch history)
@@ -223,51 +201,32 @@ class MaterializeJob:
                 return True
         return False
 
-    def _scan(self, start, end, buckets: list[int]) -> DataFrame:
+    def _scan(
+        self, start, end, buckets: list[int], snap: dict | None = None
+    ) -> DataFrame:
+        """The view's rows in [start, end) whose keys hash to ``buckets``
+        of the store, read through ``FeatureView.load`` at the layout
+        snapshot ``snap`` (None: the one the view reads now). Layout
+        files are pruned by time, and by bucket only when the store
+        buckets as the layout does: one key column, the layout's under
+        its mapped name, and the same ``n_buckets``. Otherwise a store
+        bucket's keys lie in every layout bucket, and the bucket filter
+        below alone keeps the batch's rows."""
         ts = self.view.timestamp_field
         keys = self._key_cols()
-        aggs = getattr(self.view, "aggregations", []) or []
-        scan_start = start
-        if aggs:
-            # trailing-window aggregates at the range's first events need
-            # their full window of history below ``start``; an unbounded
-            # (lifetime) window forbids any lower scan bound
-            w = self.view.max_agg_window
-            if w is None:
-                scan_start = None
-            else:
-                import datetime as _dt
-
-                s = (
-                    _dt.datetime.fromisoformat(start)
-                    if isinstance(start, str)
-                    else start
-                )
-                scan_start = s - w
-        if self._layout_root:
-            # manifest-pruned read: only files overlapping the range AND
-            # belonging to this bucket batch ever reach Spark. File-level
-            # bucket pruning is valid only when the store's bucket
-            # transform IS the layout's (same single key column) — a
-            # composite or remapped key hashes differently, so those
-            # scans prune on time range alone and filter below.
-            prunable = keys == [self._layout_key]
-            ref = getattr(self.view, "ref", None)
-            df = layout.read_table(
-                self.spark,
-                self._layout_root,
-                snapshot=self._layout_snap()["snapshot_id"] if ref else None,
-                start=scan_start,
-                end=end,
-                buckets=set(buckets) if prunable else None,
-            )
-        else:
-            df = self.view.load(self.spark)
-        df = df.withColumn(ts, F.col(ts).cast("timestamp"))
-        if aggs:
-            # derived BEFORE the range filter: bucket pruning keeps whole
-            # keys, and the widened scan supplies the window history
-            df = self.view.derived_frame(df)
+        kw: dict = {}
+        if snap is not None:
+            kw["snapshot"] = snap["snapshot_id"]
+            kcol = snap["key_col"]  # a list when the source is a store
+            if (
+                isinstance(kcol, str)
+                and keys == [self.view.field_mapping.get(kcol, kcol)]
+                and snap["n_buckets"] == self.n_buckets
+            ):
+                kw["buckets"] = set(buckets)
+        # aggregates are derived BEFORE the range filter: bucket pruning
+        # keeps whole keys, and load widens the scan by the windows
+        df = self.view.load(self.spark, start=start, end=end, **kw)
         df = df.filter(
             (F.col(ts) >= F.lit(start).cast("timestamp"))
             & (F.col(ts) < F.lit(end).cast("timestamp"))
@@ -287,7 +246,9 @@ class MaterializeJob:
         return df.filter(b.isin(buckets))
 
     # -- one bucket batch ------------------------------------------------
-    def _run_batch(self, start, end, buckets: list[int], snap_id) -> dict:
+    def _run_batch(
+        self, start, end, buckets: list[int], snap: dict | None
+    ) -> dict:
         ts = self.view.timestamp_field
         keys = self._key_cols()
         created = self.view.created_timestamp_column
@@ -296,7 +257,7 @@ class MaterializeJob:
 
         # every count rides the store write below: no extra Spark job
         scanned, given, returned, obs = (Observation() for _ in range(4))
-        df = self._scan(start, end, buckets).observe(scanned, _n_rows())
+        df = self._scan(start, end, buckets, snap).observe(scanned, _n_rows())
         if self.transform is not None:
             # the transform sees only each key's latest candidates, in the
             # source schema; the store merge's latest_per_key hash
@@ -323,7 +284,7 @@ class MaterializeJob:
         wall_ms = int((time.monotonic() - t0) * 1000)
         max_ts = metrics["max_event_ts"]
         record = {
-            "input_snapshot": snap_id,
+            "input_snapshot": snap["snapshot_id"] if snap else None,
             "start": str(start),
             "end": str(end),
             "buckets": buckets,
@@ -356,9 +317,12 @@ class MaterializeJob:
     # -- driver loop -----------------------------------------------------
     def run(self, start, end) -> dict:
         """Materialize [start, end). Returns summary metrics. Resumable:
-        bucket batches with matching lineage are skipped."""
-        snap_id = self._input_snapshot()
-        complete = self._coverage_complete(snap_id, start, end)
+        bucket batches with matching lineage are skipped. Every batch
+        reads the one layout snapshot the view reads when the run starts,
+        however HEAD moves meanwhile."""
+        snap = self.view.layout_snapshot()
+        snap_id = snap["snapshot_id"] if snap else None
+        complete = self._coverage_complete(snap, start, end)
         _check_store(
             self.dest, layout.current_snapshot(self.dest), self.n_buckets,
             self._key_cols(),
@@ -389,7 +353,7 @@ class MaterializeJob:
                 and done >= self.fail_after_batches
             ):
                 raise RuntimeError(f"injected failure before batch {pid}")
-            record = self._run_batch(start, end, buckets, snap_id)
+            record = self._run_batch(start, end, buckets, snap)
             layout.write_lineage(self.dest, pid, record)
             done += 1
             total_rows += record["rows_out"]
@@ -546,17 +510,13 @@ def materialize_delta(
             "covers the table's full event-time span first"
         )
     # a ref-pinned view delta-materializes only up to its pin — the same
-    # reproducible-release contract MaterializeJob._scan and retrieval
-    # honor; an explicit to_snapshot past the pin is a caller error, not
+    # reproducible-release contract every read through FeatureView.load
+    # honors; an explicit to_snapshot past the pin is a caller error, not
     # a silent unpin (ADVICE r04)
     ref = getattr(view, "ref", None)
-    pin = layout.resolve_tag(root, ref) if ref else None
-    head = (
-        to_snapshot
-        if to_snapshot is not None
-        else (pin if pin is not None
-              else layout.current_snapshot(root)["snapshot_id"])
-    )
+    read = view.layout_snapshot()["snapshot_id"]
+    pin = read if ref else None
+    head = to_snapshot if to_snapshot is not None else read
     if pin is not None and head > pin:
         raise ValueError(
             f"view is pinned to ref {ref!r} (snapshot {pin}) but "

@@ -15,7 +15,9 @@ The latest event at or before a probe is the same row for every view of
 the group; a view's TTL only decides whether that row is young enough. So
 each view with a narrower TTL masks its columns to NULL where the matched
 event time fails its own TTL, with the as-of join's own boundary
-expression (``asof.within_ttl``). A group of one view adds no mask.
+expression (``asof.within_ttl``). A group of one view adds no mask. A
+view with aggregations is a group of its own: ``FeatureView.load`` hands
+it rows with its aggregates derived, which no other view shares.
 
 Strategy policy (``strategy=None`` → auto):
 
@@ -35,8 +37,9 @@ any Spark job.
 Layout-backed views are pruned from ONE probe summary — a single
 aggregate over the entity dataframe giving the probe time bounds and the
 set of layout buckets the probe keys hash to. Files outside the bounds
-(widened by the view's TTL) are skipped, and when the bucket set is
-smaller than the layout's B only those buckets are scanned.
+are skipped — the lower bound widened by the view's TTL here, and by its
+longest aggregation window in ``FeatureView.load`` — and when the bucket
+set is smaller than the layout's B only those buckets are scanned.
 
 The summary is a Spark job that reads every probe, so it runs only when
 it can skip more than it reads: when some layout-backed group's snapshot
@@ -255,18 +258,10 @@ def plan_retrieval(
                 # latest feature row predates the earliest probe is still a
                 # valid PIT match, so only the upper bound may prune.
                 src_kw["end"] = hi + timedelta(seconds=1)
+                # ``load`` widens the lower bound by the view's
+                # aggregation windows
                 if lo is not None and ttl is not None:
                     src_kw["start"] = lo - ttl
-                    if fv.aggregations:
-                        # trailing window aggregates at the TTL horizon's
-                        # first events need their full window of history;
-                        # an unbounded (lifetime) agg window forbids any
-                        # lower scan bound
-                        w = fv.max_agg_window
-                        if w is None:
-                            del src_kw["start"]
-                        else:
-                            src_kw["start"] -= w
             # bucket pruning: scan only the buckets the probe keys hash to
             # when they miss any, by the layout's own modulus
             wanted = bucket_sets.get(spec)
@@ -286,7 +281,7 @@ def plan_retrieval(
                 }
                 for v in group
             )
-        src = fv.derived_frame(fv.load(store.spark, **src_kw))
+        src = fv.load(store.spark, **src_kw)
         joined = asof_join(
             out,
             src,

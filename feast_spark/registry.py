@@ -93,8 +93,12 @@ class FeatureView:
     a table layout root (sources.layout), or a callable
     ``(SparkSession) -> DataFrame`` for view-over-query sources (upstream
     spark_source.py ``query=``). ``aggregations`` declare derived rolling
-    features (upstream stream-feature-view Aggregation specs) computed by
-    ``derived_frame`` wherever the view's rows are consumed.
+    features (upstream stream-feature-view Aggregation specs).
+
+    The view is the one place that knows how its rows are produced —
+    which snapshot of a layout to read, the field mapping, the timestamp
+    casts and the history its aggregation windows need: retrieval,
+    materialization and validation all read them through ``load``.
     """
 
     name: str
@@ -148,9 +152,9 @@ class FeatureView:
     @property
     def layout_root(self) -> str | None:
         """Path of the Iceberg-style layout backing this view, if any."""
-        if not callable(self.source) and os.path.isdir(
-            os.path.join(str(self.source), "metadata")
-        ):
+        from feast_spark.sources.pages import is_table
+
+        if not callable(self.source) and is_table(str(self.source)):
             return str(self.source)
         return None
 
@@ -158,23 +162,33 @@ class FeatureView:
         self, spark: SparkSession, *, start=None, end=None, buckets=None,
         snapshot: int | None = None,
     ) -> DataFrame:
-        """Resolve the source to a DataFrame, apply field mapping, and
-        normalize the event-time column to TIMESTAMP (Spark 4 loads
-        parquet timestamp[us] as TIMESTAMP_NTZ — SURVEY.md §0.3).
-        ``start``/``end`` prune layout-backed sources via the manifest
-        (files outside the range never reach Spark). ``snapshot`` scans
-        that snapshot id of the layout — the one a planner read with
-        ``layout_snapshot`` — instead of resolving the ref or HEAD again."""
+        """The view's derived rows: the source resolved to a DataFrame,
+        its field mapping applied, the timestamp columns normalized to
+        TIMESTAMP (Spark 4 loads parquet timestamp[us] as TIMESTAMP_NTZ —
+        SURVEY.md §0.3) and the declared aggregations added
+        (``derived_frame``).
+
+        ``start``/``end``/``buckets`` prune a layout-backed source via the
+        manifest: files outside them never reach Spark, and the caller
+        filters the rows. With aggregations, ``start`` is first widened by
+        ``max_agg_window`` — dropped for a lifetime window — so trailing
+        aggregates at the range's first events see their full window of
+        history. ``snapshot`` scans that snapshot id of the layout — the
+        one a caller read with ``layout_snapshot`` — instead of resolving
+        the ref or HEAD again."""
         from pyspark.sql import functions as F
 
+        from feast_spark.sources import pages
+
+        if start is not None and self.aggregations:
+            w = self.max_agg_window
+            start = None if w is None else pages.naive_utc(start) - w
         if callable(self.source):
             df = self.source(spark)
         elif self.layout_root:
-            from feast_spark.sources.pages import read_table, resolve_tag
-
             if snapshot is None and self.ref:
-                snapshot = resolve_tag(self.layout_root, self.ref)
-            df = read_table(
+                snapshot = pages.resolve_tag(self.layout_root, self.ref)
+            df = pages.read_table(
                 spark, self.layout_root, snapshot=snapshot, start=start,
                 end=end, buckets=buckets,
             )
@@ -182,39 +196,33 @@ class FeatureView:
             df = spark.read.parquet(str(self.source))
         if self.field_mapping:
             df = df.withColumnsRenamed(self.field_mapping)
-        ts = self.timestamp_field
-        df = df.withColumn(ts, F.col(ts).cast("timestamp"))
-        if self.created_timestamp_column:
-            df = df.withColumn(
-                self.created_timestamp_column,
-                F.col(self.created_timestamp_column).cast("timestamp"),
-            )
-        return df
+        ts_cols = [self.timestamp_field, self.created_timestamp_column]
+        df = df.withColumns(
+            {c: F.col(c).cast("timestamp") for c in ts_cols if c}
+        )
+        return self.derived_frame(df)
 
     def layout_snapshot(self) -> dict | None:
         """The snapshot this view READS: the pinned ``ref``'s when set,
         else the table's current HEAD. None for non-layout sources.
         Planners must use this (not ``current_snapshot``) so manifest
         pruning / skew stats describe the same files the scan reads."""
-        if not self.layout_root:
+        root = self.layout_root
+        if not root:
             return None
-        from feast_spark.sources.pages import (
-            current_snapshot, load_snapshot, resolve_tag,
-        )
+        from feast_spark.sources import pages
 
         if self.ref:
-            return load_snapshot(
-                self.layout_root, resolve_tag(self.layout_root, self.ref)
-            )
-        return current_snapshot(self.layout_root)
+            return pages.load_snapshot(root, pages.resolve_tag(root, self.ref))
+        return pages.current_snapshot(root)
 
     @property
     def max_agg_window(self) -> timedelta | None:
         """Longest declared aggregation window — the extra source history
-        a time-bounded scan must include so trailing aggregates at the
+        ``load`` reads below a ``start`` so trailing aggregates at the
         range's first events see their full window. ``None`` means either
         no aggregations or an UNBOUNDED (lifetime) window is declared —
-        callers must then drop the lower scan bound entirely."""
+        ``load`` then drops the lower scan bound entirely."""
         if not self.aggregations:
             return None
         if any(a.time_window is None for a in self.aggregations):
@@ -683,7 +691,7 @@ class FeatureStore:
         feature with a compatible Spark dtype. Aggregated views validate
         against the DERIVED schema (declared features may name
         aggregation outputs — lazy schema only, no job runs)."""
-        df = view.derived_frame(view.load(self.spark))
+        df = view.load(self.spark)
         have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         missing = []
         for col in [*view.join_keys, view.timestamp_field] + (

@@ -38,11 +38,13 @@ pages, ~KB per file), in a driver loop.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
 from typing import Callable
 
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1057,6 +1059,16 @@ def _ts_str(v) -> str | None:
     return str(v)
 
 
+def naive_utc(v) -> datetime.datetime:
+    """``v`` (an ISO string, as footer stats record it, or a datetime) as
+    a naive UTC datetime, the engine's timeline: footer stats of
+    UTC-flagged parquet timestamps parse tz-aware."""
+    d = datetime.datetime.fromisoformat(v) if isinstance(v, str) else v
+    if d.tzinfo is not None:
+        d = d.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return d
+
+
 def read_table(
     spark: SparkSession,
     root: str,
@@ -1289,7 +1301,8 @@ def _rewrite_buckets(
     rows (``served``: their rows at ``parent``, None when no file holds
     any). ``incoming``'s keys take ``parent``'s key dtypes first (int and
     bigint hash apart); the touched buckets are ``buckets``, else the
-    incoming keys' (one Spark job; none → no commit). One snapshot then
+    incoming keys' (one Spark job; none → no commit; a key value the
+    dtypes cannot take → ``ValueError``). One snapshot then
     commits the parent's files minus the touched buckets' plus the new
     ones. ``snapshot`` holds its table fields (``key_col``, ``ts_col``,
     ``n_buckets``, ``operation``, ``dt_granularity`` for a ``dt=`` level;
@@ -1305,7 +1318,16 @@ def _rewrite_buckets(
             {k: F.col(k).cast(types[k].dataType) for k in keys}
         )
     if buckets is None:
-        buckets = buckets_of_frame(incoming, keys, n_buckets)
+        try:
+            buckets = buckets_of_frame(incoming, keys, n_buckets)
+        except PySparkException as e:
+            if e.getCondition() != "CAST_INVALID_INPUT":
+                raise
+            # a key value the table's key type cannot take is bad input,
+            # found before anything is staged
+            raise ValueError(
+                f"keys {keys} do not fit the key types of {root}: {e}"
+            ) from e
         if not buckets:
             return (parent["snapshot_id"] if parent else None), []
     touched = set(buckets)

@@ -282,9 +282,7 @@ def stream_agg_to_online(
             # recompute bound, leaving that anchor stale (r04 review
             # batch 3) — fall back to one scan instead
             if his and all(h is not None for h in his):
-                hi = _dt.datetime.fromisoformat(max(his))
-                if hi.tzinfo is not None:  # UTC-flagged footer stats
-                    hi = hi.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+                hi = layout.naive_utc(max(his))
             else:
                 hi = (
                     layout.read_table(spark, history_root)

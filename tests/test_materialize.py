@@ -57,32 +57,48 @@ def _expected_latest(pages_df):
     )
 
 
-def test_materialize_latest_per_key(spark, pages_df, table_root, tmp_path_factory):
-    dest = str(tmp_path_factory.mktemp("mat_out") / "store")
-    job = MaterializeJob(
-        spark, _view(table_root), dest, bucket_batch=2, transform=_transform
-    )
-    summary = job.run(START, END)
-    assert summary["batches_run"] == B // 2
-    out = read_online(spark, dest).select("url", "warc_ts", "n_chars")
+@pytest.fixture(scope="module")
+def table_root8(spark, pages_df, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("mat8") / "pages_table")
+    layout.write_table(pages_df, root, n_buckets=8)
+    return root
 
-    got = out.orderBy("url").toPandas()
+
+def test_materialize_latest_per_key(
+    spark, pages_df, table_root, table_root8, tmp_path_factory
+):
     want = _expected_latest(pages_df)
-    assert len(got) == len(want)
-    assert (got["url"].values == want["url"].values).all()
-    # event_ts matches; n_chars may differ only on exact-duplicate
-    # (url, warc_ts) rows where the hash tiebreak picks a revision — the
-    # timestamps must still agree
-    assert (got["warc_ts"].values == want["warc_ts"].values).all()
+    # a store that buckets otherwise than its layout (8 buckets) serves
+    # every key too: its keys lie in every layout bucket
+    for root, n_buckets in (
+        (table_root, None), (table_root8, 4), (table_root8, 16)
+    ):
+        dest = str(tmp_path_factory.mktemp("mat_out") / "store")
+        job = MaterializeJob(
+            spark, _view(root), dest,
+            n_buckets=n_buckets, bucket_batch=2, transform=_transform,
+        )
+        summary = job.run(START, END)
+        n_batches = -(-job.n_buckets // 2)
+        assert summary["batches_run"] == n_batches
+        out = read_online(spark, dest).select("url", "warc_ts", "n_chars")
 
-    # lineage manifests exist, carry metrics; a finished run adds ONE
-    # completeness marker on top of the per-batch records
-    lineage = layout.list_lineage(dest)
-    marks = [l for l in lineage if l.get("complete")]
-    batches = [l for l in lineage if not l.get("complete")]
-    assert len(batches) == B // 2 and len(marks) == 1
-    assert all(l["rows_out"] > 0 and l["max_event_ts"] for l in batches)
-    assert sum(l["rows_out"] for l in batches) == len(got)
+        got = out.orderBy("url").toPandas()
+        assert len(got) == len(want), (n_buckets, len(got))
+        assert (got["url"].values == want["url"].values).all()
+        # event_ts matches; n_chars may differ only on exact-duplicate
+        # (url, warc_ts) rows where the hash tiebreak picks a revision —
+        # the timestamps must still agree
+        assert (got["warc_ts"].values == want["warc_ts"].values).all()
+
+        # lineage manifests exist, carry metrics; a finished run adds ONE
+        # completeness marker on top of the per-batch records
+        lineage = layout.list_lineage(dest)
+        marks = [l for l in lineage if l.get("complete")]
+        batches = [l for l in lineage if not l.get("complete")]
+        assert len(batches) == n_batches and len(marks) == 1
+        assert all(l["rows_out"] > 0 and l["max_event_ts"] for l in batches)
+        assert sum(l["rows_out"] for l in batches) == len(got)
 
 
 def test_resume_after_failure_identical(spark, table_root, tmp_path_factory):
@@ -143,6 +159,46 @@ def test_incremental_upsert(spark, pages_df, tmp_path_factory):
     assert b.exceptAll(a).count() == 0
 
 
+def test_run_reads_one_snapshot_while_head_advances(
+    spark, pages_df, tmp_path_factory
+):
+    """An append committed while a run is under way (here from its first
+    batch's transform) reaches no later batch: every served row and every
+    lineage ``rows_in`` comes from the snapshot the run records."""
+    root = str(tmp_path_factory.mktemp("mat_snap") / "table")
+    first = layout.write_table(pages_df, root, n_buckets=B)
+    # one newer row per url, inside the range
+    newer = pages_df.dropDuplicates(["url"]).withColumn(
+        "warc_ts",
+        F.lit("2024-02-20").cast(pages_df.schema["warc_ts"].dataType),
+    )
+
+    def appending(df):
+        if layout.current_snapshot(root)["snapshot_id"] == first:
+            layout.write_table(newer, root, n_buckets=B, mode="append")
+        return _transform(df)
+
+    dest = str(tmp_path_factory.mktemp("mat_snap") / "store")
+    summary = MaterializeJob(
+        spark, _view(root), dest, bucket_batch=2, transform=appending
+    ).run(START, END)
+    assert layout.current_snapshot(root)["snapshot_id"] > first
+    assert summary["input_snapshot"] == first
+
+    got = read_online(spark, dest).select("url", "warc_ts")
+    got = got.orderBy("url").toPandas()
+    want = _expected_latest(pages_df)
+    assert (got["url"].values == want["url"].values).all()
+    assert (got["warc_ts"].values == want["warc_ts"].values).all()
+    batches = [r for r in layout.list_lineage(dest) if "buckets" in r]
+    assert len(batches) == B // 2
+    assert {r["input_snapshot"] for r in batches} == {first}
+    in_range = pages_df.filter(
+        (F.col("warc_ts") >= START) & (F.col("warc_ts") < END)
+    ).count()
+    assert sum(r["rows_in"] for r in batches) == in_range
+
+
 def test_point_lookup_bucket_pruning(spark, pages_df, table_root, tmp_path_factory):
     dest = str(tmp_path_factory.mktemp("mat_kv") / "store")
     MaterializeJob(
@@ -153,23 +209,41 @@ def test_point_lookup_bucket_pruning(spark, pages_df, table_root, tmp_path_facto
     assert got == len(urls)
 
 
-def test_plain_parquet_source(spark, pages_df, data_dir, tmp_path_factory):
+def test_plain_parquet_source(
+    spark, pages_df, data_dir, table_root, tmp_path_factory
+):
     """Non-layout (plain parquet path) sources materialize too — bucket
-    filtering happens on the fly instead of via the manifest."""
+    filtering happens on the fly instead of via the manifest — and serve
+    the same rows as their layout twin, with a field mapping too."""
     import os
 
-    dest = str(tmp_path_factory.mktemp("mat_plain") / "store")
-    view = FeatureView(
-        name="pages_plain",
-        entity=Entity("url", "url"),
-        source=os.path.join(data_dir, "pages.parquet"),
-        features=[FeatureSpec("n_chars", "bigint")],
-        timestamp_field="warc_ts",
-    )
-    summary = MaterializeJob(
-        spark, view, dest, n_buckets=B, bucket_batch=2, transform=_transform
-    ).run(START, END)
-    assert summary["rows"] == pages_df.select("url").distinct().count()
+    for mapping in ({}, {"url": "u"}):
+        key = mapping.get("url", "url")
+
+        def transform(df):
+            return df.select(
+                key, "warc_ts", F.length("text").cast("long").alias("n_chars")
+            )
+
+        served = []
+        for source in (os.path.join(data_dir, "pages.parquet"), table_root):
+            dest = str(tmp_path_factory.mktemp("mat_plain") / "store")
+            view = FeatureView(
+                name="pages_plain",
+                entity=Entity(key, key),
+                source=source,
+                features=[FeatureSpec("n_chars", "bigint")],
+                timestamp_field="warc_ts",
+                field_mapping=mapping,
+            )
+            summary = MaterializeJob(
+                spark, view, dest, n_buckets=B, bucket_batch=2,
+                transform=transform,
+            ).run(START, END)
+            assert summary["rows"] == pages_df.select("url").distinct().count()
+            served.append(read_online(spark, dest).select(key, "warc_ts"))
+        assert served[0].exceptAll(served[1]).count() == 0
+        assert served[1].exceptAll(served[0]).count() == 0
 
 
 def test_point_lookup_with_unwritten_top_bucket(spark, tmp_path_factory):

@@ -309,7 +309,8 @@ def test_push_of_bigint_keys_into_int_store(spark, tmp_path):
     server builds its frame) into an int-keyed store are hashed and
     written as the store's int: each key keeps one row, the snapshot
     keeps its int key type, and a keyed read of an unpushed key whose
-    int and bigint buckets differ still finds it."""
+    int and bigint buckets differ still finds it. A pushed key the int
+    type cannot take is bad input: HTTP 400, and nothing is committed."""
     src = str(tmp_path / "src")
     spark.createDataFrame(
         [(i, datetime(2024, 1, 1), float(i)) for i in range(40)],
@@ -346,9 +347,16 @@ def test_push_of_bigint_keys_into_int_store(spark, tmp_path):
             "df": {"uid": [over_http], "ts": ["2024-02-01T00:00:00"],
                    "v": [100.0 + over_http]},
         })
+        head = layout.current_snapshot(dest)
+        bad, err = _post(srv.port, "/push", {
+            "push_source_name": "ints", "ts_col": "ts",
+            "df": {"uid": ["abc"], "ts": ["2024-02-01T00:00:00"], "v": [1.0]},
+        })
     finally:
         srv.stop()
     assert code == 200, body
+    assert bad == 400 and "uid" in err["error"], err
+    assert layout.current_snapshot(dest) == head
 
     rows = read_online(spark, dest).collect()
     assert sorted(r["uid"] for r in rows) == list(range(40))
