@@ -13,9 +13,10 @@ aggregates and the history their windows need below ``start``. A run
 reads ONE layout snapshot — the one ``FeatureView.layout_snapshot``
 names when it starts — in every batch, however HEAD moves meanwhile;
 lineage records that snapshot. Layout files are pruned by time, and by
-bucket only when the store buckets as the layout does (one key column,
-the layout's under its mapped name, and the same ``n_buckets``);
-otherwise each batch keeps its store buckets' rows with a filter.
+bucket when the store keys on the layout's one key column (under its
+mapped name): a batch reads the layout buckets congruent to its store
+buckets modulo the gcd of the two ``n_buckets``, and keeps its store
+buckets' rows with a filter.
 
 **The transform contract.** A job's ``transform`` is a per-row feature
 derivation: it returns one row per input row and keeps the view's key,
@@ -56,7 +57,8 @@ never a full-store rewrite).
 table without the ``dt=`` level: ``data/bucket=<b>/*.parquet`` files
 listed by ``metadata/snap-*.json`` snapshots, which also record the
 store's ``n_buckets``, key columns, ``ts_col`` and schema.
-Materialization and ``push_to_online`` both land rows through
+Materialization, ``push_to_online`` and the stream sink
+``streaming.pipeline.stream_latest_to_online`` all land rows through
 ``_merge_into_store``. Under the store's writer lock (``FileIO.lock`` on
 ``<dest>``) it hands its merge rule — latest row per key, incoming over
 served — to ``pages._rewrite_buckets``, the copy-on-write step that
@@ -72,6 +74,7 @@ snapshot still finds every file it planned.
 from __future__ import annotations
 
 import json
+import math
 import time
 import warnings
 from typing import Callable
@@ -88,10 +91,12 @@ from feast_spark.sources import pages as layout
 
 class MaterializeJob:
     """Materialize ``view`` over a time range into the serving store at
-    ``dest``, one bucket batch per Spark write (module docstring). A run
-    reads one layout snapshot in every batch, through ``FeatureView.load``;
-    layout files are bucket-pruned only when ``n_buckets`` and the key
-    column are the layout's.
+    ``dest``, one bucket batch per Spark write (module docstring). It is
+    the batch writer: a push and a stream micro-batch merge into their
+    keys' buckets through ``_merge_into_store`` without it. A run reads
+    one layout snapshot in every batch, through ``FeatureView.load``;
+    layout files are bucket-pruned when the key column is the layout's,
+    by the gcd of the two ``n_buckets``.
 
     ``transform`` is a per-row feature derivation that keeps the view's
     key, event-ts and created-ts columns. It is applied to each key's
@@ -110,7 +115,6 @@ class MaterializeJob:
         bucket_batch: int = 8,
         transform: Callable[[DataFrame], DataFrame] | None = None,
         fail_after_batches: int | None = None,
-        lineage_tag: str | None = None,
     ) -> None:
         self.spark = spark
         self.view = view
@@ -118,10 +122,6 @@ class MaterializeJob:
         self.bucket_batch = bucket_batch
         self.transform = transform
         self.fail_after_batches = fail_after_batches  # test hook (resume)
-        # disambiguates lineage records from distinct logical runs that
-        # may share (input_snapshot, start, end) — e.g. streaming
-        # micro-batches whose event-time bounds collide
-        self.lineage_tag = lineage_tag
 
         if n_buckets is None:
             snap = view.layout_snapshot()
@@ -207,23 +207,28 @@ class MaterializeJob:
         """The view's rows in [start, end) whose keys hash to ``buckets``
         of the store, read through ``FeatureView.load`` at the layout
         snapshot ``snap`` (None: the one the view reads now). Layout
-        files are pruned by time, and by bucket only when the store
-        buckets as the layout does: one key column, the layout's under
-        its mapped name, and the same ``n_buckets``. Otherwise a store
-        bucket's keys lie in every layout bucket, and the bucket filter
-        below alone keeps the batch's rows."""
+        files are pruned by time, and by bucket when the store keys on
+        the layout's one key column under its mapped name: layout bucket
+        ``l`` can hold store bucket ``s`` only if ``l ≡ s (mod
+        gcd(B_layout, B_store))``, so equal moduli read one layout bucket
+        per store bucket and coprime ones read them all. The bucket
+        filter below keeps the batch's rows."""
         ts = self.view.timestamp_field
         keys = self._key_cols()
         kw: dict = {}
         if snap is not None:
             kw["snapshot"] = snap["snapshot_id"]
             kcol = snap["key_col"]  # a list when the source is a store
-            if (
-                isinstance(kcol, str)
-                and keys == [self.view.field_mapping.get(kcol, kcol)]
-                and snap["n_buckets"] == self.n_buckets
-            ):
-                kw["buckets"] = set(buckets)
+            if isinstance(kcol, str) and keys == [
+                self.view.field_mapping.get(kcol, kcol)
+            ]:
+                # a key's layout and store buckets are one hash modulo
+                # each n_buckets, so they agree modulo their gcd
+                g = math.gcd(snap["n_buckets"], self.n_buckets)
+                wanted = {b % g for b in buckets}
+                kw["buckets"] = {
+                    b for b in range(snap["n_buckets"]) if b % g in wanted
+                }
         # aggregates are derived BEFORE the range filter: bucket pruning
         # keeps whole keys, and load widens the scan by the windows
         df = self.view.load(self.spark, start=start, end=end, **kw)
@@ -325,7 +330,7 @@ class MaterializeJob:
         complete = self._coverage_complete(snap, start, end)
         _check_store(
             self.dest, layout.current_snapshot(self.dest), self.n_buckets,
-            self._key_cols(),
+            self._key_cols(), self.view.timestamp_field,
         )
         batches = [
             list(range(b, min(b + self.bucket_batch, self.n_buckets)))
@@ -336,8 +341,6 @@ class MaterializeJob:
         t0 = time.monotonic()
         for i, buckets in enumerate(batches):
             pid = f"b{buckets[0]:04d}-{buckets[-1]:04d}"
-            if self.lineage_tag:
-                pid = f"{self.lineage_tag}-{pid}"
             prior = layout.read_lineage(self.dest, pid)
             if (
                 prior
@@ -364,10 +367,9 @@ class MaterializeJob:
             # baseline check with half its buckets unmaterialized), and
             # ONLY when True — a later bounded run at the same snapshot
             # must not clobber a verified marker with False
-            tag = f"{self.lineage_tag}-" if self.lineage_tag else ""
             layout.write_lineage(
                 self.dest,
-                f"{tag}complete-{snap_id:06d}",
+                f"complete-{snap_id:06d}",
                 {
                     "input_snapshot": snap_id,
                     "start": str(start),
@@ -403,11 +405,14 @@ def _observed_rows(obs: Observation) -> int | None:
 
 
 def _check_store(
-    dest: str, head: dict | None, n_buckets: int, key_cols: list[str]
+    dest: str, head: dict | None, n_buckets: int, key_cols: list[str],
+    ts_col: str,
 ) -> None:
     """Refuse to write into the store at ``dest`` (``head``: its current
     snapshot, None for a new store) with another bucket modulus or other
-    key columns: probe keys would hash to buckets that do not hold them."""
+    key columns, where probe keys would hash to buckets that do not hold
+    them, or with another event-time column, where the merge would rank
+    served rows by one column and new rows by another."""
     if head is None:
         return
     if head["n_buckets"] != n_buckets:
@@ -419,6 +424,11 @@ def _check_store(
         raise ValueError(
             f"store {dest} is keyed on {head['key_col']}, cannot "
             f"re-materialize keyed on {key_cols}"
+        )
+    if head["ts_col"] != ts_col:
+        raise ValueError(
+            f"store {dest} is timed on {head['ts_col']!r}, cannot write "
+            f"rows timed on {ts_col!r}"
         )
 
 
@@ -652,7 +662,7 @@ def _merge_into_store(
 
     with fileio.get_io().lock(dest):
         parent = layout.current_snapshot(dest)
-        _check_store(dest, parent, n_buckets, key_cols)
+        _check_store(dest, parent, n_buckets, key_cols, ts_col)
         if parent is not None:
             served = set(
                 T.StructType.fromJson(json.loads(parent["schema"])).names

@@ -11,8 +11,9 @@ Design rules:
   it (T1) so state is bounded and late data beyond the watermark drops;
 - every streaming aggregate has a batch twin in ``operators.windows``
   and the tests assert replay equivalence (SURVEY.md §5.2.7);
-- the online-store sink reuses the SAME latest-per-key upsert as batch
-  materialization via ``foreachBatch`` — one code path for serving
+- the online-store sink merges each micro-batch into its keys' buckets
+  via ``foreachBatch`` through the SAME ``materialize._merge_into_store``
+  as a push and batch materialization — one code path for serving
   writes (T4).
 """
 
@@ -121,42 +122,28 @@ def stream_latest_to_online(
     transform=None,
 ):
     """T4: stateful latest-per-key → online-store upsert via
-    ``foreachBatch`` — each micro-batch runs the SAME bucketed upsert as
-    batch materialization, so streaming and batch serving stores are
-    byte-compatible. ``transform`` keeps ``MaterializeJob``'s contract:
-    it sees each key's latest rows of the micro-batch. Returns the
-    started StreamingQuery (caller awaits)."""
-    from feast_spark.materialize import MaterializeJob
-    from feast_spark.registry import Entity, FeatureSpec, FeatureView
+    ``foreachBatch``. Each micro-batch lands the way a push does, through
+    ``materialize._merge_into_store``: its keys take the store's key
+    dtypes and only the buckets they hash to are rewritten, so streaming
+    and batch serving stores are byte-compatible and an empty micro-batch
+    commits nothing. Rows with a NULL event time are dropped, as a
+    materialization's range filter drops them. ``transform`` keeps
+    ``MaterializeJob``'s contract: it sees each key's latest rows of the
+    micro-batch. Returns the started StreamingQuery (caller awaits)."""
+    from feast_spark.materialize import _merge_into_store
+    from feast_spark.operators.windows import latest_candidates
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        view = FeatureView(
-            name="stream_batch",
-            entity=Entity(key, key),
-            source=lambda s, b=batch_df: b,
-            features=[FeatureSpec(c, "string") for c in batch_df.columns],
-            timestamp_field=ts_col,
+        df = batch_df.withColumn(
+            ts_col, F.col(ts_col).cast("timestamp")
+        ).filter(F.col(ts_col).isNotNull())
+        if transform is not None:
+            df = transform(latest_candidates(df, key=key, order=ts_col))
+        _merge_into_store(
+            batch_df.sparkSession, dest, df, None,
+            key_cols=[key], ts_col=ts_col, created_col=None,
+            n_buckets=n_buckets,
         )
-        job = MaterializeJob(
-            batch_df.sparkSession, view, dest,
-            n_buckets=n_buckets, bucket_batch=n_buckets, transform=transform,
-            # distinct micro-batches may share event-time bounds; the
-            # batch id keeps their lineage records from colliding (which
-            # would skip a batch as "already materialized" and drop rows)
-            lineage_tag=f"stream{batch_id:08d}",
-        )
-        # the batch covers its own full time range
-        bounds = batch_df.agg(
-            F.min(F.col(ts_col).cast("timestamp")).alias("lo"),
-            F.max(F.col(ts_col).cast("timestamp")).alias("hi"),
-        ).first()
-        if bounds["lo"] is None:
-            return
-        import datetime as _dt
-
-        job.run(bounds["lo"], bounds["hi"] + _dt.timedelta(seconds=1))
 
     writer = stream_df.writeStream.foreachBatch(upsert).outputMode("update")
     if checkpoint:
@@ -293,9 +280,7 @@ def stream_agg_to_online(
             hi = stats["hi"] + view.max_agg_window
         hview = dataclasses.replace(view, source=history_root)
         MaterializeJob(
-            spark, hview, dest,
-            n_buckets=n_buckets, bucket_batch=n_buckets,
-            lineage_tag=f"stream{batch_id:08d}",
+            spark, hview, dest, n_buckets=n_buckets, bucket_batch=n_buckets,
         ).run(stats["lo"], hi + _dt.timedelta(seconds=1))
 
     writer = stream_df.writeStream.foreachBatch(fold).outputMode("update")

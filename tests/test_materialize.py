@@ -65,22 +65,36 @@ def table_root8(spark, pages_df, tmp_path_factory):
 
 
 def test_materialize_latest_per_key(
-    spark, pages_df, table_root, table_root8, tmp_path_factory
+    spark, pages_df, table_root, table_root8, tmp_path_factory, monkeypatch
 ):
     want = _expected_latest(pages_df)
+    plan_files, planned = layout.plan_files, []
+
+    def counted(*a, **kw):
+        snap, files = plan_files(*a, **kw)
+        planned.extend(files)
+        return snap, files
+
+    monkeypatch.setattr(layout, "plan_files", counted)
     # a store that buckets otherwise than its layout (8 buckets) serves
-    # every key too: its keys lie in every layout bucket
-    for root, n_buckets in (
-        (table_root, None), (table_root8, 4), (table_root8, 16)
+    # every key too. A batch reads the layout buckets congruent to its
+    # store buckets modulo gcd(8, n_buckets): 4 store buckets read the
+    # layout once over; 16 read it twice, as store buckets s and s + 8
+    # share layout bucket s but fall in different batches of 2
+    for root, n_buckets, passes in (
+        (table_root, None, 1), (table_root8, 4, 1), (table_root8, 16, 2)
     ):
         dest = str(tmp_path_factory.mktemp("mat_out") / "store")
         job = MaterializeJob(
             spark, _view(root), dest,
             n_buckets=n_buckets, bucket_batch=2, transform=_transform,
         )
+        planned.clear()
         summary = job.run(START, END)
         n_batches = -(-job.n_buckets // 2)
         assert summary["batches_run"] == n_batches
+        layout_files = plan_files(root, start=START, end=END)[1]
+        assert len(planned) == passes * len(layout_files), n_buckets
         out = read_online(spark, dest).select("url", "warc_ts", "n_chars")
 
         got = out.orderBy("url").toPandas()

@@ -147,6 +147,52 @@ def test_stream_batches_with_identical_ts_bounds_all_land(spark, tmp_path_factor
     assert read_online(spark, dest).count() == 10
 
 
+def test_stream_agg_batches_with_identical_ts_bounds_all_land(
+    spark, tmp_path_factory
+):
+    """The aggregated twin of the test above: each micro-batch appends
+    to the history table before it materializes, so its lineage record
+    is keyed by its own history snapshot and a second batch with the
+    same event-time bounds is not skipped as already materialized."""
+    from datetime import datetime, timedelta
+
+    from feast_spark.materialize import read_online
+    from feast_spark.registry import (
+        Aggregation, Entity, FeatureSpec, FeatureView,
+    )
+    from feast_spark.streaming import pipeline as sp
+
+    base = tmp_path_factory.mktemp("collide_agg")
+    src, dest, hist = (str(base / n) for n in ("src", "store", "hist"))
+    schema = "warc_ts timestamp, url string, value double"
+    ts = datetime(2024, 1, 1, 12, 0, 0)
+    for prefix, v, mode in (("a", 1.0, "overwrite"), ("b", 2.0, "append")):
+        spark.createDataFrame(
+            [(ts, f"{prefix}{i}", v) for i in range(5)], schema
+        ).coalesce(1).write.mode(mode).parquet(src)
+    view = FeatureView(
+        name="collide_agg",
+        entity=Entity("url", "url"),
+        source="unused",
+        features=[FeatureSpec("sum_value_3600s", "double")],
+        timestamp_field="warc_ts",
+        aggregations=[Aggregation("value", "sum", timedelta(hours=1))],
+    )
+    stream = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    sp.stream_agg_to_online(
+        stream, view, dest, history_root=hist, n_buckets=2,
+        checkpoint=str(base / "ckpt"),
+    ).awaitTermination()
+    got = {r["url"]: r["sum_value_3600s"] for r in read_online(spark, dest).collect()}
+    assert got == {f"{p}{i}": v for p, v in (("a", 1.0), ("b", 2.0)) for i in range(5)}
+    batches = [r for r in layout.list_lineage(dest) if not r.get("complete")]
+    assert [(r["partition_id"], r["input_snapshot"]) for r in batches] == [
+        ("b0000-0001", layout.current_snapshot(hist)["snapshot_id"])
+    ]
+
+
 def test_append_ignores_orphan_compact_files(spark, pages_df, tmp_path_factory):
     """Crash-orphaned compact-* files must not be swept into the next
     append snapshot (they would duplicate rows)."""

@@ -8,7 +8,8 @@ removes superseded files without changing any answer; a push whose rows
 lack a store column is a 400 that leaves the store unchanged; /push
 input errors and non-JSON-native served values never surface as
 failures; a push of bigint keys into an int-keyed store keeps one int
-row per key; the write → materialize → delta → push chain works under a
+row per key; a push timed on another column than the store's is a 400
+that leaves the store unchanged; the write → materialize → delta → push chain works under a
 session that writes Spark's default INT96 timestamps; a store
 materialized over a range with no events serves NOT_FOUND.
 """
@@ -368,6 +369,53 @@ def test_push_of_bigint_keys_into_int_store(spark, tmp_path):
     assert {f["name"]: f["type"] for f in fields}["uid"] == "integer"
     got = read_online(spark, dest, [unpushed], key_col="uid").collect()
     assert [(r["uid"], r["v"]) for r in got] == [(unpushed, float(unpushed))]
+
+
+def test_push_cannot_retime_the_store(spark, tmp_path):
+    """A push timed on another column than the store's event time is bad
+    input, from Python and over HTTP (400), and nothing is committed:
+    merged by its ``ts_col``, key ``a`` would serve an older row and the
+    store would record the pusher's column as its event time."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", datetime(2024, 1, 5), datetime(2023, 1, 1), 1.0)],
+        "url string, warc_ts timestamp, seen_ts timestamp, v double",
+    ).write.parquet(src)
+    store = FeatureStore(spark, root=str(tmp_path / "reg"))
+    store.apply(
+        FeatureView(
+            name="seen", entity=Entity("url", "url"), source=src,
+            features=[FeatureSpec("seen_ts", "timestamp"),
+                      FeatureSpec("v", "double")],
+            timestamp_field="warc_ts",
+        )
+    )
+    dest = str(tmp_path / "store")
+    MaterializeJob(spark, store.get_view("seen"), dest, n_buckets=4).run(
+        "2023-01-01", "2025-01-01"
+    )
+    head = layout.current_snapshot(dest)
+    row = {"url": "a", "warc_ts": "2023-06-01T00:00:00",
+           "seen_ts": "2024-06-01T00:00:00", "v": 2.0}
+    df = spark.createDataFrame([row]).withColumns(
+        {c: F.col(c).cast("timestamp") for c in ("warc_ts", "seen_ts")}
+    )
+    with pytest.raises(ValueError, match="seen_ts"):
+        push_to_online(spark, dest, df, ts_col="seen_ts")
+    srv = FeatureServer(store, {"seen": dest}).start()
+    try:
+        code, err = _post(srv.port, "/push", {
+            "push_source_name": "seen", "ts_col": "seen_ts",
+            "df": {c: [v] for c, v in row.items()},
+        })
+    finally:
+        srv.stop()
+    assert code == 400 and "seen_ts" in err["error"], err
+    assert layout.current_snapshot(dest) == head
+    got = read_online(spark, dest).collect()
+    assert [(r["url"], r["warc_ts"], r["v"]) for r in got] == [
+        ("a", datetime(2024, 1, 5), 1.0)
+    ]
 
 
 @pytest.fixture(scope="module")

@@ -175,6 +175,58 @@ def test_stream_latest_to_online_matches_batch(
     assert got.exceptAll(want).count() == 0
 
 
+def test_stream_micro_batch_rewrites_only_its_keys_bucket(
+    spark, tmp_path_factory
+):
+    """A micro-batch merges into the buckets its keys hash to, as a push
+    does: after a first batch fills all 8 buckets, a one-row batch
+    commits a snapshot that replaces only its key's bucket's files and
+    writes no lineage record. A row with a NULL event time is never
+    served, as materialization's range filter never serves it."""
+    from datetime import datetime
+
+    from feast_spark.materialize import read_online
+    from feast_spark.sources import pages as layout
+
+    base = tmp_path_factory.mktemp("stream_merge")
+    src, dest = str(base / "src"), str(base / "store")
+    schema = "url string, warc_ts timestamp, lang string"
+    first = [(f"u{i}", datetime(2024, 1, 1), "en") for i in range(64)]
+    spark.createDataFrame(first + [("no-ts", None, "en")], schema).coalesce(
+        1
+    ).write.parquet(src)
+    spark.createDataFrame(
+        [("u0", datetime(2024, 2, 1), "de")], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    sp.stream_latest_to_online(
+        stream, dest, n_buckets=8, checkpoint=str(base / "ckpt")
+    ).awaitTermination()
+
+    def files_by_bucket(snap):
+        return [
+            sorted(f["path"] for f in snap["files"] if f["bucket"] == b)
+            for b in range(8)
+        ]
+
+    head = layout.current_snapshot(dest)
+    before = files_by_bucket(layout.load_snapshot(dest, head["parent"]))
+    after = files_by_bucket(head)
+    assert all(before)
+    u0 = spark.createDataFrame([("u0",)], "url string").select(
+        layout.bucket_expr(["url"], 8)
+    ).first()[0]
+    assert [b for b in range(8) if before[b] != after[b]] == [u0]
+    assert layout.list_lineage(dest) == []
+    got = {r["url"]: r for r in read_online(spark, dest).collect()}
+    assert sorted(got) == sorted(u for u, _, _ in first)
+    assert (got["u0"]["warc_ts"], got["u0"]["lang"]) == (
+        datetime(2024, 2, 1), "de"
+    )
+
+
 def test_kafka_decode_json_batch(spark):
     """decode_kafka_records is a pure transform over the Kafka record
     shape: typed payload columns come back JVM-side; malformed payloads
